@@ -68,25 +68,7 @@ object Bench {
     val only: Option[Set[String]] = args.headOption.filter(_ != "all")
       .map(_.split(",").map(_.trim).toSet)
     val repeats = if (args.length > 1) args(1).toInt else 4
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same scale posture as Engine.builder: runtime re-planning, tiny
-      // shuffles auto-coalesced (the CC iteration benefits directly)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized for the full query surface (see
-      // Engine.CodegenCacheMaxEntries): with Spark's 100-entry default,
-      // the 116 queries evict each other's codegen classes every pass and
-      // each sample re-pays serial driver-side Janino compilation —
-      // measured r14: the full suite dropped 85 -> 47 s from this alone,
-      // uniformly across queries, at both bench core counts. Content-
-      // addressed compiler cache — no data or results are cached.
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.Engine.CodegenCacheMaxEntries.toString)
+    val builder = Engine.builder(s"local[$cpus]", cpus.toInt)
     // Shuffle/spill files on tmpfs when available (single-box harness
     // posture, the ramdisk-local-dir idiom of real deployments): at
     // sf0.1 the shuffle files are MBs, but writing them through the
@@ -95,8 +77,7 @@ object Bench {
     // stalling 7-30x during kernel memory-reclaim storms (this box's
     // documented failure mode, SURVEY §8d). A cluster deployment sets
     // spark.local.dir per node (YARN/K8s manage it) — this default is
-    // scoped to the bench JVM, not the library (Engine.builder is
-    // untouched).
+    // scoped to the bench JVM, not the library.
     val shmDir = new java.io.File("/dev/shm")
     if (shmDir.isDirectory && shmDir.canWrite) {
       val p = new java.io.File(shmDir, "graft-bench-local")
@@ -111,11 +92,7 @@ object Bench {
     // under co-tenant storms without a code change.
     val reliable = sys.env.get("SPARK_GRAFT_RELIABLE_CKPT")
       .exists(_.toBoolean)
-    if (reliable) {
-      builder.config(graft.Engine.ReliableCheckpointKey, "true")
-      builder.config("spark.cleaner.referenceTracking.cleanCheckpoints",
-        "true")
-    }
+    if (reliable) builder.config(Engine.ReliableCheckpointKey, "true")
     val spark = builder.getOrCreate()
     val reliableDir: Option[java.nio.file.Path] =
       if (!reliable) None

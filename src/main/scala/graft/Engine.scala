@@ -27,12 +27,40 @@ object Engine {
     * sf0.1: re-running an identical miner plan cost 5.9 s cold-codegen vs
     * 1.5 s with its classes cached, and raising the cache cut the full
     * 116-query bench 85 → 47 s with zero plan changes. The cache is keyed
-    * on generated SOURCE TEXT (content-addressed, data-independent) and
+    * on generated SOURCE TEXT (content-addressed, data-independent; and on
+    * the class loader, see below) and
     * an entry is tens of KB of class metadata, so 4096 entries cost at
     * most ~100-200 MB of metaspace — the right trade for any long-lived
     * session executing a wide query surface, at any scale or core count
     * (compilation is driver-side and does not shrink with executors).
-    * Static conf: must be set at session build. */
+    * Static conf: must be set at session build.
+    *
+    * The cache only pays off if a plan's classes are looked up under the
+    * same key every time, and Spark keys it on (the task thread's context
+    * class loader, generated source). With
+    * `spark.sql.artifact.isolation.enabled` at its default `true` every
+    * session gets its own executor class loader, and every
+    * `StreamingQuery.start` clones the session, so a second start of the
+    * same plan recompiles classes whose source is byte-identical to cached
+    * ones, and the JIT starts over on the new copies. [[builder]] therefore
+    * turns isolation off: the engine adds no per-session artifacts
+    * (`addArtifact` / `addJar` / `addFile`), so one JVM-wide loader loses
+    * nothing.
+    *
+    * This only helps a JVM that starts the same plan two or more times:
+    * several query starts (or restarts) of one plan, or `newSession` calls
+    * that rerun it. The clone made at a start is reused by every
+    * micro-batch of that query, so a long-running query gains nothing
+    * after its start, and a process that starts its queries once and is
+    * restarted as a new JVM sees no change. In this repo the property
+    * holds for the specs (many query starts in one test JVM), the
+    * benchmark's timed drains (started again after a warm-up drain), and
+    * any application that stops and restarts a query in-process. Measured on a 4-core VM over a
+    * 20,000-observation backlog: in the timed drains after a warm-up drain,
+    * Janino compiles fell from 122 (1.5 s) to 0 and process CPU per drained
+    * observation from 1.28 to 0.93 ms (medians of ten interleaved runs,
+    * −27%). The set-up, which holds the first (warm-up) start, moved
+    * −1.0% and won 5 of 10 pairs: no measurable change. */
   val CodegenCacheMaxEntries: Int = 4096
 
   def builder(master: String = "local[32]",
@@ -42,6 +70,8 @@ object Engine {
       .appName("graft")
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheMaxEntries.toString)
+      // shares the codegen cache across sessions (see CodegenCacheMaxEntries)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.unsafe.types.UTF8String
+
 /** JavaScript-compatible scalar rendering and parsing helpers.
   *
   * The reference engine runs on Node, so its lexical behavior is JS's:
@@ -42,6 +44,64 @@ object JsValues {
         mantissa + "e" + exp
       } else s
     }
+  }
+
+  /** The body of `JSON.stringify(s)` without its quotes: backslash and
+    * quote escaped, `\b \f \n \r \t` by name, every other control
+    * character below 0x20 as `\u00xx`; everything else, non-ASCII
+    * included, verbatim. One pass over the UTF-8 bytes — a multi-byte
+    * sequence never contains a byte below 0x80, so bytes can be judged
+    * one at a time — and a string with nothing to escape is returned as
+    * is, without a copy. */
+  def jsonEscape(s: UTF8String): UTF8String = {
+    val n = s.numBytes()
+    var i = 0
+    var extra = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (b == '"' || b == '\\') extra += 1
+      else if (b >= 0 && b < 0x20) extra += (if (EscapeName(b) != 0) 1 else 5)
+      i += 1
+    }
+    if (extra == 0) s
+    else {
+      val out = new Array[Byte](n + extra)
+      var j = 0
+      i = 0
+      while (i < n) {
+        val b = s.getByte(i)
+        if (b == '"' || b == '\\') {
+          out(j) = Backslash; out(j + 1) = b; j += 2
+        } else if (b >= 0 && b < 0x20) {
+          val name = EscapeName(b)
+          out(j) = Backslash
+          if (name != 0) { out(j + 1) = name; j += 2 }
+          else {
+            System.arraycopy(UnicodePrefix, 0, out, j + 1, 3)
+            out(j + 4) = HexDigits(b >> 4); out(j + 5) = HexDigits(b & 0xf)
+            j += 6
+          }
+        } else { out(j) = b; j += 1 }
+        i += 1
+      }
+      UTF8String.fromBytes(out)
+    }
+  }
+
+  /** [[jsonEscape]] for a JVM string (payload assembly outside an
+    * expression); `null` stays `null`. */
+  def jsonEscape(s: String): String =
+    if (s == null) null else jsonEscape(UTF8String.fromString(s)).toString
+
+  private val Backslash: Byte = '\\'.toByte
+  private val UnicodePrefix: Array[Byte] = "u00".getBytes("US-ASCII")
+  private val HexDigits: Array[Byte] = "0123456789abcdef".getBytes("US-ASCII")
+
+  /** Control character → the letter of its named JSON escape, or 0. */
+  private val EscapeName: Array[Byte] = {
+    val a = new Array[Byte](0x20)
+    "\b\f\n\r\t".zip("bfnrt").foreach { case (c, l) => a(c) = l.toByte }
+    a
   }
 
   /** JS `parseInt(s)`: trim, optional sign, leading decimal digits; NaN

@@ -298,6 +298,19 @@ case class JsNumberStringExpr(child: Expression) extends UnaryExpression {
     copy(c)
 }
 
+/** json_escape(string) → string: the body of JSON.stringify(s) — the
+  * one JSON string escaper ([[JsValues.jsonEscape]]), codegen'd as a
+  * static kernel call. */
+case class JsonEscapeExpr(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def nullSafeEval(v: Any): Any =
+    JsValues.jsonEscape(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.JsValues.jsonEscape($c)")
+  override protected def withNewChildInternal(c: Expression): JsonEscapeExpr =
+    copy(c)
+}
+
 /** nfc_norm(string) → string: Unicode NFC canonical composition,
   * codegen'd; ASCII input passes through without allocation. */
 case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.catalog.MetadataCatalog
-import graft.functions.Coerce
+import graft.functions.{Coerce, JsonEscapeExpr}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -93,20 +93,11 @@ object Pipeline {
   // Sink-shaped outputs
   // ---------------------------------------------------------------------------
 
-  /** JSON-escape a string for the dead-letter/event blobs: backslash,
-    * quote, and ALL control chars below 0x20 (JSON.stringify parity —
-    * named escapes for the common ones, \u00XX for the rest). */
+  /** JSON-escape a string for the dead-letter/event blobs
+    * (JSON.stringify parity, see [[graft.functions.JsValues.jsonEscape]]). */
   private def jsonEscape(c: Column): Column = {
-    val named = Seq("\\\\" -> "\\\\\\\\", "\"" -> "\\\\\"", "\n" -> "\\\\n",
-      "\t" -> "\\\\t", "\r" -> "\\\\r", "\b" -> "\\\\b", "\f" -> "\\\\f")
-    val escapedNamed = named.foldLeft(c) { case (col0, (from, to)) =>
-      regexp_replace(col0, from, to)
-    }
-    // remaining control characters → \u00XX
-    (0 until 0x20).filterNot(Seq(0x08, 0x09, 0x0a, 0x0c, 0x0d).contains)
-      .foldLeft(escapedNamed) { (col0, cp) =>
-        regexp_replace(col0, f"\\x$cp%02x", f"\\\\u$cp%04x")
-      }
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(JsonEscapeExpr(ColumnBridge.expression(c)))
   }
 
   /** Render the ORIGINAL (pre-coercion) value the way JSON.stringify does:

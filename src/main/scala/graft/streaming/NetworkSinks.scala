@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.catalog.MetadataCatalog
+import graft.functions.JsValues.jsonEscape
 import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, Row}
 
 /** K3/G1 — LIVE side-effect channels: the reference pushes every
@@ -27,22 +28,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, Row}
   * replayed after a crash re-emits its frames (the reference has the same
   * semantics — its KCL checkpoint commits after the async emits). */
 object NetworkSinks {
-
-  /** Minimal JSON string escape for payload assembly (alert messages are
-    * ASCII sentences by construction; control chars handled anyway). */
-  private[streaming] def jsonEscape(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < 0x20 => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.result()
-  }
 
   /** One socket.io EVENT frame for an already-rendered event JSON. */
   private[streaming] def frame(eventName: String, json: String): String =

@@ -127,6 +127,10 @@ object StreamPipeline {
     * resolve parity within one drain). Pass `availableNow = false` for
     * continuously-running queries — statuses then flow to the alert query
     * one micro-batch behind the dataflow, still restart-free.
+    *
+    * Build the session with [[graft.Engine.builder]]: on a session not
+    * built by it, each further start of the same plan in one JVM
+    * recompiles the whole plan (see [[graft.Engine.CodegenCacheMaxEntries]]).
     */
   def start(
       raw: DataFrame, // streaming DF with a string `value` column

@@ -326,4 +326,43 @@ class NativeExprSpec extends SparkSpec {
     assert(plan.linesIterator.exists(l =>
       l.contains("*(") && l.contains("dotproductexpr")), plan)
   }
+
+  test("json_escape: JSON.stringify table through the expression and String entry points") {
+    import graft.functions.{JsValues, JsonEscapeExpr}
+    import org.apache.spark.sql.graft.ColumnBridge
+    val named = Map(0x08 -> "\\b", 0x09 -> "\\t", 0x0a -> "\\n",
+      0x0c -> "\\f", 0x0d -> "\\r")
+    val controls = (0 until 0x20).map { c =>
+      s"a${c.toChar}z" -> s"a${named.getOrElse(c, f"\\u$c%04x")}z"
+    }
+    val table: Seq[(String, String)] = controls ++ Seq(
+      "\"" -> "\\\"",
+      "\\" -> "\\\\",
+      "say \"hi\"\\n\u0001" -> "say \\\"hi\\\"\\\\n\\u0001",
+      "caf\u00e9 \u65e5\u672c \ud83d\ude00 \u007f" -> "caf\u00e9 \u65e5\u672c \ud83d\ude00 \u007f",
+      "" -> "",
+      (null: String) -> (null: String))
+    assert(table.map(_._2).take(0x0e).drop(0x08) ===
+      Seq("a\\bz", "a\\tz", "a\\nz", "a\\u000bz", "a\\fz", "a\\rz"))
+
+    table.foreach { case (in, want) =>
+      assert(JsValues.jsonEscape(in) === want, s"String entry point on $in")
+    }
+    val spark2 = spark
+    import spark2.implicits._
+    // repartition keeps the projection out of local-relation folding, so
+    // the codegen'd kernel call is what runs
+    val got = table.map(_._1).toDF("s").repartition(2)
+      .select(col("s"),
+        ColumnBridge.column(JsonEscapeExpr(ColumnBridge.expression(col("s")))))
+      .collect().map(r => Option(r.getString(0)) -> r.getString(1)).toMap
+    table.foreach { case (in, want) =>
+      assert(got(Option(in)) === want, s"expression entry point on $in")
+    }
+    // every escaped value parses back to its input as a JSON string
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    table.filter(_._1 != null).foreach { case (in, want) =>
+      assert(om.readTree("\"" + want + "\"").asText() === in)
+    }
+  }
 }

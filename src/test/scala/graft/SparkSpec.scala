@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession across all suites (JVM-wide singleton). */
+/** One shared local SparkSession across all suites (JVM-wide singleton),
+  * built from the engine's own session config ([[Engine.builder]]). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }
@@ -21,18 +22,8 @@ object SparkSpec {
   }
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    val s = Engine.builder("local[4]", 4)
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      // static conf (ContextCleaner reads it at context creation): required
-      // by Engine.eagerCheckpoint's reliable mode (EngineSpec) so
-      // checkpoint dirs are deleted on RDD GC instead of leaking
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -117,6 +117,40 @@ class StreamingSpec extends SparkSpec {
     assert(wub.messages.head.contains("not found in sensor metadata"))
   }
 
+  test("codegen reuse: a restarted drain and a newSession write compile no class twice") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val root = Files.createTempDirectory("graft-codegen-reuse")
+    val input = Files.createDirectories(root.resolve("in"))
+    Files.write(input.resolve("obs.json"),
+      (0 until 8).map(obsJson).mkString("\n").getBytes("UTF-8"))
+
+    // a drain into fresh sink and checkpoint dirs is what an in-process
+    // restart runs: the same plans, started as new streaming queries
+    def drain(run: String): Unit =
+      StreamPipeline.start(spark.readStream.text(input.toString),
+          () => Fixtures.catalog,
+          new StreamPipeline.ParquetSinks(s"$root/$run/out"),
+          s"$root/$run/ckpt")
+        .foreach(_.awaitTermination(60000))
+    drain("first")
+    val afterFirstDrain = compiles
+    drain("restart")
+    assert(compiles === afterFirstDrain, "restart recompiled generated classes")
+
+    def pipelineWrite(s: SparkSession, run: String): Unit = {
+      import s.implicits._
+      Pipeline.misfits(Pipeline.pairRelation(
+          Fixtures.observations.toDF(), Fixtures.catalog))
+        .write.parquet(s"$root/$run")
+    }
+    pipelineWrite(spark, "batch-first")
+    val afterFirstWrite = compiles
+    pipelineWrite(spark.newSession(), "batch-new-session")
+    assert(compiles === afterFirstWrite, "newSession recompiled generated classes")
+  }
+
   test("connector contract: Kafka-shaped stream drives the full pipeline") {
     // The exact relation a real `readStream.format("kafka").load()` yields:
     // binary key/value plus transport bookkeeping columns. No connector
