@@ -73,9 +73,10 @@ object Bench {
     // posture, the ramdisk-local-dir idiom of real deployments): at
     // sf0.1 the shuffle files are MBs, but writing them through the
     // DISK page path is the one I/O this suite cannot avoid — and
-    // round-10's ContentionHarness measured disk-path block writes
-    // stalling 7-30x during kernel memory-reclaim storms (this box's
-    // documented failure mode, SURVEY §8d). A cluster deployment sets
+    // round 10 measured disk-path block writes stalling 7-30x during
+    // kernel memory-reclaim storms (the bench host's documented failure
+    // mode, SURVEY §8d; runs in bench_out/contention_*_r10.json, the
+    // harness last exists at commit 27cc9a5). A cluster deployment sets
     // spark.local.dir per node (YARN/K8s manage it) — this default is
     // scoped to the bench JVM, not the library.
     val shmDir = new java.io.File("/dev/shm")
@@ -197,8 +198,8 @@ object Bench {
         graft.operators.TextOps.dedupClusters(s, d)
       })
     (1 to repeats).foreach { pass =>
-      // ROTATED start offset per pass (round 12, same rationale as
-      // ContentionHarness): interleaving decorrelates samples from
+      // ROTATED start offset per pass (round 12, same rationale as the
+      // 27cc9a5 contention harness): interleaving decorrelates samples from
       // STORMS but keeps every query at the same slot position each
       // pass, and slot position is not noise-neutral — the first heavy
       // slot after a pass boundary absorbs disproportionate reclaim

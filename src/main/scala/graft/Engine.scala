@@ -128,11 +128,12 @@ object Engine {
     *
     *  - below it, the blocks are a few (tens of) MB — heap-resident
     *    MEMORY_ONLY costs nothing, and, critically, touches NO disk or
-    *    page cache. Round-10 measurement (ContentionHarness, this
-    *    box): under a page-churn memory hog the disk-backed policy
-    *    degraded the mining family 7–30× (`dedup_ngram_jaccard` 3.8 →
-    *    112 s — block-manager disk writes stall during kernel reclaim
-    *    storms), which is exactly the round-9 driver-bench signature
+    *    page cache. Round-10 measurement (the runs are in
+    *    bench_out/contention_*_r10.json, the harness last exists at
+    *    commit 27cc9a5): under a page-churn memory hog the disk-backed
+    *    policy degraded the mining family 7–30× (`dedup_ngram_jaccard`
+    *    3.8 → 112 s — block-manager disk writes stall during kernel
+    *    reclaim storms), which is exactly the round-9 bench signature
     *    (SURVEY §8d). Heap pages on a swapless box cannot be reclaimed,
     *    so memory-only materialization is structurally immune; eviction
     *    under genuine heap pressure falls back to lineage recompute,

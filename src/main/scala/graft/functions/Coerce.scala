@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** C4 — the reference's exact type-coercion truth table
   * (app/mapper.js:192-243, pinned by tests/travis_tests/unit_tests.js:257-415)
-  * as a native Catalyst expression chain (codegen'd, no UDF in the hot path).
+  * as a native Catalyst expression (codegen'd, no UDF in the hot path).
   *
   * Inputs are the tagged scalar (lex: canonical JS string, jstype: one of
   * string|number|boolean) plus the catalog-declared type. Output is
@@ -13,7 +12,7 @@ import org.apache.spark.sql.functions._
   * string rendering of the coerced value (sinks cast it to the declared
   * Spark type; see Widen).
   *
-  * Divergences from Spark's `cast` that force a custom chain:
+  * Divergences from Spark's `cast` that force a custom expression:
   *  - bool ↤ number accepts ONLY 0/1 (Spark cast: any nonzero → true);
   *  - bool ↤ string accepts '1'/'0'/'true'/'false' (ci) PLUS any lexeme
   *    whose JS Number() is exactly 1 or 0 — the reference's `v == true`
@@ -27,52 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Coerce {
 
-  private val intRe = "^[+-]?[0-9]+"
-  private val hexRe = "^0[xX][0-9a-fA-F]+$"
-  private val floatRe = "^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?$"
-
-  /** Java String.trim parity (all chars <= U+0020, not just space) — the
-    * Scala twin and codegen kernel trim with String.trim, and Spark's
-    * trim() removes only ' ', which would break three-way value identity
-    * for lexemes like "\t1". */
-  private def javaTrim(c: Column): Column =
-    regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
-
-  /** JS parseInt over the canonical lexeme → long (null = NaN); values
-    * beyond Long range saturate (same rule as JsValues.jsParseInt). */
-  def jsParseIntCol(lex: Column): Column = {
-    val t = javaTrim(lex)
-    val leading = regexp_extract(t, intRe, 0)
-    val digits = regexp_replace(leading, "^[+-]", "")
-    val sigDigits = regexp_replace(digits, "^0+", "")
-    val hexBody = regexp_extract(t, "^[+-]?0[xX]([0-9a-fA-F]+)", 1)
-    val sigHex = regexp_replace(hexBody, "^0+", "")
-    val sign = when(t.startsWith("-"), lit(-1L)).otherwise(lit(1L))
-    val saturated = when(sign < 0, lit(Long.MinValue))
-      .otherwise(lit(Long.MaxValue))
-    when(t.rlike("^[+-]?0[xX][0-9a-fA-F]"),
-        when(length(sigHex) > 15, saturated)
-          .otherwise(sign * conv(hexBody, 16, 10).cast("long")))
-      .when(length(leading) > 0,
-        when(length(sigDigits) > 18, saturated)
-          .otherwise(when(length(sigDigits) === 0, lit(0L))
-            .otherwise(sign * sigDigits.cast("long"))))
-      .otherwise(lit(null).cast("long"))
-  }
-
-  /** JS Number over a *string* lexeme → double (null = NaN). Hex accepts
-    * NO sign: JS Number('-0x10') is NaN. */
-  def jsNumberCol(lex: Column): Column = {
-    val t = javaTrim(lex)
-    when(length(t) === 0, lit(0.0))
-      .when(t.isin("Infinity", "+Infinity"), lit(Double.PositiveInfinity))
-      .when(t === "-Infinity", lit(Double.NegativeInfinity))
-      .when(t.rlike(hexRe),
-        conv(regexp_extract(t, "0[xX]([0-9a-fA-F]+)", 1), 16, 10).cast("double"))
-      .when(t.rlike(floatRe), t.cast("double"))
-      .otherwise(lit(null).cast("double"))
-  }
-
   /** JS String(number) of a double column — native expression with
     * full-range parity to JsValues.jsNumberString (Java's cast-to-string
     * switches to E-notation at 1e7/1e-3; JS at 1e21/1e-6). */
@@ -81,86 +34,19 @@ object Coerce {
     ColumnBridge.column(JsNumberStringExpr(ColumnBridge.expression(d)))
   }
 
-  /** Built-ins-only twin of [[jsNumberStringCol]] — correct for values in
-    * Java's plain-notation range (|d| in [1e-3, 1e7) or integral); used by
-    * the chain formulation and its specs. */
-  def jsNumberStringChainCol(d: Column): Column = {
-    val isIntegral = d === floor(d) && abs(d) < lit(1e21) && !isnan(d)
-    when(d.isNull, lit(null).cast("string"))
-      .when(isIntegral && abs(d) <= lit(9.0e18), d.cast("long").cast("string"))
-      .when(isIntegral, d.cast("decimal(38,0)").cast("string"))
-      .otherwise(d.cast("string"))
-  }
-
   /** Full coercion: (lex, jstype, ptype) → struct<value string, error boolean>.
     * `error=true` ⇒ `value` holds nothing useful; the router (R1) sends the
     * ORIGINAL pair to the dead-letter sink. Unknown/null ptype is an error
     * (mapper.js:233-239).
     *
-    * Evaluated by the native CoerceExpr (regex-free codegen kernel); the
-    * when/otherwise chain below ([[coerceChain]]) is the reference
-    * formulation, spec-pinned value-identical. */
+    * Evaluated by the native CoerceExpr (regex-free codegen kernel),
+    * spec-pinned value-identical to [[coerceScala]]. */
   def coerce(lex: Column, jstype: Column, ptype: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(CoerceExpr(
       ColumnBridge.expression(lex),
       ColumnBridge.expression(jstype),
       ColumnBridge.expression(ptype)))
-  }
-
-  /** Column-chain formulation of [[coerce]] (built-ins only). */
-  def coerceChain(lex: Column, jstype: Column, ptype: Column): Column = {
-    val isStr = jstype === "string"
-    val isNum = jstype === "number"
-    val isBool = jstype === "boolean"
-
-    // --- varchar/string: String(v) — always succeeds, canonical lexeme.
-    val varcharVal = lex
-
-    // --- integer/int: parseInt(String(v)) — uniform over jstype because JS
-    // parseInt stringifies its argument first (true → "true" → NaN).
-    val intParsed = jsParseIntCol(lex)
-
-    // --- float/double: Number(v) — depends on the JSON type.
-    val floatParsed =
-      when(isNum, lex.cast("double"))                       // canonical, always parses
-        .when(isBool, when(lex === "true", 1.0).otherwise(0.0))
-        .when(jstype === "null", lit(0.0))                  // JS Number(null) = 0
-        .otherwise(jsNumberCol(lex))                        // string semantics
-
-    // --- bool/boolean: the reference's exact acceptance set.
-    val boolParsed =
-      when(isBool, lex === "true")
-        .when(isNum,
-          when(lex.cast("double") === 1.0, lit(true))
-            .when(lex.cast("double") === 0.0, lit(false))
-            .otherwise(lit(null).cast("boolean")))
-        .otherwise( // string: '1' / ci-'TRUE' / JS loose `v == true` (Number(v)==1),
-                    // then the symmetric false set (mapper.js:217-231)
-          when(lex === "1" || upper(lex) === "TRUE" || jsNumberCol(lex) === 1.0,
-              lit(true))
-            .when(lex === "0" || upper(lex) === "FALSE" || jsNumberCol(lex) === 0.0,
-              lit(false))
-            .otherwise(lit(null).cast("boolean")))
-
-    val pt = lower(ptype)
-    val value =
-      when(pt.isin("varchar", "string"), varcharVal)
-        .when(pt.isin("integer", "int"), intParsed.cast("string"))
-        .when(pt.isin("float", "double", "double precision"),
-          jsNumberStringChainCol(floatParsed))
-        .when(pt.isin("bool", "boolean"), boolParsed.cast("string"))
-        .otherwise(lit(null).cast("string"))
-
-    val error =
-      when(pt.isNull, lit(true))
-        .when(pt.isin("varchar", "string"), lit(false))
-        .when(pt.isin("integer", "int"), intParsed.isNull)
-        .when(pt.isin("float", "double", "double precision"), floatParsed.isNull)
-        .when(pt.isin("bool", "boolean"), boolParsed.isNull)
-        .otherwise(lit(true)) // unrecognized declared type
-
-    struct(value.as("value"), error.as("error"))
   }
 
   /** Pure-Scala twin of [[coerce]] for ScalaCheck cross-validation. */

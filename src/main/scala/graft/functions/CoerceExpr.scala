@@ -12,10 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * (lex, jstype, ptype) → struct<value string, error boolean>, with the
   * exact JS truth table of the reference (app/mapper.js:192-243). The
-  * kernel is regex-free (manual scans replace the Column chain's three
-  * regexp evaluations per value) and value-identical to both the
-  * `Coerce.coerceChain` Column formulation and the `Coerce.coerceScala`
-  * twin — pinned by CoerceSpec's cross-validation matrix.
+  * kernel is regex-free (manual scans, no regexp evaluation per value)
+  * and value-identical to the `Coerce.coerceScala` twin — pinned by
+  * CoerceSpec's truth table and property spec.
   *
   * Never null-out: a null/missing declared type is a coercion ERROR row
   * (struct(null, true)), not a null struct — the router depends on it.

@@ -215,26 +215,4 @@ object Pipeline {
     case "bool" | "boolean" => "boolean"
     case _ => "string"
   }
-
-  // ---------------------------------------------------------------------------
-  // Alert derivation (G1 inputs — the stateful dedup lives in streaming)
-  // ---------------------------------------------------------------------------
-
-  /** Per-observation error summary: alert_type ∈ does_not_exist | invalid_key
-    * | NULL (clean). An unknown sensor ⇒ every pair unmatched AND the sensor
-    * absent from the catalog (app/mapper.js:78-104). */
-  def observationStatus(classified: DataFrame, catalog: MetadataCatalog): DataFrame = {
-    val knownSensors = catalog.sensors.toSeq
-    classified
-      .groupBy(obs: _*)
-      .agg(
-        sum(when(col("misfit"), 1).otherwise(0)).as("n_bad"),
-        count(lit(1)).as("n_pairs"))
-      .withColumn("sensor_known",
-        coalesce(col("sensor").isin(knownSensors: _*), lit(false)))
-      .withColumn("alert_type",
-        when(!col("sensor_known"), lit("does_not_exist"))
-          .when(col("n_bad") > 0, lit("invalid_key"))
-          .otherwise(lit(null).cast("string")))
-  }
 }

@@ -1120,8 +1120,9 @@ object TextOps {
     * geometrically in r) and BANDS buy recall back (miss probability
     * (1−jʳ)ᵇ).
     *
-    * Round-10 retuning, measured with tools/GeometryProbe against the
-    * exact n-gram Jaccard miner (candidates/missed-true-pairs):
+    * Round-10 retuning, measured against the exact n-gram Jaccard miner
+    * (candidates/missed-true-pairs; SURVEY.md records it, and the census
+    * main last exists at commit 27cc9a5):
     *
     *   geometry   sf0.1          sf1 (10× docs)
     *   2×2 (r9)   8 455 / 0      542 195 / 293
@@ -2415,20 +2416,15 @@ object TextOps {
   private[graft] def isKernelCandidate(sumDf2: Long, vocabN: Long): Boolean =
     vocabN > 0 && vocabN <= KernelVocabCap && sumDf2 >= KernelMinExpansion
 
-  /** Last plan choice [[textCosinePairs]] made, as a one-line JSON
-    * fragment (path + the measured stats that drove it) — DIAGNOSTIC
-    * attribution state, the memo-register pattern: a bench/probe run
-    * reads it after the query to record WHICH strategy a given scale
-    * actually executed (round-12 VERDICT item 2 — sf1's tail was
-    * unattributed). Set on every textCosinePairs call; also logged at
-    * INFO. Never feeds back into planning. */
-  @volatile private[graft] var lastCosinePlan: Option[String] = None
-
-  private def recordCosinePlan(json: String): Unit = {
-    lastCosinePlan = Some(json)
+  /** Logs, at INFO, the plan choice [[textCosinePairs]] made as a
+    * one-line JSON fragment (path + the measured stats that drove it), so
+    * a run's log records WHICH strategy a given scale actually executed
+    * (round-12 VERDICT item 2 — sf1's tail was unattributed; the r13
+    * census is in bench_out/cosine_plan_r13.json). Never feeds back into
+    * planning. */
+  private def recordCosinePlan(json: String): Unit =
     org.slf4j.LoggerFactory.getLogger(getClass)
       .info(s"textCosinePairs plan: $json")
-  }
 
   /** Kernel admission + block-count sizing, extracted so the bounds are
     * unit-testable without a corpus (round-10 VERDICT items 3/4):

@@ -206,80 +206,4 @@ object Alerts {
       .flatMapGroupsWithState(OutputMode.Append, timeout)(
         transitionImpl(armTtl = withTtl))
   }
-
-  /** The blacklist as a state-API-v2 [[org.apache.spark.sql.streaming.StatefulProcessor]]
-    * — the `transformWithState` twin of [[alertStream]], same transition
-    * semantics, with two operational upgrades the v1 API can't express:
-    *  - TTL is DECLARATIVE per state value (`TTLConfig`): an expired
-    *    blacklist row is evicted by the store itself — no timeout
-    *    callback and no hasTimedOut branch in the transition;
-    *  - state schema evolution is supported by the runtime, where v1's
-    *    case-class encoder breaks checkpoints on any field change (the
-    *    round-4 WindowedStreams lesson).
-    * Transitions are BATCH-GRANULAR exactly like the v1 twin (at most
-    * one alert or resolve per micro-batch; see [[transition]]) — the
-    * same no-event-time rationale applies.
-    * The DRAIN caveat carries over from v1, only the lever moves: TTL
-    * needs `TimeMode.ProcessingTime`, under which the engine keeps
-    * scheduling (empty) batches so evictions can happen — wrong for
-    * drain-style executions (Trigger.AvailableNow, tests), which should
-    * run `ttl = None` ⇒ `TimeMode.None` and trigger only on data.
-    * Requires the RocksDB state store provider when run as a stream
-    * (`spark.sql.streaming.stateStore.providerClass`); pair it with
-    * `...rocksdb.changelogCheckpointing.enabled=true` at scale so each
-    * commit appends a changelog instead of zip-snapshotting every store
-    * (full snapshots then happen asynchronously in maintenance). */
-  class BlacklistProcessor(ttl: Option[java.time.Duration])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, ObsStatus, AlertEvent] {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-
-    @transient private var blacklisted: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      blacklisted = getHandle.getValueState[Boolean](
-        "blacklisted", Encoders.scalaBoolean,
-        ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(sensor: String, rows: Iterator[ObsStatus],
-        timerValues: TimerValues): Iterator[AlertEvent] = {
-      val batch = rows.toSeq
-      val errors = batch.filter(_.alertType != null)
-      val cleans = batch.filter(_.alertType == null)
-      // a TTL-expired row reads as absent — exactly the v1 remove() path
-      var bl = blacklisted.exists() && blacklisted.get()
-      val out = scala.collection.mutable.ArrayBuffer[AlertEvent]()
-      if (errors.nonEmpty && !bl) {
-        out += AlertEvent(sensor, "alert", errors.head.messages)
-        bl = true
-      }
-      if (cleans.nonEmpty && bl && errors.isEmpty) {
-        out += AlertEvent(sensor, "resolve", Nil)
-        bl = false
-      }
-      // update() re-arms the TTL clock (touch-extends, matching v1);
-      // clear() keeps the store bounded by |currently-blacklisted|
-      if (bl) blacklisted.update(true) else blacklisted.clear()
-      out.iterator
-    }
-  }
-
-  /** [[alertStream]] via `transformWithState` (state API v2).
-    * `ttlMs > 0` = continuous production mode (ProcessingTime batches so
-    * TTL evictions fire); `ttlMs = 0` = drain mode (TimeMode.None,
-    * batches only on data — the AvailableNow/test configuration). */
-  def alertStreamTws(statuses: Dataset[ObsStatus],
-      ttlMs: Long = blacklistTtlMs): Dataset[AlertEvent] = {
-    val spark = statuses.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (Some(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (None, TimeMode.None())
-    statuses.groupByKey(_.sensor)
-      .transformWithState(
-        new BlacklistProcessor(ttl), mode, OutputMode.Append())
-  }
 }

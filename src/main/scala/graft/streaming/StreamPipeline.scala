@@ -2,10 +2,9 @@ package graft.streaming
 
 import graft.catalog.MetadataCatalog
 import graft.operators.Pipeline
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** S1/X1/G2 — the streaming shell around the batch pipeline.
   *
@@ -105,13 +104,6 @@ object StreamPipeline {
     }
   }
 
-  /** Spooled ObsStatus schema (parquet; mirrors Alerts.ObsStatus). */
-  private val statusSchema = StructType(Seq(
-    StructField("sensor", StringType),
-    StructField("network", StringType),
-    StructField("alertType", StringType),
-    StructField("messages", ArrayType(StringType, containsNull = false))))
-
   /** Start the streaming pipeline over a raw JSON-lines stream.
     *
     * Two chained queries: the DATAFLOW query (foreachBatch → sinks, with
@@ -169,7 +161,8 @@ object StreamPipeline {
     val alertQuery = {
       val spark2 = spark
       import spark2.implicits._
-      val statuses = spark.readStream.schema(statusSchema)
+      val statuses = spark.readStream
+        .schema(Encoders.product[Alerts.ObsStatus].schema)
         .parquet(statusSpool).as[Alerts.ObsStatus]
       // drain mode must run without the TTL: ProcessingTimeTimeout keeps
       // the query alive past AvailableNow's drain (see alertStream doc).

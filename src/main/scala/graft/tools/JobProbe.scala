@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-time attribution for the heavy declared queries (guide
   * §1: decide whether time goes to shuffle, compute or scheduling before
@@ -14,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.JobProbe q1,q2,... [repeats]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32) — the bench's session shape.
+  *      SPARK_GRAFT_CPUS (default 32) — an Engine.builder session, as Bench.
   */
 object JobProbe {
   private case class StageAgg(var taskMs: Long = 0, var shufR: Long = 0,
@@ -27,17 +26,7 @@ object JobProbe {
     val repeats = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.Engine.CodegenCacheMaxEntries.toString)
-      .getOrCreate()
+    val spark = graft.Engine.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // bench warmup twin
     spark.range(1000000).selectExpr("sum(id)").collect()

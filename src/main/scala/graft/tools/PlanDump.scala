@@ -14,8 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [q1,q2,...|all]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32) — same session shape as Bench so
-  *      the dumped plans are the bench's plans.
+  *      SPARK_GRAFT_CPUS (default 32) — an Engine.builder session, as
+  *      Bench, so the dumped plans are the bench's plans.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -27,15 +27,7 @@ object PlanDump {
       else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.TextOps
     // lazy twins for the eager miners (plan-visible dataflow)

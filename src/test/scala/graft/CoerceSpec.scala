@@ -8,7 +8,7 @@ import org.scalacheck.rng.Seed
 /** C4 truth table — transcribed from the reference's coercion unit tests
   * (tests/travis_tests/unit_tests.js:257-415): 5 observations × the camera
   * feature's 4 types (bool, varchar, integer, float), including every error
-  * case, evaluated through the native Column chain.
+  * case, evaluated through the native CoerceExpr.
   */
 class CoerceSpec extends SparkSpec {
 
@@ -67,7 +67,7 @@ class CoerceSpec extends SparkSpec {
     (("Infinity", "string", "bool"), (null, true)),
     (("1.5", "string", "bool"), (null, true)),
     // Java-trim parity: tab/newline whitespace trims like String.trim in
-    // ALL THREE formulations (Spark's trim() is space-only)
+    // BOTH formulations (Spark's trim() is space-only)
     (("\t1", "string", "bool"), ("true", false)),
     (("\n0", "string", "bool"), ("false", false)),
     (("\t3.9", "string", "integer"), ("3", false)),
@@ -100,7 +100,7 @@ class CoerceSpec extends SparkSpec {
     (("null", "null", "integer"), (null, true)),
     (("null", "null", "bool"), (null, true)))
 
-  test("coercion truth table (Column chain)") {
+  test("coercion truth table (native CoerceExpr)") {
     import spark.implicits._
     val in = truthTable.map { case ((lex, jt, pt), _) => (lex, jt, pt) }
       .toDF("lex", "jstype", "ptype")
@@ -161,27 +161,7 @@ class CoerceSpec extends SparkSpec {
     }
   }
 
-  test("native CoerceExpr agrees with the Column chain on the truth table") {
-    import spark.implicits._
-    // the chain's float renderer (jsNumberStringChainCol) is documented as
-    // correct only inside Java's plain-notation range — exclude the values
-    // where only the native kernel has full JS parity
-    val chainOutOfRange = Set("12345678.5")
-    val in = truthTable.map { case ((lex, jt, pt), _) => (lex, jt, pt) }
-      .filterNot { case (lex, _, _) => chainOutOfRange(lex) }
-      .toDF("lex", "jstype", "ptype")
-    val out = in.select(
-        Coerce.coerce(col("lex"), col("jstype"), col("ptype")).as("n"),
-        Coerce.coerceChain(col("lex"), col("jstype"), col("ptype")).as("c"))
-      .select("n.value", "n.error", "c.value", "c.error")
-      .collect()
-    out.foreach { r =>
-      assert(r.getBoolean(1) === r.getBoolean(3))
-      assert(r.getString(0) === r.getString(2))
-    }
-  }
-
-  test("property: Column chain agrees with Scala twin") {
+  test("property: native CoerceExpr agrees with Scala twin") {
     import spark.implicits._
     val cases = (for {
       lex <- Seq("1", "0", "true", "false", "TRUE", "3.9", "-3.9", "", " 42 ",

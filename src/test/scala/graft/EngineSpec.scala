@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
   * reliable checkpoint under `spark.graft.checkpoint.reliable` — same
   * values either way, and the reliable path actually writes to the
   * context's checkpoint dir (executor-loss survivability is the point).
+  * Also pins `Engine.builder` as the one place a session is configured.
   */
 class EngineSpec extends SparkSpec {
 
@@ -57,5 +58,18 @@ class EngineSpec extends SparkSpec {
       kids.filterNot(_.isDirectory) ++ kids.filter(_.isDirectory).flatMap(files)
     }
     assert(files(dir).nonEmpty, s"no checkpoint files under $dir")
+  }
+
+  test("one session builder: SparkSession.builder appears only in Engine.scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val builderCall = """SparkSession\s*\.\s*builder""".r
+    val sites = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => builderCall.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString).toSeq
+    assert(sites === Seq("graft/Engine.scala"),
+      "build sessions from Engine.builder instead")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Pipeline
+import graft.streaming.Alerts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -79,17 +80,18 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("G1 derivation: per-observation alert classification") {
-    val status = Pipeline.observationStatus(classified, Fixtures.catalog)
-    val m = status.collect()
-      .map(r => r.getAs[String]("node_id") -> r.getAs[String]("alert_type")).toMap
-    assert(m("001") === null)
-    assert(m("002") === null)
-    assert(m("003") === "invalid_key")
-    assert(m("004") === "invalid_key")
-    assert(m("005") === "invalid_key")
-    assert(m("006") === "does_not_exist")
-    assert(m("007") === null)
-    assert(m("008") === null)
+    import spark.implicits._
+    val statuses = Alerts.observationStatuses(
+        Fixtures.observations.toDF(), Fixtures.catalog)
+      .collect().map(s => (s.sensor, Option(s.alertType))).sorted.toSeq
+    // nodes 001-008 in order: htu21d, hmc5883l clean; hmc5883l, camera,
+    // htu21d invalid; wubdb89 unknown; camera, htu21d clean
+    val invalid = Some("invalid_key")
+    assert(statuses === Seq(
+      ("camera", None), ("camera", invalid),
+      ("hmc5883l", None), ("hmc5883l", invalid),
+      ("htu21d", None), ("htu21d", None), ("htu21d", invalid),
+      ("wubdb89", Some("does_not_exist"))))
   }
 
   test("R1 property: valid ∪ misfit partitions the pair relation losslessly") {

@@ -295,179 +295,37 @@ class StreamingSpec extends SparkSpec {
     assert(step(err).map(_.kind) === Seq("alert"))            // re-alerts
   }
 
-  test("transformWithState blacklist twin: alert/suppress/resolve/re-alert through a live stream") {
-    val spark2 = spark
-    import spark2.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // state API v2 requires the RocksDB provider; scope it to this query.
-    // Changelog checkpointing is the at-scale configuration (per-batch
-    // commits append a changelog instead of zip-snapshotting every store),
-    // and 2 state partitions keep a 5-batch unit test from paying 32
-    // RocksDB commits per batch.
-    val overrides = Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true",
-      "spark.sql.shuffle.partitions" -> "2")
-    val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val source = MemoryStream[Alerts.ObsStatus]
-      val out = mutable.Buffer[Alerts.AlertEvent]()
-      // ttlMs = 0 ⇒ TimeMode.None: batches fire only on data, so
-      // processAllAvailable drains (ProcessingTime mode spins empty
-      // batches for TTL eviction and never settles — see the scaladoc)
-      val q = Alerts.alertStreamTws(source.toDS(), ttlMs = 0L)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-tws").toString)
-        .foreachBatch((df: Dataset[Alerts.AlertEvent], _: Long) =>
-          out.synchronized { out ++= df.collect() }: Unit)
-        .start()
-      val err = Alerts.ObsStatus("s1", "net", "invalid_key", Seq("m1"))
-      val ok = Alerts.ObsStatus("s1", "net", null, Nil)
-      def feed(s: Alerts.ObsStatus): Unit = {
-        source.addData(s); q.processAllAvailable()
-      }
-      feed(err) // alert
-      feed(err) // suppressed while blacklisted
-      feed(ok)  // resolve
-      feed(ok)  // no spurious resolve
-      feed(err) // re-alerts after resolve
-      q.stop()
-      assert(out.map(_.kind).toSeq === Seq("alert", "resolve", "alert"))
-      assert(out.head.messages === Seq("m1"))
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+  test("restart: a second drain on the same checkpoint recovers the blacklist") {
+    val root = Files.createTempDirectory("graft-restart")
+    val input = Files.createDirectories(root.resolve("in"))
+    val ckpt = root.resolve("ckpt").toString
+    def obs(sensor: String): String =
+      """{"network":"net","node_id":"n1","meta_id":1,""" +
+        s""""datetime":"2017-01-01T00:00:00","sensor":"$sensor","data":{"a":1}}"""
+    val unknownSensors = MetadataCatalog.fromMaps(
+      Map.empty[String, Map[String, String]],
+      Map.empty[String, Seq[(String, String)]])
+    val curedRegistered = MetadataCatalog.fromMaps(
+      Map("cured" -> Map("a" -> "f.a")), Map("f" -> Seq("a" -> "integer")))
+    // each drain reads only the files it has not seen, as a restarted
+    // consumer resumes from its checkpoint
+    def drain(file: String, sensors: Seq[String],
+        catalog: MetadataCatalog): Seq[(String, String)] = {
+      Files.write(input.resolve(file),
+        sensors.map(obs).mkString("\n").getBytes("UTF-8"))
+      val sinks = new CollectingSinks
+      StreamPipeline.start(spark.readStream.text(input.toString),
+          () => catalog, sinks, ckpt)
+        .foreach(_.awaitTermination(60000))
+      sinks.alerts.map(e => (e.sensor, e.kind)).toSeq.sorted
     }
-  }
-
-  /** Shared harness for the TWS-TTL cases: RocksDB + changelog
-    * checkpointing (the at-scale configuration), a sink-polling waiter
-    * (ProcessingTime TimeMode keeps scheduling batches, so
-    * processAllAvailable is not a settling point), and conf restoration. */
-  private def withTwsTtlHarness(ttlMs: Long)(
-      body: (MemoryStream[Alerts.ObsStatus] => org.apache.spark.sql.streaming.StreamingQuery,
-             mutable.Buffer[Alerts.AlertEvent], Int => Unit) => Unit): Unit = {
-    val spark2 = spark
-    import spark2.implicits._
-    val overrides = Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true",
-      "spark.sql.shuffle.partitions" -> "2")
-    val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val cp = Files.createTempDirectory("graft-tws-ttl").toString
-      val out = mutable.Buffer[Alerts.AlertEvent]()
-      def start(src: MemoryStream[Alerts.ObsStatus]) =
-        Alerts.alertStreamTws(src.toDS(), ttlMs = ttlMs)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", cp)
-          .foreachBatch((df: Dataset[Alerts.AlertEvent], _: Long) =>
-            out.synchronized { out ++= df.collect() }: Unit)
-          .start()
-      def awaitAlerts(n: Int): Unit = {
-        val deadline = System.currentTimeMillis() + 60000
-        while (out.synchronized(out.length) < n &&
-          System.currentTimeMillis() < deadline) Thread.sleep(100)
-        assert(out.synchronized(out.length) === n,
-          s"waiting for $n alerts, have: ${out.synchronized(out.toList)}")
-      }
-      body(start, out, awaitAlerts)
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-  }
-
-  private def errStatus(s: String) =
-    Alerts.ObsStatus(s, "net", "invalid_key", Seq("m"))
-
-  /** Barrier before stop(): the sink callback fires BEFORE the batch's
-    * commit-log entry is written, so a stop() racing the commit makes the
-    * restarted query replay the batch (at-least-once). Wait until progress
-    * reports the batch complete, plus a margin for the commit write. */
-  private def awaitCommitted(q: org.apache.spark.sql.streaming.StreamingQuery,
-      batchId: Long): Unit = {
-    val deadline = System.currentTimeMillis() + 30000
-    while (Option(q.lastProgress).map(_.batchId).getOrElse(-1L) < batchId &&
-      System.currentTimeMillis() < deadline) Thread.sleep(100)
-    assert(Option(q.lastProgress).map(_.batchId).getOrElse(-1L) >= batchId,
-      s"batch $batchId never reported complete")
-    Thread.sleep(500)
-  }
-
-  test("tws blacklist survives a restart via the RocksDB changelog: recovered state suppresses inside the TTL window") {
-    val spark2 = spark
-    import spark2.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // TTL far above any restart latency, so the only way s1 stays silent
-    // post-restart is the changelog-recovered blacklist row
-    withTwsTtlHarness(ttlMs = 120000L) { (start, out, awaitAlerts) =>
-      val src1 = MemoryStream[Alerts.ObsStatus]
-      val q1 = start(src1)
-      src1.addData(errStatus("s1"))
-      awaitAlerts(1)
-      awaitCommitted(q1, 0L)
-      q1.stop()
-      val src2 = MemoryStream[Alerts.ObsStatus]
-      src2.addData(errStatus("s1")) // replay committed batch-0 offsets
-      val q2 = start(src2)
-      // s2 is the ordering sentinel: its alert proves the batch carrying
-      // the suppressed s1 committed (and that batch 0 was not re-run)
-      src2.addData(errStatus("s1"), errStatus("s2"))
-      awaitAlerts(2)
-      q2.stop()
-      assert(out.map(e => (e.sensor, e.kind)).toSeq ===
-        Seq(("s1", "alert"), ("s2", "alert")), out)
-    }
-  }
-
-  test("tws blacklist TTL eviction re-alerts — within a run and across a restart boundary") {
-    val spark2 = spark
-    import spark2.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ttlMs = 5000L
-    withTwsTtlHarness(ttlMs) { (start, out, awaitAlerts) =>
-      val src1 = MemoryStream[Alerts.ObsStatus]
-      val q1 = start(src1)
-      src1.addData(errStatus("s1"))
-      awaitAlerts(1) // alert; TTL armed
-      // sentinel batch well inside the TTL: s1 suppressed, s2 commits it
-      src1.addData(errStatus("s1"), errStatus("s2"))
-      awaitAlerts(2)
-      // cross the TTL boundary in-run: the store evicts the expired row
-      // (expired-reads-as-absent), so s1 must re-alert
-      Thread.sleep(ttlMs + 2000)
-      src1.addData(errStatus("s1"))
-      awaitAlerts(3)
-      awaitCommitted(q1, 2L)
-      q1.stop()
-      // let the re-armed row expire while the query is DOWN, restart from
-      // the changelog checkpoint: the recovered-then-expired row must also
-      // read as absent → re-alert (extra restart latency only widens the
-      // already-crossed boundary, so this direction cannot race)
-      Thread.sleep(ttlMs + 2000)
-      val src2 = MemoryStream[Alerts.ObsStatus]
-      src2.addData(errStatus("s1"))
-      src2.addData(errStatus("s1"), errStatus("s2"))
-      src2.addData(errStatus("s1"))
-      val q2 = start(src2)
-      src2.addData(errStatus("s1"))
-      awaitAlerts(4)
-      q2.stop()
-      assert(out.map(_.sensor).toSeq === Seq("s1", "s2", "s1", "s1"), out)
-      assert(out.map(_.kind).distinct === Seq("alert"), out)
-    }
+    assert(drain("1.json", Seq("broken", "cured"), unknownSensors) ===
+      Seq(("broken", "alert"), ("cured", "alert")))
+    // "broken" is still unknown: its recovered blacklist row suppresses a
+    // second alert. "cured" is registered now and resolves. "fresh" is the
+    // sentinel proving the alert query ran over the second drain's batch.
+    assert(drain("2.json", Seq("broken", "cured", "fresh"), curedRegistered) ===
+      Seq(("cured", "resolve"), ("fresh", "alert")))
   }
 
   /** Minimal GroupState stub for unit-testing the transition function. */
