@@ -1837,8 +1837,8 @@ object TextOps {
   /** The composed LLM training-data pipeline — the flagship end-to-end
     * chain a practitioner actually runs, as ONE dataflow: exact dedup
     * (keep min doc_id per md5) → quality floor → benchmark
-    * decontamination (broadcast shingle probe, batch twin of
-    * `WindowedStreams.decontaminate`) → sharded sequence packing. Shuffle
+    * decontamination (broadcast shingle probe: a document sharing any
+    * benchmark shingle is dropped) → sharded sequence packing. Shuffle
     * budget: one md5 agg + one doc_id semi-join + one shard window — the
     * quality filter and the decontamination probe are map-side riders on
     * the scan, and the benchmark set broadcasts. Output spans are pure

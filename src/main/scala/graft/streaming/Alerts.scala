@@ -3,12 +3,14 @@ package graft.streaming
 import graft.catalog.MetadataCatalog
 import graft.functions.Coerce
 import graft.model.DataPair
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, map_entries}
-import org.apache.spark.sql.streaming.GroupState
+import scala.math.Ordering.Implicits._
 
 /** G1 — the Apiary alert channel with blacklist dedup
-  * (app/mapper.js:429-489), as a keyed stateful streaming op.
+  * (app/mapper.js:429-489), as one step of the dataflow micro-batch.
   *
   * Reference semantics: at most one alert per sensor while blacklisted; a
   * "resolve" once the discrepancy clears. (The reference also emits
@@ -20,15 +22,17 @@ import org.apache.spark.sql.streaming.GroupState
   *
   * Status derivation is MAP-ONLY (per-record catalog probe + coercion via
   * the pure-Scala coercion twin — exactly the reference's invalid_keys /
-  * coerce_types pair, app/mapper.js:192-243/411-419), so the blacklist
-  * `flatMapGroupsWithState` is the only stateful operator in the query —
-  * a requirement for chaining legality in Structured Streaming, and the
-  * scale-correct shape: the catalog is a broadcast-sized Map, the status
-  * pass is embarrassingly parallel.
+  * coerce_types pair, app/mapper.js:192-243/411-419): the catalog is a
+  * broadcast-sized Map, the status pass is embarrassingly parallel. The
+  * blacklist is a small `(sensor, lastSeenMs)` table of the sensors that
+  * alerted and have not resolved; [[step]] cogroups one batch's statuses
+  * with it by sensor and applies the pure [[transition]] — the alarm
+  * verification of the alarm-verification-on-streams paper (EDBT 2018,
+  * PAPERS.md) done inline, as the reference's consumer does it.
   */
 object Alerts {
 
-  /** Per-observation status row feeding the stateful op. */
+  /** Per-observation status row feeding the blacklist. */
   case class ObsStatus(
       sensor: String,
       network: String,
@@ -42,8 +46,13 @@ object Alerts {
   /** Emitted alert-channel event (the HTTP POST payload analogue). */
   case class AlertEvent(sensor: String, kind: String, messages: Seq[String])
 
-  /** Blacklist state per sensor. */
-  case class SensorState(blacklisted: Boolean)
+  /** Blacklist state row: a sensor that alerted and has not resolved,
+    * with the batch time at which it was last seen broken. */
+  case class Blacklisted(sensor: String, lastSeenMs: Long)
+
+  /** One sensor's outcome of a batch: the event it emits, if any, and its
+    * state row, if it stays blacklisted. */
+  case class Step(event: Option[AlertEvent], state: Option[Blacklisted])
 
   /** Reference message synthesis (app/mapper.js:431-453), exact strings —
     * including the reference's missing space before "from network". */
@@ -122,88 +131,71 @@ object Alerts {
   }
 
   /** TTL for blacklist state: a blacklisted sensor that stays SILENT this
-    * long is forgotten (its state row dropped), so the state store is
-    * bounded by |sensors alerting within the TTL window| — without it,
-    * every distinct garbage sensor name on a hostile/dirty stream pins a
-    * state row forever. Reference parity: its blacklist is an in-memory
-    * object that forgets on every process restart (app/mapper.js:42), so
-    * re-alerting after a quiet period is within the reference's own
-    * semantics; data arriving keeps the state alive indefinitely. */
+    * long is forgotten, so the state table is bounded by |sensors alerting
+    * within the TTL window| — without it, every distinct garbage sensor
+    * name on a hostile/dirty stream pins a state row forever. The TTL is
+    * lazy: at a batch's time an older row counts as absent and is not
+    * written back, so no timer and no no-data batch is needed. Reference
+    * parity: its blacklist is an in-memory object that forgets on every
+    * process restart (app/mapper.js:42), so re-alerting after a quiet
+    * period is within the reference's own semantics; data arriving keeps
+    * the state alive indefinitely. */
   val blacklistTtlMs: Long = 6 * 60 * 60 * 1000L
 
-  /** The blacklist transition: errors first, then cleans. Transitions are
-    * BATCH-GRANULAR, not per-event: a micro-batch is folded into at most
-    * one alert OR one resolve (clean-then-error while blacklisted emits
-    * nothing; error-then-clean emits only the alert) — `ObsStatus`
-    * carries no event time, so within-batch sequencing is undefined by
-    * construction and the operator deliberately collapses it. This
-    * matches the reference's sequential trace exactly for one-observation
-    * batches (its consumer processes records one at a time,
-    * app/mapper.js:429-489); for multi-observation batches the collapsed
-    * semantics are the documented contract. Which error's messages ride
-    * the alert (`errors.head`) follows batch arrival order — stable in
-    * practice under a single-partition group read, but not a promise;
-    * consumers needing a canonical message set should aggregate from the
-    * dead-letter sink instead. On TTL expiry the state row is dropped —
-    * the sensor re-alerts if it returns still broken. */
-  def transition(sensor: String, it: Iterator[ObsStatus],
-      state: GroupState[SensorState]): Iterator[AlertEvent] =
-    transitionImpl(armTtl = true)(sensor, it, state)
-
-  /** `armTtl = false` skips setTimeoutDuration — REQUIRED under a
-    * NoTimeout execution (see alertStream), where arming throws. */
-  private def transitionImpl(armTtl: Boolean)(sensor: String,
-      it: Iterator[ObsStatus],
-      state: GroupState[SensorState]): Iterator[AlertEvent] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
+  /** The blacklist transition of one sensor over one batch, from its prior
+    * state (`lastSeenMs`, if blacklisted) to its event and new state.
+    * Transitions are BATCH-GRANULAR, not per-event: a micro-batch is
+    * folded into at most one alert OR one resolve (clean-then-error while
+    * blacklisted emits nothing; error-then-clean emits only the alert) —
+    * `ObsStatus` carries no event time, so within-batch sequencing is
+    * undefined by construction and the step deliberately collapses it.
+    * This matches the reference's sequential trace exactly for
+    * one-observation batches (its consumer processes records one at a
+    * time, app/mapper.js:429-489); for multi-observation batches the
+    * collapsed semantics are the documented contract. Only the
+    * [[decisive]] status counts, so the alert's messages do not depend on
+    * the order in which the batch's statuses arrive. */
+  def transition(sensor: String, statuses: Seq[ObsStatus],
+      lastSeenMs: Option[Long], nowMs: Long): (Option[AlertEvent], Option[Long]) = {
+    val blacklisted = lastSeenMs.exists(nowMs - _ <= blacklistTtlMs)
+    statuses.reduceOption(decisive) match {
+      case Some(error) if error.alertType != null =>
+        val alert =
+          if (blacklisted) None
+          else Some(AlertEvent(sensor, "alert", error.messages))
+        (alert, Some(nowMs))
+      case Some(_) if blacklisted =>
+        (Some(AlertEvent(sensor, "resolve", Nil)), None)
+      // an untouched row lives on until its TTL; a clean sensor has no row
+      case _ => (None, lastSeenMs.filter(_ => blacklisted))
     }
-    val batch = it.toSeq
-    val errors = batch.filter(_.alertType != null)
-    val cleans = batch.filter(_.alertType == null)
-    var blacklisted = state.getOption.exists(_.blacklisted)
-    val out = scala.collection.mutable.ArrayBuffer[AlertEvent]()
-    if (errors.nonEmpty && !blacklisted) {
-      out += AlertEvent(sensor, "alert", errors.head.messages)
-      blacklisted = true
-    }
-    if (cleans.nonEmpty && blacklisted && errors.isEmpty) {
-      out += AlertEvent(sensor, "resolve", Nil)
-      blacklisted = false
-    }
-    // only blacklisted=true carries information — removing state for clean
-    // sensors bounds the state store by |currently-blacklisted sensors|
-    // instead of growing with every sensor name ever seen; the TTL clock
-    // re-arms on every batch that touches the sensor
-    if (blacklisted) {
-      state.update(SensorState(blacklisted))
-      if (armTtl) state.setTimeoutDuration(blacklistTtlMs)
-    } else state.remove()
-    out.iterator
   }
 
-  /** Wire the stateful op over a (streaming or batch) status dataset.
-    *
-    * `withTtl = true` (the continuously-running production mode) arms
-    * ProcessingTimeTimeout so silent blacklisted sensors expire after
-    * [[blacklistTtlMs]]. Drain-style executions (Trigger.AvailableNow,
-    * plain batch) must pass `withTtl = false`: a processing-time-timeout
-    * stateful query has no natural termination point — the engine keeps
-    * scheduling batches so expirations can fire — which deadlocks
-    * AvailableNow's drain-and-terminate contract (and in batch execution
-    * timeouts can never fire anyway, so nothing is lost). The transition
-    * function itself is timeout-aware in both modes. */
-  def alertStream(statuses: Dataset[ObsStatus],
-      withTtl: Boolean = true): Dataset[AlertEvent] = {
-    val spark = statuses.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val timeout =
-      if (withTtl) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    statuses.groupByKey(_.sensor)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(
-        transitionImpl(armTtl = withTtl))
+  /** Of two statuses of one sensor, the one that decides its transition:
+    * an error over a clean one, and of two errors the one with the
+    * smaller messages. Associative and commutative, so it reduces a
+    * batch's statuses map-side in any order. */
+  private def decisive(a: ObsStatus, b: ObsStatus): ObsStatus =
+    if (a.alertType == null) b
+    else if (b.alertType == null || a.messages <= b.messages) a
+    else b
+
+  /** One batch of the blacklist: the batch's statuses, reduced to the
+    * [[decisive]] one per sensor, cogrouped by sensor with the prior state
+    * table; one [[Step]] per sensor in either. One partition: after the
+    * map-side reduce it holds one row per sensor. An RDD cogroup runs both
+    * shuffles inside the first job that reads the steps, and later jobs
+    * over the same steps reuse its shuffle output; the Dataset cogroup
+    * would plan each side's exchange as its own job on every read. */
+  def step(statuses: Dataset[ObsStatus], blacklist: Dataset[Blacklisted],
+      nowMs: Long): RDD[Step] = {
+    val bySensor = new HashPartitioner(1)
+    statuses.rdd.keyBy(_.sensor).reduceByKey(bySensor, decisive _)
+      .cogroup(blacklist.rdd.keyBy(_.sensor), bySensor)
+      .map { case (sensor, (ss, bs)) =>
+        val (event, lastSeen) = transition(sensor, ss.toSeq,
+          bs.headOption.map(_.lastSeenMs), nowMs)
+        Step(event, lastSeen.map(Blacklisted(sensor, _)))
+      }
   }
 }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.catalog.MetadataCatalog
 import graft.operators.Pipeline
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -15,12 +16,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (G2) degenerates to re-reading the catalog every micro-batch inside
   * foreachBatch — an observation is never judged against stale metadata.
   *
-  * The ALERT path gets the same per-batch freshness: observation statuses
-  * are derived inside the dataflow micro-batch (against that batch's
-  * catalog) and spooled as parquet; a second streaming query file-streams
-  * the spool through the stateful blacklist op. The stateful op itself is
-  * catalog-free, so a catalog fix is reflected in the very next batch —
-  * no query restart needed.
+  * The ALERT path runs in the same micro-batch, against the same fresh
+  * catalog: the batch's observation statuses are derived once, appended
+  * to a parquet status spool, and stepped through the blacklist (see
+  * [[alertBatch]]) — so a catalog fix is reflected in the very next batch,
+  * no query restart needed, and there is one streaming query.
+  *
+  * Upgrade note: checkpoints written while the blacklist ran as a second
+  * streaming query hold its state in that query's own checkpoint
+  * subdirectories (`alerts`, and a separate one for drains). That state
+  * is ignored, so a sensor blacklisted at upgrade time alerts once more.
   *
   * Sinks are injected (side effects stay at the edge): production would
   * bind JDBC/HTTP/socket writers; tests bind collectors.
@@ -104,21 +109,15 @@ object StreamPipeline {
     }
   }
 
-  /** Start the streaming pipeline over a raw JSON-lines stream.
+  /** Start the streaming pipeline over a raw JSON-lines stream: ONE
+    * query, `graft-dataflow`, checkpointed under `$checkpointDir/dataflow`
+    * (X1). Each micro-batch re-reads the catalog (G2), runs
+    * [[processBatch]] and then [[alertBatch]] (G1).
     *
-    * Two chained queries: the DATAFLOW query (foreachBatch → sinks, with
-    * per-batch catalog refresh = G2) additionally derives per-observation
-    * statuses against the same fresh catalog and appends them to a parquet
-    * spool; the ALERT query file-streams the spool through the stateful
-    * blacklist (G1). Both checkpoint under `checkpointDir` (X1); the spool
-    * is itself replayable, so end-to-end delivery stays at-least-once.
-    *
-    * With the default Trigger.AvailableNow the dataflow query is drained
-    * BEFORE the alert query starts, so the statuses spooled by this
-    * invocation are inside the alert query's startup snapshot (alert /
-    * resolve parity within one drain). Pass `availableNow = false` for
-    * continuously-running queries — statuses then flow to the alert query
-    * one micro-batch behind the dataflow, still restart-free.
+    * With the default Trigger.AvailableNow the query drains what is
+    * available and terminates; pass `availableNow = false` for a
+    * continuously-running query. The query is returned running: callers
+    * await or stop it.
     *
     * Build the session with [[graft.Engine.builder]]: on a session not
     * built by it, each further start of the same plan in one JVM
@@ -130,62 +129,53 @@ object StreamPipeline {
       sinks: Sinks,
       checkpointDir: String,
       availableNow: Boolean = true): Seq[StreamingQuery] = {
-    val spark = raw.sparkSession
     val observations = graft.sources.ObservationSource.parse(raw).toDF()
-    val statusSpool = s"$checkpointDir/status-spool"
-    // create via the path's own FileSystem — checkpointDir may be on a DFS
-    // (hdfs://, s3a://) where a local File.mkdirs would silently do nothing
-    // and the alert query's file source would fail on the missing dir
-    val spoolPath = new org.apache.hadoop.fs.Path(statusSpool)
-    spoolPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .mkdirs(spoolPath)
+    val w = observations.writeStream
+      .queryName("graft-dataflow")
+      .option("checkpointLocation", s"$checkpointDir/dataflow")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val catalog = catalogProvider() // per-batch re-read (G2)
+        val obsBatch = batch.toDF()
+        processBatch(obsBatch, catalog, sinks, batchId)
+        alertBatch(obsBatch, catalog, sinks, checkpointDir, batchId)
+      }
+    Seq((if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start())
+  }
 
-    val dataQuery = {
-      val w = observations.writeStream
-        .queryName("graft-dataflow")
-        .option("checkpointLocation", s"$checkpointDir/dataflow")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val catalog = catalogProvider() // per-batch re-read (G2)
-          val obsBatch = batch.toDF()
-          processBatch(obsBatch, catalog, sinks, batchId)
-          // derive statuses against the SAME fresh catalog and spool them
-          // for the alert query — per-batch catalog parity on the alert
-          // path; a catalog fix emits its resolve in the next batch
-          Alerts.observationStatuses(obsBatch, catalog).toDF()
-            .write.mode("append").parquet(statusSpool)
-        }
-      (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+  /** G1 for one micro-batch. Statuses are derived once against the batch's
+    * catalog and appended to `$checkpointDir/status-spool` (the audit
+    * trail of every status, as read by perfbench's output check). The
+    * blacklist state is versioned by batch under
+    * `$checkpointDir/blacklist/<batchId>`: batch N reads the newest version
+    * below N, writes version N and deletes the versions older than the
+    * one it read. A batch replayed after a crash therefore reads the same
+    * prior state and derives the same alerts again (delivery stays
+    * at-least-once, as for every sink). The state is cogrouped on the
+    * executors and never collected. */
+  private def alertBatch(observations: DataFrame, catalog: MetadataCatalog,
+      sinks: Sinks, checkpointDir: String, batchId: Long): Unit = {
+    val spark = observations.sparkSession
+    import spark.implicits._
+    val root = new Path(s"$checkpointDir/blacklist")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val versions =
+      if (!fs.exists(root)) Seq.empty[Long]
+      else fs.listStatus(root).toSeq.flatMap(_.getPath.getName.toLongOption)
+    val prior = versions.filter(_ < batchId).maxOption
+    val blacklist = prior.fold(spark.emptyDataset[Alerts.Blacklisted]) { v =>
+      spark.read.schema(Encoders.product[Alerts.Blacklisted].schema)
+        .parquet(s"$root/$v").as[Alerts.Blacklisted]
     }
-    if (availableNow) dataQuery.awaitTermination()
-
-    val alertQuery = {
-      val spark2 = spark
-      import spark2.implicits._
-      val statuses = spark.readStream
-        .schema(Encoders.product[Alerts.ObsStatus].schema)
-        .parquet(statusSpool).as[Alerts.ObsStatus]
-      // drain mode must run without the TTL: ProcessingTimeTimeout keeps
-      // the query alive past AvailableNow's drain (see alertStream doc).
-      // The two modes therefore use DIFFERENT GroupStateTimeout types, and
-      // Spark forbids changing the timeout type across restarts of one
-      // checkpointed stateful query — so each mode owns its own checkpoint
-      // subdir. The continuous mode KEEPS the historical "alerts" name:
-      // pre-split deployments checkpointed there under the same
-      // ProcessingTimeTimeout, so an upgraded continuous run resumes its
-      // offsets and blacklist instead of replaying the whole status spool.
-      // Only the drain gets a new dir; a drain never shares state with a
-      // continuous run — reference-faithful, since the blacklist is
-      // in-memory there and forgets on restart anyway (app/mapper.js:42).
-      val alertCp = if (availableNow) "alerts-drain" else "alerts"
-      val w = Alerts.alertStream(statuses, withTtl = !availableNow).writeStream
-        .queryName("graft-alerts")
-        .option("checkpointLocation", s"$checkpointDir/$alertCp")
-        .foreachBatch { (batch: Dataset[Alerts.AlertEvent], batchId: Long) =>
-          sinks.writeAlerts(batch, batchId)
-        }
-        .outputMode("append")
-      (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-    }
-    Seq(dataQuery, alertQuery)
+    // read twice, by the spool write and by the step
+    val statuses = Alerts.observationStatuses(observations, catalog).cache()
+    try {
+      statuses.write.mode("append").parquet(s"$checkpointDir/status-spool")
+      val steps = Alerts.step(statuses, blacklist, System.currentTimeMillis())
+      sinks.writeAlerts(spark.createDataset(steps.flatMap(_.event)), batchId)
+      spark.createDataset(steps.flatMap(_.state))
+        .write.mode("overwrite").parquet(s"$root/$batchId")
+      versions.filter(v => prior.exists(v < _))
+        .foreach(v => fs.delete(new Path(root, v.toString), true))
+    } finally statuses.unpersist()
   }
 }

@@ -212,33 +212,28 @@ class StreamingSpec extends SparkSpec {
     @volatile var catalog = MetadataCatalog.fromMaps(
       Map.empty[String, Map[String, String]],
       Map.empty[String, Seq[(String, String)]])
-    val queries = StreamPipeline.start(
-      source.toDF(), () => catalog, sinks, ckpt, availableNow = false)
-    // the alert query runs with the blacklist TTL armed
-    // (ProcessingTimeTimeout), under which processAllAvailable can never
-    // latch no-new-data — the engine keeps constructing batches so
-    // expirations can fire — so this test polls the sink instead
-    def awaitAlerts(n: Int): Unit = {
-      val deadline = System.currentTimeMillis + 30000
-      while (sinks.alerts.size < n && System.currentTimeMillis < deadline)
-        Thread.sleep(100)
-    }
+    val query = StreamPipeline.start(
+      source.toDF(), () => catalog, sinks, ckpt, availableNow = false).head
     try {
       source.addData(ghostObs)
-      queries(0).processAllAvailable()
-      awaitAlerts(1)
+      // the alerts are written inside the batch, so the batch is done when
+      // they are
+      query.processAllAvailable()
       assert(sinks.alerts.map(_.kind) === Seq("alert"))
       assert(sinks.alerts.head.sensor === "ghost")
-      // register the sensor MID-STREAM — queries keep running
+      // register the sensor MID-STREAM — the query keeps running
       catalog = MetadataCatalog.fromMaps(
         Map("ghost" -> Map("a" -> "f.a")),
         Map("f" -> Seq("a" -> "integer")))
       source.addData(ghostObs)
-      queries(0).processAllAvailable()
-      awaitAlerts(2)
+      query.processAllAvailable()
       // the fix is visible in the very next batch: resolve, no restart
       assert(sinks.alerts.map(_.kind) === Seq("alert", "resolve"))
-    } finally queries.foreach(_.stop())
+      // idle with no new data: no timer state, so no no-data batches
+      val lastBatch = query.lastProgress.batchId
+      Thread.sleep(1000)
+      assert(query.lastProgress.batchId === lastBatch)
+    } finally query.stop()
   }
 
   test("alert message key order follows document order for >4 data keys") {
@@ -264,35 +259,54 @@ class StreamingSpec extends SparkSpec {
       s"keys out of document order: $msg")
   }
 
+  /** Drives the pure transition across simulated batches of sensor s1,
+    * carrying its state from batch to batch. */
+  class Transitions(var lastSeenMs: Option[Long] = None) {
+    def step(nowMs: Long, statuses: Alerts.ObsStatus*): Seq[Alerts.AlertEvent] = {
+      val (event, state) =
+        Alerts.transition("s1", statuses, lastSeenMs, nowMs)
+      lastSeenMs = state
+      event.toSeq
+    }
+  }
+  val err = Alerts.ObsStatus("s1", "net", "invalid_key", Seq("m1"))
+  val ok = Alerts.ObsStatus("s1", "net", null, Nil)
+
   test("blacklist transition: alert suppressed while blacklisted, re-alerts after resolve") {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    // pure transition-function check across simulated batches
-    val st = new TestGroupState(None)
-    def step(statuses: Alerts.ObsStatus*): Seq[Alerts.AlertEvent] =
-      Alerts.transition("s1", statuses.iterator, st).toSeq
-    val err = Alerts.ObsStatus("s1", "net", "invalid_key", Seq("m1"))
-    val ok = Alerts.ObsStatus("s1", "net", null, Nil)
-    assert(step(err).map(_.kind) === Seq("alert"))
-    assert(step(err) === Nil)                       // suppressed
-    assert(step(ok).map(_.kind) === Seq("resolve")) // clears
-    assert(step(ok) === Nil)                        // no spurious resolve
-    assert(step(err).map(_.kind) === Seq("alert"))  // re-alerts
+    val t = new Transitions
+    assert(t.step(0, err).map(_.kind) === Seq("alert"))
+    assert(t.step(1, err) === Nil)                       // suppressed
+    assert(t.step(2, ok).map(_.kind) === Seq("resolve")) // clears
+    assert(t.step(3, ok) === Nil)                        // no spurious resolve
+    assert(t.lastSeenMs === None)                        // clean: no row
+    assert(t.step(4, err).map(_.kind) === Seq("alert"))  // re-alerts
   }
 
   test("blacklist TTL: expired state is dropped and the sensor re-alerts on return") {
-    val st = new TestGroupState(None)
-    def step(statuses: Alerts.ObsStatus*): Seq[Alerts.AlertEvent] =
-      Alerts.transition("s1", statuses.iterator, st).toSeq
-    val err = Alerts.ObsStatus("s1", "net", "invalid_key", Seq("m1"))
-    assert(step(err).map(_.kind) === Seq("alert"))
-    assert(st.armedTimeoutMs === Some(Alerts.blacklistTtlMs)) // TTL armed
-    assert(step(err) === Nil)                                 // suppressed
-    // simulate the ProcessingTimeTimeout firing: empty batch, hasTimedOut
-    st.timedOut = true
-    assert(Alerts.transition("s1", Iterator.empty, st).toSeq === Nil)
-    assert(st.value === None)                                 // state dropped
-    st.timedOut = false
-    assert(step(err).map(_.kind) === Seq("alert"))            // re-alerts
+    val ttl = Alerts.blacklistTtlMs
+    val broken = new Transitions
+    assert(broken.step(0, err).map(_.kind) === Seq("alert"))
+    assert(broken.step(ttl, err) === Nil)       // within the TTL: suppressed
+    assert(broken.lastSeenMs === Some(ttl))     // seen broken: clock re-armed
+    assert(broken.step(2 * ttl) === Nil)        // silent, not yet expired
+    assert(broken.lastSeenMs === Some(ttl))
+    assert(broken.step(2 * ttl + 1) === Nil)    // silent past the TTL
+    assert(broken.lastSeenMs === None)          // ... is not written back
+    // a sensor returning past the TTL counts as never blacklisted: broken
+    // re-alerts, clean emits nothing (no resolve for a forgotten alert)
+    assert(new Transitions(Some(0)).step(ttl + 1, err).map(_.kind) ===
+      Seq("alert"))
+    val cured = new Transitions(Some(0))
+    assert(cured.step(ttl + 1, ok) === Nil)
+    assert(cured.lastSeenMs === None)
+  }
+
+  test("blacklist transition: alert messages do not depend on status order") {
+    val errs = Seq(Seq("m2", "m3"), Seq("m1"), Seq("m2"))
+      .map(Alerts.ObsStatus("s1", "net", "invalid_key", _))
+    val alerts = (errs :+ ok).permutations
+      .map(statuses => new Transitions().step(0, statuses: _*)).toSet
+    assert(alerts === Set(Seq(Alerts.AlertEvent("s1", "alert", Seq("m1")))))
   }
 
   test("restart: a second drain on the same checkpoint recovers the blacklist") {
@@ -328,24 +342,33 @@ class StreamingSpec extends SparkSpec {
       Seq(("cured", "resolve"), ("fresh", "alert")))
   }
 
-  /** Minimal GroupState stub for unit-testing the transition function. */
-  class TestGroupState(var value: Option[Alerts.SensorState],
-      var timedOut: Boolean = false)
-      extends org.apache.spark.sql.streaming.GroupState[Alerts.SensorState] {
-    var armedTimeoutMs: Option[Long] = None
-    def exists: Boolean = value.isDefined
-    def get: Alerts.SensorState = value.get
-    def getOption: Option[Alerts.SensorState] = value
-    def update(s: Alerts.SensorState): Unit = value = Some(s)
-    def remove(): Unit = value = None
-    def hasTimedOut: Boolean = timedOut
-    def setTimeoutDuration(d: Long): Unit = armedTimeoutMs = Some(d)
-    def setTimeoutDuration(d: String): Unit = ()
-    def setTimeoutTimestamp(t: Long): Unit = ()
-    def setTimeoutTimestamp(t: Long, additional: String): Unit = ()
-    def setTimeoutTimestamp(t: java.sql.Date): Unit = ()
-    def setTimeoutTimestamp(t: java.sql.Date, additional: String): Unit = ()
-    def getCurrentWatermarkMs(): Long = 0L
-    def getCurrentProcessingTimeMs(): Long = 0L
+  test("replay: a batch re-run after a crash before its commit emits its alerts again") {
+    val root = Files.createTempDirectory("graft-replay")
+    val input = Files.createDirectories(root.resolve("in"))
+    val ckpt = root.resolve("ckpt")
+    def drain(): Seq[(String, String)] = {
+      val sinks = new CollectingSinks
+      StreamPipeline.start(spark.readStream.text(input.toString),
+          () => Fixtures.catalog, sinks, ckpt.toString)
+        .foreach(_.awaitTermination(60000))
+      sinks.alerts.map(e => (e.sensor, e.kind)).toSeq.sorted
+    }
+    def write(file: String, fixtures: Range): Unit =
+      Files.write(input.resolve(file),
+        fixtures.map(obsJson).mkString("\n").getBytes("UTF-8"))
+    // batch 0 blacklists camera and htu21d; batch 1 (their clean
+    // observations) resolves both against batch 0's state
+    write("1.json", 0 until 6)
+    drain()
+    write("2.json", 6 until 8)
+    val lastBatch = drain()
+    assert(lastBatch === Seq(("camera", "resolve"), ("htu21d", "resolve")))
+    // crash between the sinks and the commit: batch 1 is not committed, so
+    // the next start re-runs it over the same files and must read the
+    // state batch 1 read, not the state it wrote
+    val commits = ckpt.resolve("dataflow/commits")
+    Files.delete(commits.resolve("1"))
+    Files.deleteIfExists(commits.resolve(".1.crc"))
+    assert(drain() === lastBatch)
   }
 }
