@@ -183,9 +183,15 @@ object Engine {
     * is ever introduced at scale. Hash-by-key (deterministic) keeps
     * every document whole, so per-doc aggregation orders — and therefore
     * every rounded continuum column downstream — are unchanged. */
-  def fanoutParallel(docs: DataFrame, key: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
+  def fanoutParallel(docs: DataFrame, key: String = "doc_id"): DataFrame =
+    fanoutParts(docs).fold(docs)(parts =>
+      docs.repartition(parts, org.apache.spark.sql.functions.col(key)))
+
+  /** The partition count [[fanoutParallel]] spreads `docs` over, or None
+    * when the scan already provides ≥ cores splits and the relation
+    * passes through. */
+  def fanoutParts(docs: DataFrame): Option[Int] = {
+    val cores = docs.sparkSession.sparkContext.defaultParallelism
     val size = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     if (size < BigInt(cores) * (128L << 20)) {
       // partition count sized to the DATA, capped by the cores: one task
@@ -194,9 +200,8 @@ object Engine {
       // queries SLOWER at 32 cores than at 8 (the r14 8-vs-32 scaling
       // run: 32 near-empty tasks per stage cost more than the kernel
       // parallelism they bought on a sub-MB corpus)
-      val parts = BigInt(2).max(BigInt(cores).min(size / 65536)).toInt
-      docs.repartition(parts, org.apache.spark.sql.functions.col(key))
-    } else docs
+      Some(BigInt(2).max(BigInt(cores).min(size / 65536)).toInt)
+    } else None
   }
 
   def eagerCheckpoint(df: DataFrame): DataFrame =

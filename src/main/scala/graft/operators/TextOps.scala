@@ -2085,46 +2085,45 @@ object TextOps {
     * reduced vocabulary. The pair list is a dedup-style JOB output —
     * eagerly materialized, intermediates released (same rationale as
     * [[dedupNgramJaccard]]). */
-  /** Parallelism for fan-out stages (tokenize-explode, pair expansion):
-    * 4 tasks per core with a floor of 64, so the heavy stage's
-    * partial-aggregation hash maps stay small enough to be cache/
-    * memory-resident, stragglers smooth out across several waves, and
-    * the per-task overhead never dominates. Measured both ends at sf0.1:
-    * at 4 cores, 64 partitions ran the expansion ~1.6× faster than 32
-    * (the floor matters more than the multiplier); at 32 cores, 64–256
-    * partitions were within 1.3–1.8 s while 512 (a 16× multiplier)
-    * degraded to 8 s — too-many-tiny-tasks overhead is real. Scales with
-    * the cluster (defaultParallelism = total executor cores), never a
-    * constant. */
-  private def expandParallelism(spark: SparkSession): Int =
-    math.max(spark.sparkContext.defaultParallelism * 4, 64)
+  /** Task count of the pair expansion, from the rows it will produce:
+    * one task per [[CosineJoinRowsPerTask]] of the measured Σdf² (the
+    * exact expansion row count), at least 2 and at most
+    * max(4 × cores, 64). The cap was measured at sf0.1, where the
+    * expansion is the heavy stage: at 32 cores 64–256 tasks ran it in
+    * 1.3–1.8 s while 512 degraded to 8 s (too many tiny tasks). Pure, so
+    * its bounds are pinned without a corpus (CosineBlockPairsExprSpec).
+    * Measured on a 4-core VM against the fixed 64-task floor it replaced:
+    *  - sf0.001 (65 KB of documents) gets 2 tasks. The whole query ran
+    *    23 tasks instead of 520, and its time in the benchmark's traced
+    *    11-query suite fell from 5.2 s to 1.3 s;
+    *  - sf0.1 (Σdf² ≈ 73 M rows) gets 37 tasks. `graft.Bench
+    *    text_cosine_pairs 4` (min of 4 samples) ran 10.5–11.4 s against
+    *    12.3–14.8 s in 3 interleaved pairs;
+    *  - sf1 (Σdf² ≈ 3.1 B rows) reaches the cap, the count every corpus
+    *    got before. */
+  private[graft] def cosineExpandParts(sumDf2: Long, cores: Int): Int =
+    math.min(math.max(sumDf2 / CosineJoinRowsPerTask + 1, 2L),
+      math.max(4L * cores, 64L)).toInt
 
   /** The weighted inverted index — one NARROW row per surviving
     * (doc, term) with its tf·idf weight. Deliberately norm-free: the pair
     * aggregation below streams Σ df² joined rows (36M at sf0.1), so every
     * byte this relation carries is multiplied by the join fanout — norms
     * are re-derived from the index in one tiny keyed agg and attached to
-    * the (post-threshold, tiny) pair list instead. */
-  private def cosineIndex(spark: SparkSession, dir: String,
-      dfCapFrac: Int): DataFrame =
-    cosineIndexOf(tbl(spark, dir, "documents"), dfCapFrac)
-
-  /** [[cosineIndex]] over any (doc_id, text) relation. */
+    * the (post-threshold, tiny) pair list instead. Built over any
+    * (doc_id, text) relation. */
   private def cosineIndexOf(rawDocs: DataFrame, dfCapFrac: Int): DataFrame = {
-    val spark = rawDocs.sparkSession
     // The tokenize→explode→tf stage is a FAN-OUT (each doc becomes ~|tokens|
     // index rows), so its parallelism must come from an explicit exchange,
     // not the scan: a small corpus is one parquet split, and round 7
     // measured the whole tokenize+tf running as a SINGLE task (~4 s of the
-    // query's 8.9 s at sf0.1). Partitioning the docs BY doc_id does double
-    // duty: hashpartitioning(doc_id) satisfies the (doc_id, term) tf-agg
-    // clustering (no second exchange), and it IS the final index
-    // partitioning the pair expansion below needs — the trailing
-    // repartition collapses. The count comes from expandParallelism
-    // (4× cores, floor 64 — see its doc for the measured sweep at both
-    // 4 and 32 cores).
-    val parts = expandParallelism(spark)
-    val docs = rawDocs.repartition(parts, col("doc_id"))
+    // query's 8.9 s at sf0.1). Engine.fanoutParallel sizes that exchange
+    // from the corpus bytes, as for every other per-document stage: one
+    // task per 64 KB, at least 2 and at most one per core (2 tasks for
+    // sf0.001's 65 KB; 4 for sf0.1's 0.6 MB on 4 cores). Its hash
+    // partitioning by doc_id also satisfies the (doc_id, term) tf-agg
+    // clustering, so the agg adds no second exchange.
+    val docs = Engine.fanoutParallel(rawDocs)
     val tf = docs
       .select(col("doc_id"), explode(bigrams(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -2136,16 +2135,28 @@ object TextOps {
       .filter(col("df") * dfCapFrac <= col("n"))
       .select(col("doc_id"), col("term"),
         (col("tf") * log(col("n").cast("double") / col("df"))).as("w"))
-      // the self-join below broadcasts one side when the index is small,
-      // which makes the OTHER side's partitioning the parallelism of the
-      // Σ df² pair expansion. The index is already hash-partitioned by
-      // doc_id from the docs exchange above, so this REPARTITION_BY_NUM
-      // only re-asserts the count through the narrow tf→weight pipeline
-      // (256k rows at sf0.1 — cheap) and keeps the expansion parallelism
-      // pinned at `parts` rather than spark.sql.shuffle.partitions.
-      // Spreading by doc_id keeps every core expanding pairs; each pair
-      // still arises exactly once (from its a-side row)
-      .repartition(parts, col("doc_id"))
+  }
+
+  /** The pair expansion's input: the index spread by doc_id over `parts`
+    * tasks ([[cosineExpandParts]]). The self-join broadcasts one side
+    * when the index is small, which makes the OTHER side's partitioning
+    * the parallelism of the Σ df² expansion; this repartition pins it at
+    * `parts` rather than spark.sql.shuffle.partitions. Spreading by doc_id
+    * keeps every task expanding pairs, and each pair still arises exactly
+    * once (from its a-side row). When the index already has `parts`
+    * doc_id partitions the exchange collapses. */
+  private def expansionInput(idx: DataFrame, parts: Int): DataFrame =
+    idx.repartition(parts, col("doc_id"))
+
+  /** One narrow job over the index: Σdf² (the EXACT pair-expansion row
+    * count), max(df) (the skew gate), vocabulary size and index rows
+    * (kernel eligibility). */
+  private def cosineStats(idx: DataFrame): (Long, Long, Long, Long) = {
+    val stats = idx.groupBy("term").agg(count(lit(1)).as("df"))
+      .agg(sum(col("df") * col("df")), max(col("df")), count(lit(1)),
+        sum(col("df"))).first()
+    def orZero(i: Int) = if (stats.isNullAt(i)) 0L else stats.getLong(i)
+    (orZero(0), orZero(1), stats.getLong(2), orZero(3))
   }
 
   /** Per-doc L2 norms of the surviving tf·idf vectors — 1 row per doc,
@@ -2197,14 +2208,20 @@ object TextOps {
     * task. The gate is operator-side adaptivity from the SAME one-row
     * stats agg that sizes the shuffle: statistics that Catalyst/AQE do
     * not collect (per-key join fan-out), applied where they decide the
-    * physical shape. */
+    * physical shape. The plain join expands over `expandParts` tasks
+    * ([[expansionInput]]); the salted one over its (term, i, j) join
+    * partitions. */
   private def cosinePairsFrom(idx: DataFrame, minShared: Int,
-      salted: Boolean): DataFrame = {
+      salted: Boolean, expandParts: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val norms = cosineNorms(idx)
     val (aSide, bSide) =
-      if (!salted) (idx, idx)
-      else {
+      if (!salted) {
+        // both sides are the same spread relation: their sizes tie, so a
+        // broadcast builds the b side and the spread a side expands
+        val spread = expansionInput(idx, expandParts)
+        (spread, spread)
+      } else {
         val c = CosineBlockSize
         val byTerm = Window.partitionBy(col("term"))
         val blocked = idx
@@ -2254,8 +2271,8 @@ object TextOps {
     * ≈ 180 MB of hash-map state — measured to fall out of hash
     * aggregation into sort+spill under 32 concurrent tasks on the 8 g
     * harness (757.7 s at sf1). 2 M rows/task ≈ 45 MB keeps every task's
-    * map hash-resident; at sf0.1 the quotient stays ≈ cores, so small
-    * corpora are unaffected. */
+    * map hash-resident. The same quotient sizes the expansion's own tasks
+    * ([[cosineExpandParts]]) and the pair agg's reduce tasks. */
   private val CosineJoinRowsPerTask = 2L * 1000 * 1000
 
   /** Bayardo/PPJoin-style prefix relation for the count-threshold pair
@@ -2470,105 +2487,111 @@ object TextOps {
 
   def textCosinePairs(spark: SparkSession, dir: String,
       minShared: Int = 10, dfCapFrac: Int = 5): DataFrame = {
+    // one read of the corpus: its size estimate picks the storage level
+    // and the fan-out, and the index is built over the same relation
+    val docs = tbl(spark, dir, "documents")
+    val inputBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
+    val fanoutParts = Engine.fanoutParts(docs).getOrElse(-1)
     // persisted (storage medium size-adaptive via Engine.miningLevel):
     // the stats probes below are ACTIONS, so every strategy reads the
     // SAME cached index materialization instead of executing the
     // tokenize→tf→df pipeline per subtree
-    val lvl = Engine.miningLevel(tbl(spark, dir, "documents"))
-    val w = cosineIndex(spark, dir, dfCapFrac).persist(lvl)
-    // Σdf² (the EXACT pair-expansion row count), max(df) (the skew gate),
-    // vocabulary size and index rows (kernel eligibility) from one cheap
-    // one-row agg over the index — this narrow job also fills the cache
-    // before the heavy join reads it. Sizing and SHAPING the job from
-    // measured stats is the operator-side twin of AQE: runtime statistics,
-    // but for join OUTPUT fan-out and algorithm choice, which AQE's
-    // map-output-bytes heuristics structurally cannot see.
-    val stats = w.groupBy("term").agg(count(lit(1)).as("df"))
-      .agg(sum(col("df") * col("df")), max(col("df")), count(lit(1)),
-        sum(col("df"))).first()
-    val sumDf2 = if (stats.isNullAt(0)) 0L else stats.getLong(0)
-    val maxDf = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-    val vocabN = stats.getLong(2)
-    val idxRows = if (stats.isNullAt(3)) 0L else stats.getLong(3)
-    val cores = spark.sparkContext.defaultParallelism
-    // the doc census (one more narrow job on the cached index) is only
-    // needed to size/admit the kernel — skip it when the vocab cap or the
-    // expansion floor already rules the kernel out (the SAME predicate
-    // cosineKernelPlan gates admission on — shared so the census skip
-    // and the admission test cannot drift apart)
-    val nDocs =
-      if (isKernelCandidate(sumDf2, vocabN))
-        w.select("doc_id").distinct().count()
-      else 0L
-    // admission + block sizing — extracted and bound-pinned, see
-    // [[cosineKernelPlan]]
-    val kernelBlocks = cosineKernelPlan(sumDf2, vocabN, idxRows, nDocs, cores)
-    // eager job semantics: every strategy reads the SAME cached index
-    // materialization instead of executing the tokenize→tf→df pipeline
-    // per subtree; blocking unpersist as in dedupNgramJaccard.
-    val out = if (kernelBlocks.nonEmpty) {
-      recordCosinePlan(s"""{"path":"kernel","blocks":${kernelBlocks.get},""" +
-        s""""sum_df2":$sumDf2,"max_df":$maxDf,"vocab":$vocabN,""" +
-        s""""idx_rows":$idxRows,"n_docs":$nDocs,"cores":$cores}""")
-      Engine.eagerCheckpoint(
-        cosinePairsKernelFrom(w, minShared, kernelBlocks.get, vocabN.toInt),
-        lvl)
-    } else {
-      // Probe the prefix reduction only when the expansion is expensive
-      // enough for prefix filtering to matter (same floor as the kernel):
-      // the probe itself is a per-doc ranking window over the full index,
-      // real money on a corpus whose expansion was cheap anyway.
-      val prefixes =
-        if (sumDf2 < KernelMinExpansion) None
-        else Some(cosinePrefixes(w, minShared).persist(lvl))
-      val sumPDf2 = prefixes.map { p =>
-        val pStat = p.groupBy("term").agg(count(lit(1)).as("pdf"))
-          .agg(sum(col("pdf") * col("pdf"))).first()
-        if (pStat.isNullAt(0)) 0L else pStat.getLong(0)
-      }.getOrElse(Long.MaxValue)
-      val usePrefix = prefixes.nonEmpty &&
-        sumPDf2 <= sumDf2 / PrefixPayoffFactor
-      // The shuffle-partition raise is scoped to THIS query's execution
-      // (set → run → restore): a session-wide raise was measured in round
-      // 7 to inflate every small shuffle in the run (9.4 s vs 1.5 s on
-      // this very query at sf0.1), while per-query AQE coalescing still
-      // shrinks any small stage back to advisory size.
-      val joinRows = if (usePrefix) sumPDf2 else sumDf2
-      val joinParts = math.min(math.max(
-        (joinRows / CosineJoinRowsPerTask).toInt + 1, cores), 4096)
-      recordCosinePlan({
-        val path = if (usePrefix) "prefix"
-          else if (maxDf > CosineBlockSize) "salted" else "plain"
-        s"""{"path":"$path","sum_df2":$sumDf2,"sum_pdf2":${
-          if (prefixes.nonEmpty) sumPDf2 else -1},"max_df":$maxDf,""" +
-          s""""vocab":$vocabN,"idx_rows":$idxRows,"join_parts":$joinParts,""" +
-          s""""cores":$cores}"""
-      })
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      val r = try {
-        spark.conf.set(key, joinParts.toString)
+    val lvl = Engine.miningLevel(docs)
+    val w = cosineIndexOf(docs, dfCapFrac).persist(lvl)
+    // blocking unpersist as in dedupNgramJaccard, also when a job fails
+    try {
+      // one cheap one-row agg over the index ([[cosineStats]]) — this
+      // narrow job also fills the cache before the heavy join reads it.
+      // Sizing and SHAPING the job from measured stats is the
+      // operator-side twin of AQE: runtime statistics, but for join OUTPUT
+      // fan-out and algorithm choice, which AQE's map-output-bytes
+      // heuristics structurally cannot see.
+      val (sumDf2, maxDf, vocabN, idxRows) = cosineStats(w)
+      val cores = spark.sparkContext.defaultParallelism
+      // the doc census (one more narrow job on the cached index) is only
+      // needed to size/admit the kernel — skip it when the vocab cap or the
+      // expansion floor already rules the kernel out (the SAME predicate
+      // cosineKernelPlan gates admission on — shared so the census skip
+      // and the admission test cannot drift apart)
+      val nDocs =
+        if (isKernelCandidate(sumDf2, vocabN))
+          w.select("doc_id").distinct().count()
+        else 0L
+      // admission + block sizing — extracted and bound-pinned, see
+      // [[cosineKernelPlan]]
+      val kernelBlocks =
+        cosineKernelPlan(sumDf2, vocabN, idxRows, nDocs, cores)
+      val sized = s""""input_bytes":$inputBytes,"fanout_parts":$fanoutParts,"""
+      if (kernelBlocks.nonEmpty) {
+        recordCosinePlan(s"""{"path":"kernel","blocks":${kernelBlocks.get},""" +
+          s""""sum_df2":$sumDf2,"max_df":$maxDf,"vocab":$vocabN,""" +
+          s""""idx_rows":$idxRows,"n_docs":$nDocs,$sized"cores":$cores}""")
         Engine.eagerCheckpoint(
-          if (usePrefix) cosinePairsPrefixFrom(w, minShared, prefixes.get)
-          else cosinePairsFrom(w, minShared, salted = maxDf > CosineBlockSize),
+          cosinePairsKernelFrom(w, minShared, kernelBlocks.get, vocabN.toInt),
           lvl)
-      } finally spark.conf.set(key, prev)
-      prefixes.foreach(_.unpersist(true))
-      r
-    }
-    w.unpersist(true)
-    out
+      } else {
+        val expandParts = cosineExpandParts(sumDf2, cores)
+        // Probe the prefix reduction only when the expansion is expensive
+        // enough for prefix filtering to matter (same floor as the
+        // kernel): the probe itself is a per-doc ranking window over the
+        // full index, real money on a corpus whose expansion was cheap
+        // anyway.
+        val prefixes =
+          if (sumDf2 < KernelMinExpansion) None
+          else Some(cosinePrefixes(expansionInput(w, expandParts), minShared)
+            .persist(lvl))
+        try {
+          val sumPDf2 = prefixes.map { p =>
+            val pStat = p.groupBy("term").agg(count(lit(1)).as("pdf"))
+              .agg(sum(col("pdf") * col("pdf"))).first()
+            if (pStat.isNullAt(0)) 0L else pStat.getLong(0)
+          }.getOrElse(Long.MaxValue)
+          val usePrefix = prefixes.nonEmpty &&
+            sumPDf2 <= sumDf2 / PrefixPayoffFactor
+          // The shuffle-partition raise is scoped to THIS query's
+          // execution (set → run → restore): a session-wide raise was
+          // measured in round 7 to inflate every small shuffle in the run
+          // (9.4 s vs 1.5 s on this very query at sf0.1), while per-query
+          // AQE coalescing still shrinks any small stage back to advisory
+          // size.
+          val joinRows = if (usePrefix) sumPDf2 else sumDf2
+          val joinParts = math.min(math.max(
+            (joinRows / CosineJoinRowsPerTask).toInt + 1, cores), 4096)
+          recordCosinePlan({
+            val path = if (usePrefix) "prefix"
+              else if (maxDf > CosineBlockSize) "salted" else "plain"
+            s"""{"path":"$path","sum_df2":$sumDf2,"sum_pdf2":${
+              if (prefixes.nonEmpty) sumPDf2 else -1},"max_df":$maxDf,""" +
+              s""""vocab":$vocabN,"idx_rows":$idxRows,$sized""" +
+              s""""expand_parts":$expandParts,"join_parts":$joinParts,""" +
+              s""""cores":$cores}"""
+          })
+          val key = "spark.sql.shuffle.partitions"
+          val prev = spark.conf.get(key)
+          try {
+            spark.conf.set(key, joinParts.toString)
+            Engine.eagerCheckpoint(
+              if (usePrefix) cosinePairsPrefixFrom(w, minShared, prefixes.get)
+              else cosinePairsFrom(w, minShared,
+                salted = maxDf > CosineBlockSize, expandParts),
+              lvl)
+          } finally spark.conf.set(key, prev)
+        } finally prefixes.foreach(_.unpersist(true))
+      }
+    } finally w.unpersist(true)
   }
 
-  /** Strategy dispatch for the spec/plan surfaces. `kernel` runs a tiny
-    * vocab-count job to size the dense ids (the shipped op reuses its
-    * stats agg instead). */
+  /** Strategy dispatch for the spec/plan surfaces, with the plain and
+    * prefix expansions spread over `expandParts` tasks
+    * ([[expansionInput]]). `kernel` runs a tiny vocab-count job to size
+    * the dense ids (the shipped op reuses its stats agg instead). */
   private def cosinePairsStrategy(idx: DataFrame, minShared: Int,
-      strategy: String): DataFrame = strategy match {
-    case "plain" => cosinePairsFrom(idx, minShared, salted = false)
-    case "salted" => cosinePairsFrom(idx, minShared, salted = true)
+      strategy: String, expandParts: Int): DataFrame = strategy match {
+    case "plain" => cosinePairsFrom(idx, minShared, salted = false, expandParts)
+    case "salted" => cosinePairsFrom(idx, minShared, salted = true, expandParts)
     case "prefix" =>
-      cosinePairsPrefixFrom(idx, minShared, cosinePrefixes(idx, minShared))
+      cosinePairsPrefixFrom(idx, minShared,
+        cosinePrefixes(expansionInput(idx, expandParts), minShared))
     case "kernel" =>
       val vocabN = idx.select("term").distinct().count().toInt
       cosinePairsKernelFrom(idx, minShared, nBlocks = 8,
@@ -2585,16 +2608,23 @@ object TextOps {
   private[graft] def textCosinePairsLazy(spark: SparkSession, dir: String,
       minShared: Int = 10, dfCapFrac: Int = 5,
       strategy: String = "plain"): DataFrame =
-    cosinePairsStrategy(cosineIndex(spark, dir, dfCapFrac), minShared,
+    textCosinePairsOf(tbl(spark, dir, "documents"), minShared, dfCapFrac,
       strategy)
 
   /** [[textCosinePairs]] over any (doc_id, text) relation with an
     * explicit strategy — the spec surface for pinning that the salted
     * block join, the prefix-filtered shape, and the block kernel are all
-    * result-identical to the plain term join. */
+    * result-identical to the plain term join, and that the result does
+    * not depend on the expansion's task count. `expandParts` defaults to
+    * the shipped rule over the measured Σdf² (one stats job). */
   private[graft] def textCosinePairsOf(docs: DataFrame, minShared: Int,
-      dfCapFrac: Int, strategy: String): DataFrame =
-    cosinePairsStrategy(cosineIndexOf(docs, dfCapFrac), minShared, strategy)
+      dfCapFrac: Int, strategy: String,
+      expandParts: Option[Int] = None): DataFrame = {
+    val idx = cosineIndexOf(docs, dfCapFrac)
+    val parts = expandParts.getOrElse(cosineExpandParts(cosineStats(idx)._1,
+      docs.sparkSession.sparkContext.defaultParallelism))
+    cosinePairsStrategy(idx, minShared, strategy, parts)
+  }
 
   /** Sequence packing — the concat-and-chunk assignment of documents to
     * fixed-length training sequences (GPT-style pretraining batches):

@@ -116,6 +116,22 @@ class CosineBlockPairsExprSpec extends AnyFunSuite {
     assert(plan(1000L * 1000 * 1000, 100000, 100L * 1000) === None)
   }
 
+  test("expansion tasks: the count always lies in [2, cap] and grows with Σdf²") {
+    // cap = max(4 × cores, 64); Σdf² sweeps empty to past Long's square root
+    for ((cores, cap) <- Seq(1 -> 64, 4 -> 64, 32 -> 128, 4096 -> 16384)) {
+      val sums = Seq(0L, 1L, 1999999L, 2000000L, 73L * 1000 * 1000,
+        3100L * 1000 * 1000, Long.MaxValue / 2, Long.MaxValue)
+      val parts = sums.map(graft.operators.TextOps.cosineExpandParts(_, cores))
+      parts.foreach(p => assert(p >= 2 && p <= cap, s"cores=$cores: $parts"))
+      assert(parts === parts.sorted, s"cores=$cores: not monotone $parts")
+      assert(parts.head === 2 && parts.last === cap, s"cores=$cores: $parts")
+    }
+    // sf0.001 stays at the floor; sf0.1 (Σdf² ≈ 73 M) gets 37 tasks at 4
+    // cores, under the cap the 64-task floor used to force
+    assert(graft.operators.TextOps.cosineExpandParts(
+      73L * 1000 * 1000, cores = 4) === 37)
+  }
+
   test("rounding matches Spark round(_, 6) half-up semantics") {
     // identical unit vectors → cos exactly 1.0 regardless of mode
     val u = doc(1L, Array(0, 1), Array(3.0, 4.0))

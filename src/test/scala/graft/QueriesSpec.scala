@@ -638,6 +638,60 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("cosine pairs: the result does not depend on the expansion's task count (2 vs 64)") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    def run(parts: Int) =
+      TextOps.textCosinePairsOf(docs, minShared = 3, dfCapFrac = 5,
+        strategy = "plain", expandParts = Some(parts))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
+        .toMap
+    val two = run(2)
+    val wide = run(64)
+    assert(two.nonEmpty, "expected qualifying pairs at sf0.001")
+    assert(wide.keySet === two.keySet, "pair set depends on the task count")
+    two.foreach { case (k, (sh, cos)) =>
+      assert(wide(k)._1 === sh, s"shared diverged at $k")
+      // the same 1e-6 grid tolerance as the strategy-agreement spec: the
+      // dot-product fold order follows the partitioning
+      assert(math.abs(wide(k)._2 - cos) <= 1e-6, s"cosine diverged at $k")
+    }
+  }
+
+  test("cosine pairs: the shipped op runs fewer than 100 tasks on sf0.001") {
+    // 65 KB of documents: the per-doc stage and the pair expansion are
+    // sized from the data (2 tasks each here), not from a fixed floor
+    val sc = spark.sparkContext
+    val group = s"cosine-task-guard-${System.nanoTime}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val pairs = try {
+      sc.setJobGroup(group, "cosine task-count guard")
+      // the op is eager: the call runs every job of the query
+      try TextOps.textCosinePairs(spark, dir)
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.graft.ListenerBusDrain.drain(sc)
+      }
+    } finally sc.removeSparkListener(listener)
+    assert(pairs.count() > 0)
+    info(s"text_cosine_pairs ran ${tasks.get} tasks")
+    assert(tasks.get > 0, "no task of the guarded jobs was seen")
+    assert(tasks.get < 100, s"text_cosine_pairs ran ${tasks.get} tasks")
+  }
+
   test("mm perceptual near-dup: identical payloads pair at distance 0, dissimilar profiles verify out") {
     import spark.implicits._
     val body = ("the quick brown fox jumps over the lazy dog " * 20).trim
