@@ -9,7 +9,9 @@ import org.apache.spark.storage.StorageLevel
   * Semantics-critical (correctness changes without these):
   *  - mapKeyDedupPolicy=LAST_WIN: JS object-assignment semantics when
   *    case-folding collides data keys (P1);
-  *  - session timeZone UTC: naive sensor timestamps are UTC-pinned.
+  *  - session timeZone UTC: naive sensor timestamps are UTC-pinned;
+  *  - legacy.parquet.nanosAsLong: nanosecond parquet timestamps (older
+  *    `events` drops) read as long, so no operator sets it per read.
   *
   * Scale posture (local defaults; a cluster deployment raises
   * shuffle.partitions to ~2-3x total cores and lets AQE coalesce):
@@ -77,6 +79,8 @@ object Engine {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+      // INT64 TIMESTAMP(NANOS) parquet columns read as long (EventOps.tbl)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // static conf consumed by ContextCleaner at context creation: lets
       // reliable-mode eagerCheckpoint dirs be deleted when their RDD is

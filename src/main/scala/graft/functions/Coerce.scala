@@ -49,7 +49,9 @@ object Coerce {
       ColumnBridge.expression(ptype)))
   }
 
-  /** Pure-Scala twin of [[coerce]] for ScalaCheck cross-validation. */
+  /** Pure-Scala reference of [[coerce]] for the specs' cross-validation
+    * (CoerceSpec). Main code coerces only through [[coerce]]; an EngineSpec
+    * guard fails if this is called anywhere else in `src/main/scala`. */
   def coerceScala(lex: String, jstype: String, ptype: String): (String, Boolean) = {
     if (ptype == null) return (null, true)
     ptype.toLowerCase match {

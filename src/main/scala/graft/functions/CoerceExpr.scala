@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (lex, jstype, ptype) → struct<value string, error boolean>, with the
   * exact JS truth table of the reference (app/mapper.js:192-243). The
   * kernel is regex-free (manual scans, no regexp evaluation per value)
-  * and value-identical to the `Coerce.coerceScala` twin — pinned by
+  * and value-identical to the `Coerce.coerceScala` reference — pinned by
   * CoerceSpec's truth table and property spec.
   *
   * Never null-out: a null/missing declared type is a coercion ERROR row

@@ -1,73 +1,34 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
 /** Data model for the sensor-observation engine.
   *
   * The unit of data is the *observation*: a semi-structured record read off a
   * stream, whose `data` field is an open string→scalar map given meaning only
   * by the metadata catalog (reference: app/mapper.js:48-55).
   *
-  * Scalars arrive as JSON number / string / boolean. The declared type lives
-  * in the catalog, not the record, and the reference's coercion semantics
-  * (app/mapper.js:192-243) depend on the *JSON* type of the raw value (e.g.
-  * `Number(false)` = 0 is a valid float, but the string `"false"` is not).
-  * We therefore carry each scalar as a tagged value:
+  * Scalars arrive as JSON number / string / boolean / null. The declared type
+  * lives in the catalog, not the record, and the reference's coercion
+  * semantics (app/mapper.js:192-243) depend on the *JSON* type of the raw
+  * value (e.g. `Number(false)` = 0 is a valid float, but the string `"false"`
+  * is not). We therefore carry each scalar as a tagged value:
   *
   *   struct<lex: string, jstype: string>
   *
   * where `lex` is the canonical JS string rendering (`String(v)`) and
-  * `jstype` ∈ {"string", "number", "boolean"}. This keeps the whole pipeline
-  * in native Spark SQL types (no opaque UDTs) so every downstream operator is
-  * a plain Catalyst expression.
+  * `jstype` ∈ {"string", "number", "boolean", "null"}. This keeps the whole
+  * pipeline in native Spark SQL types (no opaque UDTs) so every downstream
+  * operator is a plain Catalyst expression.
   */
 object Observation {
-
-  val STRING = "string"
-  val NUMBER = "number"
-  val BOOLEAN = "boolean"
-
-  /** Tagged scalar: canonical lexical form + original JSON type. */
-  val scalarType: StructType = StructType(Seq(
-    StructField("lex", StringType, nullable = true),
-    StructField("jstype", StringType, nullable = true)))
-
-  /** Schema of one observation after parse (S1/S2). */
-  val schema: StructType = StructType(Seq(
-    StructField("network", StringType),
-    StructField("node_id", StringType),
-    StructField("meta_id", LongType),
-    StructField("datetime", TimestampType),
-    StructField("sensor", StringType),
-    StructField("data", MapType(StringType, scalarType))))
-
-  /** Raw-JSON schema used by from_json before tagging (values as strings,
-    * lexically preserved). Only used as a fallback; ObservationSource parses
-    * with full type tagging. */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("network", StringType),
-    StructField("node_id", StringType),
-    StructField("meta_id", LongType),
-    StructField("datetime", TimestampType),
-    StructField("sensor", StringType),
-    StructField("data", MapType(StringType, StringType))))
 
   /** The observation key columns carried through every stage. */
   val obsCols: Seq[String] = Seq("network", "node_id", "meta_id", "datetime", "sensor")
 }
 
-/** Typed twin for Dataset[TaggedScalar] use in tests/builders. */
+/** Tagged scalar: canonical lexical form + original JSON type. */
 case class TaggedScalar(lex: String, jstype: String)
 
-/** One (key, tagged value) data pair in DOCUMENT order. Typed consumers
-  * must use Seq[DataPair] (array-backed, order-preserving through the
-  * Dataset encoder) rather than Map: Spark's deserializer rebuilds a
-  * Map[String, _] as an order-scrambling HashMap for >4 entries, so the
-  * VectorMap built at parse time does not survive a Dataset round-trip.
-  * Field names match map_entries() output (key, value). */
-case class DataPair(key: String, value: TaggedScalar)
-
-/** Typed observation for fixture construction in tests. */
+/** One parsed observation (ObservationSource's output, and the fixtures'). */
 case class ObservationRow(
     network: String,
     node_id: String,

@@ -21,12 +21,11 @@ object EventOps {
     if (name == "events") {
       // events.parquet has shipped with two physical layouts for ts —
       // INT64 TIMESTAMP(NANOS) (earlier drops; Spark reads it as long
-      // under the legacy conf, floor-divided to micros exactly like
-      // DuckDB's ns → µs truncation) and TIMESTAMP(MICROS, naive)
-      // (current drops; inferred TIMESTAMP_NTZ). Adapt on the MEASURED
-      // column type so both layouts surface the identical session-TZ
-      // (UTC) timestamp the oracle sees.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // under the legacy conf Engine.builder sets, floor-divided to
+      // micros exactly like DuckDB's ns → µs truncation) and
+      // TIMESTAMP(MICROS, naive) (current drops; inferred TIMESTAMP_NTZ).
+      // Adapt on the MEASURED column type so both layouts surface the
+      // identical session-TZ (UTC) timestamp the oracle sees.
       val df = spark.read.parquet(s"$dir/$name.parquet")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

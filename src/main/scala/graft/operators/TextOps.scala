@@ -2275,73 +2275,6 @@ object TextOps {
     * ([[cosineExpandParts]]) and the pair agg's reduce tasks. */
   private val CosineJoinRowsPerTask = 2L * 1000 * 1000
 
-  /** Bayardo/PPJoin-style prefix relation for the count-threshold pair
-    * miner: rank each doc's terms in the global rare-first canonical order
-    * (df, term); a pair sharing ≥ `minShared` terms MUST match within each
-    * side's first nt − minShared + 1 ranked terms (the standard prefix-
-    * filter lemma for overlap joins, same discipline as the ngram-Jaccard
-    * prefix above). Docs with fewer than `minShared` surviving terms get
-    * an empty prefix — they can never qualify. */
-  private def cosinePrefixes(idx: DataFrame, minShared: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val freq = idx.groupBy("term").agg(count(lit(1)).as("f"))
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("f"), col("term"))
-    idx.join(freq, "term")
-      .withColumn("rk", row_number().over(byDoc))
-      .withColumn("nt", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-      .filter(col("rk") <= col("nt") - minShared + 1)
-      .select(col("doc_id"), col("nt"), col("rk"), col("term"))
-  }
-
-  /** Prefix-filtered exact pair mining (Bayardo et al. All-Pairs, WWW '07 /
-    * PPJoin, WWW '08, adapted to the integer overlap threshold): candidates
-    * come from a prefix×prefix join with the positional filter
-    * (min(nt−rk)+1 ≥ minShared; sound for every qualifying pair's FIRST
-    * common term because the canonical order is global) and the PPJoin+
-    * suffix bound after the pair agg (survivor matches form an order-prefix
-    * of the common terms — positional failure is monotone in rank — so
-    * common ≤ cnt + min(na−max_ra, nb−max_rb)); survivors are verified
-    * EXACTLY by re-joining both full posting lists. Result-identical to
-    * [[cosinePairsFrom]] (QueriesSpec pins it).
-    *
-    * REGIME: this pays on Zipfian vocabularies, where the prefix excludes
-    * each doc's hottest terms and collapses the df² expansion of the head.
-    * On a FLAT df distribution it does not: measured on this corpus at
-    * sf0.1 (931 surviving terms, df ≈ 275 everywhere), the prefix cuts
-    * Σdf² only 73.2 M → 55.1 M while candidates (8.7 M) over-generate the
-    * 296 k true pairs 30×, and the verify re-expansion costs more than the
-    * saved join — which is why the shipped gate in [[textCosinePairs]]
-    * picks it only when the measured prefix reduction clears
-    * [[PrefixPayoffFactor]], and a dense bounded vocabulary routes to the
-    * block kernel instead. */
-  private def cosinePairsPrefixFrom(idx: DataFrame, minShared: Int,
-      prefixes: DataFrame): DataFrame = {
-    val norms = cosineNorms(idx)
-    val cand = prefixes.as("a").join(prefixes.as("b"),
-        col("a.term") === col("b.term") && col("a.doc_id") < col("b.doc_id") &&
-          least(col("a.nt") - col("a.rk"), col("b.nt") - col("b.rk")) + 1
-            >= minShared)
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("cnt"),
-        max(col("a.rk")).as("mra"), max(col("b.rk")).as("mrb"),
-        max(col("a.nt")).as("na"), max(col("b.nt")).as("nb"))
-      .filter(col("cnt") +
-        least(col("na") - col("mra"), col("nb") - col("mrb")) >= minShared)
-      .select(col("doc_a"), col("doc_b"))
-    cand.join(idx.as("ia"), col("doc_a") === col("ia.doc_id"))
-      .join(idx.as("ib"),
-        col("doc_b") === col("ib.doc_id") && col("ia.term") === col("ib.term"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared"), sum(col("ia.w") * col("ib.w")).as("dotp"))
-      .filter(col("shared") >= minShared)
-      .join(norms.select(col("doc_id"), col("nrm").as("nrm_a")),
-        col("doc_a") === col("doc_id")).drop("doc_id")
-      .join(norms.select(col("doc_id"), col("nrm").as("nrm_b")),
-        col("doc_b") === col("doc_id")).drop("doc_id")
-      .select(col("doc_a"), col("doc_b"), col("shared"),
-        round(col("dotp") / (col("nrm_a") * col("nrm_b")), 6).as("cos_sim"))
-  }
-
   /** Dense-corpus block kernel (see [[graft.functions.CosineBlockPairsExpr]]
     * for the full rationale): docs fold to `(doc_id, sorted dense term ids,
     * aligned weights, norm)` structs, structs group into `nBlocks` hash
@@ -2416,13 +2349,6 @@ object TextOps {
     * sf1's 3.1 B rows the kernel wins 11×). The crossover sits well under
     * 1 B rows; 256 M keeps a safety margin on the cheap side. */
   private val KernelMinExpansion = 256L * 1000 * 1000
-  /** Prefix filtering must cut the expansion ≥ 4× to cover its own costs
-    * (the per-doc ranking window, candidate agg, and the verify
-    * re-expansion of Σ_cand nt rows) — measured on the flat-df corpus the
-    * reduction is only 1.33× and the prefix path LOSES (scaladoc on
-    * [[cosinePairsPrefixFrom]]); on a Zipfian head it clears easily. */
-  private val PrefixPayoffFactor = 4L
-
   /** Kernel candidacy — the ONE predicate deciding whether the dense
     * block kernel is even considered (vocab fits the per-doc bitset
     * budget AND the pair expansion is expensive enough to amortize the
@@ -2531,67 +2457,37 @@ object TextOps {
           lvl)
       } else {
         val expandParts = cosineExpandParts(sumDf2, cores)
-        // Probe the prefix reduction only when the expansion is expensive
-        // enough for prefix filtering to matter (same floor as the
-        // kernel): the probe itself is a per-doc ranking window over the
-        // full index, real money on a corpus whose expansion was cheap
-        // anyway.
-        val prefixes =
-          if (sumDf2 < KernelMinExpansion) None
-          else Some(cosinePrefixes(expansionInput(w, expandParts), minShared)
-            .persist(lvl))
+        // The shuffle-partition raise is scoped to THIS query's execution
+        // (set → run → restore): a session-wide raise was measured in
+        // round 7 to inflate every small shuffle in the run (9.4 s vs
+        // 1.5 s on this very query at sf0.1), while per-query AQE
+        // coalescing still shrinks any small stage back to advisory size.
+        val joinParts = math.min(math.max(
+          (sumDf2 / CosineJoinRowsPerTask).toInt + 1, cores), 4096)
+        val salted = maxDf > CosineBlockSize
+        recordCosinePlan(
+          s"""{"path":"${if (salted) "salted" else "plain"}",""" +
+            s""""sum_df2":$sumDf2,"max_df":$maxDf,"vocab":$vocabN,""" +
+            s""""idx_rows":$idxRows,$sized"expand_parts":$expandParts,""" +
+            s""""join_parts":$joinParts,"cores":$cores}""")
+        val key = "spark.sql.shuffle.partitions"
+        val prev = spark.conf.get(key)
         try {
-          val sumPDf2 = prefixes.map { p =>
-            val pStat = p.groupBy("term").agg(count(lit(1)).as("pdf"))
-              .agg(sum(col("pdf") * col("pdf"))).first()
-            if (pStat.isNullAt(0)) 0L else pStat.getLong(0)
-          }.getOrElse(Long.MaxValue)
-          val usePrefix = prefixes.nonEmpty &&
-            sumPDf2 <= sumDf2 / PrefixPayoffFactor
-          // The shuffle-partition raise is scoped to THIS query's
-          // execution (set → run → restore): a session-wide raise was
-          // measured in round 7 to inflate every small shuffle in the run
-          // (9.4 s vs 1.5 s on this very query at sf0.1), while per-query
-          // AQE coalescing still shrinks any small stage back to advisory
-          // size.
-          val joinRows = if (usePrefix) sumPDf2 else sumDf2
-          val joinParts = math.min(math.max(
-            (joinRows / CosineJoinRowsPerTask).toInt + 1, cores), 4096)
-          recordCosinePlan({
-            val path = if (usePrefix) "prefix"
-              else if (maxDf > CosineBlockSize) "salted" else "plain"
-            s"""{"path":"$path","sum_df2":$sumDf2,"sum_pdf2":${
-              if (prefixes.nonEmpty) sumPDf2 else -1},"max_df":$maxDf,""" +
-              s""""vocab":$vocabN,"idx_rows":$idxRows,$sized""" +
-              s""""expand_parts":$expandParts,"join_parts":$joinParts,""" +
-              s""""cores":$cores}"""
-          })
-          val key = "spark.sql.shuffle.partitions"
-          val prev = spark.conf.get(key)
-          try {
-            spark.conf.set(key, joinParts.toString)
-            Engine.eagerCheckpoint(
-              if (usePrefix) cosinePairsPrefixFrom(w, minShared, prefixes.get)
-              else cosinePairsFrom(w, minShared,
-                salted = maxDf > CosineBlockSize, expandParts),
-              lvl)
-          } finally spark.conf.set(key, prev)
-        } finally prefixes.foreach(_.unpersist(true))
+          spark.conf.set(key, joinParts.toString)
+          Engine.eagerCheckpoint(
+            cosinePairsFrom(w, minShared, salted, expandParts), lvl)
+        } finally spark.conf.set(key, prev)
       }
     } finally w.unpersist(true)
   }
 
-  /** Strategy dispatch for the spec/plan surfaces, with the plain and
-    * prefix expansions spread over `expandParts` tasks
-    * ([[expansionInput]]). `kernel` runs a tiny vocab-count job to size
+  /** Strategy dispatch for the spec/plan surfaces, with the plain
+    * expansion spread over `expandParts` tasks ([[expansionInput]]). `kernel` runs a tiny vocab-count job to size
     * the dense ids (the shipped op reuses its stats agg instead). */
   private def cosinePairsStrategy(idx: DataFrame, minShared: Int,
       strategy: String, expandParts: Int): DataFrame = strategy match {
     case "plain" => cosinePairsFrom(idx, minShared, salted = false, expandParts)
     case "salted" => cosinePairsFrom(idx, minShared, salted = true, expandParts)
-    case "prefix" =>
-      cosinePairsPrefixFrom(idx, minShared,
-        cosinePrefixes(expansionInput(idx, expandParts), minShared))
     case "kernel" =>
       val vocabN = idx.select("term").distinct().count().toInt
       cosinePairsKernelFrom(idx, minShared, nBlocks = 8,
@@ -2603,7 +2499,7 @@ object TextOps {
   /** Un-materialized twin of [[textCosinePairs]] for plan inspection —
     * localCheckpoint truncates lineage, so PlanSpec audits THIS dataflow
     * (identical builder, no caching). `strategy` selects the shape
-    * directly (plain | salted | prefix | kernel; the shipped op derives
+    * directly (plain | salted | kernel; the shipped op derives
     * it from measured stats). */
   private[graft] def textCosinePairsLazy(spark: SparkSession, dir: String,
       minShared: Int = 10, dfCapFrac: Int = 5,
@@ -2613,8 +2509,8 @@ object TextOps {
 
   /** [[textCosinePairs]] over any (doc_id, text) relation with an
     * explicit strategy — the spec surface for pinning that the salted
-    * block join, the prefix-filtered shape, and the block kernel are all
-    * result-identical to the plain term join, and that the result does
+    * block join and the block kernel are result-identical to the plain
+    * term join, and that the result does
     * not depend on the expansion's task count. `expandParts` defaults to
     * the shipped rule over the measured Σdf² (one stats job). */
   private[graft] def textCosinePairsOf(docs: DataFrame, minShared: Int,

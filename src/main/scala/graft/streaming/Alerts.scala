@@ -1,12 +1,12 @@
 package graft.streaming
 
 import graft.catalog.MetadataCatalog
-import graft.functions.Coerce
-import graft.model.DataPair
+import graft.model.Observation
+import graft.operators.Pipeline
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.{col, map_entries}
+import org.apache.spark.sql.functions.{array_sort, col, collect_list, struct, when}
 import scala.math.Ordering.Implicits._
 
 /** G1 — the Apiary alert channel with blacklist dedup
@@ -20,10 +20,11 @@ import scala.math.Ordering.Implicits._
   * StreamPipeline.start — so the alert path is never stale either.
   * See SURVEY.md §3.2.)
   *
-  * Status derivation is MAP-ONLY (per-record catalog probe + coercion via
-  * the pure-Scala coercion twin — exactly the reference's invalid_keys /
-  * coerce_types pair, app/mapper.js:192-243/411-419): the catalog is a
-  * broadcast-sized Map, the status pass is embarrassingly parallel. The
+  * Statuses come from the batch's pair relation, the one the sinks read
+  * ([[statusesOf]]): the reference checks each record's keys and coerces
+  * its values once (invalid_keys / coerce_types, app/mapper.js:192-243,
+  * 411-419) and feeds that one result to both the router and the alert,
+  * and so does this — there is no second coercion here. The
   * blacklist is a small `(sensor, lastSeenMs)` table of the sensors that
   * alerted and have not resolved; [[step]] cogroups one batch's statuses
   * with it by sensor and applies the pure [[transition]] — the alarm
@@ -38,10 +39,6 @@ object Alerts {
       network: String,
       alertType: String, // does_not_exist | invalid_key | null (clean)
       messages: Seq[String])
-
-  /** Status-derivation input: data pairs carried as an ORDERED seq (array
-    * survives the Dataset encoder in document order; a Map does not). */
-  case class ObsPairs(network: String, sensor: String, data: Seq[DataPair])
 
   /** Emitted alert-channel event (the HTTP POST payload analogue). */
   case class AlertEvent(sensor: String, kind: String, messages: Seq[String])
@@ -70,65 +67,63 @@ object Alerts {
     s"Property $property of sensor $sensor expected type $ptype and could " +
       s"not correctly coerce value $value of type $jstype"
 
-  type SensorIndex = Map[String, Map[String, MetadataCatalog.Mapping]]
+  /** One misfit pair of an observation, as [[statusesOf]] collects it:
+    * `unknown` when its key has no catalog mapping, else a coercion error. */
+  case class Misfit(pos: Int, key: String, lex: String, jstype: String,
+      property: String, ptype: String, unknown: Boolean)
 
-  def sensorIndex(catalog: MetadataCatalog): SensorIndex =
-    // registered sensors with zero mappings get an EMPTY entry (present in
-    // the index ⇒ invalid_key semantics, not does_not_exist)
-    catalog.sensors.map(_ -> Map.empty[String, MetadataCatalog.Mapping]).toMap ++
-      catalog.mappings.groupBy(_.sensor)
-        .map { case (s, ms) => s -> ms.map(m => m.key -> m).toMap }
+  /** An observation identity's misfit pairs, in document order. */
+  case class ObsMisfits(network: String, sensor: String, misfits: Seq[Misfit])
 
-  /** Per-record status: the reference's parse_data discrepancy check
-    * (invalid_keys ∪ coercion errors ∪ unknown sensor) in one pass over a
-    * prebuilt (broadcast-sized) sensor index. */
-  def statusOf(obs: ObsPairs, index: SensorIndex): ObsStatus = {
-    val sensor = Option(obs.sensor).map(_.toLowerCase).getOrElse("")
-    val mappings = index.get(sensor) match {
-      case None =>
-        return ObsStatus(sensor, obs.network, "does_not_exist",
-          Seq(doesNotExistMsg(sensor, obs.network)))
-      case Some(m) => m
-    }
-    // normalized keys fold last-wins like the dataflow path's LAST_WIN
-    // (and the reference's JS assignment, mapper.js:63-68) — without the
-    // fold this path could flag an observation the dataflow routes clean.
-    // obs.data is an ordered Seq, so insertion order IS document order and
-    // message key order / duplicate-key winners match the reference.
-    val folded = new scala.collection.mutable.LinkedHashMap[String, graft.model.TaggedScalar]
-    obs.data.foreach(p => folded.put(p.key.toLowerCase, p.value))
-    val entries = folded.toSeq
-    val unknown = entries.collect {
-      case (k, _) if !mappings.contains(k) => k }
-    val coercionErrs = entries.flatMap { case (k, v) =>
-      mappings.get(k).flatMap { m =>
-        val (_, err) = Coerce.coerceScala(v.lex, v.jstype, m.ptype)
-        if (err) Some(coercionMsg(sensor, m.property, m.ptype, v.lex, v.jstype))
-        else None
-      }
-    }
-    if (unknown.nonEmpty || coercionErrs.nonEmpty) {
-      val msgs =
-        (if (unknown.nonEmpty) Seq(unknownKeysMsg(sensor, unknown, obs.network))
-        else Nil) ++ coercionErrs
-      ObsStatus(sensor, obs.network, "invalid_key", msgs)
-    } else ObsStatus(sensor, obs.network, null, Nil)
-  }
-
-  /** Map-only status derivation over an observation relation (map-typed
-    * `data` column). map_entries preserves the stored (document) order and
-    * the array encoder keeps it — unlike a Map field, whose deserialized
-    * HashMap scrambles key order for >4 entries. */
-  def observationStatuses(observations: DataFrame,
+  /** Per-observation statuses from the pair relation the sinks already
+    * read ([[graft.operators.Pipeline.pairRelation]]): the catalog join,
+    * the LAST_WIN key fold and the coercion each happen once, in the
+    * relation, and this only groups its misfit pairs by the observation
+    * identity ([[graft.model.Observation.obsCols]], the key the
+    * dead-letter and wide sinks group on). Rows sharing an identity are
+    * one dead-letter row and one wide row, and so also one status. */
+  def statusesOf(classified: DataFrame,
       catalog: MetadataCatalog): Dataset[ObsStatus] = {
-    val spark = observations.sparkSession
+    val spark = classified.sparkSession
     import spark.implicits._
-    val index = sensorIndex(catalog) // tiny, ships in the task closure
-    observations
-      .select(col("network"), col("sensor"), map_entries(col("data")).as("data"))
-      .as[ObsPairs]
-      .map(statusOf(_, index))
+    val sensors = catalog.sensors // tiny, ships in the task closure
+    val misfit = struct(col("pos"), col("key"), col("lex"), col("jstype"),
+      col("property"), col("ptype"), col("feature").isNull.as("unknown"))
+    classified
+      .groupBy(Observation.obsCols.map(col): _*)
+      // collect_list skips the nulls `when` leaves for the other pairs
+      .agg(array_sort(collect_list(
+        when(col("misfit") && col("key").isNotNull, misfit))).as("misfits"))
+      .select("network", "sensor", "misfits")
+      .as[ObsMisfits]
+      .map(statusFrom(_, sensors))
   }
+
+  /** The reference's parse_data discrepancy check for one observation
+    * (app/mapper.js:192-243, 411-419): an unknown sensor, else its unknown
+    * keys in one message and its coercion errors one message each. A null
+    * sensor is reported as "". */
+  private def statusFrom(o: ObsMisfits, sensors: Set[String]): ObsStatus = {
+    val sensor = Option(o.sensor).getOrElse("")
+    if (!sensors.contains(sensor))
+      ObsStatus(sensor, o.network, "does_not_exist",
+        Seq(doesNotExistMsg(sensor, o.network)))
+    else {
+      val (unknown, coercion) = o.misfits.partition(_.unknown)
+      val msgs =
+        (if (unknown.isEmpty) Nil
+        else Seq(unknownKeysMsg(sensor, unknown.map(_.key), o.network))) ++
+          coercion.map(m =>
+            coercionMsg(sensor, m.property, m.ptype, m.lex, m.jstype))
+      ObsStatus(sensor, o.network, if (msgs.isEmpty) null else "invalid_key",
+        msgs)
+    }
+  }
+
+  /** [[statusesOf]] over raw observations (map-typed `data` column). */
+  def observationStatuses(observations: DataFrame,
+      catalog: MetadataCatalog): Dataset[ObsStatus] =
+    statusesOf(Pipeline.pairRelation(observations, catalog), catalog)
 
   /** TTL for blacklist state: a blacklisted sensor that stays SILENT this
     * long is forgotten, so the state table is bounded by |sensors alerting

@@ -17,10 +17,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * foreachBatch — an observation is never judged against stale metadata.
   *
   * The ALERT path runs in the same micro-batch, against the same fresh
-  * catalog: the batch's observation statuses are derived once, appended
-  * to a parquet status spool, and stepped through the blacklist (see
-  * [[alertBatch]]) — so a catalog fix is reflected in the very next batch,
-  * no query restart needed, and there is one streaming query.
+  * catalog and off the same cached pair relation the sinks read: the
+  * batch's observation statuses are derived from it once, appended to a
+  * parquet status spool, and stepped through the blacklist (see
+  * [[alertBatch]]) — so the raw batch is parsed and coerced once, a
+  * catalog fix is reflected in the very next batch, no query restart is
+  * needed, and there is one streaming query.
   *
   * Upgrade note: checkpoints written while the blacklist ran as a second
   * streaming query hold its state in that query's own checkpoint
@@ -91,28 +93,34 @@ object StreamPipeline {
     }
   }
 
-  /** One micro-batch of the full dataflow (also the batch entry point).
-    * featureObservations is computed ONCE and shared by the wide sink and
-    * the event sink; with a partitioned wide sink this is 3 write jobs per
-    * batch total (wide, dead-letter, events) regardless of feature count. */
+  /** One micro-batch of the full dataflow (also the batch entry point):
+    * builds and caches the batch's pair relation, then [[writeSinks]]. */
   def processBatch(observations: DataFrame, catalog: MetadataCatalog,
       sinks: Sinks, batchId: Long): Unit = {
     val classified = Pipeline.pairRelation(observations, catalog).cache()
+    try writeSinks(classified, catalog, sinks, batchId)
+    finally classified.unpersist()
+  }
+
+  /** The wide, dead-letter and event sinks over one cached pair relation.
+    * featureObservations is computed ONCE and shared by the wide sink and
+    * the event sink; with a partitioned wide sink this is 3 write jobs per
+    * batch total (wide, dead-letter, events) regardless of feature count. */
+  private def writeSinks(classified: DataFrame, catalog: MetadataCatalog,
+      sinks: Sinks, batchId: Long): Unit = {
     val featureObs = Pipeline.featureObservations(classified).cache()
     try {
       sinks.writeWide(featureObs, catalog, batchId)
       sinks.writeDeadLetter(Pipeline.misfits(classified), batchId)
       sinks.writeEvents(Pipeline.eventJson(featureObs, catalog), batchId)
-    } finally {
-      featureObs.unpersist()
-      classified.unpersist()
-    }
+    } finally featureObs.unpersist()
   }
 
   /** Start the streaming pipeline over a raw JSON-lines stream: ONE
     * query, `graft-dataflow`, checkpointed under `$checkpointDir/dataflow`
-    * (X1). Each micro-batch re-reads the catalog (G2), runs
-    * [[processBatch]] and then [[alertBatch]] (G1).
+    * (X1). Each micro-batch re-reads the catalog (G2), builds and caches
+    * its pair relation once, and hands it to [[writeSinks]] and then to
+    * [[alertBatch]] (G1).
     *
     * With the default Trigger.AvailableNow the query drains what is
     * available and terminates; pass `availableNow = false` for a
@@ -135,26 +143,29 @@ object StreamPipeline {
       .option("checkpointLocation", s"$checkpointDir/dataflow")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val catalog = catalogProvider() // per-batch re-read (G2)
-        val obsBatch = batch.toDF()
-        processBatch(obsBatch, catalog, sinks, batchId)
-        alertBatch(obsBatch, catalog, sinks, checkpointDir, batchId)
+        val classified = Pipeline.pairRelation(batch.toDF(), catalog).cache()
+        try {
+          writeSinks(classified, catalog, sinks, batchId)
+          alertBatch(classified, catalog, sinks, checkpointDir, batchId)
+        } finally classified.unpersist()
       }
     Seq((if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start())
   }
 
-  /** G1 for one micro-batch. Statuses are derived once against the batch's
-    * catalog and appended to `$checkpointDir/status-spool` (the audit
-    * trail of every status, as read by perfbench's output check). The
-    * blacklist state is versioned by batch under
+  /** G1 for one micro-batch. Statuses are derived once from the batch's
+    * cached pair relation ([[Alerts.statusesOf]], one status per
+    * observation identity) and appended to `$checkpointDir/status-spool`
+    * (the audit trail of every status, as read by perfbench's output
+    * check). The blacklist state is versioned by batch under
     * `$checkpointDir/blacklist/<batchId>`: batch N reads the newest version
     * below N, writes version N and deletes the versions older than the
     * one it read. A batch replayed after a crash therefore reads the same
     * prior state and derives the same alerts again (delivery stays
     * at-least-once, as for every sink). The state is cogrouped on the
     * executors and never collected. */
-  private def alertBatch(observations: DataFrame, catalog: MetadataCatalog,
+  private def alertBatch(classified: DataFrame, catalog: MetadataCatalog,
       sinks: Sinks, checkpointDir: String, batchId: Long): Unit = {
-    val spark = observations.sparkSession
+    val spark = classified.sparkSession
     import spark.implicits._
     val root = new Path(s"$checkpointDir/blacklist")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -167,7 +178,7 @@ object StreamPipeline {
         .parquet(s"$root/$v").as[Alerts.Blacklisted]
     }
     // read twice, by the spool write and by the step
-    val statuses = Alerts.observationStatuses(observations, catalog).cache()
+    val statuses = Alerts.statusesOf(classified, catalog).cache()
     try {
       statuses.write.mode("append").parquet(s"$checkpointDir/status-spool")
       val steps = Alerts.step(statuses, blacklist, System.currentTimeMillis())

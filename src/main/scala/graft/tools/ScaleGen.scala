@@ -45,10 +45,10 @@ object ScaleGen {
   }
 
   def generate(spark: SparkSession, src: String, dst: String, k: Int): Unit = {
-    // events.parquet carries TIMESTAMP(NANOS): read nanos as plain long and
-    // write it back that way — EventOps.tbl's `ts div 1000` consumption is
-    // identical for an INT64-nanos column whether or not it is annotated
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.parquet carries TIMESTAMP(NANOS): read nanos as plain long
+    // (Engine.builder sets the legacy conf) and write it back that way —
+    // EventOps.tbl's `ts div 1000` consumption is identical for an
+    // INT64-nanos column whether or not it is annotated
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(t: String)(df: DataFrame): Unit =
       df.write.mode("overwrite").parquet(s"$dst/$t.parquet")

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * reliable checkpoint under `spark.graft.checkpoint.reliable` — same
   * values either way, and the reliable path actually writes to the
   * context's checkpoint dir (executor-loss survivability is the point).
-  * Also pins `Engine.builder` as the one place a session is configured.
+  * Also pins `Engine.builder` as the one place a session is configured,
+  * and `Coerce.coerce` as the one coercion the main code runs.
   */
 class EngineSpec extends SparkSpec {
 
@@ -60,16 +61,26 @@ class EngineSpec extends SparkSpec {
     assert(files(dir).nonEmpty, s"no checkpoint files under $dir")
   }
 
-  test("one session builder: SparkSession.builder appears only in Engine.scala") {
+  /** Files under src/main/scala, relative to it, whose text matches `re`. */
+  private def mainSourcesMatching(re: scala.util.matching.Regex): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root missing")
-    val builderCall = """SparkSession\s*\.\s*builder""".r
-    val sites = Files.walk(root).iterator.asScala
+    Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
-      .filter(p => builderCall.findFirstIn(Files.readString(p)).isDefined)
-      .map(p => root.relativize(p).toString).toSeq
-    assert(sites === Seq("graft/Engine.scala"),
-      "build sessions from Engine.builder instead")
+      .filter(p => re.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString).toSeq.sorted
+  }
+
+  test("one session builder: SparkSession.builder appears only in Engine.scala") {
+    assert(mainSourcesMatching("""SparkSession\s*\.\s*builder""".r) ===
+      Seq("graft/Engine.scala"), "build sessions from Engine.builder instead")
+  }
+
+  test("one coercion: coerceScala is called nowhere in src/main/scala outside Coerce.scala") {
+    assert(mainSourcesMatching("""coerceScala\s*\(""".r) ===
+      Seq("graft/functions/Coerce.scala"),
+      "coerce with Coerce.coerce (the native CoerceExpr); coerceScala is " +
+        "the specs' reference")
   }
 }

@@ -84,14 +84,12 @@ class GoldenPlanSpec extends SparkSpec {
         docs.filter(col("doc_id") >= TextOps.DefaultIncrementalSplitId),
         docs.filter(col("doc_id") < TextOps.DefaultIncrementalSplitId))
     }),
-    // all four exact cosine shapes: the shipped op picks one from
+    // all three exact cosine shapes: the shipped op picks one from
     // measured stats, so each shape needs its own pinned plan
     "text_cosine_pairs_plain" ->
       (() => TextOps.textCosinePairsLazy(spark, dir, strategy = "plain")),
     "text_cosine_pairs_salted" ->
       (() => TextOps.textCosinePairsLazy(spark, dir, strategy = "salted")),
-    "text_cosine_pairs_prefix" ->
-      (() => TextOps.textCosinePairsLazy(spark, dir, strategy = "prefix")),
     "text_cosine_pairs_kernel" ->
       (() => TextOps.textCosinePairsLazy(spark, dir, strategy = "kernel")))
 

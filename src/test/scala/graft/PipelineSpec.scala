@@ -81,17 +81,95 @@ class PipelineSpec extends SparkSpec {
 
   test("G1 derivation: per-observation alert classification") {
     import spark.implicits._
+    import graft.model.{ObservationRow, TaggedScalar}
+    import scala.collection.immutable.VectorMap
+    val aot = "array_of_things_chicago"
+    def obs(node: String, sensor: String, data: (String, TaggedScalar)*) =
+      ObservationRow(aot, node, 1, Fixtures.t0, sensor, VectorMap(data: _*))
+    val jsNull = TaggedScalar("null", "null")
+    val edge = Seq(
+      // two keys fold to `temp`; the last value decides the coercion
+      obs("101", "htu21d", "Temp" -> Fixtures.num("1.5"),
+        "TEMP" -> Fixtures.str("bad")),
+      obs("102", "htu21d", "TEMP" -> Fixtures.str("bad"),
+        "Temp" -> Fixtures.num("2")),
+      // JSON null: Number(null) = 0 is a float, parseInt("null") no int
+      obs("103", "htu21d", "temperature" -> jsNull),
+      obs("104", "camera", "num_pedestrians" -> jsNull),
+      // empty data: clean for a registered sensor, unknown otherwise
+      obs("105", "htu21d"),
+      obs("106", "ghost"),
+      // a registered sensor with zero mappings: every key is unknown
+      obs("107", "bare", "a" -> Fixtures.num("1")),
+      obs("108", null, "temp" -> Fixtures.num("1")))
+    val catalog = Fixtures.catalog.copy(
+      registeredSensors = Fixtures.catalog.registeredSensors + "bare")
     val statuses = Alerts.observationStatuses(
-        Fixtures.observations.toDF(), Fixtures.catalog)
-      .collect().map(s => (s.sensor, Option(s.alertType))).sorted.toSeq
-    // nodes 001-008 in order: htu21d, hmc5883l clean; hmc5883l, camera,
-    // htu21d invalid; wubdb89 unknown; camera, htu21d clean
-    val invalid = Some("invalid_key")
-    assert(statuses === Seq(
-      ("camera", None), ("camera", invalid),
-      ("hmc5883l", None), ("hmc5883l", invalid),
-      ("htu21d", None), ("htu21d", None), ("htu21d", invalid),
-      ("wubdb89", Some("does_not_exist"))))
+        (Fixtures.observations ++ edge).toDF(), catalog)
+      .collect().map(s => (s.sensor, s.network, s.alertType, s.messages))
+      .toSeq
+    val sea = "internet_of_stuff_seattle"
+    val ok = Seq.empty[String]
+    val expected = Seq(
+      // the 8 fixtures, nodes 001-008
+      ("htu21d", aot, null, ok),
+      ("hmc5883l", aot, null, ok),
+      ("hmc5883l", aot, "invalid_key", Seq("Received data from sensor " +
+        "hmc5883l with unknown key(s) x1,y1from network " +
+        "array_of_things_chicago. Please update the keys and properties in " +
+        "this sensors metadata.")),
+      ("camera", aot, "invalid_key", Seq("Property standing_water of " +
+        "sensor camera expected type bool and could not correctly coerce " +
+        "value 10 of type number")),
+      ("htu21d", aot, "invalid_key", Seq("Received data from sensor " +
+        "htu21d with unknown key(s) humdrumfrom network " +
+        "array_of_things_chicago. Please update the keys and properties in " +
+        "this sensors metadata.", "Property temperature of sensor htu21d " +
+        "expected type float and could not correctly coerce value high of " +
+        "type string")),
+      ("wubdb89", aot, "does_not_exist", Seq("Sensor wubdb89 not found in " +
+        "sensor metadata for network array_of_things_chicago. Please add " +
+        "this sensor.")),
+      ("camera", aot, null, ok),
+      ("htu21d", sea, null, ok),
+      // edge cases, nodes 101-108
+      ("htu21d", aot, "invalid_key", Seq("Property temperature of sensor " +
+        "htu21d expected type float and could not correctly coerce value " +
+        "bad of type string")),
+      ("htu21d", aot, null, ok),
+      ("htu21d", aot, null, ok),
+      ("camera", aot, "invalid_key", Seq("Property num_pedestrians of " +
+        "sensor camera expected type integer and could not correctly " +
+        "coerce value null of type null")),
+      ("htu21d", aot, null, ok),
+      ("ghost", aot, "does_not_exist", Seq("Sensor ghost not found in " +
+        "sensor metadata for network array_of_things_chicago. Please add " +
+        "this sensor.")),
+      ("bare", aot, "invalid_key", Seq("Received data from sensor bare " +
+        "with unknown key(s) afrom network array_of_things_chicago. Please " +
+        "update the keys and properties in this sensors metadata.")),
+      ("", aot, "does_not_exist", Seq("Sensor  not found in sensor " +
+        "metadata for network array_of_things_chicago. Please add this " +
+        "sensor.")))
+    def canon(rows: Seq[(String, String, String, Seq[String])]) =
+      rows.sortBy { case (s, n, t, ms) => (s, n, String.valueOf(t), ms.mkString("\n")) }
+    assert(canon(statuses) === canon(expected))
+  }
+
+  test("G1 derivation: rows sharing an observation identity give one status and one dead-letter row") {
+    import spark.implicits._
+    import graft.model.ObservationRow
+    import scala.collection.immutable.VectorMap
+    val row = ObservationRow("net", "201", 5, Fixtures.t0, "htu21d",
+      VectorMap("Temp" -> Fixtures.str("high")))
+    val twin = row.copy(data = VectorMap("Humidity" -> Fixtures.str("wet")))
+    val rel = Pipeline.pairRelation(Seq(row, twin).toDF(), Fixtures.catalog)
+    val statuses = Alerts.statusesOf(rel, Fixtures.catalog).collect()
+    assert(statuses.length === 1)
+    assert(statuses.head.alertType === "invalid_key")
+    assert(statuses.head.messages.map(_.split(" ")(1)) ===
+      Seq("humidity", "temperature"))
+    assert(Pipeline.misfits(rel).count() === 1)
   }
 
   test("R1 property: valid ∪ misfit partitions the pair relation losslessly") {

@@ -27,6 +27,15 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("events table: reading it leaves the caller's session conf untouched") {
+    // the legacy nanos-as-long read conf is set once, in Engine.builder
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    s.conf.unset(key)
+    assert(graft.operators.EventOps.tbl(s, dir, "events").count() > 0)
+    assert(!s.conf.getAll.contains(key), s"$key set on the caller's session")
+  }
+
   test("dedup clusters: pair endpoints share a rep; rep is the component min") {
     val pairs = TextOps.dedupNgramJaccard(spark, dir)
       .select("doc_a", "doc_b").collect()
@@ -474,7 +483,7 @@ class QueriesSpec extends SparkSpec {
       s"unexpected containment set: $rows")
   }
 
-  test("cosine pairs: salted, prefix and kernel strategies are result-identical to the plain term join across a multi-block posting list") {
+  test("cosine pairs: salted and kernel strategies are result-identical to the plain term join across a multi-block posting list") {
     import spark.implicits._
     // 6000 docs; "a b" lands in 1200 of them — df = 1200 survives the
     // n/5 = 1200 cap at the boundary AND exceeds CosineBlockSize (1024),
@@ -484,11 +493,8 @@ class QueriesSpec extends SparkSpec {
     // qualifying pairs accumulate terms from MIXED block pairs: "a b"
     // matches in (0,0)/(0,1)/(1,1), "b c"/"c d" (df = 50, k = 1) in
     // their single block — pinning exactly-once cross-block generation.
-    // The same fixture exercises the prefix filter (minShared = 2 →
-    // prefix = all but each doc's hottest term, so "a b" — the hottest —
-    // drops from every prefix and candidates come from "b c"/"c d"
-    // alone) and the block kernel (8 hash blocks over 6000 docs pin
-    // exactly-once diagonal + cross-block pairing).
+    // The same fixture exercises the block kernel (8 hash blocks over
+    // 6000 docs pin exactly-once diagonal + cross-block pairing).
     val docs = (1 to 6000).map { i =>
       val text =
         if (i <= 25 || (i >= 1150 && i < 1175)) "a b c d"
@@ -507,7 +513,7 @@ class QueriesSpec extends SparkSpec {
     plain.values.foreach { case (sh, cos) =>
       assert(sh === 3L); assert(math.abs(cos - 1.0) <= 1e-6)
     }
-    for (strategy <- Seq("salted", "prefix", "kernel")) {
+    for (strategy <- Seq("salted", "kernel")) {
       val alt = run(strategy)
       assert(alt.keySet === plain.keySet, s"$strategy pair set diverged")
       plain.foreach { case (k, (sh, cos)) =>
@@ -612,7 +618,7 @@ class QueriesSpec extends SparkSpec {
         s"only-lambda=${(lambda -- kernel).take(3)}")
   }
 
-  test("cosine pairs: all four strategies agree pairwise on real documents (sf0.001)") {
+  test("cosine pairs: all three strategies agree pairwise on real documents (sf0.001)") {
     // the synthetic fixture pins exactly-once pairing; this pins the
     // strategies on the REAL corpus shape (flat dfs, multi-term overlaps,
     // non-trivial tf) that the correctness driver hashes at sf0.01 —
@@ -627,7 +633,7 @@ class QueriesSpec extends SparkSpec {
         .toMap
     val plain = run("plain")
     assert(plain.nonEmpty, "expected qualifying pairs at sf0.001")
-    for (strategy <- Seq("salted", "prefix", "kernel")) {
+    for (strategy <- Seq("salted", "kernel")) {
       val alt = run(strategy)
       assert(alt.keySet === plain.keySet, s"$strategy pair set diverged")
       plain.foreach { case (k, (sh, cos)) =>

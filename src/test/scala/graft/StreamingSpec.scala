@@ -151,6 +151,43 @@ class StreamingSpec extends SparkSpec {
     assert(compiles === afterFirstWrite, "newSession recompiled generated classes")
   }
 
+  test("one read of the batch: the status spool is derived from the cached pair relation") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val root = Files.createTempDirectory("graft-one-read")
+    val input = Files.createDirectories(root.resolve("in"))
+    Files.write(input.resolve("obs.json"),
+      (0 until 8).map(obsJson).mkString("\n").getBytes("UTF-8"))
+    val spoolWrites = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains("status-spool"))
+          spoolWrites.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the query's session is cloned at start, with the listeners it has
+    spark.listenerManager.register(listener)
+    try StreamPipeline.start(spark.readStream.text(input.toString),
+        () => Fixtures.catalog,
+        new StreamPipeline.ParquetSinks(s"$root/out"), s"$root/ckpt")
+      .foreach(_.awaitTermination(60000))
+    finally spark.listenerManager.unregister(listener)
+    org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
+    assert(spoolWrites.size === 1)
+    // the write reads the cached statuses; what the statuses read is the
+    // cached pair relation and nothing else, so the raw batch is not read
+    // a second time
+    val statuses = Plans.collect(spoolWrites.peek) {
+      case s: InMemoryTableScanExec => s }
+    assert(statuses.size === 1)
+    val leaves = Plans.collectLeaves(statuses.head.relation.cachedPlan)
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[InMemoryTableScanExec]),
+      s"statuses read ${leaves.map(_.nodeName).mkString(", ")}")
+  }
+
   test("connector contract: Kafka-shaped stream drives the full pipeline") {
     // The exact relation a real `readStream.format("kafka").load()` yields:
     // binary key/value plus transport bookkeeping columns. No connector
@@ -240,8 +277,8 @@ class StreamingSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     // >4 entries is where a Map-typed field deserializes into a
-    // HashMap and scrambles order — the status path must carry pairs as
-    // an ordered array instead (DataPair seq via map_entries)
+    // HashMap and scrambles order — the status path must keep the pair
+    // relation's document order (`pos`) instead
     val json =
       """{"network":"net","node_id":"n1","meta_id":1,""" +
         """"datetime":"2017-01-01T00:00:00","sensor":"tmp112","data":""" +
