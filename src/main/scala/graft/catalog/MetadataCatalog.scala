@@ -38,17 +38,8 @@ final case class MetadataCatalog(
     mappings.toDF()
   }
 
-  def featurePropsDF(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    featureProps.toDF()
-  }
-
   /** Known sensor names (a sensor absent here ⇒ does_not_exist alert). */
   def sensors: Set[String] = registeredSensors ++ mappings.map(_.sensor)
-
-  /** Features observed by a given sensor. */
-  def featuresOf(sensor: String): Set[String] =
-    mappings.filter(_.sensor == sensor).map(_.feature).toSet
 
   /** Ordered properties of a feature — the wide-table column set (K1). */
   def propsOf(feature: String): Seq[FeatureProp] =

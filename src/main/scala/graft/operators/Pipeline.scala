@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * the recursion: `valid` and `misfit` are two filters of the same relation.
   *
   * Scale: the fact side is arbitrarily large; the catalog side is tiny and
-  * broadcast. Nothing here shuffles except the per-observation regroups
-  * (A1/K1/K2), which are keyed on the observation identity — at 100 TB those
-  * become map-side-combinable hash aggregations partitioned by the stream's
-  * natural source partitioning; no driver collects anywhere.
+  * broadcast. The feature (A1), dead-letter (K2) and status (G1) rows
+  * share one shuffle, the regroup by observation identity
+  * [[byObservation]], as the reference derives all three from one parse
+  * of a record (app/mapper.js:250-310, 429-489). No driver collects.
   */
 object Pipeline {
 
@@ -100,48 +100,66 @@ object Pipeline {
     ColumnBridge.column(JsonEscapeExpr(ColumnBridge.expression(c)))
   }
 
-  /** Render the ORIGINAL (pre-coercion) value the way JSON.stringify does:
-    * numbers/booleans/null bare, strings quoted. (A JSON null under an
+  /** Render a pair's ORIGINAL (pre-coercion) value the way JSON.stringify
+    * does: numbers/booleans/null bare, strings quoted. (A JSON null under an
     * int/bool-typed property is a misfit pair; stringify emits `"k":null`,
     * not `"k":"null"`.) */
-  private def rawJsonValue: Column =
-    when(col("jstype").isin("number", "boolean", "null"), col("lex"))
-      .otherwise(concat(lit("\""), jsonEscape(col("lex")), lit("\"")))
+  private def rawJsonValue(p: Column): Column =
+    when(p("jstype").isin("number", "boolean", "null"), p("lex"))
+      .otherwise(concat(lit("\""), jsonEscape(p("lex")), lit("\"")))
+
+  /** The pair relation grouped by observation identity, its keyed pairs
+    * in `pairs` in no defined order (an empty-data observation keeps its
+    * row, without posexplode_outer's keyless pair). [[featureRows]],
+    * [[deadLetterRows]] and [[graft.streaming.Alerts.statusRows]] project
+    * it, each sorting its own struct: that fixes how a `pos` tie breaks. */
+  def byObservation(classified: DataFrame): DataFrame =
+    classified.groupBy(obs: _*).agg(collect_list(when(col("key").isNotNull,
+      struct(Seq("pos", "key", "lex", "jstype", "feature", "property",
+        "ptype", "value", "error", "misfit").map(col): _*))).as("pairs"))
 
   /** K2 — dead-letter rows: one per observation with ≥1 misfit pair; `data`
     * is the JSON of the bad pairs in original key order with original values
     * (app/mapper.js:306-310; golden tests/travis_tests/unit_tests.js:55-71). */
   def misfits(classified: DataFrame): DataFrame =
-    misfitPairs(classified)
-      // empty-data observations yield one null-key row via posexplode_outer;
-      // the reference writes nothing for them (no keys ⇒ no invalid keys)
-      .filter(col("key").isNotNull)
-      .withColumn("entry",
-        struct(col("pos"),
-          concat(lit("\""), jsonEscape(col("key")), lit("\":"), rawJsonValue)
-            .as("kv")))
-      .groupBy(obs: _*)
-      .agg(array_sort(collect_list(col("entry"))).as("entries"))
-      .withColumn("data",
-        concat(lit("{"),
-          concat_ws(",", transform(col("entries"), _.getField("kv"))),
-          lit("}")))
-      .drop("entries")
+    deadLetterRows(byObservation(classified))
+
+  /** [[misfits]] as a projection of [[byObservation]]. */
+  def deadLetterRows(byObs: DataFrame): DataFrame =
+    byObs
+      .withColumn("entries", array_sort(transform(
+        filter(col("pairs"), _("misfit")), p => struct(p("pos"),
+          concat(lit("\""), jsonEscape(p("key")), lit("\":"), rawJsonValue(p))
+            .as("kv")))))
+      .filter(size(col("entries")) > 0)
+      .select(obs :+ concat(lit("{"),
+        concat_ws(",", transform(col("entries"), _("kv"))), lit("}"))
+        .as("data"): _*)
 
   /** A1 — unpivot + regroup by feature: one row per (observation × feature)
     * with results = {property → coerced value}, feature order = first
-    * appearance, property order = key insertion order
+    * appearance (`feature_pos`), property order = key insertion order
     * (app/mapper.js:382-403). `results` carries canonical string renderings;
     * event JSON rendering happens sink-side. */
   def featureObservations(classified: DataFrame): DataFrame =
-    validPairs(classified)
-      .withColumn("entry", struct(col("pos"), col("property"), col("value"),
-        col("jstype"), col("ptype")))
-      .groupBy(obs :+ col("feature"): _*)
-      .agg(
-        min(col("pos")).as("feature_pos"),
-        map_from_entries(transform(array_sort(collect_list(col("entry"))),
-          e => struct(e.getField("property"), e.getField("value")))).as("results"))
+    featureRows(byObservation(classified))
+
+  /** [[featureObservations]] as a projection of [[byObservation]]. */
+  def featureRows(byObs: DataFrame): DataFrame =
+    byObs
+      .withColumn("valid", filter(col("pairs"), p => !p("misfit")))
+      .withColumn("feature",
+        explode(array_distinct(transform(col("valid"), _("feature")))))
+      // a `pos` tie (rows sharing an identity) falls to property, then
+      // value, which fixes the value LAST_WIN keeps
+      .withColumn("entries", array_sort(transform(
+        filter(col("valid"), _("feature") === col("feature")),
+        p => struct(p("pos"), p("property"), p("value"), p("jstype"),
+          p("ptype")))))
+      .select(obs ++ Seq(col("feature"),
+        element_at(col("entries"), 1)("pos").as("feature_pos"),
+        map_from_entries(transform(col("entries"),
+          e => struct(e("property"), e("value")))).as("results")): _*)
 
   /** Literal (feature, property) -> declared-type lookup map, NUL-separated
     * compound key (NUL cannot occur in catalog identifiers). Shared by the
@@ -191,11 +209,9 @@ object Pipeline {
     }.withColumn("meta_id", col("meta_id").cast("double"))
   }
 
-  /** K1 off the ALREADY-AGGREGATED relation: typed wide projection of one
-    * feature from featureObservations' `results` map — a narrow map job
-    * (element_at per declared property), no pivot, no second aggregation.
-    * Lets a sink derive every wide table from ONE shared featureObservations
-    * pass instead of re-running the pair relation per feature. */
+  /** K1 off the feature rows: typed wide projection of one feature from
+    * [[featureObservations]]' `results` map — a narrow map (element_at per
+    * declared property), so every wide table derives from one pass. */
   def widenFromResults(featureObs: DataFrame, catalog: MetadataCatalog,
       feature: String): DataFrame = {
     val props = catalog.propsOf(feature)

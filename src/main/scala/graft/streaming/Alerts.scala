@@ -1,12 +1,11 @@
 package graft.streaming
 
 import graft.catalog.MetadataCatalog
-import graft.model.Observation
 import graft.operators.Pipeline
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.{array_sort, col, collect_list, struct, when}
+import org.apache.spark.sql.functions.{array_sort, col, filter, struct, transform}
 import scala.math.Ordering.Implicits._
 
 /** G1 — the Apiary alert channel with blacklist dedup
@@ -20,11 +19,11 @@ import scala.math.Ordering.Implicits._
   * StreamPipeline.start — so the alert path is never stale either.
   * See SURVEY.md §3.2.)
   *
-  * Statuses come from the batch's pair relation, the one the sinks read
-  * ([[statusesOf]]): the reference checks each record's keys and coerces
+  * Statuses project the per-observation relation the sinks read
+  * ([[statusRows]]): the reference checks each record's keys and coerces
   * its values once (invalid_keys / coerce_types, app/mapper.js:192-243,
   * 411-419) and feeds that one result to both the router and the alert,
-  * and so does this — there is no second coercion here. The
+  * and so does this — no second coercion, no second regroup. The
   * blacklist is a small `(sensor, lastSeenMs)` table of the sensors that
   * alerted and have not resolved; [[step]] cogroups one batch's statuses
   * with it by sensor and applies the pure [[transition]] — the alarm
@@ -67,7 +66,7 @@ object Alerts {
     s"Property $property of sensor $sensor expected type $ptype and could " +
       s"not correctly coerce value $value of type $jstype"
 
-  /** One misfit pair of an observation, as [[statusesOf]] collects it:
+  /** One misfit pair of an observation, as [[statusRows]] reads it:
     * `unknown` when its key has no catalog mapping, else a coercion error. */
   case class Misfit(pos: Int, key: String, lex: String, jstype: String,
       property: String, ptype: String, unknown: Boolean)
@@ -75,26 +74,24 @@ object Alerts {
   /** An observation identity's misfit pairs, in document order. */
   case class ObsMisfits(network: String, sensor: String, misfits: Seq[Misfit])
 
-  /** Per-observation statuses from the pair relation the sinks already
-    * read ([[graft.operators.Pipeline.pairRelation]]): the catalog join,
-    * the LAST_WIN key fold and the coercion each happen once, in the
-    * relation, and this only groups its misfit pairs by the observation
-    * identity ([[graft.model.Observation.obsCols]], the key the
-    * dead-letter and wide sinks group on). Rows sharing an identity are
-    * one dead-letter row and one wide row, and so also one status. */
+  /** Per-observation statuses of a pair relation
+    * ([[graft.operators.Pipeline.pairRelation]]), one per identity. */
   def statusesOf(classified: DataFrame,
+      catalog: MetadataCatalog): Dataset[ObsStatus] =
+    statusRows(Pipeline.byObservation(classified), catalog)
+
+  /** [[statusesOf]] as a projection of [[graft.operators.Pipeline.byObservation]]
+    * (the catalog join, key fold, coercion and regroup all lie upstream). */
+  def statusRows(byObs: DataFrame,
       catalog: MetadataCatalog): Dataset[ObsStatus] = {
-    val spark = classified.sparkSession
+    val spark = byObs.sparkSession
     import spark.implicits._
     val sensors = catalog.sensors // tiny, ships in the task closure
-    val misfit = struct(col("pos"), col("key"), col("lex"), col("jstype"),
-      col("property"), col("ptype"), col("feature").isNull.as("unknown"))
-    classified
-      .groupBy(Observation.obsCols.map(col): _*)
-      // collect_list skips the nulls `when` leaves for the other pairs
-      .agg(array_sort(collect_list(
-        when(col("misfit") && col("key").isNotNull, misfit))).as("misfits"))
-      .select("network", "sensor", "misfits")
+    byObs
+      .select(col("network"), col("sensor"), array_sort(transform(
+        filter(col("pairs"), _("misfit")), p => struct(p("pos"), p("key"),
+          p("lex"), p("jstype"), p("property"), p("ptype"),
+          p("feature").isNull.as("unknown")))).as("misfits"))
       .as[ObsMisfits]
       .map(statusFrom(_, sensors))
   }

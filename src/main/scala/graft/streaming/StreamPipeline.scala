@@ -17,12 +17,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * foreachBatch — an observation is never judged against stale metadata.
   *
   * The ALERT path runs in the same micro-batch, against the same fresh
-  * catalog and off the same cached pair relation the sinks read: the
-  * batch's observation statuses are derived from it once, appended to a
-  * parquet status spool, and stepped through the blacklist (see
-  * [[alertBatch]]) — so the raw batch is parsed and coerced once, a
-  * catalog fix is reflected in the very next batch, no query restart is
-  * needed, and there is one streaming query.
+  * catalog and off the same cached per-observation relation the sinks
+  * read: the batch's statuses are projected from it, spooled and stepped
+  * through the blacklist ([[alertBatch]]) — so the raw batch is parsed,
+  * coerced and grouped once, a catalog fix is reflected in the very next
+  * batch, no query restart is needed, and there is one streaming query.
   *
   * Upgrade note: checkpoints written while the blacklist ran as a second
   * streaming query hold its state in that query's own checkpoint
@@ -36,10 +35,9 @@ object StreamPipeline {
 
   /** Sink interface — one call per micro-batch per output. */
   trait Sinks extends Serializable {
-    /** K1: valid observations, aggregated per (observation × feature) with
-      * the coerced `results` map. ONE call per batch — the sink decides how
-      * to materialize wide tables (one partitioned write, per-table typed
-      * exports via Pipeline.widenFromResults, JDBC, ...). */
+    /** K1: [[Pipeline.featureRows]], cheap to re-read (a projection of the
+      * cached batch). ONE call per batch — the sink decides how to write the
+      * wide tables (one partitioned write, Pipeline.widenFromResults, JDBC). */
     def writeWide(featureObs: DataFrame, catalog: MetadataCatalog, batchId: Long): Unit
     /** K2: dead-letter rows (obs identity + misfit-pair JSON). */
     def writeDeadLetter(df: DataFrame, batchId: Long): Unit
@@ -94,33 +92,31 @@ object StreamPipeline {
   }
 
   /** One micro-batch of the full dataflow (also the batch entry point):
-    * builds and caches the batch's pair relation, then [[writeSinks]]. */
+    * caches the batch's [[Pipeline.byObservation]], then [[writeSinks]]. */
   def processBatch(observations: DataFrame, catalog: MetadataCatalog,
       sinks: Sinks, batchId: Long): Unit = {
-    val classified = Pipeline.pairRelation(observations, catalog).cache()
-    try writeSinks(classified, catalog, sinks, batchId)
-    finally classified.unpersist()
+    val byObs = Pipeline.byObservation(
+      Pipeline.pairRelation(observations, catalog)).cache()
+    try writeSinks(byObs, catalog, sinks, batchId)
+    finally byObs.unpersist()
   }
 
-  /** The wide, dead-letter and event sinks over one cached pair relation.
-    * featureObservations is computed ONCE and shared by the wide sink and
-    * the event sink; with a partitioned wide sink this is 3 write jobs per
-    * batch total (wide, dead-letter, events) regardless of feature count. */
-  private def writeSinks(classified: DataFrame, catalog: MetadataCatalog,
+  /** The wide, dead-letter and event sinks, narrow projections of one
+    * cached per-observation relation: 3 write jobs per batch with a
+    * partitioned wide sink, regardless of feature count. */
+  private def writeSinks(byObs: DataFrame, catalog: MetadataCatalog,
       sinks: Sinks, batchId: Long): Unit = {
-    val featureObs = Pipeline.featureObservations(classified).cache()
-    try {
-      sinks.writeWide(featureObs, catalog, batchId)
-      sinks.writeDeadLetter(Pipeline.misfits(classified), batchId)
-      sinks.writeEvents(Pipeline.eventJson(featureObs, catalog), batchId)
-    } finally featureObs.unpersist()
+    val featureObs = Pipeline.featureRows(byObs)
+    sinks.writeWide(featureObs, catalog, batchId)
+    sinks.writeDeadLetter(Pipeline.deadLetterRows(byObs), batchId)
+    sinks.writeEvents(Pipeline.eventJson(featureObs, catalog), batchId)
   }
 
   /** Start the streaming pipeline over a raw JSON-lines stream: ONE
     * query, `graft-dataflow`, checkpointed under `$checkpointDir/dataflow`
-    * (X1). Each micro-batch re-reads the catalog (G2), builds and caches
-    * its pair relation once, and hands it to [[writeSinks]] and then to
-    * [[alertBatch]] (G1).
+    * (X1). Each micro-batch re-reads the catalog (G2), caches its
+    * [[Pipeline.byObservation]] once, and hands it to [[writeSinks]] and
+    * then to [[alertBatch]] (G1).
     *
     * With the default Trigger.AvailableNow the query drains what is
     * available and terminates; pass `availableNow = false` for a
@@ -143,18 +139,19 @@ object StreamPipeline {
       .option("checkpointLocation", s"$checkpointDir/dataflow")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val catalog = catalogProvider() // per-batch re-read (G2)
-        val classified = Pipeline.pairRelation(batch.toDF(), catalog).cache()
+        val byObs = Pipeline.byObservation(
+          Pipeline.pairRelation(batch.toDF(), catalog)).cache()
         try {
-          writeSinks(classified, catalog, sinks, batchId)
-          alertBatch(classified, catalog, sinks, checkpointDir, batchId)
-        } finally classified.unpersist()
+          writeSinks(byObs, catalog, sinks, batchId)
+          alertBatch(byObs, catalog, sinks, checkpointDir, batchId)
+        } finally byObs.unpersist()
       }
     Seq((if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start())
   }
 
-  /** G1 for one micro-batch. Statuses are derived once from the batch's
-    * cached pair relation ([[Alerts.statusesOf]], one status per
-    * observation identity) and appended to `$checkpointDir/status-spool`
+  /** G1 for one micro-batch. Statuses are projected from the batch's
+    * cached per-observation relation ([[Alerts.statusRows]], one per
+    * identity) and appended to `$checkpointDir/status-spool`
     * (the audit trail of every status, as read by perfbench's output
     * check). The blacklist state is versioned by batch under
     * `$checkpointDir/blacklist/<batchId>`: batch N reads the newest version
@@ -163,9 +160,9 @@ object StreamPipeline {
     * prior state and derives the same alerts again (delivery stays
     * at-least-once, as for every sink). The state is cogrouped on the
     * executors and never collected. */
-  private def alertBatch(classified: DataFrame, catalog: MetadataCatalog,
+  private def alertBatch(byObs: DataFrame, catalog: MetadataCatalog,
       sinks: Sinks, checkpointDir: String, batchId: Long): Unit = {
-    val spark = classified.sparkSession
+    val spark = byObs.sparkSession
     import spark.implicits._
     val root = new Path(s"$checkpointDir/blacklist")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -177,16 +174,13 @@ object StreamPipeline {
       spark.read.schema(Encoders.product[Alerts.Blacklisted].schema)
         .parquet(s"$root/$v").as[Alerts.Blacklisted]
     }
-    // read twice, by the spool write and by the step
-    val statuses = Alerts.statusesOf(classified, catalog).cache()
-    try {
-      statuses.write.mode("append").parquet(s"$checkpointDir/status-spool")
-      val steps = Alerts.step(statuses, blacklist, System.currentTimeMillis())
-      sinks.writeAlerts(spark.createDataset(steps.flatMap(_.event)), batchId)
-      spark.createDataset(steps.flatMap(_.state))
-        .write.mode("overwrite").parquet(s"$root/$batchId")
-      versions.filter(v => prior.exists(v < _))
-        .foreach(v => fs.delete(new Path(root, v.toString), true))
-    } finally statuses.unpersist()
+    val statuses = Alerts.statusRows(byObs, catalog)
+    statuses.write.mode("append").parquet(s"$checkpointDir/status-spool")
+    val steps = Alerts.step(statuses, blacklist, System.currentTimeMillis())
+    sinks.writeAlerts(spark.createDataset(steps.flatMap(_.event)), batchId)
+    spark.createDataset(steps.flatMap(_.state))
+      .write.mode("overwrite").parquet(s"$root/$batchId")
+    versions.filter(v => prior.exists(v < _))
+      .foreach(v => fs.delete(new Path(root, v.toString), true))
   }
 }

@@ -160,16 +160,33 @@ class PipelineSpec extends SparkSpec {
     import spark.implicits._
     import graft.model.ObservationRow
     import scala.collection.immutable.VectorMap
+    // both rows hold a temperature pair and a misfit at the same `pos`, so
+    // each output's order (and the LAST_WIN `results` value) rests on its
+    // sort key's tie-break
     val row = ObservationRow("net", "201", 5, Fixtures.t0, "htu21d",
-      VectorMap("Temp" -> Fixtures.str("high")))
-    val twin = row.copy(data = VectorMap("Humidity" -> Fixtures.str("wet")))
+      VectorMap("Temperature" -> Fixtures.num("20.5"),
+        "Temp" -> Fixtures.str("high"), "Humidity" -> Fixtures.num("40")))
+    val twin = row.copy(data = VectorMap("Temp" -> Fixtures.num("21.5"),
+      "Humidity" -> Fixtures.str("wet")))
     val rel = Pipeline.pairRelation(Seq(row, twin).toDF(), Fixtures.catalog)
+    val features = Pipeline.featureObservations(rel)
+      .select("node_id", "feature", "feature_pos", "results").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2),
+        r.getMap[String, String](3).toSeq))
+      .sortBy(_._2).toSeq
+    assert(features === Seq(
+      ("201", "relative_humidity", 2, Seq("humidity" -> "40")),
+      ("201", "temperature", 0, Seq("temperature" -> "21.5"))))
     val statuses = Alerts.statusesOf(rel, Fixtures.catalog).collect()
     assert(statuses.length === 1)
     assert(statuses.head.alertType === "invalid_key")
-    assert(statuses.head.messages.map(_.split(" ")(1)) ===
-      Seq("humidity", "temperature"))
-    assert(Pipeline.misfits(rel).count() === 1)
+    assert(statuses.head.messages === Seq(
+      "Property humidity of sensor htu21d expected type float and could " +
+        "not correctly coerce value wet of type string",
+      "Property temperature of sensor htu21d expected type float and " +
+        "could not correctly coerce value high of type string"))
+    assert(Pipeline.misfits(rel).select("data").as[String].collect() ===
+      Array("""{"humidity":"wet","temp":"high"}"""))
   }
 
   test("R1 property: valid ∪ misfit partitions the pair relation losslessly") {

@@ -155,20 +155,22 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
     object Plans extends AdaptiveSparkPlanHelper
     val root = Files.createTempDirectory("graft-one-read")
     val input = Files.createDirectories(root.resolve("in"))
     Files.write(input.resolve("obs.json"),
       (0 until 8).map(obsJson).mkString("\n").getBytes("UTF-8"))
-    val spoolWrites = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.executedPlan.toString.contains("status-spool"))
-          spoolWrites.add(qe.executedPlan)
+        executed.add(qe.executedPlan)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    // the query's session is cloned at start, with the listeners it has
+    // the query's session is cloned at start, with the listeners it has;
+    // one input file is one micro-batch
     spark.listenerManager.register(listener)
     try StreamPipeline.start(spark.readStream.text(input.toString),
         () => Fixtures.catalog,
@@ -176,16 +178,34 @@ class StreamingSpec extends SparkSpec {
       .foreach(_.awaitTermination(60000))
     finally spark.listenerManager.unregister(listener)
     org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
-    assert(spoolWrites.size === 1)
-    // the write reads the cached statuses; what the statuses read is the
-    // cached pair relation and nothing else, so the raw batch is not read
-    // a second time
-    val statuses = Plans.collect(spoolWrites.peek) {
-      case s: InMemoryTableScanExec => s }
-    assert(statuses.size === 1)
-    val leaves = Plans.collectLeaves(statuses.head.relation.cachedPlan)
-    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[InMemoryTableScanExec]),
-      s"statuses read ${leaves.map(_.nodeName).mkString(", ")}")
+    val plans = executed.asScala.toSeq
+    val scans = plans.flatMap(p =>
+      Plans.collect(p) { case s: InMemoryTableScanExec => s })
+    val perObservation = graft.model.Observation.obsCols :+ "pairs"
+    // the wide, dead-letter, event and status-spool writes each read the
+    // cached per-observation relation and nothing else, so the raw batch
+    // is read once, by that cache
+    Seq("out/wide", "out/dead_letter", "out/_events", "ckpt/status-spool")
+      .foreach { sink =>
+        val writes = plans.filter(_.toString.contains(s"$root/$sink"))
+        assert(writes.size === 1, sink)
+        val leaves = Plans.collectLeaves(writes.head)
+        assert(leaves.nonEmpty && leaves.forall {
+          case s: InMemoryTableScanExec =>
+            s.relation.output.map(_.name) == perObservation
+          case _ => false
+        }, s"$sink reads ${leaves.map(_.nodeName)}")
+      }
+    // the batch's only shuffle is the regroup inside that cache: each
+    // cached plan counted once, next to the plans that read it
+    def shuffles(p: SparkPlan): Int =
+      Plans.collect(p) { case e: ShuffleExchangeExec => e }.size
+    val cached = scans.map(_.relation).distinct
+    assert(plans.map(shuffles).sum +
+      cached.map(r => shuffles(r.cachedPlan)).sum === 1)
+    val perObsCache = cached.filter(_.output.map(_.name) == perObservation)
+    assert(perObsCache.size === 1)
+    assert(shuffles(perObsCache.head.cachedPlan) === 1)
   }
 
   test("connector contract: Kafka-shaped stream drives the full pipeline") {
