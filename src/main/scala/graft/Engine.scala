@@ -109,22 +109,10 @@ object Engine {
     * `sparkContext.setCheckpointDir`. */
   val ReliableCheckpointKey = "spark.graft.checkpoint.reliable"
 
-  /** THE eager-materialization point for every pair-mining operator —
-    * one policy, one place (round-7 VERDICT item 4). Semantics are
-    * identical either way: lineage is truncated and the relation is
-    * computed exactly once, here.
-    *
-    * Reliable mode additionally requires
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (a STATIC
-    * conf, set at session build — [[builder]] sets it): without it the
-    * ContextCleaner never deletes checkpointed RDD directories, so a
-    * long-running job would leak one directory per eagerCheckpoint call
-    * to the checkpoint store. Required loudly here rather than silently
-    * leaking. */
-  /** Input-size floor (bytes) above which the pair-mining family's
-    * materializations (intermediate persists + the result's local
-    * checkpoint) use disk-backed storage (MEMORY_AND_DISK); below it
-    * they stay MEMORY_ONLY. The eager-job structure itself is
+  /** The storage level a mining operator over `input` uses for its
+    * eager materializations (intermediate persists + the result's local
+    * checkpoint): disk-backed (MEMORY_AND_DISK) from a 64 MB input size
+    * up, MEMORY_ONLY below it. The eager-job structure itself is
     * unconditional — in-query reuse of shingle arrays / banded
     * signatures / inverted indexes pays at every scale (measured sf0.1:
     * the fully-lazy variant was ~1.5× slower idle from subtree
@@ -148,21 +136,12 @@ object Engine {
     *
     * Same operator-side adaptivity idiom as the cosine strategy gate:
     * one free statistic (the optimizer's relation size estimate — file
-    * bytes for parquet scans, no job) picks the physical policy. */
-  val DiskBackedMinInputBytesKey = "spark.graft.diskBackedMaterialize.minInputBytes"
-  val DefaultDiskBackedMinInputBytes: Long = 64L << 20
-
-  /** The storage level a mining operator over `input` should use for
-    * its eager materializations — see [[DiskBackedMinInputBytesKey]].
-    * Cost: one optimizer pass over the input's plan, no Spark job. */
-  def miningLevel(input: DataFrame): StorageLevel = {
-    val min = BigInt(input.sparkSession.conf
-      .get(DiskBackedMinInputBytesKey,
-        DefaultDiskBackedMinInputBytes.toString).toLong)
-    if (input.queryExecution.optimizedPlan.stats.sizeInBytes >= min)
+    * bytes for parquet scans, no job) picks the physical policy. Cost: one
+    * optimizer pass over the input's plan, no Spark job. */
+  def miningLevel(input: DataFrame): StorageLevel =
+    if (input.queryExecution.optimizedPlan.stats.sizeInBytes >= (64L << 20))
       StorageLevel.MEMORY_AND_DISK
     else StorageLevel.MEMORY_ONLY
-  }
 
   /** Scale-adaptive fan-out exchange for per-document kernel stages
     * (tokenize → shingle/signature/chunk kernels → explode): their
@@ -170,11 +149,11 @@ object Engine {
     * smaller than cores × maxPartitionBytes reads as FEWER splits than
     * cores — in the worst (and measured) case ONE task runs every
     * per-doc kernel while the rest of the machine idles (sf0.1:
-    * documents.parquet is a single 0.6 MB split, and JobProbe attributed
-    * the memo-cold dedup_report wall to ~18 consecutive single-task
-    * kernel/scan jobs; it is also why the mining family scaled INVERSELY
-    * from 8 to 32 cores — extra cores only added scheduling overhead to
-    * stages that could not use them).
+    * documents.parquet is a single 0.6 MB split, and a per-job trace
+    * attributed the memo-cold dedup_report wall to ~18 consecutive
+    * single-task kernel/scan jobs; it is also why the mining family
+    * scaled INVERSELY from 8 to 32 cores — extra cores only added
+    * scheduling overhead to stages that could not use them).
     *
     * The gate is derived from input size, not tuned to local mode
     * (guide §2): repartition only when the optimizer's size estimate
@@ -208,6 +187,18 @@ object Engine {
     } else None
   }
 
+  /** THE eager-materialization point for every pair-mining operator —
+    * one policy, one place (round-7 VERDICT item 4). Semantics are
+    * identical either way: lineage is truncated and the relation is
+    * computed exactly once, here.
+    *
+    * Reliable mode additionally requires
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (a STATIC
+    * conf, set at session build — [[builder]] sets it): without it the
+    * ContextCleaner never deletes checkpointed RDD directories, so a
+    * long-running job would leak one directory per eagerCheckpoint call
+    * to the checkpoint store. Required loudly here rather than silently
+    * leaking. */
   def eagerCheckpoint(df: DataFrame): DataFrame =
     eagerCheckpoint(df, StorageLevel.MEMORY_AND_DISK)
 

@@ -526,9 +526,13 @@ object Multimodal {
         s"perceptualNearDup: corpus exceeds DefaultGeometryMaxDocs " +
           s"($DefaultGeometryMaxDocs) — auto-widened to $bandBits-bit " +
           "bands (the count-driven DuckDB oracle widens with it)")
-    val banded = bandedOf(
-        perceptualDescriptors(df, codec, quarantine = quarantine,
-          nBits = bandBits * PerceptualBands).toDF())
+    // descriptors exploded onto their band buckets — the decode pass
+    // stores band keys per band ([[PerceptualDesc.bkeys]]), so band =
+    // array position, key = element
+    val banded = perceptualDescriptors(df, codec, quarantine = quarantine,
+        nBits = bandBits * PerceptualBands).toDF()
+      .select(col("doc_id"), col("total"), col("cells"),
+        posexplode(col("bkeys")).as(Seq("band", "bkey")))
       .persist(lvl)
     // Hot-bucket cap — the lshNearDupPairs hygiene pattern, and the
     // round-10 answer to the measured quadratic candidate growth at
@@ -627,24 +631,6 @@ object Multimodal {
     perceptualNearDupOf(withPayload(spark, dir).unionByName(seeds),
       nDocs = Some(WidenedOracleSimDocs))
   }
-
-  /** Un-materialized twin for plan inspection (PlanSpec audits this
-    * dataflow; localCheckpoint truncates lineage on the real one). */
-  private[graft] def perceptualNearDupLazy(spark: SparkSession,
-      dir: String): DataFrame =
-    nearDupFromDesc(perceptualDescriptors(withPayload(spark, dir)).toDF(),
-      NearDupL1Denom)
-
-  /** Capless composition for plan inspection and small relations. */
-  private def nearDupFromDesc(desc: DataFrame, l1Denom: Long): DataFrame =
-    verifyFromBanded(bandedOf(desc), l1Denom)
-
-  /** Descriptors exploded onto their band buckets — band keys are stored
-    * per band by the decode pass ([[PerceptualDesc.bkeys]]), so this is a
-    * plain posexplode: band = array position, key = element. */
-  private def bandedOf(desc: DataFrame): DataFrame =
-    desc.select(col("doc_id"), col("total"), col("cells"),
-      posexplode(col("bkeys")).as(Seq("band", "bkey")))
 
   /** Bucket self-join + exact integer-L1 verify over a (possibly
     * hot-bucket-filtered) banded relation. */

@@ -622,33 +622,13 @@ object SimilarityOps {
     // would scan and re-derive the corpus three times. Storage medium
     // size-adaptive via Engine.miningLevel.
     val lvl = Engine.miningLevel(tbl(spark, dir, "embeddings"))
-    val emb = semanticDedupIndex(spark, dir, nBits, nCentroids).persist(lvl)
-    val out = Engine.eagerCheckpoint(semanticDedupFrom(emb, threshold), lvl)
-    emb.unpersist(true)
-    out
-  }
-
-  /** Un-materialized twin of [[semanticDedup]] for plan inspection —
-    * localCheckpoint truncates lineage, so PlanSpec audits THIS dataflow
-    * (identical builder, no caching). */
-  private[graft] def semanticDedupLazy(spark: SparkSession, dir: String,
-      threshold: Double = 0.35, nBits: Int = 8,
-      nCentroids: Int = 16): DataFrame =
-    semanticDedupFrom(semanticDedupIndex(spark, dir, nBits, nCentroids),
-      threshold)
-
-  /** The per-vector (embedding, norm, SRP bucket, cell) index relation. */
-  private def semanticDedupIndex(spark: SparkSession, dir: String,
-      nBits: Int, nCentroids: Int): DataFrame =
-    tbl(spark, dir, "embeddings")
+    // the per-vector (embedding, norm, SRP bucket, cell) index
+    val emb = tbl(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         norm(col("embedding")).as("nrm"),
         srpBucket(col("embedding"), nBits).as("bucket"))
       .join(cellAssignments(spark, dir, nCentroids), "vec_id")
-
-  /** The drop-smaller-id dataflow over a (possibly cached) index. */
-  private def semanticDedupFrom(emb: DataFrame,
-      threshold: Double): DataFrame = {
+      .persist(lvl)
     val dropped = emb.as("a").join(emb.as("b"),
         col("a.cell") === col("b.cell") &&
           col("a.bucket") === col("b.bucket") &&
@@ -657,10 +637,12 @@ object SimilarityOps {
         (col("a.nrm") * col("b.nrm")) >= threshold)
       .select(col("b.vec_id").as("vec_id")).distinct()
       .withColumn("is_dup", lit(true))
-    emb.select("vec_id", "cell")
+    val out = Engine.eagerCheckpoint(emb.select("vec_id", "cell")
       .join(dropped, Seq("vec_id"), "left_outer")
       .select(col("vec_id"), col("cell"),
-        col("is_dup").isNull.as("kept"))
+        col("is_dup").isNull.as("kept")), lvl)
+    emb.unpersist(true)
+    out
   }
 
   /** Embedding-cosine near-duplicate pairs above a threshold: candidates

@@ -129,18 +129,13 @@ object TextOps {
     // windowed index (both join sides), not two full re-tokenizations.
     // Storage medium is size-adaptive (Engine.miningLevel): memory-only
     // below the disk-backed floor, so small-corpus materializations
-    // never touch disk — see the rationale on DiskBackedMinInputBytesKey
+    // never touch disk — see the rationale on Engine.miningLevel
     val lvl = Engine.miningLevel(docs)
     val idx = spanIndexOf(docs).persist(lvl)
     val out = Engine.eagerCheckpoint(spansFromIndex(idx), lvl)
     idx.unpersist(true)
     out
   }
-
-  /** Un-materialized twin for plan inspection (PlanSpec). */
-  private[graft] def dedupSubstringSpansLazy(spark: SparkSession,
-      dir: String): DataFrame =
-    spansFromIndex(spanIndexOf(tbl(spark, dir, "documents")))
 
   /** Every [[SpanSeedTokens]]-token window of each doc, position-keyed by
     * the md5 of its joined text — per-doc only (no cross-doc dependency),
@@ -176,12 +171,11 @@ object TextOps {
     dfCapWindows(spanWindows(docs))
 
   /** THE window df-cap — one definition for every consumer (the span
-    * index, the eager containment path, the report's artifact path), so
-    * the cap semantics cannot diverge between the shipped operators and
-    * their plan-inspection twins. Input: any (doc_id, …, h) exploded
-    * window relation; output: the same relation restricted to keys in at
-    * most [[SpanDfCap]] documents. The aggregate and the join probe share
-    * the hash-by-h exchange (AQE exchange reuse). */
+    * index, the containment miner, the report's artifact path), so the
+    * cap semantics cannot diverge between them. Input: any (doc_id, …, h)
+    * exploded window relation; output: the same relation restricted to
+    * keys in at most [[SpanDfCap]] documents. The aggregate and the join
+    * probe share the hash-by-h exchange (AQE exchange reuse). */
   private[graft] def dfCapWindows(sh: DataFrame): DataFrame = {
     val eligible = sh.groupBy("h")
       .agg(count_distinct(col("doc_id")).as("ndocs"))
@@ -249,14 +243,7 @@ object TextOps {
   /** [[dedupCdcChunks]] over any (doc_id, text) relation. */
   def dedupCdcChunksOf(docs: DataFrame,
       threshold: Double = DefaultNearDupThreshold): DataFrame =
-    cdcChunksImpl(docs, threshold, eager = true)
-
-  /** Un-materialized twin for plan inspection (PlanSpec/GoldenPlanSpec) —
-    * same parameterized builder as the shipped op, no cache/checkpoint. */
-  private[graft] def dedupCdcChunksLazy(spark: SparkSession,
-      dir: String): DataFrame =
-    cdcChunksImpl(tbl(spark, dir, "documents"), DefaultNearDupThreshold,
-      eager = false)
+    cdcChunksFromSets(cdcChunkSets(docs), threshold, Engine.miningLevel(docs))
 
   /** Per-doc distinct CDC chunk-key sets — (doc_id, ck), per-doc only
     * (no cross-doc dependency, no df cap), so audit-mode consumers
@@ -324,22 +311,16 @@ object TextOps {
       .distinct()
   }
 
-  private def cdcChunksImpl(docs: DataFrame, threshold: Double,
-      eager: Boolean): DataFrame =
-    cdcChunksFromSets(cdcChunkSets(docs), threshold, eager,
-      if (eager) Engine.miningLevel(docs) else StorageLevel.NONE)
-
   /** The CDC pair dataflow over a prepared distinct (doc_id, ck)
     * chunk-set relation — the seam [[dedupReport]]'s one-scan artifact
     * path enters through (its chunks explode from the shared artifact
     * relation instead of a dedicated corpus scan). */
   private[graft] def cdcChunksFromSets(chunks: DataFrame, threshold: Double,
-      eager: Boolean, lvl: StorageLevel): DataFrame = {
+      lvl: StorageLevel): DataFrame = {
     val eligible = chunks.groupBy("ck")
       .agg(count(lit(1)).as("ndocs"))
       .filter(col("ndocs") <= CdcDfCap).select("ck")
-    val sets0 = chunks.join(eligible, "ck")
-    val sets = if (eager) sets0.persist(lvl) else sets0
+    val sets = chunks.join(eligible, "ck").persist(lvl)
     val sizes = sets.groupBy(col("doc_id")).agg(count(lit(1)).as("n_ck"))
     val result = sets.as("a").join(sets.as("b"),
         col("a.ck") === col("b.ck") && col("a.doc_id") < col("b.doc_id"))
@@ -357,12 +338,9 @@ object TextOps {
         floor(lit(10000.0) * col("common_chunks") /
           (col("na") + col("nb") - col("common_chunks"))).cast("long")
           .as("jaccard_bp"))
-    if (!eager) result
-    else {
-      val out = Engine.eagerCheckpoint(result, lvl)
-      sets.unpersist(true)
-      out
-    }
+    val out = Engine.eagerCheckpoint(result, lvl)
+    sets.unpersist(true)
+    out
   }
 
   /** Verbatim-containment threshold as an exact rational (num/den): the
@@ -408,26 +386,9 @@ object TextOps {
     val sets = dfCapWindows(windows)
       .select(col("doc_id"), col("h")).distinct()
       .persist(lvl)
-    val out = Engine.eagerCheckpoint(containmentFromSets(sets), lvl)
-    sets.unpersist(true)
-    out
-  }
-
-  /** Un-materialized twin for plan inspection (PlanSpec/GoldenPlanSpec) —
-    * the same dataflow as [[dedupContainmentOf]] without the cache or the
-    * lineage-truncating checkpoint. */
-  private[graft] def dedupContainmentLazy(spark: SparkSession,
-      dir: String): DataFrame =
-    containmentFromSets(
-      spanIndexOf(tbl(spark, dir, "documents"))
-        .select(col("doc_id"), col("h")).distinct())
-
-  /** The containment pair dataflow over a (doc_id, h) distinct-window
-    * relation (possibly cached by the caller). */
-  private[graft] def containmentFromSets(sets: DataFrame): DataFrame = {
     val sizes = sets.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_h"))
-    sets.as("a").join(sets.as("b"),
+    val pairs = sets.as("a").join(sets.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") =!= col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("shared"))
@@ -439,6 +400,9 @@ object TextOps {
       .select(col("doc_a"), col("doc_b"), col("shared"),
         floor(lit(10000.0) * col("shared") / col("n_h")).cast("long")
           .as("containment_bp"))
+    val out = Engine.eagerCheckpoint(pairs, lvl)
+    sets.unpersist(true)
+    out
   }
 
   /** Exact n-gram Jaccard near-dup pairs (threshold 0.5) via PPJoin-style
@@ -452,18 +416,6 @@ object TextOps {
     * EXACTLY via full-array intersection. Exact output, no recall loss. */
   def dedupNgramJaccard(spark: SparkSession, dir: String,
       threshold: Double = DefaultNearDupThreshold): DataFrame =
-    ngramJaccardImpl(spark, dir, threshold, eager = true)
-
-  /** Un-materialized twin for plan inspection (PlanSpec/GoldenPlanSpec) —
-    * the IDENTICAL dataflow (one parameterized builder, so the twin can
-    * never drift from the shipped op) without the caches or the
-    * lineage-truncating checkpoint. */
-  private[graft] def dedupNgramJaccardLazy(spark: SparkSession, dir: String,
-      threshold: Double = DefaultNearDupThreshold): DataFrame =
-    ngramJaccardImpl(spark, dir, threshold, eager = false)
-
-  private def ngramJaccardImpl(spark: SparkSession, dir: String,
-      threshold: Double, eager: Boolean): DataFrame =
     ngramJaccardFromShingles(
       // deliberately NOT fan-out-repartitioned (Engine.fanoutParallel):
       // measured at sf0.1 the miner got ~15% SLOWER with it — the shingle
@@ -475,24 +427,21 @@ object TextOps {
       // kernels dominate their aggs (bench r14 batch-1 vs batch-2 A/B).
       tbl(spark, dir, "documents")
         .select(col("doc_id"), shingles(col("text")).as("sh")),
-      threshold, eager,
-      if (eager) Engine.miningLevel(tbl(spark, dir, "documents"))
-      else StorageLevel.NONE)
+      threshold, Engine.miningLevel(tbl(spark, dir, "documents")))
 
   /** The PPJoin pair dataflow over a prepared (doc_id, sh) shingle
     * relation — the seam [[dedupReport]]'s one-scan artifact path enters
     * through. */
   private[graft] def ngramJaccardFromShingles(docsSh: DataFrame,
-      threshold: Double, eager: Boolean, lvl: StorageLevel): DataFrame = {
+      threshold: Double, lvl: StorageLevel): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // persisted (eager mode): the shingle arrays are reused by three plan
+    // persisted: the shingle arrays are reused by three plan
     // subtrees (inverted index build + both sides of the verify join) —
     // without the cache the shingling is recomputed each time.
     // MEMORY_AND_DISK (not cache(): on a cluster, shingle relations can
     // exceed executor memory) and explicitly unpersisted below once the
     // small result materializes — nothing pinned outlives the query.
-    val docs0 = docsSh.filter(size(col("sh")) > 0)
-    val docs = if (eager) docs0.persist(lvl) else docs0
+    val docs = docsSh.filter(size(col("sh")) > 0).persist(lvl)
     val inv = docs.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
       explode(col("sh")).as("s"))
     val freq = inv.groupBy("s").agg(count(lit(1)).as("f"))
@@ -503,12 +452,12 @@ object TextOps {
     // smaller side and would drop unequal-size pairs — e.g. a 3-shingle
     // doc fully contained in a 6-shingle doc at exactly j = t.)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("f"), col("s"))
-    val prefixes0 = inv.join(freq, "s")
+    val prefixes = inv.join(freq, "s")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <=
         col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1)
       .select(col("doc_id"), col("n_sh"), col("rk"), col("s"))
-    val prefixes = if (eager) prefixes0.persist(lvl) else prefixes0
+      .persist(lvl)
     // positional filter (PPJoin): the shared prefix element at ranks
     // (ra, rb) caps the achievable overlap at min(na−ra, nb−rb)+1
     val reqOverlap =
@@ -561,13 +510,10 @@ object TextOps {
     // release never competes with the NEXT job for memory the way async
     // ContextCleaner reclamation does (measured as cross-query bench
     // pollution in rounds 1 and 2)
-    if (!eager) result
-    else {
-      val out = Engine.eagerCheckpoint(result, lvl)
-      docs.unpersist(true)
-      prefixes.unpersist(true)
-      out
-    }
+    val out = Engine.eagerCheckpoint(result, lvl)
+    docs.unpersist(true)
+    prefixes.unpersist(true)
+    out
   }
 
   /** Per-JVM registry of materialized mined pair graphs — ALL modalities
@@ -752,8 +698,9 @@ object TextOps {
     // in a task slot until the winner finishes computing it — with
     // cores-many cache partitions and four racing jobs, most of the
     // executor is stalled lock-waiting exactly when the miners' real
-    // stages want slots (JobProbe r14: summed task time nearly doubled
-    // without this). One parallel fill job, then every miner reads warm.
+    // stages want slots (r14 per-job attribution: summed task time nearly
+    // doubled without this). One parallel fill job, then every miner reads
+    // warm.
     if (!allWarm) arts.count()
     val hashed =
       if (allWarm)
@@ -782,14 +729,14 @@ object TextOps {
       Future(groupSizes.filter(col("g") > ExactDupGroupCap).count())
     val fJac = Future(mined(s"jaccard|$jaccardThreshold")(
       ngramJaccardFromShingles(arts.select(col("doc_id"), col("sh")),
-        jaccardThreshold, eager = true, lvl)))
+        jaccardThreshold, lvl)))
     val fSh = Future(mined(s"simhash|$maxHamming")(
       simhashPairsFromSigs(arts.select(col("doc_id"), col("sig")),
         maxHamming, lvl)))
     val fCdc = Future(mined(s"cdc|$cdcThreshold")(
       cdcChunksFromSets(
         arts.select(col("doc_id"), explode(col("cks")).as("ck")).distinct(),
-        cdcThreshold, eager = true, lvl)))
+        cdcThreshold, lvl)))
     val fCt = Future(mined("containment")(
       containmentFromWindows(
         arts.select(col("doc_id"), explode(col("whs")).as("h")), lvl)))
@@ -1295,28 +1242,9 @@ object TextOps {
     * through. */
   private[graft] def simhashPairsFromSigs(sigs: DataFrame, maxHamming: Int,
       lvl: StorageLevel): DataFrame = {
-    val banded = bandedSimhashFrom(sigs).persist(lvl)
-    val out = Engine.eagerCheckpoint(simhashPairsFrom(banded, maxHamming), lvl)
-    banded.unpersist(true)
-    out
-  }
-
-  /** Un-materialized twin of [[simhashPairs]] for plan inspection —
-    * localCheckpoint truncates lineage, so PlanSpec audits THIS dataflow
-    * (identical builder, no caching). */
-  private[graft] def simhashPairsLazy(spark: SparkSession, dir: String,
-      maxHamming: Int = 3): DataFrame =
-    simhashPairsFrom(bandedSimhash(spark, dir), maxHamming)
-
-  /** Signatures exploded onto their [[SimhashBands]] band buckets
-    * (fan-out as in the eager miner, so the lazy twin pins its plan). */
-  private def bandedSimhash(spark: SparkSession, dir: String): DataFrame =
-    bandedSimhashFrom(
-      simhashSigOf(Engine.fanoutParallel(tbl(spark, dir, "documents"))))
-
-  private def bandedSimhashFrom(sigs: DataFrame): DataFrame = {
+    // signatures exploded onto their [[SimhashBands]] band buckets
     val mask = (1L << SimhashBandBits) - 1
-    sigs.select(col("doc_id"), col("sig"),
+    val banded = sigs.select(col("doc_id"), col("sig"),
       explode(array((0 until SimhashBands).map(b =>
         struct(lit(b).as("band"),
           shiftright(col("sig"), b * SimhashBandBits).bitwiseAND(mask)
@@ -1324,10 +1252,14 @@ object TextOps {
         .as("bk"))
       .select(col("doc_id"), col("sig"),
         col("bk.band").as("band"), col("bk.key").as("key"))
+      .persist(lvl)
+    val out = Engine.eagerCheckpoint(simhashPairsFrom(banded, maxHamming), lvl)
+    banded.unpersist(true)
+    out
   }
 
-  /** The banded bucket self-join + popcount verify over a (possibly
-    * cached) banded-signature relation. */
+  /** The banded bucket self-join + popcount verify over the cached
+    * banded-signature relation. */
   private def simhashPairsFrom(banded: DataFrame,
       maxHamming: Int): DataFrame = {
     require(maxHamming < SimhashBands,
@@ -1898,7 +1830,7 @@ object TextOps {
     val ctx = big
       .groupBy(substring_index(col("term"), " ", 1).as("w1"))
       .agg(sum(col("cb")).as("cw"))
-    // big/ctx are LEFT UNHINTED (the containmentFromSets discipline): at
+    // big/ctx are LEFT UNHINTED (the containment sizes discipline): at
     // bench scale AQE broadcasts them — same plan a hint would force —
     // but the distinct-bigram table of a 100 TB corpus outgrows any
     // broadcast and must degrade to a shuffled join, which a hint would
@@ -1920,8 +1852,9 @@ object TextOps {
     * shared by the bigram occurrences AND the unigram vocabulary census
     * (previously two independent corpus scans, each re-tokenizing;
     * guide §6 scan reuse). Fan-out per [[Engine.fanoutParallel]]: the
-    * materialization was a SINGLE task on a single-split corpus (JobProbe
-    * r14: a 1.4 s one-task job was two thirds of the query wall). */
+    * materialization was a SINGLE task on a single-split corpus (r14
+    * per-job attribution: a 1.4 s one-task job was two thirds of the query
+    * wall). */
   private def lmTokens(spark: SparkSession, dir: String): DataFrame =
     Engine.fanoutParallel(tbl(spark, dir, "documents"))
       .select(col("doc_id"), tokens(col("text")).as("w"))
@@ -1952,16 +1885,6 @@ object TextOps {
       lmScoreFrom(occ, big, lmVocab(toks)), lvl)
     toks.unpersist(true)
     out
-  }
-
-  /** Un-materialized twin of [[textLmScore]] for plan inspection —
-    * localCheckpoint truncates lineage, so PlanSpec audits THIS dataflow
-    * (identical builder, no caching). */
-  private[graft] def textLmScoreLazy(spark: SparkSession, dir: String): DataFrame = {
-    val toks = lmTokens(spark, dir)
-    val occ = lmOccurrences(toks)
-    lmScoreFrom(occ, occ.groupBy("term").agg(count(lit(1)).as("cb")),
-      lmVocab(toks))
   }
 
   /** Deterministic stratified sampling — fixed per-(lang, decile) quotas
@@ -2039,9 +1962,10 @@ object TextOps {
     * Native one-pass kernel (WindowStringsExpr) — the HOF chain below is
     * interpreted per window and was THE heaviest CPU stage of the bench
     * (the cosine index materialization, 36.5 task-seconds at sf0.1;
-    * JobProbe r14). Byte-identical strings ([[bigramsLambda]] pins it);
-    * a doc with < 2 tokens yields no bigrams either way (the kernel's
-    * empty array and the twin's guard both explode to zero rows). */
+    * r14 per-job attribution). Byte-identical strings ([[bigramsLambda]]
+    * pins it); a doc with < 2 tokens yields no bigrams either way (the
+    * kernel's empty array and the twin's guard both explode to zero
+    * rows). */
   private[graft] def bigrams(text: Column): Column =
     bigramsOfTokens(tokens(text))
 
@@ -2496,17 +2420,6 @@ object TextOps {
       s"unknown cosine strategy: $other")
   }
 
-  /** Un-materialized twin of [[textCosinePairs]] for plan inspection —
-    * localCheckpoint truncates lineage, so PlanSpec audits THIS dataflow
-    * (identical builder, no caching). `strategy` selects the shape
-    * directly (plain | salted | kernel; the shipped op derives
-    * it from measured stats). */
-  private[graft] def textCosinePairsLazy(spark: SparkSession, dir: String,
-      minShared: Int = 10, dfCapFrac: Int = 5,
-      strategy: String = "plain"): DataFrame =
-    textCosinePairsOf(tbl(spark, dir, "documents"), minShared, dfCapFrac,
-      strategy)
-
   /** [[textCosinePairs]] over any (doc_id, text) relation with an
     * explicit strategy — the spec surface for pinning that the salted
     * block join and the block kernel are result-identical to the plain
@@ -2620,7 +2533,8 @@ object TextOps {
     // BOTH references of `docs` (level histogram + probe) now root at the
     // IDENTICAL scan→exchange subtree, ReuseExchange collapses the two
     // corpus scans into one exchange read twice — the scan-reuse this
-    // operator previously declined to buy with a persist
+    // operator previously declined to buy with a persist (the final
+    // executed plan reads documents once; PlanSpec pins it)
     val docs = Engine.fanoutParallel(tbl(spark, dir, "documents"))
       .select(col("doc_id"), qualityBpOf(col("text")).as("quality_bp"),
         size(tokens(col("text"))).cast("long").as("n_tokens"))

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * values either way, and the reliable path actually writes to the
   * context's checkpoint dir (executor-loss survivability is the point).
   * Also pins `Engine.builder` as the one place a session is configured,
-  * and `Coerce.coerce` as the one coercion the main code runs.
+  * `Coerce.coerce` as the one coercion the main code runs, and that no
+  * operator keeps a plan-inspection twin.
   */
 class EngineSpec extends SparkSpec {
 
@@ -82,5 +83,11 @@ class EngineSpec extends SparkSpec {
       Seq("graft/functions/Coerce.scala"),
       "coerce with Coerce.coerce (the native CoerceExpr); coerceScala is " +
         "the specs' reference")
+  }
+
+  test("no plan twins: no *Lazy def in src/main/scala") {
+    assert(mainSourcesMatching("""def \w+Lazy\b""".r) === Seq.empty,
+      "pin the shipped op's executed plans (PlanDump.capture) instead of " +
+        "keeping an un-materialized twin of it")
   }
 }

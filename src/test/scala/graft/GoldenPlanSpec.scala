@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{ExtraOps, SimilarityOps, StarOps, TextOps}
+import graft.operators.{EventOps, ExtraOps, Multimodal, SimilarityOps, StarOps, TextOps}
 import org.apache.spark.sql.DataFrame
 import java.io.File
 import java.nio.charset.StandardCharsets
@@ -22,10 +22,11 @@ import java.nio.file.Files
   * On an INTENDED plan change, regenerate and review the diff like code:
   *   GRAFT_REGEN_GOLDEN_PLANS=1 sbt "testOnly graft.GoldenPlanSpec"
   *
-  * Only lazily-built queries belong here: the eager dedup-family entries
-  * materialize (checkpoint) during construction, so their "plan" is a
-  * truncated lineage stub with nothing structural to pin — their dataflow
-  * shapes are asserted op-by-op in PlanSpec via the *Lazy twins instead.
+  * A lazily-built query pins the plan of the frame it returns. A pair
+  * miner materializes while it is built (persisted index, eager
+  * checkpoint), so the frame it returns is a checkpoint stub: its golden
+  * is the final (post-AQE) executed plan of every SQL execution the
+  * shipped op ran — stats probes, cache fills, checkpoint jobs — in order.
   */
 class GoldenPlanSpec extends SparkSpec {
 
@@ -57,45 +58,65 @@ class GoldenPlanSpec extends SparkSpec {
     normalize(df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
 
-  private val headline: Seq[(String, () => DataFrame)] = Seq(
-    "q1_agg" -> (() => StarOps.q1Agg(spark, dir)),
-    "q3_join" -> (() => StarOps.q3Join(spark, dir)),
-    "q5_region" -> (() => StarOps.q5Region(spark, dir)),
-    "q9_profit" -> (() => StarOps.q9ProfitNationYear(spark, dir)),
-    "q21_waiting" -> (() => ExtraOps.q21WaitingSupplier(spark, dir)),
-    "topk_orders" -> (() => StarOps.topkOrders(spark, dir)),
-    "lateral_topn" -> (() => ExtraOps.lateralTopN(spark, dir)),
-    "asof_join_native" -> (() => ExtraOps.asofErrorSignupNative(spark, dir)),
-    "text_tfidf" -> (() => TextOps.textTfidf(spark, dir)),
-    "sim_knn" -> (() => SimilarityOps.knnBruteForce(spark, dir)),
-    // mining family via the *Lazy twins (identical parameterized builders,
-    // no lineage-truncating checkpoint) — exactly the plans a refactor can
-    // silently pessimize: candidate-bounded joins, df caps, block shapes
-    "dedup_ngram_jaccard" -> (() => TextOps.dedupNgramJaccardLazy(spark, dir)),
-    "dedup_containment" -> (() => TextOps.dedupContainmentLazy(spark, dir)),
-    "dedup_cdc_chunks" -> (() => TextOps.dedupCdcChunksLazy(spark, dir)),
-    "mm_near_dup" ->
-      (() => graft.operators.Multimodal.perceptualNearDupLazy(spark, dir)),
+  /** The executed plans of everything `body` ran, in order. Codegen ids
+    * and AQE query-stage ids follow the order concurrent stages finish in,
+    * and a stage's runtime statistics are measurements, not structure, so
+    * they are scrubbed too. */
+  private def ranPlansOf(body: => Any): String = {
+    val plans = executed(body).plans
+    plans.zipWithIndex.map { case (p, i) =>
+      s"# execution ${i + 1} of ${plans.size}\n" + normalize(p
+        .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : N]")
+        .replaceAll("(?m)^Arguments: \\d+$", "Arguments: N")
+        .replaceAll(", Statistics\\([^)]*\\)", ""))
+    }.mkString("\n")
+  }
+
+  private def docs = EventOps.tbl(spark, dir, "documents")
+
+  private val headline: Seq[(String, () => String)] = Seq(
+    "q1_agg" -> (() => planOf(StarOps.q1Agg(spark, dir))),
+    "q3_join" -> (() => planOf(StarOps.q3Join(spark, dir))),
+    "q5_region" -> (() => planOf(StarOps.q5Region(spark, dir))),
+    "q9_profit" -> (() => planOf(StarOps.q9ProfitNationYear(spark, dir))),
+    "q21_waiting" -> (() => planOf(ExtraOps.q21WaitingSupplier(spark, dir))),
+    "topk_orders" -> (() => planOf(StarOps.topkOrders(spark, dir))),
+    "lateral_topn" -> (() => planOf(ExtraOps.lateralTopN(spark, dir))),
+    "asof_join_native" ->
+      (() => planOf(ExtraOps.asofErrorSignupNative(spark, dir))),
+    "text_tfidf" -> (() => planOf(TextOps.textTfidf(spark, dir))),
+    "sim_knn" -> (() => planOf(SimilarityOps.knnBruteForce(spark, dir))),
+    // the mining family as the shipped ops execute it — exactly the plans
+    // a refactor can silently pessimize: candidate-bounded joins, df caps,
+    // block shapes, which relation is persisted and who reads it
+    "dedup_ngram_jaccard" ->
+      (() => ranPlansOf(TextOps.dedupNgramJaccard(spark, dir))),
+    "dedup_containment" ->
+      (() => ranPlansOf(TextOps.dedupContainment(spark, dir))),
+    "dedup_cdc_chunks" ->
+      (() => ranPlansOf(TextOps.dedupCdcChunks(spark, dir))),
+    "mm_near_dup" -> (() => ranPlansOf(Multimodal.perceptualNearDup(spark, dir))),
     "dedup_incremental" -> (() => {
       import org.apache.spark.sql.functions.col
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
-      TextOps.dedupIncrementalOf(
+      planOf(TextOps.dedupIncrementalOf(
         docs.filter(col("doc_id") >= TextOps.DefaultIncrementalSplitId),
-        docs.filter(col("doc_id") < TextOps.DefaultIncrementalSplitId))
+        docs.filter(col("doc_id") < TextOps.DefaultIncrementalSplitId)))
     }),
     // all three exact cosine shapes: the shipped op picks one from
-    // measured stats, so each shape needs its own pinned plan
+    // measured stats (plain at this scale), so the other two run through
+    // the strategy seam, each with its own pinned plans
     "text_cosine_pairs_plain" ->
-      (() => TextOps.textCosinePairsLazy(spark, dir, strategy = "plain")),
-    "text_cosine_pairs_salted" ->
-      (() => TextOps.textCosinePairsLazy(spark, dir, strategy = "salted")),
-    "text_cosine_pairs_kernel" ->
-      (() => TextOps.textCosinePairsLazy(spark, dir, strategy = "kernel")))
+      (() => ranPlansOf(TextOps.textCosinePairs(spark, dir))),
+    "text_cosine_pairs_salted" -> (() => ranPlansOf(
+      TextOps.textCosinePairsOf(docs, 10, 5, "salted").collect())),
+    "text_cosine_pairs_kernel" -> (() => ranPlansOf(
+      TextOps.textCosinePairsOf(docs, 10, 5, "kernel").collect())))
 
   headline.foreach { case (name, build) =>
     test(s"golden plan: $name") {
-      val actual = planOf(build())
+      val actual = build()
       val golden = new File(goldenDir, s"$name.txt")
       if (regen) {
         goldenDir.mkdirs()

@@ -7,6 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * built from the engine's own session config ([[Engine.builder]]). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** What `body` executed ([[graft.tools.PlanDump.capture]]), run with no
+    * relation cached beforehand, as PlanDump runs a query: a cache left by
+    * an earlier suite would otherwise stand in for the body's own scans. */
+  def executed(body: => Any): graft.tools.PlanDump.Capture = {
+    spark.sharedState.cacheManager.clearCache()
+    graft.tools.PlanDump.capture(spark)(body)
+  }
 }
 
 object SparkSpec {
