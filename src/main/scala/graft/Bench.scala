@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON metrics line (driver contract). A session warmup runs
   * first so the first measured query doesn't absorb JVM/codegen startup.
@@ -24,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   *             samples: rounds 1, 2 and 4 each mis-flagged 3-6 queries as
   *             regressed on single samples that isolation later showed
   *             were cross-query cache pressure or box load — best-of-n
-  *             keeps the headline honest (memo state is cleared per
-  *             sample, so no sample ever reads another's work). Default
+  *             keeps the headline honest (persisted blocks are released
+  *             per sample, so no sample ever reads another's work). Default
   *             raised 2 → 3 in round 5: this box's kernel memory-reclaim
   *             daemons (kdamond/kcompactd) produce multi-second stalls in
   *             BURSTS. Since round 11 the samples are INTERLEAVED (pass k
@@ -146,7 +144,6 @@ object Bench {
     // per PASS, not per sample: round 5 ran a forced GC per sample
     // (~300 full GCs) and inflated the wall 112 s → 814 s.
     def releaseOrphanedBlocks(): Unit = {
-      graft.operators.TextOps.clearMinedPairs()
       spark.sharedState.cacheManager.clearCache()
       val persisted = spark.sparkContext.getPersistentRDDs.values
       if (persisted.nonEmpty) persisted.foreach(_.unpersist(true))
@@ -154,8 +151,8 @@ object Bench {
     // INTERLEAVED passes (round 11): sample k of every query runs in
     // pass k — the full query list end to end, `repeats` times — instead
     // of `repeats` consecutive samples per query. The estimator (per-
-    // query MIN of memo-cold samples) is unchanged; what changes is the
-    // correlation structure of box noise across samples. This box's
+    // query MIN of hygiene-preceded samples) is unchanged; what changes
+    // is the correlation structure of box noise across samples. This box's
     // kernel-reclaim/co-tenant storms last MINUTES (SURVEY §8d), so
     // consecutive samples of one query all land inside one storm and the
     // min is inflated 10-25× — the round-10 recorded artifact shows
@@ -169,34 +166,11 @@ object Bench {
     // storm inflates one contiguous block of ONE pass and every query
     // keeps storm-free samples in the other passes — min-of-passes
     // estimates the operator, not the burst schedule. Same total work,
-    // same per-sample content (memo-cold, hygiene-preceded), standard
-    // interleaved repeated-measures methodology.
+    // same per-sample content (hygiene-preceded), standard interleaved
+    // repeated-measures methodology.
     val sampleLog =
       scala.collection.mutable.Map.empty[String, Vector[Double]]
         .withDefaultValue(Vector.empty)
-    // The mine-once PIPELINE shape: a real dedup pipeline materializes
-    // the pair graph once and every consumer (pair listing, cluster
-    // resolution) reads it — so the composed cost is mining + two cheap
-    // reads, NOT the sum of the independent per-query rows above.
-    // Measured as its own entry so the memo never distorts a per-query
-    // number. Sampled ONCE PER PASS like every other row (round-11
-    // VERDICT item 3: the single post-loop sample recorded 10.2 s
-    // against a 2-4 s mirror range — it was measuring the burst
-    // schedule, not the pipeline), and ROTATED WITH the other rows
-    // (round-12 ADVICE: a fixed end-of-pass slot right before the
-    // pass-boundary System.gc() is exactly the fixed-slot-position bias
-    // the rotation removes for everything else) — it joins the pass
-    // order as a pseudo-entry whose insertion index advances with the
-    // same per-pass offset. The generic loop's releaseOrphanedBlocks
-    // keeps it memo-cold at entry; the memo staying warm BETWEEN its
-    // two internal actions is the shape being measured.
-    val measurePipeline =
-      only.forall(s => s.contains("dedup_pipeline_mine_once"))
-    val pipelineEntry: (String, (SparkSession, String) => org.apache.spark.sql.DataFrame) =
-      "dedup_pipeline_mine_once" -> ((s: SparkSession, d: String) => {
-        graft.operators.TextOps.nearDupPairs(s, d).count()
-        graft.operators.TextOps.dedupClusters(s, d)
-      })
     (1 to repeats).foreach { pass =>
       // ROTATED start offset per pass (round 12, same rationale as the
       // 27cc9a5 contention harness): interleaving decorrelates samples from
@@ -208,21 +182,11 @@ object Bench {
       // superset a slot later). Rotating by n/repeats per pass gives
       // each query `repeats` different positions; the per-query MIN
       // then estimates the operator, not its place in the schedule.
-      val offset =
-        (pass - 1) * math.max(selected.length / math.max(repeats, 1), 1)
-      val rot = offset % math.max(selected.length, 1)
-      val base = selected.drop(rot) ++ selected.take(rot)
-      val order =
-        if (measurePipeline) {
-          val at = offset % (base.length + 1)
-          (base.take(at) :+ pipelineEntry) ++ base.drop(at)
-        } else base
+      val rot = (pass - 1) *
+        math.max(selected.length / math.max(repeats, 1), 1) %
+        math.max(selected.length, 1)
+      val order = selected.drop(rot) ++ selected.take(rot)
       order.foreach { case (name, fn) =>
-        // EVERY sample starts memo-cold: a memoized pair graph would
-        // make whichever dedup sample runs first absorb the mining cost
-        // and the rest read cache — samples would not be independently
-        // comparable. The mine-once pipeline shape is measured
-        // separately and honestly as `dedup_pipeline_mine_once`.
         releaseOrphanedBlocks()
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
@@ -241,31 +205,22 @@ object Bench {
           samples.map(s => f"$s%.3f").mkString(", "))
       name -> samples // min taken below; full vector kept for the mirror file
     }
-    val pipelineRow =
-      if (measurePipeline && sampleLog(pipelineEntry._1).nonEmpty)
-        List(pipelineEntry._1 -> sampleLog(pipelineEntry._1))
-      else Nil
-    val allRows = results ++ pipelineRow
-    val qs = allRows.map { case (k, ss) => "\"" + k + "\":" + ss.min }
+    val qs = results.map { case (k, ss) => "\"" + k + "\":" + ss.min }
       .mkString("{", ",", "}")
     // All samples per query (mirror file only): lets a future reader
     // adjudicate a single-sample spike (box-noise vs regression) from the
     // artifact alone, without re-running the query in isolation.
     // Locale.ROOT: the f-interpolator honors the default locale, and a
     // comma-decimal locale would render unparseable JSON ([1,2345])
-    val samplesJson = allRows.map { case (k, ss) =>
+    val samplesJson = results.map { case (k, ss) =>
       "\"" + k + "\":" + ss.map(s => String.format(java.util.Locale.ROOT,
         "%.4f", Double.box(s))).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val errJson = errors.reverse.distinctBy(_._1)
       .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    // total covers the per-query suite only (abs: a failed query still
-    // consumed its time; the negative per-query entry + errors map carry
-    // the failure signal). The dedup_pipeline_mine_once row is an
-    // INFORMATIONAL re-measurement of work already counted under the
-    // dedup queries — including it would double-count mining in the
-    // headline number every round.
+    // abs: a failed query still consumed its time; the negative
+    // per-query entry + errors map carry the failure signal
     val total = if (results.nonEmpty) results.map(r => math.abs(r._2.min)).sum else 0.0
     // Truncation-proof artifact layout (round 6 lost the total and the
     // first ~36 alphabetical queries to the driver's tail-only capture;

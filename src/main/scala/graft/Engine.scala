@@ -150,7 +150,7 @@ object Engine {
     * cores — in the worst (and measured) case ONE task runs every
     * per-doc kernel while the rest of the machine idles (sf0.1:
     * documents.parquet is a single 0.6 MB split, and a per-job trace
-    * attributed the memo-cold dedup_report wall to ~18 consecutive
+    * attributed the dedup_report wall to ~18 consecutive
     * single-task kernel/scan jobs; it is also why the mining family
     * scaled INVERSELY from 8 to 32 cores — extra cores only added
     * scheduling overhead to stages that could not use them).

@@ -103,12 +103,12 @@ object SparkEntry {
     "approx_distinct" -> ((s, d) => ExtraOps.approxDistinctChecked(s, d)),
     // --- dedup family over `documents` ---
     "dedup_exact" -> ((s, d) => TextOps.dedupExact(s, d)),
-    "dedup_ngram_jaccard" -> ((s, d) => TextOps.nearDupPairs(s, d)),
+    "dedup_ngram_jaccard" -> ((s, d) => TextOps.dedupNgramJaccard(s, d)),
     "dedup_clusters" -> ((s, d) => TextOps.dedupClusters(s, d)),
     "dedup_minhash_sig" -> ((s, d) => TextOps.minhashSignatures(s, d)),
     "dedup_simhash" -> ((s, d) => TextOps.simhash(s, d)),
     "dedup_lsh_pairs" -> ((s, d) => TextOps.lshNearDupPairs(s, d)),
-    "dedup_simhash_pairs" -> ((s, d) => TextOps.simhashPairsMined(s, d)),
+    "dedup_simhash_pairs" -> ((s, d) => TextOps.simhashPairs(s, d)),
     "dedup_incremental" -> ((s, d) => TextOps.dedupIncremental(s, d)),
     "dedup_incremental_contained" ->
       ((s, d) => TextOps.dedupIncremental(s, d, containment = true)),
@@ -117,10 +117,10 @@ object SparkEntry {
       ((s, d) => TextOps.dedupClustersFromReport(s, d)),
     "dedup_report_pairs" ->
       ((s, d) => TextOps.dedupReportFromPairs(s, d,
-        TextOps.nearDupPairs(s, d).select("doc_a", "doc_b"))),
-    "dedup_cdc_chunks" -> ((s, d) => TextOps.cdcChunksMined(s, d)),
+        TextOps.dedupNgramJaccard(s, d).select("doc_a", "doc_b"))),
+    "dedup_cdc_chunks" -> ((s, d) => TextOps.dedupCdcChunks(s, d)),
     "dedup_substring_spans" -> ((s, d) => TextOps.dedupSubstringSpans(s, d)),
-    "dedup_containment" -> ((s, d) => TextOps.containmentMined(s, d)),
+    "dedup_containment" -> ((s, d) => TextOps.dedupContainment(s, d)),
     "dedup_keep_best" -> ((s, d) => TextOps.dedupKeepBest(s, d)),
     // --- text analysis ---
     "text_tokens" -> ((s, d) => TextOps.textTokens(s, d)),
@@ -939,7 +939,7 @@ object SparkEntry {
         """FROM reach GROUP BY src"""),
     "dedup_report_pairs" -> {
       // audit-mode replay: keys = the exact jaccard pair graph (the
-      // Spark query feeds nearDupPairs in), evidence computed per pair
+      // Spark query feeds dedupNgramJaccard in), evidence computed per pair
       // from per-doc artifacts with NO df caps (TextOps
       // .dedupReportFromPairs's audit contract). NULL columns mirror
       // the Spark side's left joins: cdc/containment evidence is NULL

@@ -516,71 +516,22 @@ object TextOps {
     out
   }
 
-  /** Per-JVM registry of materialized mined pair graphs — ALL modalities
-    * (round-10 VERDICT item 1a widened it from jaccard-only), keyed by
-    * (context, dir, "modality|params"). A pair graph is a dedup JOB
-    * output — tiny (the survivor residue, localCheckpoint'd by its
-    * miner above the size floor) and consumed by several downstream
-    * stages (the pair listing itself, cluster resolution, survivor
-    * filters, the cross-modality report) — so a pipeline materializes
-    * each ONCE and every consumer reads the result, exactly as it would
-    * read the pair list back from durable storage on a cluster. The
-    * context id keys out frames from a stopped SparkContext (test
-    * suites cycle sessions). */
-  private val minedMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-
-  /** Memoize `build`'s pair graph under (dir, key) — see [[minedMemo]].
-    * The registry assumes the input dir is immutable for the
-    * application's lifetime (the testdata contract here; a production
-    * pipeline would persist the pair graph to durable storage and read
-    * it back). Callers that rewrite inputs in-place, or need per-sample
-    * isolation (Bench repeats), call [[clearMinedPairs]]. */
-  private def memoizedMiner(spark: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    // evict entries from other (stopped) contexts: a long-lived JVM that
-    // cycles SparkContexts (test suites, notebook servers) must not pin
-    // dead frames — and their checkpoint blocks — for the JVM lifetime
-    minedMemo.keys.filter(_._1 != appId).foreach(minedMemo.remove)
-    minedMemo.getOrElseUpdate((appId, dir, key), build)
-  }
-
-  /** The exact near-dup pair graph for (dir, threshold), mined at most
-    * once per JVM — see [[minedMemo]]. */
-  def nearDupPairs(spark: SparkSession, dir: String,
-      threshold: Double = DefaultNearDupThreshold): DataFrame =
-    memoizedMiner(spark, dir, s"jaccard|$threshold")(
-      dedupNgramJaccard(spark, dir, threshold))
-
-  /** Memoized [[simhashPairs]] — mined at most once per JVM. */
-  def simhashPairsMined(spark: SparkSession, dir: String,
-      maxHamming: Int = 3): DataFrame =
-    memoizedMiner(spark, dir, s"simhash|$maxHamming")(
-      simhashPairs(spark, dir, maxHamming))
-
-  /** Memoized [[dedupCdcChunks]] — mined at most once per JVM. */
-  def cdcChunksMined(spark: SparkSession, dir: String,
-      threshold: Double = DefaultNearDupThreshold): DataFrame =
-    memoizedMiner(spark, dir, s"cdc|$threshold")(
-      dedupCdcChunks(spark, dir, threshold))
-
-  /** Memoized [[dedupContainment]] — mined at most once per JVM. */
-  def containmentMined(spark: SparkSession, dir: String): DataFrame =
-    memoizedMiner(spark, dir, "containment")(dedupContainment(spark, dir))
-
-  /** Drop all memoized pair graphs (the checkpointed frames become
-    * unreferenced and the ContextCleaner reclaims their blocks). */
-  def clearMinedPairs(): Unit = minedMemo.clear()
+  /** No-op, kept because the benchmark's batch hygiene
+    * (perfbench/scala/perfbench/Batch.scala) calls it. The per-JVM miner
+    * memo it cleared is deleted (it last exists at commit 50efc66): every
+    * miner is a plain function of its input, and a caller that wants to
+    * mine once holds the returned DataFrame. */
+  def clearMinedPairs(): Unit = ()
 
   /** Near-dup cluster resolution — the "keep one per duplicate cluster"
     * final stage of a training-data dedup pipeline: connected components
     * over the exact near-dup pair graph, each doc labeled with the min
-    * doc_id of its component (the canonical survivor). Consumes the
-    * MATERIALIZED pair graph ([[nearDupPairs]]) instead of re-mining it. */
+    * doc_id of its component (the canonical survivor). A caller that
+    * already holds the mined pair graph passes it to
+    * [[dedupClustersFromPairs]] instead of re-mining it. */
   def dedupClusters(spark: SparkSession, dir: String,
       threshold: Double = DefaultNearDupThreshold): DataFrame =
-    dedupClustersFromPairs(nearDupPairs(spark, dir, threshold))
+    dedupClustersFromPairs(dedupNgramJaccard(spark, dir, threshold))
 
   /** Duplicate-group size cap for the report's exact modality: a group
     * of g identical texts contributes C(g,2) pairs, so a degenerate
@@ -593,30 +544,6 @@ object TextOps {
     * material (list it via [[dedupExact]]'s group view instead). */
   val ExactDupGroupCap: Long = 1024L
 
-  /** Cross-modality dedup report — corpus-triage view unioning every
-    * pair-level duplicate verdict the library mines: exact text hash,
-    * n-gram Jaccard (≥ `jaccardThreshold`), SimHash (Hamming ≤
-    * `maxHamming`), CDC chunk Jaccard (≥ `cdcThreshold`), and directed
-    * verbatim containment folded onto the unordered pair (a→b and b→a
-    * as separate columns). One row per flagged pair with each
-    * modality's evidence (NULL where that modality did not fire) and a
-    * modality count — the "why is this pair a dup, and does more than
-    * one detector agree" question a dedup pipeline audit asks.
-    * Per-modality thresholds are parameters (library defaults match
-    * each miner's own default, so the report's verdicts never drift
-    * from the standalone queries').
-    *
-    * Scale shape: every modality is a bounded mined PAIR LIST (the
-    * survivor residue, orders of magnitude smaller than the corpus),
-    * read through the per-JVM miner memo ([[minedMemo]]) — a pipeline
-    * that already mined any modality pays ZERO re-mining here, and the
-    * report itself is full-outer joins of those small relations on the
-    * pair key. Cold miners all derive from ONE shared corpus scan
-    * ([[docArtifacts]]: every per-doc artifact is map-only, so the five
-    * modalities' scans collapse to one cached projection — memo keys
-    * stay shared with the standalone miners because the derivations are
-    * identical). The exact modality is a hash-equality self-join bounded
-    * by [[ExactDupGroupCap]] per duplicate group. */
   /** One-scan per-doc artifact relation for the cross-modality report:
     * every modality's per-doc artifact is a pure MAP-ONLY function of the
     * text — md5 text hash (exact), shingle set (Jaccard), simhash
@@ -634,7 +561,7 @@ object TextOps {
       ColumnBridge.column(e)
     // fan-out (Engine.fanoutParallel): ALL FIVE artifact kernels evaluate
     // in this one projection — on a small-split corpus that was a single
-    // task (the measured serial head of the memo-cold report wall)
+    // task (the measured serial head of the report wall)
     Engine.fanoutParallel(docs)
       .filter(col("text").isNotNull).select(col("doc_id"),
       md5(col("text").cast("binary")).as("th"),
@@ -645,54 +572,47 @@ object TextOps {
       k(graft.functions.WindowHashesExpr(toks, SpanSeedTokens)).as("whs"))
   }
 
+  /** Cross-modality dedup report — corpus-triage view unioning every
+    * pair-level duplicate verdict the library mines: exact text hash,
+    * n-gram Jaccard (≥ `jaccardThreshold`), SimHash (Hamming ≤
+    * `maxHamming`), CDC chunk Jaccard (≥ `cdcThreshold`), and directed
+    * verbatim containment folded onto the unordered pair (a→b and b→a
+    * as separate columns). One row per flagged pair with each
+    * modality's evidence (NULL where that modality did not fire) and a
+    * modality count — the "why is this pair a dup, and does more than
+    * one detector agree" question a dedup pipeline audit asks.
+    * Per-modality thresholds are parameters (library defaults match
+    * each miner's own default, so the report's verdicts never drift
+    * from the standalone queries').
+    *
+    * Scale shape: every modality is a bounded mined PAIR LIST (the
+    * survivor residue, orders of magnitude smaller than the corpus), and
+    * the report itself is full-outer joins of those small relations on
+    * the pair key. Every call mines all four modalities afresh from ONE
+    * shared corpus scan ([[docArtifacts]]: every per-doc artifact is
+    * map-only, so the five modalities' scans collapse to one cached
+    * projection, and each miner's derivation is the standalone miner's).
+    * The exact modality is a hash-equality self-join bounded by
+    * [[ExactDupGroupCap]] per duplicate group. */
   def dedupReport(spark: SparkSession, dir: String,
       jaccardThreshold: Double = DefaultNearDupThreshold,
       maxHamming: Int = 3,
       cdcThreshold: Double = DefaultNearDupThreshold): DataFrame =
-    reportImpl(tbl(spark, dir, "documents"), jaccardThreshold, maxHamming,
-      cdcThreshold, memoCtx = Some((spark, dir)))
+    dedupReportOf(tbl(spark, dir, "documents"), jaccardThreshold,
+      maxHamming, cdcThreshold)
 
   /** [[dedupReport]] over any (doc_id, text) relation — the Of-variant
-    * every other dedup operator has. No miner memoization (the memo
-    * registry keys on the immutable-testdata-dir contract, which an
-    * arbitrary relation has no analogue of); every modality mines fresh
-    * from the shared one-scan artifact relation. */
+    * every other dedup operator has. */
   def dedupReportOf(docs: DataFrame,
       jaccardThreshold: Double = DefaultNearDupThreshold,
       maxHamming: Int = 3,
-      cdcThreshold: Double = DefaultNearDupThreshold): DataFrame =
-    reportImpl(docs, jaccardThreshold, maxHamming, cdcThreshold,
-      memoCtx = None)
-
-  private def reportImpl(docs: DataFrame, jaccardThreshold: Double,
-      maxHamming: Int, cdcThreshold: Double,
-      memoCtx: Option[(SparkSession, String)]): DataFrame = {
+      cdcThreshold: Double = DefaultNearDupThreshold): DataFrame = {
     val lvl = Engine.miningLevel(docs)
-    // ONE corpus scan for all five modalities ([[docArtifacts]]); the
-    // persist is LAZY, so when every miner is already memo-warm the
-    // artifact relation never computes. Unpersisted (non-blocking) after
-    // the last consumer — each miner's output is checkpointed, so no
-    // lineage reaches back here.
+    // ONE corpus scan for all five modalities ([[docArtifacts]]).
+    // Unpersisted (non-blocking) after the last consumer — each miner's
+    // output is checkpointed, so no lineage reaches back here.
     val arts = docArtifacts(docs).persist(lvl)
-    // mined-pair routing: through the per-JVM memo when a (dir) context
-    // exists, fresh otherwise (the Of-variant)
-    def mined(key: String)(build: => DataFrame): DataFrame = memoCtx match {
-      case Some((spark, dir)) => memoizedMiner(spark, dir, key)(build)
-      case None => build
-    }
-    // the exact modality reads the md5 column THROUGH the artifact cache
-    // only when some miner is cold (the cache is being paid for anyway —
-    // materializing a cached relation builds batches for ALL its
-    // columns); with every miner memo-warm it projects the raw scan
-    // instead, so a warm report never runs the artifact kernels
-    val allWarm = memoCtx.exists { case (spark, dir) =>
-      val appId = spark.sparkContext.applicationId
-      Seq(s"jaccard|$jaccardThreshold", s"simhash|$maxHamming",
-        s"cdc|$cdcThreshold", "containment")
-        .forall(k => minedMemo.contains((appId, dir, k)))
-    }
-    // Pre-fill the shared artifact cache BEFORE forking the miners (cold
-    // path only — the all-warm report never computes arts at all): the
+    // Pre-fill the shared artifact cache BEFORE forking the miners: the
     // four concurrent miner jobs otherwise RACE the unfilled cache, and
     // every task that loses a partition's block-write lock sits BLOCKED
     // in a task slot until the winner finishes computing it — with
@@ -701,12 +621,8 @@ object TextOps {
     // stages want slots (r14 per-job attribution: summed task time nearly
     // doubled without this). One parallel fill job, then every miner reads
     // warm.
-    if (!allWarm) arts.count()
-    val hashed =
-      if (allWarm)
-        docs.filter(col("text").isNotNull).select(col("doc_id"),
-          md5(col("text").cast("binary")).as("h"))
-      else arts.select(col("doc_id"), col("th").as("h"))
+    arts.count()
+    val hashed = arts.select(col("doc_id"), col("th").as("h"))
     // group-size guard (the df-cap idiom): only hashes with 2..cap
     // members reach the pair self-join, so a degenerate group can never
     // square; dropped groups are logged, not silently vanished
@@ -716,30 +632,25 @@ object TextOps {
     // concurrently so each miner's driver-side planning overlaps the
     // others' execution and independent stages share the executor pool.
     // Composed wall ≈ the slowest miner, not the sum of four (measured
-    // sf0.1: 11.3 s serial → see SURVEY §7.5). The memo registry is a
-    // TrieMap and the four keys are distinct, so concurrent
-    // getOrElseUpdate builds race-free; a warm memo returns instantly.
-    // Memo keys are SHARED with the standalone miners (values identical
-    // — the artifact path is the same derivation from a shared scan), so
-    // report and standalone mining reuse each other's pair graphs.
+    // sf0.1: 11.3 s serial → see SURVEY §7.5).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fOversized =
       Future(groupSizes.filter(col("g") > ExactDupGroupCap).count())
-    val fJac = Future(mined(s"jaccard|$jaccardThreshold")(
+    val fJac = Future(
       ngramJaccardFromShingles(arts.select(col("doc_id"), col("sh")),
-        jaccardThreshold, lvl)))
-    val fSh = Future(mined(s"simhash|$maxHamming")(
+        jaccardThreshold, lvl))
+    val fSh = Future(
       simhashPairsFromSigs(arts.select(col("doc_id"), col("sig")),
-        maxHamming, lvl)))
-    val fCdc = Future(mined(s"cdc|$cdcThreshold")(
+        maxHamming, lvl))
+    val fCdc = Future(
       cdcChunksFromSets(
         arts.select(col("doc_id"), explode(col("cks")).as("ck")).distinct(),
-        cdcThreshold, lvl)))
-    val fCt = Future(mined("containment")(
+        cdcThreshold, lvl))
+    val fCt = Future(
       containmentFromWindows(
-        arts.select(col("doc_id"), explode(col("whs")).as("h")), lvl)))
+        arts.select(col("doc_id"), explode(col("whs")).as("h")), lvl))
     val oversized = Await.result(fOversized, Duration.Inf)
     if (oversized > 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1028,9 +939,9 @@ object TextOps {
     * detectors agree — the triage composition "deduplicate on
     * corroborated evidence only", and a second public producer for
     * [[dedupClustersFromPairs]]'s contract (the first is the jaccard
-    * miner via [[dedupClusters]]). Mining goes through the per-JVM memo,
-    * so a pipeline that already ran the report (or any standalone miner)
-    * pays only the tiny pair-set filter + the component resolution. */
+    * miner via [[dedupClusters]]). Every call mines the report afresh; a
+    * caller that already holds a report passes it, filtered, to
+    * [[dedupClustersFromPairs]] and pays only the component resolution. */
   def dedupClustersFromReport(spark: SparkSession, dir: String,
       minModalities: Long = ReportClusterMinModalities): DataFrame =
     dedupClustersFromPairs(
@@ -1433,22 +1344,15 @@ object TextOps {
       containment: Boolean = false): DataFrame =
     dedupIncrementalAgainst(fresh, seenIndexOf(seen), threshold, containment)
 
-  /** The frozen seen-corpus's three ingest-time artifacts — exact-hash
-    * list, MinHash band index, shingle sets — as explicit relations. In
-    * production these are computed ONCE when a document enters the corpus
-    * and stored; every later increment (batch or micro-batch) joins
-    * against the stored artifacts instead of re-deriving them from text.
-    * `persist()`/`unpersist()` make that reuse real in-process: the
-    * streaming twin pins all three across micro-batches. Lifecycle is
-    * caller-owned (same contract as [[dedupIncrementalOf]]'s relations). */
+  /** The frozen seen-corpus's four ingest-time artifacts — exact-hash
+    * list, MinHash band index, shingle sets, containment span sets — as
+    * explicit relations. In production these are computed ONCE when a
+    * document enters the corpus and stored ([[writeSeenIndex]]); every
+    * later increment joins against the stored artifacts instead of
+    * re-deriving them from text. Lifecycle is caller-owned (same contract
+    * as [[dedupIncrementalOf]]'s relations). */
   final case class SeenIndex(hashes: DataFrame, buckets: DataFrame,
-      shingleSets: DataFrame, spanSets: DataFrame) {
-    private def all = Seq(hashes, buckets, shingleSets, spanSets)
-    def persist(): SeenIndex = {
-      all.foreach(_.persist(StorageLevel.MEMORY_AND_DISK)); this
-    }
-    def unpersist(): Unit = all.foreach(_.unpersist(true))
-  }
+      shingleSets: DataFrame, spanSets: DataFrame)
 
   /** Build a [[SeenIndex]] from a (doc_id, text) corpus relation.
     * `spanSets` is the containment modality's frozen artifact: the same
@@ -1491,7 +1395,7 @@ object TextOps {
     * index — the at-scale default for [[dedupIncrementalAgainst]]:
     * nothing pinned, artifacts re-scanned per increment (bucket- and
     * candidate-bounded joins read a fraction of each scan). Callers
-    * with memory to spare can still `.persist()` the returned index —
+    * with memory to spare can still persist the returned artifacts —
     * the lifecycle contract is unchanged (caller-owned). */
   def readSeenIndex(spark: SparkSession, dir: String): SeenIndex = SeenIndex(
     hashes = spark.read.parquet(s"$dir/hashes.parquet"),
@@ -2381,26 +2285,38 @@ object TextOps {
           lvl)
       } else {
         val expandParts = cosineExpandParts(sumDf2, cores)
-        // The shuffle-partition raise is scoped to THIS query's execution
-        // (set → run → restore): a session-wide raise was measured in
-        // round 7 to inflate every small shuffle in the run (9.4 s vs
-        // 1.5 s on this very query at sf0.1), while per-query AQE
-        // coalescing still shrinks any small stage back to advisory size.
+        val salted = maxDf > CosineBlockSize
+        // The salted (doc_a, doc_b) pair aggregation sits behind an
+        // Exchange whose task count is spark.sql.shuffle.partitions, so
+        // it is raised for THIS query's execution only (set → run →
+        // restore): a session-wide raise was measured in round 7 to
+        // inflate every small shuffle in the run (9.4 s vs 1.5 s on this
+        // very query at sf0.1). A `repartition` before the aggregation
+        // would drop its partial (map-side) aggregation, and the
+        // DataFrame API has no per-aggregation partition count. The plain
+        // path needs no raise: its pair aggregation runs on the doc_id
+        // spread of the expansion ([[expansionInput]], `expandParts`
+        // tasks) with no Exchange in between, so a raise there would only
+        // size the norms aggregation, which AQE coalesces anyway.
         val joinParts = math.min(math.max(
           (sumDf2 / CosineJoinRowsPerTask).toInt + 1, cores), 4096)
-        val salted = maxDf > CosineBlockSize
         recordCosinePlan(
           s"""{"path":"${if (salted) "salted" else "plain"}",""" +
             s""""sum_df2":$sumDf2,"max_df":$maxDf,"vocab":$vocabN,""" +
             s""""idx_rows":$idxRows,$sized"expand_parts":$expandParts,""" +
-            s""""join_parts":$joinParts,"cores":$cores}""")
-        val key = "spark.sql.shuffle.partitions"
-        val prev = spark.conf.get(key)
-        try {
-          spark.conf.set(key, joinParts.toString)
-          Engine.eagerCheckpoint(
-            cosinePairsFrom(w, minShared, salted, expandParts), lvl)
-        } finally spark.conf.set(key, prev)
+            (if (salted) s""""join_parts":$joinParts,""" else "") +
+            s""""cores":$cores}""")
+        def pairs() = Engine.eagerCheckpoint(
+          cosinePairsFrom(w, minShared, salted, expandParts), lvl)
+        if (!salted) pairs()
+        else {
+          val key = "spark.sql.shuffle.partitions"
+          val prev = spark.conf.get(key)
+          try {
+            spark.conf.set(key, joinParts.toString)
+            pairs()
+          } finally spark.conf.set(key, prev)
+        }
       }
     } finally w.unpersist(true)
   }

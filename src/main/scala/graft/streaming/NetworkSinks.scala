@@ -110,9 +110,9 @@ object NetworkSinks {
     * reference topology (Redshift-analogue wide tables AND socket AND
     * alert HTTP) in one binding. Each channel runs TWO actions on its
     * batch (durable write + network emit), so the batch is persisted
-    * first — without it foreachBatch re-executes the micro-batch per
-    * action, which for the alert channel would replay the stateful
-    * blacklist operator's work twice per batch. */
+    * first — without it the second action re-executes the batch's plan;
+    * for the alert channel that re-reads the blacklist step's cogroup
+    * shuffle output ([[Alerts.step]]) and recomputes the transitions. */
   class LiveSinks(baseDir: String, socketHost: String, socketPort: Int,
       alertUrl: String) extends StreamPipeline.ParquetSinks(baseDir) {
     override def writeEvents(df: DataFrame, batchId: Long): Unit = {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dumps what declared queries EXECUTED — the optimization-round
   * plan-audit artifact (plans/rNN/<query>_<suffix>.txt). Each query runs
-  * memo-cold under [[capture]]; its file holds the final (post-AQE)
+  * with nothing cached under [[capture]]; its file holds the final (post-AQE)
   * executed plan of every SQL execution the query ran: the stats probes,
   * the persisted relations' fills, the eager checkpoint jobs and the
   * result. `<query>_<suffix>.jobs.txt` holds its per-job table (wall,
@@ -149,8 +149,7 @@ object PlanDump {
       .filter { case (name, _) => only.forall(_.contains(name)) }
     var failed = 0
     selected.foreach { case (name, fn) =>
-      // memo-cold, as every bench sample starts
-      graft.operators.TextOps.clearMinedPairs()
+      // nothing cached, as every bench sample starts
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       try {

@@ -90,4 +90,10 @@ class EngineSpec extends SparkSpec {
       "pin the shipped op's executed plans (PlanDump.capture) instead of " +
         "keeping an un-materialized twin of it")
   }
+
+  test("no JVM-global registries: no TrieMap in src/main/scala") {
+    assert(mainSourcesMatching("""TrieMap""".r) === Seq.empty,
+      "return the value to the caller instead of keeping it in a " +
+        "process-wide map: it outlives the data it was built from")
+  }
 }

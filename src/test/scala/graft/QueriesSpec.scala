@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Multimodal, SimilarityOps, TextOps}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Query-surface checks on sf0.001: every SparkEntry entry returns rows,
@@ -58,7 +59,7 @@ class QueriesSpec extends SparkSpec {
     // path and make this comparison vacuous) must produce the identical
     // labeling; reps.nonEmpty above guarantees the comparison has teeth
     val distributed = TextOps
-      .dedupClustersFromPairs(TextOps.nearDupPairs(spark, dir), -1L)
+      .dedupClustersFromPairs(TextOps.dedupNgramJaccard(spark, dir), -1L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(distributed === reps)
   }
@@ -554,7 +555,6 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("dedup report: Of-variant over the raw relation equals the dir-based op") {
-    TextOps.clearMinedPairs()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     val viaDir = rows(TextOps.dedupReport(spark, dir))
@@ -562,19 +562,31 @@ class QueriesSpec extends SparkSpec {
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))))
     assert(viaDir.nonEmpty && viaDir === viaOf)
-    TextOps.clearMinedPairs()
   }
 
-  test("dedup report: memo-warm rerun equals the cold run (and skips the artifact scan)") {
-    TextOps.clearMinedPairs()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    val cold = rows(TextOps.dedupReport(spark, dir))
-    // the cold run warmed all four miner memos; the rerun takes the
-    // raw-scan exact path (allWarm) and must produce identical rows
-    val warm = rows(TextOps.dedupReport(spark, dir))
-    assert(cold.nonEmpty && cold === warm)
-    TextOps.clearMinedPairs()
+  test("dedup ngram jaccard: a rewritten documents.parquet is mined afresh, not served stale") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stale-docs")
+    try {
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val out = s"$tmp/documents.parquet"
+      docs.write.parquet(out)
+      def pairs() =
+        SparkEntry.queries("dedup_ngram_jaccard")(spark, tmp.toString)
+          .select("doc_a", "doc_b").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val before = pairs()
+      // an exact copy of the longest document under a fresh id
+      val src = docs.orderBy(length(col("text")).desc, col("doc_id")).limit(1)
+      val srcId = src.select("doc_id").head().getLong(0)
+      val newId = docs.agg(max("doc_id")).head().getLong(0) + 1
+      docs.unionByName(src.withColumn("doc_id", lit(newId)))
+        .write.mode("overwrite").parquet(out)
+      val after = pairs()
+      assert(!before.contains((srcId, newId)))
+      assert(after.contains((srcId, newId)),
+        s"the duplicate ($srcId, $newId) is missing: the second run " +
+          s"returned ${after.size} pairs, the first ${before.size}")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
   }
 
   test("simhash signatures: native kernel ≡ exploded-groupBy twin on real documents (sf0.001)") {
@@ -696,6 +708,42 @@ class QueriesSpec extends SparkSpec {
     info(s"text_cosine_pairs ran ${tasks.get} tasks")
     assert(tasks.get > 0, "no task of the guarded jobs was seen")
     assert(tasks.get < 100, s"text_cosine_pairs ran ${tasks.get} tasks")
+  }
+
+  test("cosine pairs: every job of the plain path runs under the caller's shuffle.partitions") {
+    // sf0.001 takes the plain path (GoldenPlanSpec's
+    // text_cosine_pairs_plain pins it); the conf a SQL execution's job
+    // ran under is in its start properties (SQLExecution propagates the
+    // session's SQL confs as local properties)
+    val key = "spark.sql.shuffle.partitions"
+    val s = spark.newSession()
+    s.conf.set(key, "7")
+    val sc = s.sparkContext
+    val group = s"cosine-session-conf-${System.nanoTime}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .filter(_.getProperty(SQLExecution.EXECUTION_ID_KEY) != null)
+          .foreach(p => seen.add(String.valueOf(p.getProperty(key))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "cosine session-conf guard")
+      try TextOps.textCosinePairs(s, dir)
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.graft.ListenerBusDrain.drain(sc)
+      }
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val confs = seen.asScala.toSeq
+    assert(confs.nonEmpty, "no SQL job of the guarded run was seen")
+    assert(confs.forall(_ == "7"),
+      s"$key per job: ${confs.mkString(", ")} (the session has 7)")
+    assert(s.conf.get(key) === "7")
   }
 
   test("mm perceptual near-dup: identical payloads pair at distance 0, dissimilar profiles verify out") {
