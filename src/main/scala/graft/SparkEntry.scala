@@ -65,7 +65,7 @@ object SparkEntry {
     "rollup_agg" -> ((s, d) => ExtraOps.rollupAgg(s, d)),
     "semi_join" -> ((s, d) => ExtraOps.semiJoin(s, d)),
     "asof_join" -> ((s, d) => ExtraOps.asofErrorSignup(s, d)),
-    "asof_join_native" -> ((s, d) => ExtraOps.asofErrorSignupNative(s, d)),
+    "asof_join_native" -> ((s, d) => ExtraOps.asofErrorSignup(s, d)),
     "range_join" -> ((s, d) => ExtraOps.rangeJoinEvents(s, d)),
     "sessionize" -> ((s, d) => ExtraOps.sessionize(s, d)),
     "sql_q6" -> ((s, d) => ExtraOps.sqlQ6(s, d)),
@@ -237,8 +237,8 @@ object SparkEntry {
   private val shinglesSql =
     "list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)])"
 
-  /** The as-of oracle — shared by the compositional (`asof_join`) and
-    * native-operator (`asof_join_native`) twins. */
+  /** The as-of oracle — shared by the two declared names of the one
+    * as-of query (`asof_join`, `asof_join_native`). */
   private val asofOracleSql: String =
     """SELECT e.event_id, e.user_id, e.ts, s.ts AS signup_ts, """ +
       """epoch_us(e.ts) - epoch_us(s.ts) AS gap_us """ +
@@ -826,9 +826,9 @@ object SparkEntry {
         """SELECT o_custkey FROM orders """ +
         """WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00' """ +
         """AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00')"""),
+    // both names run the custom as-of SparkPlan, which must reproduce
+    // DuckDB's ASOF JOIN bit-for-bit
     "asof_join" -> asofOracleSql,
-    // the native-operator twin is held to the SAME oracle: the custom
-    // SparkPlan must reproduce DuckDB's ASOF JOIN bit-for-bit
     "asof_join_native" -> asofOracleSql,
     "range_join" ->
       ("""SELECT a.user_id, a.event_id AS event_a, b.event_id AS event_b, """ +

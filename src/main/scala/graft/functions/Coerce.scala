@@ -40,56 +40,13 @@ object Coerce {
     * (mapper.js:233-239).
     *
     * Evaluated by the native CoerceExpr (regex-free codegen kernel),
-    * spec-pinned value-identical to [[coerceScala]]. */
+    * spec-pinned value-identical to the specs' pure-Scala reference
+    * (`References.coerceScala`). */
   def coerce(lex: Column, jstype: Column, ptype: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(CoerceExpr(
       ColumnBridge.expression(lex),
       ColumnBridge.expression(jstype),
       ColumnBridge.expression(ptype)))
-  }
-
-  /** Pure-Scala reference of [[coerce]] for the specs' cross-validation
-    * (CoerceSpec). Main code coerces only through [[coerce]]; an EngineSpec
-    * guard fails if this is called anywhere else in `src/main/scala`. */
-  def coerceScala(lex: String, jstype: String, ptype: String): (String, Boolean) = {
-    if (ptype == null) return (null, true)
-    ptype.toLowerCase match {
-      case "varchar" | "string" => (lex, false)
-      case "integer" | "int" =>
-        JsValues.jsParseInt(lex) match {
-          case Some(l) => (l.toString, false)
-          case None => (null, true)
-        }
-      case "float" | "double" | "double precision" =>
-        val parsed = jstype match {
-          case "number" => Some(lex.toDouble)
-          case "boolean" => Some(if (lex == "true") 1.0 else 0.0)
-          case "null" => Some(0.0) // JS Number(null) = 0
-          case _ => JsValues.jsNumber(lex)
-        }
-        parsed match {
-          case Some(d) => (JsValues.jsNumberString(d), false)
-          case None => (null, true)
-        }
-      case "bool" | "boolean" =>
-        val b: Option[Boolean] = jstype match {
-          case "boolean" => Some(lex == "true")
-          case "number" =>
-            val d = lex.toDouble
-            if (d == 1.0) Some(true) else if (d == 0.0) Some(false) else None
-          case _ =>
-            if (lex == "1" || lex.toUpperCase == "TRUE" ||
-              JsValues.jsNumber(lex).contains(1.0)) Some(true)
-            else if (lex == "0" || lex.toUpperCase == "FALSE" ||
-              JsValues.jsNumber(lex).contains(0.0)) Some(false)
-            else None
-        }
-        b match {
-          case Some(v) => (v.toString, false)
-          case None => (null, true)
-        }
-      case _ => (null, true)
-    }
   }
 }

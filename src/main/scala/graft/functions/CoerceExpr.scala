@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (lex, jstype, ptype) → struct<value string, error boolean>, with the
   * exact JS truth table of the reference (app/mapper.js:192-243). The
   * kernel is regex-free (manual scans, no regexp evaluation per value)
-  * and value-identical to the `Coerce.coerceScala` reference — pinned by
+  * and value-identical to the specs' `References.coerceScala` — pinned by
   * CoerceSpec's truth table and property spec.
   *
   * Never null-out: a null/missing declared type is a coercion ERROR row
@@ -59,7 +59,8 @@ case class CoerceExpr(lex: Expression, jstype: Expression, ptype: Expression)
 }
 
 /** Static kernel (codegen-callable). Regex-free reimplementation of the JS
-  * semantics; must stay value-identical to Coerce.coerceScala. */
+  * semantics; must stay value-identical to the specs'
+  * `References.coerceScala`. */
 object CoerceKernel {
 
   private val ERROR = InternalRow(null, true)
@@ -74,7 +75,7 @@ object CoerceKernel {
         InternalRow(if (l == null) null else UTF8String.fromString(l), false)
       case "integer" | "int" =>
         if (l == null) ERROR
-        else parseIntJs(l) match {
+        else JsValues.jsParseInt(l) match {
           case Some(v) => InternalRow(UTF8String.fromString(v.toString), false)
           case None => ERROR
         }
@@ -119,12 +120,8 @@ object CoerceKernel {
     }
   }
 
-  /** JS parseInt, regex-free (mirror of JsValues.jsParseInt). */
-  def parseIntJs(s0: String): Option[Long] = JsValues.jsParseInt(s0)
-
-  /** JS Number(string), regex-free scan (mirror of JsValues.jsNumber but
-    * without String.matches): trim; "" → 0; Infinity forms; hex ints;
-    * decimal/exponent floats; else NaN. */
+  /** JS Number(string), regex-free scan: trim; "" → 0; Infinity forms;
+    * hex ints; decimal/exponent floats; else NaN. */
   def numberJs(s0: String): Option[Double] = {
     val s = s0.trim
     if (s.isEmpty) return Some(0.0)

@@ -132,20 +132,4 @@ object JsValues {
       else Some(sign * java.lang.Long.parseLong(if (digits.forall(_ == '0')) "0" else digits))
     }
   }
-
-  /** JS `Number(s)` for a string: trim; "" → 0; decimal/exponent floats;
-    * "Infinity"/"-Infinity"; hex integers; else NaN (None).
-    */
-  def jsNumber(s0: String): Option[Double] = {
-    val s = s0.trim
-    if (s.isEmpty) Some(0.0)
-    else if (s == "Infinity" || s == "+Infinity") Some(Double.PositiveInfinity)
-    else if (s == "-Infinity") Some(Double.NegativeInfinity)
-    else if (s.matches("0[xX][0-9a-fA-F]+")) {
-      // hex is only valid UNSIGNED in JS: Number('-0x10') is NaN
-      Some(BigInt(s.drop(2), 16).toDouble)
-    } else if (s.matches("[+-]?(\\d+(\\.\\d*)?|\\.\\d+)([eE][+-]?\\d+)?")) {
-      Some(java.lang.Double.parseDouble(s))
-    } else None
-  }
 }

@@ -97,10 +97,10 @@ object Kernels {
     * by '_' (the `Long.toString`/CAST-to-string rendering). Key-identical
     * to the relational formulation it replaces (explode → doc-partitioned
     * running-sum window → regroup — a full exchange + sort of the corpus
-    * token stream) and to the HOF fold twin (TextOps.cdcChunkKeysLambda),
-    * which pins value identity in QueriesSpec; the DuckDB oracle
-    * recomputes the same keys in SQL. Docs shorter than the window have
-    * no chunks (empty array). */
+    * token stream) and to the HOF fold reference the specs keep
+    * (`References.cdcChunkSetsLambda`, pinned in QueriesSpec); the DuckDB
+    * oracle recomputes the same keys in SQL. Docs shorter than the window
+    * have no chunks (empty array). */
   def cdcChunkKeys(words: ArrayData, wk: Int, mod: Long): org.apache.spark.sql.catalyst.util.GenericArrayData = {
     val n = words.numElements()
     if (n < wk) return new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[Any](0))
@@ -272,8 +272,9 @@ object Kernels {
 
 /** shingles(text) → array<string>: distinct 3-word shingles in one pass
   * (vs split + transform + slice + concat_ws + array_distinct — five
-  * interpreted HOF evaluations). Set-identical to TextOps.shinglesLambda
-  * and the oracle's list comprehension; first-occurrence order preserved. */
+  * interpreted HOF evaluations). Set-identical to the specs' HOF-chain
+  * reference (`References.shinglesLambda`) and the oracle's list
+  * comprehension; first-occurrence order preserved. */
 case class ShinglesExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullSafeEval(v: Any): Any =
@@ -539,7 +540,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       NativeFunctions.cdcChunkKeysFromSql _))
     // whole-operator extension: plans graft.plans.AsOfJoinPlan (the native
     // as-of join) — sessions without this extension get the strategy via
-    // the public experimental hook in AsOfJoin.asofNative
+    // the public experimental hook in AsOfJoin.asof
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOf)
   }

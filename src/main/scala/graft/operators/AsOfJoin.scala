@@ -1,28 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** As-of (temporal) join: for each left row, attach the most recent right
   * row with the same key and right.time <= left.time.
   *
-  * Spark has no native as-of join; rather than a custom SparkPlan, this
-  * composes built-ins the way a sort-merge as-of executes anyway:
-  * union-tag both sides, one shuffle by key, sort by (time, side) within
-  * key, and carry the latest right payload forward with last(ignoreNulls)
-  * over the running window. One shuffle + one sort — the same cost profile
-  * as a dedicated as-of operator, with Catalyst handling spill/codegen.
+  * Executed by the custom Catalyst operator (`graft.plans.AsOfJoinPlan` →
+  * `AsOfJoinStrategy` → `AsOfJoinExec`): hash-clustered children, a
+  * (key, time) sort, and one O(|L|+|R|) merge pass per partition with a
+  * single buffered candidate per key — no union, no window state.
   *
-  * Ties (right.time == left.time) match, mirroring ASOF JOIN >= semantics
-  * (right side sorts before left at equal timestamps).
-  *
-  * Null corner: window partitioning groups NULL keys into one partition
-  * and sorts NULL times first, so null-keyed (or null-timed) left rows
-  * can pick up null-keyed/null-timed right payloads here — SQL ASOF (and
-  * [[asofNative]]) never match null keys or null times. Callers with
-  * nullable keys/times who need SQL semantics should filter or use the
-  * native operator.
+  * Ties (right.time == left.time) match, mirroring ASOF JOIN >= semantics;
+  * null keys and null times never match (SQL ASOF semantics).
   */
 object AsOfJoin {
 
@@ -33,51 +23,12 @@ object AsOfJoin {
     * @param rightTime  event-time column on right
     * @param rightCols  right columns to carry (renamed as given)
     * @param inner      drop left rows with no prior right match
-    */
-  def asof(left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String,
-      rightCols: Map[String, String], inner: Boolean = true): DataFrame = {
-    val leftCols = left.columns
-    val l = left
-      .withColumn("_t", col(leftTime))
-      .withColumn("_side", lit(1))
-      .select(Seq(col(key).as("_k"), col("_t"), col("_side")) ++
-        leftCols.filterNot(_ == key).map(c => col(c)) ++
-        rightCols.values.toSeq.map(c => lit(null).cast(
-          right.schema(rightCols.find(_._2 == c).get._1).dataType).as(c)): _*)
-    val r = right
-      .withColumn("_t", col(rightTime))
-      .withColumn("_side", lit(0))
-      .select(Seq(col(key).as("_k"), col("_t"), col("_side")) ++
-        leftCols.filterNot(_ == key).map(c =>
-          lit(null).cast(left.schema(c).dataType).as(c)) ++
-        rightCols.map { case (from, to) => col(from).as(to) }.toSeq: _*)
-    val unioned = l.unionByName(r)
-    val w = Window.partitionBy(col("_k"))
-      .orderBy(col("_t"), col("_side"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val carried = rightCols.values.foldLeft(unioned) { (df, c) =>
-      df.withColumn(c, last(col(c), ignoreNulls = true).over(w))
-    }
-    val res = carried.filter(col("_side") === 1)
-      .withColumnRenamed("_k", key)
-      .drop("_t", "_side")
-    if (inner) res.filter(rightCols.values.map(col(_).isNotNull).reduce(_ && _))
-    else res
-  }
-
-  /** The NATIVE as-of join — same contract as [[asof]], executed by the
-    * custom Catalyst operator (`graft.plans.AsOfJoinPlan` →
-    * `AsOfJoinStrategy` → `AsOfJoinExec`): hash-clustered children,
-    * (key, time) sort, one O(|L|+|R|) merge pass per partition with a
-    * single buffered candidate per key — no union, no window state. Spec
-    * + oracle pin it result-identical to the compositional twin.
     *
     * The strategy self-registers on the session's public
     * `experimental.extraStrategies` hook (idempotent), so plain sessions
     * work; sessions configured with `spark.sql.extensions=
     * graft.functions.GraftExtensions` get it injected at build time. */
-  def asofNative(left: DataFrame, right: DataFrame, key: String,
+  def asof(left: DataFrame, right: DataFrame, key: String,
       leftTime: String, rightTime: String,
       rightCols: Map[String, String], inner: Boolean = true): DataFrame = {
     import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, PushFilterThroughAsOf}
@@ -103,7 +54,7 @@ object AsOfJoin {
       val rt = right.schema(r).dataType
       require(org.apache.spark.sql.types.DataType.equalsStructurally(
           lt, rt, ignoreNullability = true),
-        s"asofNative $what types differ: left $l is $lt, right $r is $rt")
+        s"asof $what types differ: left $l is $lt, right $r is $rt")
     }
     requireSameType("key", key, key)
     requireSameType("time", leftTime, rightTime)
@@ -112,9 +63,9 @@ object AsOfJoin {
     // target) would silently bind the wrong attribute — fail loudly instead
     val targets = rightCols.values.toSeq
     require(targets.distinct.size == targets.size,
-      s"asofNative rightCols target names must be distinct: $targets")
+      s"asof rightCols target names must be distinct: $targets")
     require(!targets.exists(Set("_r_k", "_r_t")),
-      s"asofNative rightCols targets may not use reserved names _r_k/_r_t: $targets")
+      s"asof rightCols targets may not use reserved names _r_k/_r_t: $targets")
     // fresh-alias the right side so the node's output attribute ids are
     // disjoint from the left's even on a self-as-of (both frames derived
     // from one scan — the exact shape of the reference's usage)

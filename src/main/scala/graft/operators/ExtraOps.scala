@@ -31,36 +31,22 @@ object ExtraOps {
       .select("c_custkey", "c_name")
   }
 
-  /** The shared error→latest-signup as-of query, parameterized by the
-    * join implementation so the compositional and native twins cannot
-    * drift (both are pinned to the same DuckDB ASOF oracle). */
-  private def asofErrorSignupWith(spark: SparkSession, dir: String)(
-      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+  /** As-of join: each error event matched to the user's most recent
+    * signup at-or-before it; gap in exact microseconds. Executed by the
+    * custom as-of operator ([[AsOfJoin.asof]]: logical node + strategy +
+    * sort-merge exec) and oracle-checked against DuckDB's ASOF JOIN, so
+    * the custom SparkPlan is gated end-to-end. */
+  def asofErrorSignup(spark: SparkSession, dir: String): DataFrame = {
     val ev = tbl(spark, dir, "events")
     val errors = ev.filter(col("event_type") === "error")
       .select(col("user_id"), col("event_id"), col("ts"))
     val signups = ev.filter(col("event_type") === "signup")
       .select(col("user_id"), col("ts").as("signup_ts0"))
-    join(errors, signups)
+    AsOfJoin.asof(errors, signups, key = "user_id", leftTime = "ts",
+        rightTime = "signup_ts0", rightCols = Map("signup_ts0" -> "signup_ts"))
       .select(col("event_id"), col("user_id"), col("ts"), col("signup_ts"),
         (unix_micros(col("ts")) - unix_micros(col("signup_ts"))).as("gap_us"))
   }
-
-  /** As-of join: each error event matched to the user's most recent
-    * signup at-or-before it; gap in exact microseconds. */
-  def asofErrorSignup(spark: SparkSession, dir: String): DataFrame =
-    asofErrorSignupWith(spark, dir)(AsOfJoin.asof(_, _, key = "user_id",
-      leftTime = "ts", rightTime = "signup_ts0",
-      rightCols = Map("signup_ts0" -> "signup_ts")))
-
-  /** The same as-of query executed by the NATIVE operator
-    * ([[AsOfJoin.asofNative]]: custom logical node + strategy + sort-merge
-    * exec) — oracle-checked against the identical DuckDB ASOF JOIN, so
-    * the custom SparkPlan is gated end-to-end, not just spec-compared. */
-  def asofErrorSignupNative(spark: SparkSession, dir: String): DataFrame =
-    asofErrorSignupWith(spark, dir)(AsOfJoin.asofNative(_, _, key = "user_id",
-      leftTime = "ts", rightTime = "signup_ts0",
-      rightCols = Map("signup_ts0" -> "signup_ts")))
 
   /** Range (interval) self-join: ordered event pairs of the same user
     * within 60 seconds. Scalable shape: bucket time into 60 s cells, join

@@ -26,11 +26,6 @@ object SimilarityOps {
   def dot(a: Column, b: Column): Column =
     graft.functions.NativeFunctions.dot_ff(a, b)
 
-  /** Lambda-expression twin of [[dot]] — kept for kernel cross-validation. */
-  def dotLambda(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))

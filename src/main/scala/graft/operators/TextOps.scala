@@ -31,38 +31,21 @@ object TextOps {
   def tokens(text: Column): Column = split(text, " ")
 
   /** 3-word shingles (distinct), first-occurrence order — native one-pass
-    * kernel (ShinglesExpr); lambda twin below pins set identity. */
+    * kernel (ShinglesExpr); the specs' HOF-chain reference
+    * (`References.shinglesLambda`) pins set identity. */
   def shingles(text: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(graft.functions.ShinglesExpr(
       ColumnBridge.expression(text)))
   }
 
-  /** HOF-chain formulation of [[shingles]] (built-ins only). */
-  def shinglesLambda(text: Column): Column = {
-    val w = tokens(text)
-    array_distinct(
-      when(size(w) >= 3,
-        transform(sequence(lit(1), size(w) - 2),
-          i => concat_ws(" ", slice(w, i, lit(3)))))
-        .otherwise(array().cast("array<string>")))
-  }
-
   /** Deterministic integer hash of a string, reproducible in DuckDB SQL:
     * 7*len + 31*ascii(first) + 17*ascii(last) + Σ ascii(chars).
     * Weak by design — it is the shared hash base for minhash/simhash
     * signatures that the oracle recomputes exactly. Evaluated by the
-    * native codegen kernel (WeakHashExpr); the expression-level twin below
-    * pins value identity in specs. */
+    * native codegen kernel (WeakHashExpr); the specs' expression-level
+    * reference (`References.weakHashLambda`) pins value identity. */
   def weakHash(s: Column): Column = graft.functions.NativeFunctions.weak_hash(s)
-
-  /** Lambda-expression twin of [[weakHash]] (interpreted HOFs) — kept for
-    * cross-validation of the native kernel. */
-  def weakHashLambda(s: Column): Column =
-    lit(7L) * length(s) +
-      lit(31L) * ascii(s) +
-      lit(17L) * ascii(substring(s, -1, 1)) +
-      aggregate(split(s, ""), lit(0L), (acc, c) => acc + ascii(c))
 
   // -------------------------------------------------------------------------
   // Dedup family
@@ -150,20 +133,6 @@ object TextOps {
     Engine.fanoutParallel(docs)
       .select(col("doc_id"), posexplode(whs).as(Seq("p", "h")))
       .select(col("doc_id"), (col("p") + 1).cast("long").as("pos"), col("h"))
-  }
-
-  /** Built-ins twin of [[spanWindows]] (interpreted md5 + concat_ws +
-    * slice lambda per window) — kept for cross-validation of the
-    * one-pass [[graft.functions.WindowHashesExpr]] kernel. */
-  private[graft] def spanWindowsLambda(docs: DataFrame): DataFrame = {
-    val k = SpanSeedTokens
-    docs.select(col("doc_id"), tokens(col("text")).as("w"))
-      .filter(size(col("w")) >= k)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(col("w")) - k), i =>
-          struct((i + 1).cast("long").as("pos"),
-            md5(concat_ws(" ", slice(col("w"), i + 1, lit(k)))).as("h")))).as("ph"))
-      .select(col("doc_id"), col("ph.pos").as("pos"), col("ph.h").as("h"))
   }
 
   /** Position-keyed seed-window inverted index, df-capped. */
@@ -260,8 +229,9 @@ object TextOps {
     * and on the round-10 contention harness its sort/spill I/O made CDC
     * the family's worst amplifier (7.4× under a memory hog). Chunk keys
     * are byte-identical to the windowed formulation (pinned by
-    * QueriesSpec's insertion re-key case, the kernel ≡ HOF-fold twin
-    * case, and the DuckDB oracle's hash match). */
+    * QueriesSpec's insertion re-key case, its kernel ≡ HOF-fold
+    * reference case (`References.cdcChunkSetsLambda`), and the DuckDB
+    * oracle's hash match). */
   private[graft] def cdcChunkSets(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val keys = ColumnBridge.column(graft.functions.CdcChunkKeysExpr(
@@ -270,45 +240,6 @@ object TextOps {
     // fan-out before the kernel+explode (Engine.fanoutParallel)
     Engine.fanoutParallel(docs)
       .select(col("doc_id"), explode(keys).as("ck")).distinct()
-  }
-
-  /** HOF-fold twin of the [[cdcChunkSets]] kernel (built-ins only) —
-    * kept for cross-validation: the fold state is (cur = the growing
-    * "_"-joined hash string of the open chunk, out = the closed chunks'
-    * md5 keys); a boundary hash closes the open chunk (if any) and opens
-    * a new one WITH itself as first member — exactly the
-    * running-sum-of-cuts chunk assignment, doc-locally. Correct but
-    * interpreted per element (measured 2.4× the query wall at sf0.1),
-    * hence the kernel. */
-  private[graft] def cdcChunkSetsLambda(docs: DataFrame): DataFrame = {
-    val wk = CdcWindowTokens
-    val hvs = docs.select(col("doc_id"), tokens(col("text")).as("w"))
-      .filter(size(col("w")) >= wk)
-      .select(col("doc_id"),
-        transform(sequence(lit(1), size(col("w")) - (wk - 1)), i =>
-          weakHash(concat_ws(" ", slice(col("w"), i, lit(wk))))).as("hv"))
-    val folded = hvs.select(col("doc_id"),
-      aggregate(
-        col("hv"),
-        struct(lit("").as("cur"), array().cast("array<string>").as("out")),
-        (acc, h) => {
-          val isCut = pmod(h, lit(CdcBoundaryMod)) === 0
-          val hs = h.cast("string")
-          val cur = acc.getField("cur")
-          val out = acc.getField("out")
-          struct(
-            when(isCut, hs)
-              .otherwise(when(cur === "", hs)
-                .otherwise(concat(cur, lit("_"), hs))).as("cur"),
-            when(isCut && cur =!= "", array_append(out, cur))
-              .otherwise(out).as("out"))
-        },
-        acc => when(acc.getField("cur") =!= "",
-          array_append(acc.getField("out"), acc.getField("cur")))
-          .otherwise(acc.getField("out"))).as("chunks"))
-    folded.select(col("doc_id"), explode(col("chunks")).as("cs"))
-      .select(col("doc_id"), md5(col("cs").cast("binary")).as("ck"))
-      .distinct()
   }
 
   /** The CDC pair dataflow over a prepared distinct (doc_id, ck)
@@ -1073,11 +1004,11 @@ object TextOps {
   /** [[simhashSig]] over any (doc_id, text) relation — MAP-ONLY: the
     * signature is a pure per-doc function, so it computes in one codegen'd
     * kernel pass over the token array ([[graft.functions.SimhashSigExpr]]).
-    * The relational formulation (kept below as the cross-validation twin)
-    * exploded the token stream and paid `nBits` interpreted conditional
-    * sums per token row plus a per-doc aggregation — machinery a per-row
-    * expression never needs. Null-text docs drop (the twin's explode
-    * dropped them). */
+    * The relational formulation (now the specs' cross-validation
+    * reference, `References.simhashSigOfLambda`) exploded the token
+    * stream and paid `nBits` interpreted conditional sums per token row
+    * plus a per-doc aggregation — machinery a per-row expression never
+    * needs. Null-text docs drop (the reference's explode drops them). */
   def simhashSigOf(docs: DataFrame, nBits: Int = SimhashBits): DataFrame = {
     require(nBits <= 60, s"signature must stay positive in int64 (got $nBits)")
     import org.apache.spark.sql.graft.ColumnBridge
@@ -1085,27 +1016,6 @@ object TextOps {
       .select(col("doc_id"),
         ColumnBridge.column(graft.functions.SimhashSigExpr(
           ColumnBridge.expression(tokens(col("text"))), nBits)).as("sig"))
-  }
-
-  /** Exploded groupBy twin of [[simhashSigOf]] (built-ins only) — kept
-    * for cross-validation of the kernel: same weakHash, same
-    * (a·hv + b) mod M sign projection, same duplicate-token counting. */
-  private[graft] def simhashSigOfLambda(docs: DataFrame,
-      nBits: Int = SimhashBits): DataFrame = {
-    require(nBits <= 60, s"signature must stay positive in int64 (got $nBits)")
-    val tok = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-      .withColumn("hv", weakHash(col("t")))
-    val bitSums = simhashParams(nBits).zipWithIndex.map { case ((a, b), j) =>
-      // 2·h > p avoids a halved threshold's rounding question entirely
-      sum(when(((lit(a) * col("hv") + lit(b)) % MOD) * 2 > MOD, 1L)
-        .otherwise(-1L)).as(s"b$j")
-    }
-    tok.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until nBits).map(j =>
-          when(col(s"b$j") > 0, lit(1L << j)).otherwise(0L))
-          .reduce(_ + _).as("sig"))
   }
 
   /** Banded-simhash geometry: 60 signature bits in 4 bands of 15 → 32 768
@@ -1863,13 +1773,13 @@ object TextOps {
     * word bigrams grow the term space combinatorially, which is also the
     * standard trick for hot natural-language vocabularies.
     *
-    * Native one-pass kernel (WindowStringsExpr) — the HOF chain below is
-    * interpreted per window and was THE heaviest CPU stage of the bench
-    * (the cosine index materialization, 36.5 task-seconds at sf0.1;
-    * r14 per-job attribution). Byte-identical strings ([[bigramsLambda]]
-    * pins it); a doc with < 2 tokens yields no bigrams either way (the
-    * kernel's empty array and the twin's guard both explode to zero
-    * rows). */
+    * Native one-pass kernel (WindowStringsExpr) — the HOF chain it
+    * replaced is interpreted per window and was THE heaviest CPU stage of
+    * the bench (the cosine index materialization, 36.5 task-seconds at
+    * sf0.1; r14 per-job attribution). Byte-identical strings (the specs'
+    * HOF-chain reference, `References.bigramsLambda`, pins it); a doc
+    * with < 2 tokens yields no bigrams either way (the kernel's empty
+    * array and the reference's guard both explode to zero rows). */
   private[graft] def bigrams(text: Column): Column =
     bigramsOfTokens(tokens(text))
 
@@ -1879,17 +1789,6 @@ object TextOps {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(graft.functions.WindowStringsExpr(
       ColumnBridge.expression(w), 2))
-  }
-
-  /** HOF-chain twin of [[bigrams]] (built-ins only) — kept for
-    * cross-validation of the one-pass kernel. */
-  private[graft] def bigramsLambda(text: Column): Column = {
-    val w = tokens(text)
-    // guard: sequence(1, 0) would DESCEND ([1,0]) on a 1-token doc
-    when(size(w) >= 2,
-      transform(sequence(lit(1), size(w) - 1),
-        i => concat_ws(" ", slice(w, i, lit(2)))))
-      .otherwise(array().cast("array<string>"))
   }
 
   /** Sparse TF-IDF cosine similarity join — document-pair similarity via
@@ -1965,14 +1864,15 @@ object TextOps {
         (col("tf") * log(col("n").cast("double") / col("df"))).as("w"))
   }
 
-  /** The pair expansion's input: the index spread by doc_id over `parts`
-    * tasks ([[cosineExpandParts]]). The self-join broadcasts one side
-    * when the index is small, which makes the OTHER side's partitioning
-    * the parallelism of the Σ df² expansion; this repartition pins it at
-    * `parts` rather than spark.sql.shuffle.partitions. Spreading by doc_id
-    * keeps every task expanding pairs, and each pair still arises exactly
-    * once (from its a-side row). When the index already has `parts`
-    * doc_id partitions the exchange collapses. */
+  /** The pair expansion's streamed (a) side: the index spread by doc_id
+    * over `parts` tasks ([[cosineExpandParts]]). The self-join broadcasts
+    * the b side (the index as is) when the index is small, which makes
+    * the a side's partitioning the parallelism of the Σ df² expansion;
+    * this repartition pins it at `parts` rather than
+    * spark.sql.shuffle.partitions. Spreading by doc_id keeps every task
+    * expanding pairs, and each pair still arises exactly once (from its
+    * a-side row). When the index already has `parts` doc_id partitions
+    * the exchange collapses. */
   private def expansionInput(idx: DataFrame, parts: Int): DataFrame =
     idx.repartition(parts, col("doc_id"))
 
@@ -2045,10 +1945,10 @@ object TextOps {
     val norms = cosineNorms(idx)
     val (aSide, bSide) =
       if (!salted) {
-        // both sides are the same spread relation: their sizes tie, so a
-        // broadcast builds the b side and the spread a side expands
-        val spread = expansionInput(idx, expandParts)
-        (spread, spread)
+        // only the a side is spread: the b side is the index itself, whose
+        // size ties the a side's, so a broadcast builds it straight from
+        // the (cached) index and the spread a side streams the expansion
+        (expansionInput(idx, expandParts), idx)
       } else {
         val c = CosineBlockSize
         val byTerm = Window.partitionBy(col("term"))

@@ -10,10 +10,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Native as-of join — the whole-operator Catalyst extension route
   * (logical node → planner strategy → physical exec), for the one
-  * relational operator Spark ships no physical algorithm for. The
-  * compositional twin (`operators.AsOfJoin.asof`: union-tag + running
-  * window) stays as the oracle-anchored reference; this node executes the
-  * textbook sort-merge as-of directly:
+  * relational operator Spark ships no physical algorithm for, and the
+  * library's only as-of join (`operators.AsOfJoin.asof` builds it). The
+  * node executes the textbook sort-merge as-of directly:
   *
   *  - each child is hash-clustered on its key and sorted by (key, time) —
   *    declared via requiredChildDistribution/Ordering, so EnsureRequirements
@@ -25,12 +24,10 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *    buffering beyond ONE candidate payload per key.
   *
   * Semantics: ties (right.time == left.time) match; null keys and null
-  * times NEVER match (SQL ASOF semantics — the compositional twin's
-  * window partitioning can match null keys/times to each other, a
-  * documented divergence in its scaladoc); `inner` drops matchless left
+  * times NEVER match (SQL ASOF semantics); `inner` drops matchless left
   * rows. Among right rows EQUAL on (key, time) the last in partition
   * sort order wins — which specific row that is, is unspecified, exactly
-  * as in the compositional twin and SQL ASOF; callers needing a
+  * as in SQL ASOF; callers needing a
   * deterministic pick must make (key, time) unique or fold the
   * tiebreaker into the time column.
   *
@@ -82,7 +79,7 @@ object PushFilterThroughAsOf
 /** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Registered both through
   * `GraftExtensions` (injectPlannerStrategy, for sessions configured with
   * spark.sql.extensions) and lazily through `spark.experimental
-  * .extraStrategies` by `AsOfJoin.asofNative` (public API — keeps plain
+  * .extraStrategies` by `AsOfJoin.asof` (public API — keeps plain
   * sessions working). */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

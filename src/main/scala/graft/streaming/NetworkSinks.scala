@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.catalog.MetadataCatalog
 import graft.functions.JsValues.jsonEscape
-import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
 /** K3/G1 — LIVE side-effect channels: the reference pushes every
   * salvageable observation to a socket.io publisher
@@ -82,29 +81,6 @@ object NetworkSinks {
         conn.getInputStream.close()
       }
     }
-
-  /** `writeStream.foreach(...)` binding of the publisher channel, for
-    * driving the event stream directly without foreachBatch: one socket
-    * per (partition, epoch). */
-  class SocketEventWriter(host: String, port: Int,
-      eventName: String = "internal_data") extends ForeachWriter[Row] {
-    @transient private var sock: java.net.Socket = _
-    @transient private var out: java.io.BufferedWriter = _
-    def open(partitionId: Long, epochId: Long): Boolean = {
-      sock = new java.net.Socket(host, port)
-      out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
-      true
-    }
-    def process(row: Row): Unit = {
-      out.write(frame(eventName, row.getAs[String]("event_json")))
-      out.write("\n")
-    }
-    def close(errorOrNull: Throwable): Unit = {
-      if (out != null) { out.flush(); out.close() }
-      if (sock != null) sock.close()
-    }
-  }
 
   /** Durable parquet sinks + live publisher/alert channels — the full
     * reference topology (Redshift-analogue wide tables AND socket AND

@@ -119,7 +119,7 @@ class CoerceSpec extends SparkSpec {
 
   test("coercion truth table (Scala twin agrees)") {
     truthTable.foreach { case ((lex, jt, pt), (ev, ee)) =>
-      val (gv, ge) = Coerce.coerceScala(lex, jt, pt)
+      val (gv, ge) = References.coerceScala(lex, jt, pt)
       assert(ge === ee, s"scala error flag for ($lex, $jt, $pt)")
       if (!ee) assert(gv === ev, s"scala value for ($lex, $jt, $pt)")
     }
@@ -151,12 +151,12 @@ class CoerceSpec extends SparkSpec {
       val (lex0, jt, pt) = genCase.pureApply(Gen.Parameters.default, Seed(i.toLong))
       // numbers/booleans always carry canonical lexemes
       val lex = jt match {
-        case "number" => JsValues.jsNumber(lex0).map(JsValues.jsNumberString)
+        case "number" => References.jsNumber(lex0).map(JsValues.jsNumberString)
           .getOrElse("1")
         case "boolean" => if (lex0.length % 2 == 0) "true" else "false"
         case _ => lex0
       }
-      val (v, e) = Coerce.coerceScala(lex, jt, pt)
+      val (v, e) = References.coerceScala(lex, jt, pt)
       assert(e || v != null) // coerced-or-errored, never dropped
     }
   }
@@ -173,7 +173,7 @@ class CoerceSpec extends SparkSpec {
       pt <- Seq("varchar", "integer", "float", "bool", "mystery")
     } yield {
       val l = jt match {
-        case "number" => JsValues.jsNumber(lex).filter(d => !d.isNaN)
+        case "number" => References.jsNumber(lex).filter(d => !d.isNaN)
           .map(JsValues.jsNumberString).getOrElse("7")
         case "boolean" => if (lex.length % 2 == 0) "true" else "false"
         case _ => lex
@@ -186,7 +186,7 @@ class CoerceSpec extends SparkSpec {
       .select("lex", "jstype", "ptype", "c.value", "c.error").collect()
     out.foreach { r =>
       val (lex, jt, pt) = (r.getString(0), r.getString(1), r.getString(2))
-      val (sv, se) = Coerce.coerceScala(lex, jt, pt)
+      val (sv, se) = References.coerceScala(lex, jt, pt)
       assert(r.getBoolean(4) === se, s"error mismatch ($lex, $jt, $pt)")
       if (!se) assert(r.getString(3) === sv, s"value mismatch ($lex, $jt, $pt)")
     }

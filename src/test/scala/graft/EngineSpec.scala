@@ -78,11 +78,11 @@ class EngineSpec extends SparkSpec {
       Seq("graft/Engine.scala"), "build sessions from Engine.builder instead")
   }
 
-  test("one coercion: coerceScala is called nowhere in src/main/scala outside Coerce.scala") {
-    assert(mainSourcesMatching("""coerceScala\s*\(""".r) ===
-      Seq("graft/functions/Coerce.scala"),
-      "coerce with Coerce.coerce (the native CoerceExpr); coerceScala is " +
-        "the specs' reference")
+  test("no reference twins: no *Lambda, coerceScala or jsNumber def in src/main/scala") {
+    assert(mainSourcesMatching("""def (\w+Lambda|coerceScala|jsNumber)\b""".r) ===
+      Seq.empty,
+      "a reference implementation that only the specs call belongs in " +
+        "src/test/scala/graft/References.scala")
   }
 
   test("no plan twins: no *Lazy def in src/main/scala") {

@@ -83,7 +83,7 @@ class GoldenPlanSpec extends SparkSpec {
     "topk_orders" -> (() => planOf(StarOps.topkOrders(spark, dir))),
     "lateral_topn" -> (() => planOf(ExtraOps.lateralTopN(spark, dir))),
     "asof_join_native" ->
-      (() => planOf(ExtraOps.asofErrorSignupNative(spark, dir))),
+      (() => planOf(ExtraOps.asofErrorSignup(spark, dir))),
     "text_tfidf" -> (() => planOf(TextOps.textTfidf(spark, dir))),
     "sim_knn" -> (() => planOf(SimilarityOps.knnBruteForce(spark, dir))),
     // the mining family as the shipped ops execute it — exactly the plans

@@ -15,7 +15,7 @@ class NativeExprSpec extends SparkSpec {
       .select(explode(split(col("text"), " ")).as("t"))
     val diff = toks
       .select(NativeFunctions.weak_hash(col("t")).as("k"),
-        TextOps.weakHashLambda(col("t")).as("l"))
+        References.weakHashLambda(col("t")).as("l"))
       .filter(col("k") =!= col("l")).count()
     assert(diff === 0)
   }
@@ -24,7 +24,7 @@ class NativeExprSpec extends SparkSpec {
     import spark.implicits._
     val rows = Seq("", "a", "ab", " ", "123", "zz top").toDF("t")
       .select(col("t"), NativeFunctions.weak_hash(col("t")).as("k"),
-        TextOps.weakHashLambda(col("t")).as("l"))
+        References.weakHashLambda(col("t")).as("l"))
       .collect()
     rows.foreach(r => assert(r.getLong(1) === r.getLong(2), r.getString(0)))
   }
@@ -34,7 +34,7 @@ class NativeExprSpec extends SparkSpec {
     val pairs = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
     val diff = pairs.select(
         NativeFunctions.dot_ff(col("a.embedding"), col("b.embedding")).as("k"),
-        SimilarityOps.dotLambda(col("a.embedding"), col("b.embedding")).as("l"))
+        References.dotLambda(col("a.embedding"), col("b.embedding")).as("l"))
       .filter(col("k") =!= col("l")).count() // exact double equality
     assert(diff === 0)
   }
@@ -43,14 +43,14 @@ class NativeExprSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val diff = docs.select(
         TextOps.shingles(col("text")).as("k"),
-        TextOps.shinglesLambda(col("text")).as("l"))
+        References.shinglesLambda(col("text")).as("l"))
       .filter(col("k") =!= col("l")).count()
     assert(diff === 0)
     // edge cases: <3 words, exactly 3 words, duplicate shingles
     import spark.implicits._
     val edges = Seq("a b", "a b c", "x y x y x y x y").toDF("text")
       .select(TextOps.shingles(col("text")).as("k"),
-        TextOps.shinglesLambda(col("text")).as("l"))
+        References.shinglesLambda(col("text")).as("l"))
       .collect()
     edges.foreach(r => assert(r.getSeq[String](0) === r.getSeq[String](1)))
   }
@@ -59,7 +59,7 @@ class NativeExprSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val diff = docs.filter(col("text").isNotNull).select(
         TextOps.bigrams(col("text")).as("k"),
-        TextOps.bigramsLambda(col("text")).as("l"))
+        References.bigramsLambda(col("text")).as("l"))
       .filter(col("k") =!= col("l")).count()
     assert(diff === 0)
     // edge cases: 0/1/2 tokens, repeats (non-distinct), empty tokens from
@@ -67,14 +67,14 @@ class NativeExprSpec extends SparkSpec {
     import spark.implicits._
     val edges = Seq("", "a", "a b", "a b c", "a  b", "x y x y").toDF("text")
       .select(TextOps.bigrams(col("text")).as("k"),
-        TextOps.bigramsLambda(col("text")).as("l"))
+        References.bigramsLambda(col("text")).as("l"))
       .collect()
     edges.foreach(r => assert(r.getSeq[String](0) === r.getSeq[String](1)))
     // null text: kernel yields NULL, twin yields [] — every consumer
     // explodes, where both produce zero rows
     val nulls = Seq[Option[String]](None).toDF("text")
     assert(nulls.select(explode(TextOps.bigrams(col("text")))).count() === 0)
-    assert(nulls.select(explode(TextOps.bigramsLambda(col("text")))).count() === 0)
+    assert(nulls.select(explode(References.bigramsLambda(col("text")))).count() === 0)
   }
 
   test("nfc kernel: composes decomposed accents, identity on ASCII/composed") {

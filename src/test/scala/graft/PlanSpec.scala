@@ -316,6 +316,47 @@ class PlanSpec extends SparkSpec {
     assert(nestedLoops <= 1, s)
   }
 
+  test("cosine pairs: the plain expansion spreads one side — one doc_id REPARTITION_BY_NUM exchange over the cached index") {
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.functions.{col, lit, repeat}
+    // the documents padded with a column the index never reads: the file
+    // size fans the cached index out over 4 doc_id partitions while the
+    // expansion asks for 2, so the a side's spread cannot collapse
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cosine-spread")
+    try {
+      spark.read.parquet(s"$dir/documents.parquet")
+        .withColumn("pad", repeat(col("doc_id").cast("string"), lit(80)))
+        .write.option("compression", "none")
+        .parquet(s"$tmp/documents.parquet")
+      val (tops, _) = ranTrees(executed(TextOps.textCosinePairs(spark, tmp.toString)))
+      val pairJob = tops.last
+      def spread(p: SparkPlan) = p match {
+        case e: ShuffleExchangeExec => e.shuffleOrigin == REPARTITION_BY_NUM
+        case _ => false
+      }
+      // every read of a spread, a reused one included
+      def spreads(p: SparkPlan): Int = Plans.collect(p) {
+        case e if spread(e) => e
+        case r: ReusedExchangeExec if spread(r.child) => r
+      }.size
+      assert(spreads(pairJob) === 1, pairJob.treeString)
+      // the spread side streams the term join (the expansion); its
+      // broadcast b side is the cached index itself
+      val expansion = Plans.collect(pairJob) {
+        case j: BroadcastHashJoinExec
+            if j.leftKeys.flatMap(_.references).exists(_.name == "term") => j
+      }
+      assert(expansion.size === 1, pairJob.treeString)
+      assert(expansion.head.buildSide === BuildRight, pairJob.treeString)
+      assert(spreads(expansion.head.left) === 1, pairJob.treeString)
+      assert(Plans.collect(expansion.head.right) {
+        case s: InMemoryTableScanExec => s
+      }.nonEmpty, pairJob.treeString)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+  }
+
   test("cosine pairs: the salted block join stays equi-keyed — no cartesian, blocks ride the join key") {
     // salted is not the shape the shipped op picks at this scale
     val s = ranPlans(TextOps.textCosinePairsOf(
@@ -511,10 +552,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("native as-of plans as the custom exec: merge pass, no window state") {
-    val s = planString(graft.operators.ExtraOps.asofErrorSignupNative(spark, dir))
+    val s = planString(graft.operators.ExtraOps.asofErrorSignup(spark, dir))
     // the custom node is planned (strategy fired), children are keyed
-    // exchanges + sorts, and none of the compositional machinery (union +
-    // running window) appears
+    // exchanges + sorts, and no union or running window appears
     assert(s.contains("AsOfJoin"), s)
     assert(!s.contains("SortMergeJoin"), s)
     assert(!s.contains("Window"), s)
@@ -524,7 +564,7 @@ class PlanSpec extends SparkSpec {
   test("as-of pushdown rule: left-only filter sinks below the custom node") {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
     import org.apache.spark.sql.functions.col
-    val df = graft.operators.ExtraOps.asofErrorSignupNative(spark, dir)
+    val df = graft.operators.ExtraOps.asofErrorSignup(spark, dir)
       .filter(col("event_id") < 100)
     val opt = df.queryExecution.optimizedPlan
     val asofNodes = opt.collect { case a: graft.plans.AsOfJoinPlan => a }

@@ -262,13 +262,27 @@ class QueriesSpec extends SparkSpec {
     perQ.foreach { case (q, n) => assert(n <= 5 && n > 0, s"q=$q n=$n") }
   }
 
-  test("native as-of operator is row-identical to the compositional twin") {
-    val comp = graft.operators.ExtraOps.asofErrorSignup(spark, dir).collect()
-      .map(_.toString).sorted.toSeq
-    val native = graft.operators.ExtraOps.asofErrorSignupNative(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    assert(comp.nonEmpty)
-    assert(native === comp)
+  test("as-of error→signup query equals a brute-force Scala as-of over the events table") {
+    // times as epoch microseconds, read through the table reader the query uses
+    val ev = graft.operators.EventOps.tbl(spark, dir, "events")
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")),
+        col("event_type")).collect()
+    def of(kind: String) = ev.filter(_.getString(3) == kind).toSeq
+    val signups = of("signup").filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+      .groupBy(_.getLong(1)).view.mapValues(_.map(_.getLong(2))).toMap
+    val expected = of("error").flatMap { e =>
+      if (e.isNullAt(1) || e.isNullAt(2)) None
+      else signups.getOrElse(e.getLong(1), Nil).filter(_ <= e.getLong(2))
+        .maxOption.map(s => (e.getLong(0), e.getLong(1), e.getLong(2), s,
+          e.getLong(2) - s))
+    }.toSet
+    val got = graft.operators.ExtraOps.asofErrorSignup(spark, dir)
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")),
+        unix_micros(col("signup_ts")), col("gap_us")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).toSet
+    assert(expected.nonEmpty)
+    assert(got === expected)
   }
 
   test("native as-of edge semantics: ties match, null keys drop, outer fills") {
@@ -283,7 +297,7 @@ class QueriesSpec extends SparkSpec {
     // outer fill must produce real NULLs for it, not primitive zeros
     // (exercises the widened-nullability projection binding)
     def run(inner: Boolean) = graft.operators.AsOfJoin
-      .asofNative(left, right, "k", "t", "t0",
+      .asof(left, right, "k", "t", "t0",
         Map("pay" -> "pay", "t0" -> "pay_t"), inner)
       .collect().map(r => (r.getString(2), Option(r.getString(3)),
         if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSet
@@ -296,31 +310,42 @@ class QueriesSpec extends SparkSpec {
         ("l3", None, None), ("l4", None, None)))
   }
 
-  test("native as-of equals compositional twin on randomized inputs") {
+  test("as-of equals a brute-force Scala as-of on randomized inputs, null keys and times included") {
     val spark2 = spark
     import spark2.implicits._
-    // deterministic seeds; constraints keep us inside the shared
-    // contract: non-null keys/times (documented divergence) and unique
-    // right (key, time) pairs (documented tie ambiguity)
+    // deterministic seeds; right (key, time) pairs are unique among the
+    // non-null ones (which of two equal candidates wins is unspecified)
     (1 to 5).foreach { seed =>
       val rnd = new scala.util.Random(seed)
       val nKeys = 1 + rnd.nextInt(6)
-      val left = (1 to 120).map { i =>
-        (rnd.nextInt(nKeys).toLong, rnd.nextInt(50).toLong, i.toLong)
-      }.toDF("k", "t", "lid")
-      val right = rnd.shuffle(
+      def orNull(v: Long) = if (rnd.nextInt(10) == 0) None else Some(v)
+      val leftRows = (1 to 120).map { i =>
+        (orNull(rnd.nextInt(nKeys).toLong), orNull(rnd.nextInt(50).toLong),
+          i.toLong)
+      }
+      val rightRows = rnd.shuffle(
         (for (k <- 0 until nKeys; t <- 0 until 50 if rnd.nextBoolean())
-          yield (k.toLong, t.toLong, k * 1000L + t)).toList)
-        .toDF("k", "t0", "pay")
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
+          yield (Option(k.toLong), Option(t.toLong), k * 1000L + t)).toList ++
+          (1 to 10).map(i => (Option.empty[Long], Option(rnd.nextInt(50).toLong),
+            -i.toLong)) ++
+          (1 to 10).map(i => (Option(rnd.nextInt(nKeys).toLong),
+            Option.empty[Long], -100L - i)))
+      val left = leftRows.toDF("k", "t", "lid")
+      val right = rightRows.toDF("k", "t0", "pay")
+      def expected(inner: Boolean) = leftRows.flatMap { case (k, t, lid) =>
+        val hit = for (lk <- k; lt <- t; best <- rightRows.collect {
+          case (Some(rk), Some(rt), pay) if rk == lk && rt <= lt => (rt, pay)
+        }.maxByOption(_._1)) yield best._2
+        if (inner && hit.isEmpty) None else Some((k, t, lid, hit))
+      }.toSet
+      def opt(r: org.apache.spark.sql.Row, i: Int) =
+        if (r.isNullAt(i)) None else Some(r.getLong(i))
       Seq(true, false).foreach { inner =>
-        val comp = rows(graft.operators.AsOfJoin.asof(
-          left, right, "k", "t", "t0", Map("pay" -> "pay"), inner))
-        val native = rows(graft.operators.AsOfJoin.asofNative(
-          left, right, "k", "t", "t0", Map("pay" -> "pay"), inner))
-        assert(native === comp, s"seed=$seed inner=$inner")
+        val got = graft.operators.AsOfJoin.asof(
+            left, right, "k", "t", "t0", Map("pay" -> "pay"), inner)
+          .collect().map(r => (opt(r, 0), opt(r, 1), r.getLong(2), opt(r, 3)))
+          .toSet
+        assert(got === expected(inner), s"seed=$seed inner=$inner")
       }
     }
   }
@@ -595,7 +620,7 @@ class QueriesSpec extends SparkSpec {
     def sigs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val kernel = sigs(TextOps.simhashSigOf(docs))
-    val twin = sigs(TextOps.simhashSigOfLambda(docs))
+    val twin = sigs(References.simhashSigOfLambda(docs))
     assert(kernel.nonEmpty && kernel === twin,
       s"diverged: ${kernel.toSet.diff(twin.toSet).take(3)}")
   }
@@ -606,7 +631,7 @@ class QueriesSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val kernel = rows(TextOps.spanWindows(docs))
-    val twin = rows(TextOps.spanWindowsLambda(docs))
+    val twin = rows(References.spanWindowsLambda(docs))
     assert(kernel.nonEmpty && kernel === twin,
       s"diverged: only-kernel=${(kernel -- twin).take(3)} " +
         s"only-twin=${(twin -- kernel).take(3)}")
@@ -623,7 +648,7 @@ class QueriesSpec extends SparkSpec {
     def keys(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val kernel = keys(TextOps.cdcChunkSets(docs))
-    val lambda = keys(TextOps.cdcChunkSetsLambda(docs))
+    val lambda = keys(References.cdcChunkSetsLambda(docs))
     assert(kernel.nonEmpty, "expected chunks at sf0.001")
     assert(kernel === lambda,
       s"kernel/lambda diverged: only-kernel=${(kernel -- lambda).take(3)} " +
