@@ -310,7 +310,7 @@ class QueriesSpec extends SparkSpec {
         ("l3", None, None), ("l4", None, None)))
   }
 
-  test("as-of equals a brute-force Scala as-of on randomized inputs, null keys and times included") {
+  test("as-of equals a brute-force Scala as-of on randomized inputs, nulls included") {
     val spark2 = spark
     import spark2.implicits._
     // deterministic seeds; right (key, time) pairs are unique among the
