@@ -222,4 +222,23 @@ object Engine {
       df.checkpoint() // eager, reliable; cleaner deletes on RDD GC
     } else df.localCheckpoint(eager = true, storageLevel = level)
   }
+
+  /** The lifecycle of every pair-mining operator: `result` is built and
+    * eagerly checkpointed ([[eagerCheckpoint]] at `level`) while the
+    * persisted `inputs` it reads are hot, then the inputs are released —
+    * in a `finally`, so a miner that fails after persisting (a bad
+    * argument, a failed job) leaves nothing pinned either.
+    *
+    * A miner is a dedup JOB, not a view: the checkpoint truncates lineage,
+    * so the returned relation never reaches back into the released
+    * inputs, and its own blocks are reclaimed by the ContextCleaner once
+    * it is unreferenced — nothing stays pinned for the session lifetime.
+    * The unpersist is blocking: the released blocks are small, and a
+    * synchronous release never competes with the NEXT job for memory the
+    * way async ContextCleaner reclamation does (measured as cross-query
+    * bench pollution in rounds 1 and 2). */
+  def checkpointReleasing(level: StorageLevel, inputs: DataFrame*)(
+      result: => DataFrame): DataFrame =
+    try eagerCheckpoint(result, level)
+    finally inputs.foreach(_.unpersist(blocking = true))
 }

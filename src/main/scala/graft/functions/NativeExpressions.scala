@@ -539,8 +539,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[CdcChunkKeysExpr].getName, "graft_cdc_chunk_keys"),
       NativeFunctions.cdcChunkKeysFromSql _))
     // whole-operator extension: plans graft.plans.AsOfJoinPlan (the native
-    // as-of join) — sessions without this extension get the strategy via
-    // the public experimental hook in AsOfJoin.asof
+    // as-of join); AsOfJoin.asof refuses a session without it
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOf)
   }

@@ -24,28 +24,20 @@ object AsOfJoin {
     * @param rightCols  right columns to carry (renamed as given)
     * @param inner      drop left rows with no prior right match
     *
-    * The strategy self-registers on the session's public
-    * `experimental.extraStrategies` hook (idempotent), so plain sessions
-    * work; sessions configured with `spark.sql.extensions=
-    * graft.functions.GraftExtensions` get it injected at build time. */
+    * Needs a session built by [[graft.Engine.builder]]: its
+    * `spark.sql.extensions=graft.functions.GraftExtensions` injects the
+    * strategy that plans the node, and any other session is refused. */
   def asof(left: DataFrame, right: DataFrame, key: String,
       leftTime: String, rightTime: String,
       rightCols: Map[String, String], inner: Boolean = true): DataFrame = {
-    import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, PushFilterThroughAsOf}
+    import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
     import org.apache.spark.sql.graft.DatasetBridge
     val spark = left.sparkSession
-    // check-then-append under a lock: concurrent first calls on one
-    // session would otherwise both pass the contains() check and register
-    // the strategy/rule twice (harmless for results, but every subsequent
-    // plan pays the duplicate optimizer pass)
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ AsOfJoinStrategy
-      if (!spark.experimental.extraOptimizations.contains(PushFilterThroughAsOf))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ PushFilterThroughAsOf
-    }
+    // without the strategy the node fails much later, at planning, with
+    // no hint at the cause
+    require(spark.sessionState.planner.strategies.contains(AsOfJoinStrategy),
+      "AsOfJoin.asof needs a session built by graft.Engine.builder " +
+        "(spark.sql.extensions=graft.functions.GraftExtensions)")
     // no analyzer coercion runs on a hand-built node: mismatched key/time
     // types would otherwise surface as executor-side ClassCastExceptions
     // (or worse, different hash partitionings per side)

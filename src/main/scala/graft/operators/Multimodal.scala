@@ -495,7 +495,7 @@ object Multimodal {
     * basis points — integer-exact on both engines. */
   def perceptualNearDupOf(df: DataFrame, codec: MediaCodec = FakeCodec,
       l1Denom: Long = NearDupL1Denom, maxBucketSize: Int = 4096,
-      isinLimit: Int = 1000, quarantine: Boolean = false,
+      quarantine: Boolean = false,
       nDocs: Option[Long] = None): DataFrame = {
     // eager-job idiom: the banded self-join reads ONE materialization of
     // the codec pass (Catalyst shares no common subplans — an unpersisted
@@ -529,45 +529,26 @@ object Multimodal {
     // descriptors exploded onto their band buckets — the decode pass
     // stores band keys per band ([[PerceptualDesc.bkeys]]), so band =
     // array position, key = element
-    val banded = perceptualDescriptors(df, codec, quarantine = quarantine,
-        nBits = bandBits * PerceptualBands).toDF()
-      .select(col("doc_id"), col("total"), col("cells"),
-        posexplode(col("bkeys")).as(Seq("band", "bkey")))
-      .persist(lvl)
-    // Hot-bucket cap — the lshNearDupPairs hygiene pattern, and the
-    // round-10 answer to the measured quadratic candidate growth at
-    // scale (19.8 k → 1.37 M candidates at 10× data: ScaleGen's
+    val banded = KeyPairs.persistByKey(
+      perceptualDescriptors(df, codec, quarantine = quarantine,
+          nBits = bandBits * PerceptualBands).toDF()
+        .select(col("doc_id"), col("total"), col("cells"),
+          posexplode(col("bkeys")).as(Seq("band", "bkey"))),
+      Seq("band", "bkey"), lvl)
+    // Hot-bucket cap ([[KeyPairs.capKeys]]), the lshNearDupPairs hygiene
+    // pattern and the round-10 answer to the measured quadratic candidate
+    // growth at scale (19.8 k → 1.37 M candidates at 10× data: ScaleGen's
     // perturbed copies share coarse segment profiles, so a popular band
     // key squares in the self-join). Buckets over the cap are DROPPED
-    // from candidate generation, never silently: the census below logs
-    // how many buckets/memberships the cap removed. Members still pair
-    // through their other bands unless every shared band is hot.
-    val hot = banded.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("n_members"))
-      .filter(col("n_members") > maxBucketSize)
-      .collect()
-    if (hot.nonEmpty)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"perceptualNearDup: dropped ${hot.length} band bucket(s) over " +
-          s"$maxBucketSize members " +
-          s"(${hot.map(_.getLong(2)).sum} memberships) from candidates")
-    val bandKey = concat_ws("|", col("band"), col("bkey"))
-    val kept =
-      if (hot.isEmpty) banded
-      else if (hot.length <= isinLimit)
-        banded.filter(!bandKey.isin(
-          hot.map(r => s"${r.getInt(0)}|${r.getLong(1)}").toSeq: _*))
-      else {
-        val spark = df.sparkSession
-        import spark.implicits._
-        banded.join(
-          broadcast(hot.map(r => (r.getInt(0), r.getLong(1)))
-            .toSeq.toDF("band", "bkey")),
-          Seq("band", "bkey"), "left_anti")
-      }
-    val out = graft.Engine.eagerCheckpoint(verifyFromBanded(kept, l1Denom), lvl)
-    banded.unpersist(true)
-    out
+    // from candidate generation, never silently: the census logs how many
+    // buckets/memberships the cap removed. Members still pair through
+    // their other bands unless every shared band is hot.
+    graft.Engine.checkpointReleasing(lvl, banded) {
+      KeyPairs.warnDropped(banded, Seq("band", "bkey"), maxBucketSize,
+        "perceptualNearDup")
+      verifyFromBanded(
+        KeyPairs.capKeys(banded, Seq("band", "bkey"), maxBucketSize), l1Denom)
+    }
   }
 
   /** [[perceptualNearDupOf]] on the documents payload table. */
@@ -632,13 +613,11 @@ object Multimodal {
       nDocs = Some(WidenedOracleSimDocs))
   }
 
-  /** Bucket self-join + exact integer-L1 verify over a (possibly
-    * hot-bucket-filtered) banded relation. */
+  /** Bucket self-join + exact integer-L1 verify over a (hot-bucket
+    * capped) banded relation. */
   private def verifyFromBanded(banded: DataFrame,
       l1Denom: Long): DataFrame = {
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
+    KeyPairs.keyPairs(banded, Seq("band", "bkey"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.total").as("total_a"), col("b.total").as("total_b"),
         col("a.cells").as("cells_a"), col("b.cells").as("cells_b"))

@@ -624,20 +624,19 @@ object SimilarityOps {
         srpBucket(col("embedding"), nBits).as("bucket"))
       .join(cellAssignments(spark, dir, nCentroids), "vec_id")
       .persist(lvl)
-    val dropped = emb.as("a").join(emb.as("b"),
-        col("a.cell") === col("b.cell") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .filter(dot(col("a.embedding"), col("b.embedding")) /
-        (col("a.nrm") * col("b.nrm")) >= threshold)
-      .select(col("b.vec_id").as("vec_id")).distinct()
-      .withColumn("is_dup", lit(true))
-    val out = Engine.eagerCheckpoint(emb.select("vec_id", "cell")
-      .join(dropped, Seq("vec_id"), "left_outer")
-      .select(col("vec_id"), col("cell"),
-        col("is_dup").isNull.as("kept")), lvl)
-    emb.unpersist(true)
-    out
+    Engine.checkpointReleasing(lvl, emb) {
+      val dropped = emb.as("a").join(emb.as("b"),
+          col("a.cell") === col("b.cell") &&
+            col("a.bucket") === col("b.bucket") &&
+            col("a.vec_id") < col("b.vec_id"))
+        .filter(dot(col("a.embedding"), col("b.embedding")) /
+          (col("a.nrm") * col("b.nrm")) >= threshold)
+        .select(col("b.vec_id").as("vec_id")).distinct()
+        .withColumn("is_dup", lit(true))
+      emb.select("vec_id", "cell")
+        .join(dropped, Seq("vec_id"), "left_outer")
+        .select(col("vec_id"), col("cell"), col("is_dup").isNull.as("kept"))
+    }
   }
 
   /** Embedding-cosine near-duplicate pairs above a threshold: candidates

@@ -115,9 +115,7 @@ object TextOps {
     // never touch disk — see the rationale on Engine.miningLevel
     val lvl = Engine.miningLevel(docs)
     val idx = spanIndexOf(docs).persist(lvl)
-    val out = Engine.eagerCheckpoint(spansFromIndex(idx), lvl)
-    idx.unpersist(true)
-    out
+    Engine.checkpointReleasing(lvl, idx)(spansFromIndex(idx))
   }
 
   /** Every [[SpanSeedTokens]]-token window of each doc, position-keyed by
@@ -139,25 +137,18 @@ object TextOps {
   private def spanIndexOf(docs: DataFrame): DataFrame =
     dfCapWindows(spanWindows(docs))
 
-  /** THE window df-cap — one definition for every consumer (the span
-    * index, the containment miner, the report's artifact path), so the
-    * cap semantics cannot diverge between them. Input: any (doc_id, …, h)
-    * exploded window relation; output: the same relation restricted to
-    * keys in at most [[SpanDfCap]] documents. The aggregate and the join
-    * probe share the hash-by-h exchange (AQE exchange reuse). */
-  private[graft] def dfCapWindows(sh: DataFrame): DataFrame = {
-    val eligible = sh.groupBy("h")
-      .agg(count_distinct(col("doc_id")).as("ndocs"))
-      .filter(col("ndocs") <= SpanDfCap).select("h")
-    sh.join(eligible, "h")
-  }
+  /** The window df-cap shared by the span index, the containment miner
+    * and the report's artifact path: [[KeyPairs.capKeys]] on the window
+    * hash `h` at [[SpanDfCap]], over any (doc_id, …, h) exploded window
+    * relation. */
+  private def dfCapWindows(sh: DataFrame): DataFrame =
+    KeyPairs.capKeys(sh, Seq("h"), SpanDfCap)
 
   /** Diagonal runs → maximal spans ≥ [[MinSpanTokens]]. */
   private def spansFromIndex(idx: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val k = SpanSeedTokens
-    val m = idx.as("a").join(idx.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+    val m = KeyPairs.keyPairs(idx, Seq("h"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.pos").as("pa"), col("b.pos").as("pb"))
     val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
@@ -248,30 +239,20 @@ object TextOps {
     * relation instead of a dedicated corpus scan). */
   private[graft] def cdcChunksFromSets(chunks: DataFrame, threshold: Double,
       lvl: StorageLevel): DataFrame = {
-    val eligible = chunks.groupBy("ck")
-      .agg(count(lit(1)).as("ndocs"))
-      .filter(col("ndocs") <= CdcDfCap).select("ck")
-    val sets = chunks.join(eligible, "ck").persist(lvl)
-    val sizes = sets.groupBy(col("doc_id")).agg(count(lit(1)).as("n_ck"))
-    val result = sets.as("a").join(sets.as("b"),
-        col("a.ck") === col("b.ck") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("common_chunks"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_ck").as("na")),
-        "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_ck").as("nb")),
-        "doc_b")
-      // same float-boundary discipline as the ngram threshold: exact at
-      // the dyadic default (union = na + nb - common)
-      .filter(col("common_chunks") >= lit(threshold) *
-        (col("na") + col("nb") - col("common_chunks")))
-      .select(col("doc_a"), col("doc_b"), col("common_chunks"),
-        floor(lit(10000.0) * col("common_chunks") /
-          (col("na") + col("nb") - col("common_chunks"))).cast("long")
-          .as("jaccard_bp"))
-    val out = Engine.eagerCheckpoint(result, lvl)
-    sets.unpersist(true)
-    out
+    val sets = KeyPairs.capKeys(chunks, Seq("ck"), CdcDfCap).persist(lvl)
+    Engine.checkpointReleasing(lvl, sets) {
+      val sizes = KeyPairs.keySizes(sets)
+      val union = col("sa.n") + col("sb.n") - col("shared")
+      KeyPairs.sharedKeyCounts(sets, Seq("ck"))
+        .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
+        .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
+        // same float-boundary discipline as the ngram threshold: exact at
+        // the dyadic default
+        .filter(col("shared") >= lit(threshold) * union)
+        .select(col("doc_a"), col("doc_b"), col("shared").as("common_chunks"),
+          floor(lit(10000.0) * col("shared") / union).cast("long")
+            .as("jaccard_bp"))
+    }
   }
 
   /** Verbatim-containment threshold as an exact rational (num/den): the
@@ -317,23 +298,22 @@ object TextOps {
     val sets = dfCapWindows(windows)
       .select(col("doc_id"), col("h")).distinct()
       .persist(lvl)
-    val sizes = sets.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_h"))
-    val pairs = sets.as("a").join(sets.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-      // sizes is O(docs) rows of two longs — left unhinted: AQE
-      // broadcasts it while it fits and degrades to a shuffled join on
-      // a corpus whose doc census outgrows the driver
-      .join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-      .filter(col("shared") * ContainmentDen >= col("n_h") * ContainmentNum)
-      .select(col("doc_a"), col("doc_b"), col("shared"),
-        floor(lit(10000.0) * col("shared") / col("n_h")).cast("long")
-          .as("containment_bp"))
-    val out = Engine.eagerCheckpoint(pairs, lvl)
-    sets.unpersist(true)
-    out
+    Engine.checkpointReleasing(lvl, sets) {
+      // one unordered count per pair serves both directions: a→b is
+      // judged against |W(a)|, b→a against |W(b)|, so the directed rows
+      // are emitted before the one sizes join on their source doc
+      KeyPairs.sharedKeyCounts(sets, Seq("h"))
+        .select(col("shared"), explode(array(
+          struct(col("doc_a"), col("doc_b")),
+          struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))).as("d"))
+        .select(col("d.doc_a"), col("d.doc_b"), col("shared"))
+        .join(KeyPairs.keySizes(sets)
+          .select(col("doc_id").as("doc_a"), col("n").as("n_h")), "doc_a")
+        .filter(col("shared") * ContainmentDen >= col("n_h") * ContainmentNum)
+        .select(col("doc_a"), col("doc_b"), col("shared"),
+          floor(lit(10000.0) * col("shared") / col("n_h")).cast("long")
+            .as("containment_bp"))
+    }
   }
 
   /** Exact n-gram Jaccard near-dup pairs (threshold 0.5) via PPJoin-style
@@ -368,10 +348,8 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     // persisted: the shingle arrays are reused by three plan
     // subtrees (inverted index build + both sides of the verify join) —
-    // without the cache the shingling is recomputed each time.
-    // MEMORY_AND_DISK (not cache(): on a cluster, shingle relations can
-    // exceed executor memory) and explicitly unpersisted below once the
-    // small result materializes — nothing pinned outlives the query.
+    // without the cache the shingling is recomputed each time; released
+    // once the small result materializes (Engine.checkpointReleasing)
     val docs = docsSh.filter(size(col("sh")) > 0).persist(lvl)
     val inv = docs.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
       explode(col("sh")).as("s"))
@@ -414,37 +392,21 @@ object TextOps {
       .filter(col("cnt") + least(col("na") - col("mra"), col("nb") - col("mrb"))
         >= ceil(lit(threshold / (1 + threshold)) * (col("na") + col("nb"))))
       .select(col("doc_a"), col("doc_b"))
-    val result = cand
-      .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
-      .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
-      .withColumn("common",
-        size(array_intersect(col("da.sh"), col("db.sh"))).cast("long"))
-      .withColumn("union_sz",
-        (size(col("da.sh")) + size(col("db.sh"))).cast("long") - col("common"))
-      // at t=0.5 this is exact integer math (0.5·u is binary-exact), same
-      // as the oracle's 2·common >= union; jaccard in floored basis points
-      .filter(col("common") >= lit(threshold) * col("union_sz"))
-      .select(col("doc_a"), col("doc_b"),
-        floor(lit(10000.0) * col("common") / col("union_sz")).cast("long")
-          .as("jaccard_bp"))
-    // Eagerly materialize the (small) pair list while the intermediates are
-    // hot, then free them deterministically — this operator is a dedup JOB,
-    // not a view. localCheckpoint (vs persist) truncates lineage and its
-    // blocks are reclaimed by the ContextCleaner once the returned frame is
-    // unreferenced, so nothing stays pinned for the session lifetime.
-    // Fault-tolerance is a deploy-mode POLICY, not a per-site choice:
-    // Engine.eagerCheckpoint picks localCheckpoint (fast, executor-
-    // resident) or reliable checkpoint (survives executor loss) from
-    // spark.graft.checkpoint.reliable — one switch for every pair-mining
-    // operator in the library.
-    // blocking unpersist: the released blocks are small, and a synchronous
-    // release never competes with the NEXT job for memory the way async
-    // ContextCleaner reclamation does (measured as cross-query bench
-    // pollution in rounds 1 and 2)
-    val out = Engine.eagerCheckpoint(result, lvl)
-    docs.unpersist(true)
-    prefixes.unpersist(true)
-    out
+    Engine.checkpointReleasing(lvl, docs, prefixes) {
+      cand
+        .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
+        .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
+        .withColumn("common",
+          size(array_intersect(col("da.sh"), col("db.sh"))).cast("long"))
+        .withColumn("union_sz", (size(col("da.sh")) + size(col("db.sh")))
+          .cast("long") - col("common"))
+        // at t=0.5 this is exact integer math (0.5·u is binary-exact), same
+        // as the oracle's 2·common >= union; jaccard in floored basis points
+        .filter(col("common") >= lit(threshold) * col("union_sz"))
+        .select(col("doc_a"), col("doc_b"),
+          floor(lit(10000.0) * col("common") / col("union_sz")).cast("long")
+            .as("jaccard_bp"))
+    }
   }
 
   /** No-op, kept because the benchmark's batch hygiene
@@ -539,93 +501,83 @@ object TextOps {
       maxHamming: Int = 3,
       cdcThreshold: Double = DefaultNearDupThreshold): DataFrame = {
     val lvl = Engine.miningLevel(docs)
-    // ONE corpus scan for all five modalities ([[docArtifacts]]).
-    // Unpersisted (non-blocking) after the last consumer — each miner's
-    // output is checkpointed, so no lineage reaches back here.
+    // ONE corpus scan for all five modalities ([[docArtifacts]]), released
+    // once the report materializes: each miner's output is checkpointed,
+    // so no lineage reaches back here
     val arts = docArtifacts(docs).persist(lvl)
-    // Pre-fill the shared artifact cache BEFORE forking the miners: the
-    // four concurrent miner jobs otherwise RACE the unfilled cache, and
-    // every task that loses a partition's block-write lock sits BLOCKED
-    // in a task slot until the winner finishes computing it — with
-    // cores-many cache partitions and four racing jobs, most of the
-    // executor is stalled lock-waiting exactly when the miners' real
-    // stages want slots (r14 per-job attribution: summed task time nearly
-    // doubled without this). One parallel fill job, then every miner reads
-    // warm.
-    arts.count()
-    val hashed = arts.select(col("doc_id"), col("th").as("h"))
-    // group-size guard (the df-cap idiom): only hashes with 2..cap
-    // members reach the pair self-join, so a degenerate group can never
-    // square; dropped groups are logged, not silently vanished
-    val groupSizes = hashed.groupBy("h").agg(count(lit(1)).as("g"))
-    // The four mined modalities are INDEPENDENT Spark jobs (above the
-    // size floor each miner materializes eagerly) — submit them
-    // concurrently so each miner's driver-side planning overlaps the
-    // others' execution and independent stages share the executor pool.
-    // Composed wall ≈ the slowest miner, not the sum of four (measured
-    // sf0.1: 11.3 s serial → see SURVEY §7.5).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fOversized =
-      Future(groupSizes.filter(col("g") > ExactDupGroupCap).count())
-    val fJac = Future(
-      ngramJaccardFromShingles(arts.select(col("doc_id"), col("sh")),
-        jaccardThreshold, lvl))
-    val fSh = Future(
-      simhashPairsFromSigs(arts.select(col("doc_id"), col("sig")),
-        maxHamming, lvl))
-    val fCdc = Future(
-      cdcChunksFromSets(
-        arts.select(col("doc_id"), explode(col("cks")).as("ck")).distinct(),
-        cdcThreshold, lvl))
-    val fCt = Future(
-      containmentFromWindows(
-        arts.select(col("doc_id"), explode(col("whs")).as("h")), lvl))
-    val oversized = Await.result(fOversized, Duration.Inf)
-    if (oversized > 0)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"dedupReport: dropped $oversized duplicate group(s) over " +
-          s"$ExactDupGroupCap members from the exact pair listing")
-    val eligible = groupSizes
-      .filter(col("g") >= 2 && col("g") <= ExactDupGroupCap).select("h")
-    val ex = hashed.join(eligible, "h").as("a")
-      .join(hashed.join(eligible, "h").as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        lit(true).as("exact_hit"))
-    val jac = Await.result(fJac, Duration.Inf)
-      .select(col("doc_a"), col("doc_b"), col("jaccard_bp"))
-    val sh = Await.result(fSh, Duration.Inf)
-      .select(col("doc_a"), col("doc_b"), col("hamming").as("simhash_hamming"))
-    val cdc = Await.result(fCdc, Duration.Inf)
-      .select(col("doc_a"), col("doc_b"),
-        col("jaccard_bp").as("cdc_jaccard_bp"))
-    val ct = Await.result(fCt, Duration.Inf)
-    val cab = ct.filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        col("containment_bp").as("contained_ab_bp"))
-    val cba = ct.filter(col("doc_a") > col("doc_b"))
-      .select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"),
-        col("containment_bp").as("contained_ba_bp"))
-    val keys = Seq("doc_a", "doc_b")
-    val report = ex.join(jac, keys, "full").join(sh, keys, "full")
-      .join(cdc, keys, "full")
-      .join(cab, keys, "full").join(cba, keys, "full")
-      .select(col("doc_a"), col("doc_b"),
-        coalesce(col("exact_hit"), lit(false)).as("is_exact"),
-        col("jaccard_bp"), col("simhash_hamming"), col("cdc_jaccard_bp"),
-        col("contained_ab_bp"), col("contained_ba_bp"),
-        (when(coalesce(col("exact_hit"), lit(false)), 1).otherwise(0) +
-          when(col("jaccard_bp").isNotNull, 1).otherwise(0) +
-          when(col("simhash_hamming").isNotNull, 1).otherwise(0) +
-          when(col("cdc_jaccard_bp").isNotNull, 1).otherwise(0) +
-          when(col("contained_ab_bp").isNotNull ||
-            col("contained_ba_bp").isNotNull, 1).otherwise(0))
-          .cast("long").as("n_modalities"))
-    val out = Engine.eagerCheckpoint(report, lvl)
-    arts.unpersist(false)
-    out
+    Engine.checkpointReleasing(lvl, arts) {
+      // Pre-fill the shared artifact cache BEFORE forking the miners: the
+      // four concurrent miner jobs otherwise RACE the unfilled cache, and
+      // every task that loses a partition's block-write lock sits BLOCKED
+      // in a task slot until the winner finishes computing it — with
+      // cores-many cache partitions and four racing jobs, most of the
+      // executor is stalled lock-waiting exactly when the miners' real
+      // stages want slots (r14 per-job attribution: summed task time nearly
+      // doubled without this). One parallel fill job, then every miner reads
+      // warm.
+      arts.count()
+      // The four mined modalities are INDEPENDENT Spark jobs (above the
+      // size floor each miner materializes eagerly) — submit them
+      // concurrently so each miner's driver-side planning overlaps the
+      // others' execution and independent stages share the executor pool.
+      // Composed wall ≈ the slowest miner, not the sum of four (measured
+      // sf0.1: 11.3 s serial → see SURVEY §7.5).
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val fJac = Future(
+        ngramJaccardFromShingles(arts.select(col("doc_id"), col("sh")),
+          jaccardThreshold, lvl))
+      val fSh = Future(
+        simhashPairsFromSigs(arts.select(col("doc_id"), col("sig")),
+          maxHamming, lvl))
+      val fCdc = Future(
+        cdcChunksFromSets(
+          arts.select(col("doc_id"), explode(col("cks")).as("ck")).distinct(),
+          cdcThreshold, lvl))
+      val fCt = Future(
+        containmentFromWindows(
+          arts.select(col("doc_id"), explode(col("whs")).as("h")), lvl))
+      // group-size guard (the df-cap idiom): a degenerate group of
+      // identical texts never squares in the hash self-join, and the
+      // dropped groups are logged (this census runs while the miners do)
+      val hashed = arts.select(col("doc_id"), col("th").as("h"))
+      KeyPairs.warnDropped(hashed, Seq("h"), ExactDupGroupCap, "dedupReport")
+      val ex = KeyPairs.keyPairs(
+          KeyPairs.capKeys(hashed, Seq("h"), ExactDupGroupCap), Seq("h"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          lit(true).as("exact_hit"))
+      val jac = Await.result(fJac, Duration.Inf)
+        .select(col("doc_a"), col("doc_b"), col("jaccard_bp"))
+      val sh = Await.result(fSh, Duration.Inf)
+        .select(col("doc_a"), col("doc_b"),
+          col("hamming").as("simhash_hamming"))
+      val cdc = Await.result(fCdc, Duration.Inf)
+        .select(col("doc_a"), col("doc_b"),
+          col("jaccard_bp").as("cdc_jaccard_bp"))
+      val ct = Await.result(fCt, Duration.Inf)
+      val cab = ct.filter(col("doc_a") < col("doc_b"))
+        .select(col("doc_a"), col("doc_b"),
+          col("containment_bp").as("contained_ab_bp"))
+      val cba = ct.filter(col("doc_a") > col("doc_b"))
+        .select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"),
+          col("containment_bp").as("contained_ba_bp"))
+      val keys = Seq("doc_a", "doc_b")
+      ex.join(jac, keys, "full").join(sh, keys, "full")
+        .join(cdc, keys, "full")
+        .join(cab, keys, "full").join(cba, keys, "full")
+        .select(col("doc_a"), col("doc_b"),
+          coalesce(col("exact_hit"), lit(false)).as("is_exact"),
+          col("jaccard_bp"), col("simhash_hamming"), col("cdc_jaccard_bp"),
+          col("contained_ab_bp"), col("contained_ba_bp"),
+          (when(coalesce(col("exact_hit"), lit(false)), 1).otherwise(0) +
+            when(col("jaccard_bp").isNotNull, 1).otherwise(0) +
+            when(col("simhash_hamming").isNotNull, 1).otherwise(0) +
+            when(col("cdc_jaccard_bp").isNotNull, 1).otherwise(0) +
+            when(col("contained_ab_bp").isNotNull ||
+              col("contained_ba_bp").isNotNull, 1).otherwise(0))
+            .cast("long").as("n_modalities"))
+    }
   }
 
   /** AUDIT-mode dedup report — the "explain the pairs I already mined"
@@ -1074,21 +1026,19 @@ object TextOps {
       .select(col("doc_id"), col("sig"),
         col("bk.band").as("band"), col("bk.key").as("key"))
       .persist(lvl)
-    val out = Engine.eagerCheckpoint(simhashPairsFrom(banded, maxHamming), lvl)
-    banded.unpersist(true)
-    out
+    Engine.checkpointReleasing(lvl, banded)(
+      simhashPairsFrom(banded, maxHamming))
   }
 
   /** The banded bucket self-join + popcount verify over the cached
-    * banded-signature relation. */
+    * banded-signature relation. Uncapped: the all-pairs oracle is exact,
+    * and a bucket cap would drop true pairs from it silently. */
   private def simhashPairsFrom(banded: DataFrame,
       maxHamming: Int): DataFrame = {
     require(maxHamming < SimhashBands,
       s"banded recall is exact only below $SimhashBands corrupted bands " +
         s"(got $maxHamming)")
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
+    KeyPairs.keyPairs(banded, Seq("band", "key"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
       .distinct()
@@ -1096,6 +1046,18 @@ object TextOps {
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long")
           .as("hamming"))
       .filter(col("hamming") <= maxHamming)
+  }
+
+  /** MinHash signatures exploded onto their 2 band buckets — THE band-key
+    * encoding (`"<band>|<mh>_<mh>"`), one definition shared by the batch
+    * pair miner, the incremental op, and the census in QueriesSpec so the
+    * key layout can never silently drift between them. */
+  private[graft] def bandBuckets(sigs: DataFrame): DataFrame = {
+    val bands = (0 until MinhashBands).map { b =>
+      val cs = (0 until MinhashRows).map(r => col(s"mh${b * MinhashRows + r}"))
+      concat(lit(s"$b|"), concat_ws("_", cs: _*))
+    }
+    sigs.select(col("doc_id"), explode(array(bands: _*)).as("bucket"))
   }
 
   /** MinHash-LSH banded candidate generation + exact Jaccard verify: the
@@ -1109,93 +1071,45 @@ object TextOps {
     * `maxBucketSize` is standard LSH hygiene at scale: a degenerate band
     * value (think empty-ish documents all hashing alike) squares in the
     * bucket self-join, so buckets holding more members than the cap are
-    * DROPPED from candidate generation — never silently: each run logs how
-    * many buckets/memberships the cap removed. A dropped bucket trades its
-    * (mostly junk) pairs for bounded cost; members still pair through their
-    * OTHER band unless both collide hot.
-    *
-    * `isinLimit` bounds the hot-bucket EXCLUSION plan: up to this many hot
-    * buckets are excluded with a literal `isin` (plan-size-safe for the
-    * realistic handful); above it — a degenerate corpus with thousands of
-    * hot buckets — they ship as a broadcast anti-join instead, keeping the
-    * plan constant-size at any hot count. */
-  /** MinHash signatures exploded onto their 2 band buckets — THE band-key
-    * encoding (`"<band>|<mh>_<mh>"`), one definition shared by the batch
-    * pair miner, the incremental op, and the census in QueriesSpec so the
-    * key layout can never silently drift between them. */
-  private[graft] def bandBuckets(sigs: DataFrame): DataFrame = {
-    val bands = (0 until MinhashBands).map { b =>
-      val cs = (0 until MinhashRows).map(r => col(s"mh${b * MinhashRows + r}"))
-      concat(lit(s"$b|"), concat_ws("_", cs: _*))
-    }
-    sigs.select(col("doc_id"), explode(array(bands: _*)).as("bucket"))
-  }
-
+    * DROPPED from candidate generation ([[KeyPairs.capKeys]]) — never
+    * silently: each run logs how many buckets/memberships the cap
+    * removed. A dropped bucket trades its (mostly junk) pairs for bounded
+    * cost; members still pair through their OTHER band unless both
+    * collide hot. */
   def lshNearDupPairs(spark: SparkSession, dir: String,
-      threshold: Double = DefaultNearDupThreshold, maxBucketSize: Int = 4096,
-      isinLimit: Int = 1000): DataFrame = {
+      threshold: Double = DefaultNearDupThreshold,
+      maxBucketSize: Int = 4096): DataFrame = {
     // persisted (storage medium size-adaptive via Engine.miningLevel):
-    // bucket memberships feed the hot-bucket census, the stats action,
-    // and both sides of the candidate self-join
+    // bucket memberships feed the hot-bucket census, the cap and both
+    // sides of the candidate self-join
     val lvl = Engine.miningLevel(tbl(spark, dir, "documents"))
     // fan-out around the signature/shingle kernels (Engine.fanoutParallel)
     val fdocs = Engine.fanoutParallel(tbl(spark, dir, "documents"))
-    val buckets = bandBuckets(minhashSignaturesOf(fdocs)).persist(lvl)
-    // hot-bucket census — tiny by definition (only buckets over the cap),
-    // so it is collected ONCE and excluded via a literal filter: an
-    // anti-join against the census relation would re-execute the census
-    // aggregation a second time (one action for the stats, one inside the
-    // join), a full extra pass over the bucket table per call
-    val hot = buckets.groupBy("bucket").agg(count(lit(1)).as("n_members"))
-      .filter(col("n_members") > maxBucketSize)
-      .collect()
-    if (hot.nonEmpty)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"lshNearDupPairs: dropped ${hot.length} bucket(s) over " +
-          s"$maxBucketSize members (${hot.map(_.getLong(1)).sum} memberships) " +
-          "from candidate generation")
-    // ≤ |memberships|/cap hot buckets can exist; a literal isin is right
-    // for the realistic handful, but a degenerate corpus (millions of
-    // stub docs) could produce thousands — beyond the plan-size-safe
-    // `isinLimit`, ship them as a broadcast anti-join instead of a giant
-    // literal (path pinned by the pathological-corpus spec in QueriesSpec)
-    val kept =
-      if (hot.isEmpty) buckets
-      else if (hot.length <= isinLimit)
-        buckets.filter(!col("bucket").isin(hot.map(_.getString(0)).toSeq: _*))
-      else {
-        import spark.implicits._
-        buckets.join(
-          broadcast(hot.map(_.getString(0)).toSeq.toDF("bucket")),
-          Seq("bucket"), "left_anti")
-      }
-    val cand = kept.as("a").join(kept.as("b"),
-        col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val buckets = KeyPairs.persistByKey(
+      bandBuckets(minhashSignaturesOf(fdocs)), Seq("bucket"), lvl)
     // exact verify on the candidates only (persisted: used by both join
-    // sides; freed once the result materializes)
+    // sides)
     val docs = fdocs
       .select(col("doc_id"), shingles(col("text")).as("sh"))
       .persist(lvl)
-    val result = cand
-      .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
-      .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
-      .withColumn("common",
-        size(array_intersect(col("da.sh"), col("db.sh"))).cast("long"))
-      .withColumn("union_sz",
-        size(array_union(col("da.sh"), col("db.sh"))).cast("long"))
-      .filter(col("common").cast("double") / col("union_sz") >= threshold)
-      .select(col("doc_a"), col("doc_b"),
-        floor(lit(10000.0) * col("common") / col("union_sz")).cast("long")
-          .as("jaccard_bp"))
-    // same eager-job materialization + deterministic cleanup as
-    // dedupNgramJaccard (see comment there)
-    val out = Engine.eagerCheckpoint(result, lvl)
-    docs.unpersist(true)
-    buckets.unpersist(true)
-    out
+    Engine.checkpointReleasing(lvl, buckets, docs) {
+      KeyPairs.warnDropped(buckets, Seq("bucket"), maxBucketSize,
+        "lshNearDupPairs")
+      KeyPairs.keyPairs(KeyPairs.capKeys(buckets, Seq("bucket"),
+          maxBucketSize), Seq("bucket"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
+        .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
+        .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
+        .withColumn("common",
+          size(array_intersect(col("da.sh"), col("db.sh"))).cast("long"))
+        .withColumn("union_sz",
+          size(array_union(col("da.sh"), col("db.sh"))).cast("long"))
+        .filter(col("common").cast("double") / col("union_sz") >= threshold)
+        .select(col("doc_a"), col("doc_b"),
+          floor(lit(10000.0) * col("common") / col("union_sz")).cast("long")
+            .as("jaccard_bp"))
+    }
   }
 
   /** INCREMENTAL dedup — the production shape at 100 TB: a NEW batch (the
@@ -1240,11 +1154,8 @@ object TextOps {
     val lvl = Engine.miningLevel(docs)
     val fresh = docs.filter(col("doc_id") >= splitId).persist(lvl)
     val seen = docs.filter(col("doc_id") < splitId).persist(lvl)
-    val out = Engine.eagerCheckpoint(
-      dedupIncrementalOf(fresh, seen, threshold, containment), lvl)
-    fresh.unpersist(true)
-    seen.unpersist(true)
-    out
+    Engine.checkpointReleasing(lvl, fresh, seen)(
+      dedupIncrementalOf(fresh, seen, threshold, containment))
   }
 
   /** [[dedupIncremental]] over explicit (fresh, seen) relations — lazy:
@@ -1692,13 +1603,12 @@ object TextOps {
     // re-exploding from the cache is one cheap kernel pass per consumer.
     val lvl = Engine.miningLevel(tbl(spark, dir, "documents"))
     val toks = lmTokens(spark, dir).persist(lvl)
-    val occ = lmOccurrences(toks)
-    val big = Engine.eagerCheckpoint(
-      occ.groupBy("term").agg(count(lit(1)).as("cb")), lvl)
-    val out = Engine.eagerCheckpoint(
-      lmScoreFrom(occ, big, lmVocab(toks)), lvl)
-    toks.unpersist(true)
-    out
+    Engine.checkpointReleasing(lvl, toks) {
+      val occ = lmOccurrences(toks)
+      val big = Engine.eagerCheckpoint(
+        occ.groupBy("term").agg(count(lit(1)).as("cb")), lvl)
+      lmScoreFrom(occ, big, lmVocab(toks))
+    }
   }
 
   /** Deterministic stratified sampling — fixed per-(lang, decile) quotas
@@ -1977,12 +1887,10 @@ object TextOps {
       .agg(count(lit(1)).as("shared"),
         sum(col("a.w") * col("b.w")).as("dotp"))
       .filter(col("shared") >= minShared)
-      .join(norms.select(col("doc_id"), col("nrm").as("nrm_a")),
-        col("doc_a") === col("doc_id")).drop("doc_id")
-      .join(norms.select(col("doc_id"), col("nrm").as("nrm_b")),
-        col("doc_b") === col("doc_id")).drop("doc_id")
+      .join(norms.as("na"), col("doc_a") === col("na.doc_id"))
+      .join(norms.as("nb"), col("doc_b") === col("nb.doc_id"))
       .select(col("doc_a"), col("doc_b"), col("shared"),
-        round(col("dotp") / (col("nrm_a") * col("nrm_b")), 6).as("cos_sim"))
+        round(col("dotp") / (col("na.nrm") * col("nb.nrm")), 6).as("cos_sim"))
   }
 
   /** Join-output rows per reduce task the pair expansion aims for. The
@@ -2152,8 +2060,9 @@ object TextOps {
     // tokenize→tf→df pipeline per subtree
     val lvl = Engine.miningLevel(docs)
     val w = cosineIndexOf(docs, dfCapFrac).persist(lvl)
-    // blocking unpersist as in dedupNgramJaccard, also when a job fails
-    try {
+    val partsKey = "spark.sql.shuffle.partitions"
+    val prevParts = spark.conf.get(partsKey)
+    try Engine.checkpointReleasing(lvl, w) {
       // one cheap one-row agg over the index ([[cosineStats]]) — this
       // narrow job also fills the cache before the heavy join reads it.
       // Sizing and SHAPING the job from measured stats is the
@@ -2180,24 +2089,22 @@ object TextOps {
         recordCosinePlan(s"""{"path":"kernel","blocks":${kernelBlocks.get},""" +
           s""""sum_df2":$sumDf2,"max_df":$maxDf,"vocab":$vocabN,""" +
           s""""idx_rows":$idxRows,"n_docs":$nDocs,$sized"cores":$cores}""")
-        Engine.eagerCheckpoint(
-          cosinePairsKernelFrom(w, minShared, kernelBlocks.get, vocabN.toInt),
-          lvl)
+        cosinePairsKernelFrom(w, minShared, kernelBlocks.get, vocabN.toInt)
       } else {
         val expandParts = cosineExpandParts(sumDf2, cores)
         val salted = maxDf > CosineBlockSize
-        // The salted (doc_a, doc_b) pair aggregation sits behind an
-        // Exchange whose task count is spark.sql.shuffle.partitions, so
-        // it is raised for THIS query's execution only (set → run →
-        // restore): a session-wide raise was measured in round 7 to
-        // inflate every small shuffle in the run (9.4 s vs 1.5 s on this
-        // very query at sf0.1). A `repartition` before the aggregation
-        // would drop its partial (map-side) aggregation, and the
-        // DataFrame API has no per-aggregation partition count. The plain
-        // path needs no raise: its pair aggregation runs on the doc_id
-        // spread of the expansion ([[expansionInput]], `expandParts`
-        // tasks) with no Exchange in between, so a raise there would only
-        // size the norms aggregation, which AQE coalesces anyway.
+        // The salted (doc_a, doc_b) pair aggregation sits behind an Exchange
+        // whose task count is spark.sql.shuffle.partitions, so it is raised for
+        // THIS query's execution only (set here, restored once the pairs are
+        // checkpointed): a session-wide raise was measured in round 7 to
+        // inflate every small shuffle in the run (9.4 s vs 1.5 s on this very
+        // query at sf0.1). A `repartition` before the aggregation would drop
+        // its partial (map-side) aggregation, and the DataFrame API has no
+        // per-aggregation partition count. The plain path needs no raise: its
+        // pair aggregation runs on the doc_id spread of the expansion
+        // ([[expansionInput]], `expandParts` tasks) with no Exchange in
+        // between, so a raise there would only size the norms aggregation,
+        // which AQE coalesces anyway.
         val joinParts = math.min(math.max(
           (sumDf2 / CosineJoinRowsPerTask).toInt + 1, cores), 4096)
         recordCosinePlan(
@@ -2206,19 +2113,13 @@ object TextOps {
             s""""idx_rows":$idxRows,$sized"expand_parts":$expandParts,""" +
             (if (salted) s""""join_parts":$joinParts,""" else "") +
             s""""cores":$cores}""")
-        def pairs() = Engine.eagerCheckpoint(
-          cosinePairsFrom(w, minShared, salted, expandParts), lvl)
-        if (!salted) pairs()
-        else {
-          val key = "spark.sql.shuffle.partitions"
-          val prev = spark.conf.get(key)
-          try {
-            spark.conf.set(key, joinParts.toString)
-            pairs()
-          } finally spark.conf.set(key, prev)
-        }
+        if (salted) spark.conf.set(partsKey, joinParts.toString)
+        cosinePairsFrom(w, minShared, salted, expandParts)
       }
-    } finally w.unpersist(true)
+    } finally {
+      if (spark.conf.get(partsKey) != prevParts)
+        spark.conf.set(partsKey, prevParts)
+    }
   }
 
   /** Strategy dispatch for the spec/plan surfaces, with the plain

@@ -76,11 +76,9 @@ object PushFilterThroughAsOf
   }
 }
 
-/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Registered both through
-  * `GraftExtensions` (injectPlannerStrategy, for sessions configured with
-  * spark.sql.extensions) and lazily through `spark.experimental
-  * .extraStrategies` by `AsOfJoin.asof` (public API — keeps plain
-  * sessions working). */
+/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Registered through
+  * `GraftExtensions` (injectPlannerStrategy), which `graft.Engine.builder`
+  * configures as spark.sql.extensions. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsOfJoinPlan =>

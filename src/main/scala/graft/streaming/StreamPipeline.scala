@@ -91,32 +91,29 @@ object StreamPipeline {
     }
   }
 
-  /** One micro-batch of the full dataflow (also the batch entry point):
-    * caches the batch's [[Pipeline.byObservation]], then [[writeSinks]]. */
-  def processBatch(observations: DataFrame, catalog: MetadataCatalog,
-      sinks: Sinks, batchId: Long): Unit = {
+  /** One micro-batch of the full dataflow, the body of [[start]]'s
+    * `foreachBatch`: caches the batch's [[Pipeline.byObservation]], writes
+    * the wide, dead-letter and event sinks (narrow projections of it: 3
+    * write jobs per batch with a partitioned wide sink, regardless of
+    * feature count), then steps the alerts ([[alertBatch]]) with their
+    * state under `checkpointDir`. */
+  private[graft] def runBatch(observations: DataFrame, catalog: MetadataCatalog,
+      sinks: Sinks, checkpointDir: String, batchId: Long): Unit = {
     val byObs = Pipeline.byObservation(
       Pipeline.pairRelation(observations, catalog)).cache()
-    try writeSinks(byObs, catalog, sinks, batchId)
-    finally byObs.unpersist()
-  }
-
-  /** The wide, dead-letter and event sinks, narrow projections of one
-    * cached per-observation relation: 3 write jobs per batch with a
-    * partitioned wide sink, regardless of feature count. */
-  private def writeSinks(byObs: DataFrame, catalog: MetadataCatalog,
-      sinks: Sinks, batchId: Long): Unit = {
-    val featureObs = Pipeline.featureRows(byObs)
-    sinks.writeWide(featureObs, catalog, batchId)
-    sinks.writeDeadLetter(Pipeline.deadLetterRows(byObs), batchId)
-    sinks.writeEvents(Pipeline.eventJson(featureObs, catalog), batchId)
+    try {
+      val featureObs = Pipeline.featureRows(byObs)
+      sinks.writeWide(featureObs, catalog, batchId)
+      sinks.writeDeadLetter(Pipeline.deadLetterRows(byObs), batchId)
+      sinks.writeEvents(Pipeline.eventJson(featureObs, catalog), batchId)
+      alertBatch(byObs, catalog, sinks, checkpointDir, batchId)
+    } finally byObs.unpersist()
   }
 
   /** Start the streaming pipeline over a raw JSON-lines stream: ONE
     * query, `graft-dataflow`, checkpointed under `$checkpointDir/dataflow`
-    * (X1). Each micro-batch re-reads the catalog (G2), caches its
-    * [[Pipeline.byObservation]] once, and hands it to [[writeSinks]] and
-    * then to [[alertBatch]] (G1).
+    * (X1). Each micro-batch re-reads the catalog (G2) and runs
+    * [[runBatch]] on it.
     *
     * With the default Trigger.AvailableNow the query drains what is
     * available and terminates; pass `availableNow = false` for a
@@ -138,13 +135,8 @@ object StreamPipeline {
       .queryName("graft-dataflow")
       .option("checkpointLocation", s"$checkpointDir/dataflow")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val catalog = catalogProvider() // per-batch re-read (G2)
-        val byObs = Pipeline.byObservation(
-          Pipeline.pairRelation(batch.toDF(), catalog)).cache()
-        try {
-          writeSinks(byObs, catalog, sinks, batchId)
-          alertBatch(byObs, catalog, sinks, checkpointDir, batchId)
-        } finally byObs.unpersist()
+        // per-batch catalog re-read (G2)
+        runBatch(batch.toDF(), catalogProvider(), sinks, checkpointDir, batchId)
       }
     Seq((if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start())
   }

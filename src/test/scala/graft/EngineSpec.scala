@@ -91,6 +91,19 @@ class EngineSpec extends SparkSpec {
         "keeping an un-materialized twin of it")
   }
 
+  test("no session mutation from operators: no spark.experimental under graft/operators") {
+    assert(mainSourcesMatching("""\bexperimental\s*\.""".r)
+        .filter(_.startsWith("graft/operators/")) === Seq.empty,
+      "plan custom nodes through GraftExtensions, which Engine.builder " +
+        "injects, instead of registering on the caller's session")
+  }
+
+  test("one hot-key exclusion: no isinLimit in src/main/scala") {
+    assert(mainSourcesMatching("""isinLimit""".r) === Seq.empty,
+      "cap hot keys in the plan (KeyPairs.capKeys), not through a " +
+        "literal-isin / broadcast-anti-join fork")
+  }
+
   test("no JVM-global registries: no TrieMap in src/main/scala") {
     assert(mainSourcesMatching("""TrieMap""".r) === Seq.empty,
       "return the value to the caller instead of keeping it in a " +

@@ -191,8 +191,9 @@ class JdbcSinkSpec extends SparkSpec {
     val badQuote = ObservationRow(aot, "006", 23, dt, "htu21d",
       VectorMap("temp" -> str("o'clock")))
     val sinks = new JdbcTextSinks(url)
-    StreamPipeline.processBatch(Seq(good, bad, badQuote).toDF(),
-      Fixtures.catalog, sinks, 0L)
+    StreamPipeline.runBatch(Seq(good, bad, badQuote).toDF(),
+      Fixtures.catalog, sinks,
+      java.nio.file.Files.createTempDirectory("graft-jdbc-ckpt").toString, 0L)
 
     val rs1 = st.executeQuery("SELECT node_id, sensor, \"temperature\" " +
       "FROM array_of_things_chicago__temperature")

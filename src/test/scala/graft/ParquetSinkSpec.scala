@@ -17,8 +17,9 @@ class ParquetSinkSpec extends SparkSpec {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-parquet-sink").toString
     val sinks = new StreamPipeline.ParquetSinks(dir)
-    StreamPipeline.processBatch(
-      Fixtures.observations.toDF(), Fixtures.catalog, sinks, batchId = 0L)
+    StreamPipeline.runBatch(Fixtures.observations.toDF(), Fixtures.catalog,
+      sinks, Files.createTempDirectory("graft-parquet-sink-ckpt").toString,
+      batchId = 0L)
     dir
   }
 

@@ -128,7 +128,7 @@ class QueriesSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // cap of 1: every bucket with >1 member — i.e. every bucket that can
     // produce a pair — is dropped, so the result must be empty (and the
-    // run exercises the census + anti-join + warn path)
+    // run exercises the census + cap + warn path)
     val allCapped = TextOps.lshNearDupPairs(spark, dir, maxBucketSize = 1)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -140,16 +140,14 @@ class QueriesSpec extends SparkSpec {
     assert(wideCapped === uncapped)
   }
 
-  test("LSH hot-bucket fallback: hot count past isinLimit takes the broadcast anti-join path") {
+  test("LSH hot-bucket cap: hot families drop, the cold pair survives") {
     val spark2 = spark
     import spark2.implicits._
     // pathological stub corpus: 1100 "families" of 3 identical docs — each
     // family's band buckets hold ≥3 members, so with cap=2 they are ALL
     // hot (weakHash is deliberately weak, so families merge into ~150
-    // distinct hot buckets — still far past the isinLimit below, forcing
-    // the broadcast anti-join branch instead of the literal isin) — plus
-    // ONE cold exact-dup pair whose buckets hold 2 members (≤ cap) and
-    // must survive the exclusion
+    // distinct hot buckets) — plus ONE cold exact-dup pair whose buckets
+    // hold 2 members (≤ cap) and must survive the cap
     val tmp = java.nio.file.Files.createTempDirectory("graft-lshhot").toString
     val families = (0 until 1100).flatMap { i =>
       val text = s"fam${i}a fam${i}b fam${i}c fam${i}d"
@@ -161,24 +159,17 @@ class QueriesSpec extends SparkSpec {
     (families ++ cold)
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    // construction check: the census really exceeds the isinLimit used
-    // below — derived through the SAME bandBuckets encoding the operator
-    // uses, so the check cannot drift from production keys
+    // construction check: many buckets really are hot — derived through
+    // the SAME bandBuckets encoding the operator uses, so the check cannot
+    // drift from production keys
     val hotCount = TextOps.bandBuckets(TextOps.minhashSignatures(spark, tmp))
       .groupBy("bucket").count().filter(col("count") > 2).count()
     assert(hotCount > 100, s"stub corpus produced only $hotCount hot buckets")
-    val got = TextOps.lshNearDupPairs(spark, tmp, maxBucketSize = 2,
-        isinLimit = 100)
+    val got = TextOps.lshNearDupPairs(spark, tmp, maxBucketSize = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // only the cold exact pair remains; every family pair was dropped with
     // its hot buckets (bounded-cost trade documented on the operator)
     assert(got.toSeq === Seq((1L, 2L, 10000L)), got.mkString(","))
-    // the literal-isin path on the SAME corpus must agree exactly — the
-    // two exclusion plans are semantically identical
-    val viaIsin = TextOps.lshNearDupPairs(spark, tmp, maxBucketSize = 2,
-        isinLimit = 1000000)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(viaIsin.toSeq === got.toSeq)
   }
 
   test("incremental dedup: fresh batch judged against frozen corpus only") {
@@ -801,6 +792,9 @@ class QueriesSpec extends SparkSpec {
       s"one-byte edit should verify at tiny L1: ${pairs.get((1L, 4L))}")
     assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)),
       s"dissimilar profile survived the verify: $pairs")
+    // a cap of 1 drops every band bucket that could produce a pair
+    assert(Multimodal.perceptualNearDupOf(payloads, maxBucketSize = 1)
+      .count() === 0L)
   }
 
   test("mm perceptual near-dup: injected codec drives the descriptor") {
@@ -1010,6 +1004,16 @@ class QueriesSpec extends SparkSpec {
       java.lang.Long.bitCount(sh(a) ^ sh(b))
     }.sum.toDouble / pairs.length
     assert(avgHam < 6.0, s"near-dup avg hamming $avgHam too high for 16 bits")
+  }
+
+  test("a miner that fails after persisting leaves nothing cached") {
+    val cache = spark.sharedState.cacheManager
+    cache.clearCache()
+    // the recall guard throws once the banded signatures are persisted
+    intercept[IllegalArgumentException] {
+      TextOps.simhashPairs(spark, dir, maxHamming = TextOps.SimhashBands)
+    }
+    assert(cache.isEmpty, "the failed miner left its input cached")
   }
 
   test("jaccardCondSql: exact integer rendering for dyadic thresholds, loud failure otherwise") {
