@@ -1,7 +1,17 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The two-level, runtime-mutable schema registry driving the pipeline
   * (reference: app/mapper.js:120-180, tests/configure_tests.js:36-76).
@@ -14,12 +24,14 @@ import org.apache.spark.sql.functions._
   * (mapper.js:139-140: sensor names and the whole mapping json lowercased;
   * mapper.js:169-172: feature, property, type lowercased).
   *
-  * Exposed denormalized as a single broadcastable mapping relation:
-  *   mappings(sensor, key, feature, property, ptype)
-  * which is the build side of both the validation anti-join (J1) and the
+  * Exposed denormalized as the mappings
+  *   (sensor, key, feature, property, ptype)
+  * that [[lookup]] probes for both the validation anti-join (J1) and the
   * enrichment join (J2). At 100 TB the fact stream is huge but this catalog
-  * is tiny (thousands of rows) — broadcast-hash-join territory, re-read per
-  * micro-batch for the reference's refresh-on-miss semantics (G2).
+  * is tiny (thousands of rows), so the probe is a hash table the tasks
+  * carry. A stream asks its catalog provider again every micro-batch for
+  * the reference's refresh-on-miss semantics (G2); [[MetadataCatalog.fromParquet]]
+  * answers from the catalog it built last while its files are unchanged.
   */
 final case class MetadataCatalog(
     /** (sensor, key) → feature/property/type, lowercased. */
@@ -33,10 +45,11 @@ final case class MetadataCatalog(
 
   import MetadataCatalog._
 
-  def mappingsDF(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    mappings.toDF()
-  }
+  /** The mapping of a (sensor, key) pair as struct<feature, property,
+    * ptype>, NULL when the catalog has none ([[CatalogLookupExpr]]). */
+  def lookup(sensor: Column, key: Column): Column =
+    ColumnBridge.column(CatalogLookupExpr(ColumnBridge.expression(sensor),
+      ColumnBridge.expression(key), mappings))
 
   /** Known sensor names (a sensor absent here ⇒ does_not_exist alert). */
   def sensors: Set[String] = registeredSensors ++ mappings.map(_.sensor)
@@ -110,10 +123,47 @@ object MetadataCatalog {
     fromMaps(sensorMap, featureMap)
   }
 
-  /** Parquet stand-in for the reference's Postgres catalog scan (S3). */
+  /** Parquet stand-in for the reference's Postgres catalog scan (S3).
+    *
+    * Like the reference's in-process dict (app/mapper.js:72-112), the
+    * catalog built last is kept and returned again, with no Spark job,
+    * while the [[fingerprint]] of both directories is unchanged. Any
+    * rewrite of either directory changes it and forces a reload, so a
+    * returned catalog is never older than the files it was read from.
+    * The kept value is the immutable catalog: it holds no session. */
   def fromParquet(spark: SparkSession, sensorPath: String,
-      featurePath: String): MetadataCatalog =
-    fromDataFrames(spark.read.parquet(sensorPath), spark.read.parquet(featurePath))
+      featurePath: String): MetadataCatalog = {
+    val current = fingerprint(spark, Seq(sensorPath, featurePath))
+    Option(lastParquet.get).filter(l => current.contains(l._1)).map(_._2)
+      .getOrElse {
+        val catalog = fromDataFrames(spark.read.parquet(sensorPath),
+          spark.read.parquet(featurePath))
+        current.foreach(f => lastParquet.set(f -> catalog))
+        catalog
+      }
+  }
+
+  /** The fingerprint of the last catalog [[fromParquet]] built, and the
+    * catalog. */
+  private val lastParquet =
+    new AtomicReference[(Seq[Seq[(String, Long, Long)]], MetadataCatalog)]
+
+  /** Per directory, its leaf files (qualified path, length, modification
+    * time) in path order, from one recursive listing each. The listing
+    * runs before the read, so a write that lands in between changes the
+    * next call's fingerprint. None when a path is not listable (missing,
+    * or a glob): the read then reports it. */
+  private def fingerprint(spark: SparkSession,
+      dirs: Seq[String]): Option[Seq[Seq[(String, Long, Long)]]] =
+    try Some(dirs.map { d =>
+      val path = new Path(d)
+      val files = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(path, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toSeq.sorted
+    })
+    catch { case _: FileNotFoundException => None }
 
   /** Live-JDBC catalog scan — the reference's actual Postgres read path
     * (`SELECT * FROM sensor__sensor_metadata` / `sensor__feature_metadata`,
@@ -140,4 +190,51 @@ object MetadataCatalog {
           StructField("type", StringType))))).as("observed_properties"))
     fromDataFrames(sensors, features)
   }
+}
+
+/** The enrichment join (J2) as a hash probe: the [[MetadataCatalog.Mapping]]
+  * of (`left` = sensor, `right` = key) as struct<feature, property, ptype>,
+  * NULL when there is none or either side is NULL. The expression carries
+  * the mappings, so they reach the executors inside the stage's task binary,
+  * which Spark broadcasts once per stage: no job collects or broadcasts a
+  * build side. A (sensor, key) has one mapping, as in the reference's dict
+  * (app/mapper.js:139-140); of entries that collide once lowercased, the
+  * later one in `mappings` wins. */
+case class CatalogLookupExpr(left: Expression, right: Expression,
+    mappings: Seq[MetadataCatalog.Mapping]) extends BinaryExpression {
+
+  @transient private lazy val table = {
+    val t = new java.util.HashMap[UTF8String,
+      java.util.HashMap[UTF8String, InternalRow]]()
+    def utf(s: String) = UTF8String.fromString(s)
+    mappings.foreach { m =>
+      t.computeIfAbsent(utf(m.sensor), _ => new java.util.HashMap())
+        .put(utf(m.key), InternalRow(utf(m.feature), utf(m.property),
+          utf(m.ptype)))
+    }
+    t
+  }
+
+  def lookup(sensor: UTF8String, key: UTF8String): InternalRow = {
+    val keys = table.get(sensor)
+    if (keys == null) null else keys.get(key)
+  }
+
+  override def dataType: DataType = new StructType()
+    .add("feature", StringType).add("property", StringType)
+    .add("ptype", StringType)
+  override def nullable: Boolean = true
+  override def nullSafeEval(sensor: Any, key: Any): Any =
+    lookup(sensor.asInstanceOf[UTF8String], key.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("catalog", this)
+    nullSafeCodeGen(ctx, ev, (sensor, key) =>
+      s"""${ev.value} = $self.lookup($sensor, $key);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+  // the mappings stay out of plan strings
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
+  override def prettyName: String = "catalog_lookup"
+  override protected def withNewChildrenInternal(l: Expression,
+      r: Expression): CatalogLookupExpr = copy(left = l, right = r)
 }

@@ -25,11 +25,17 @@ private[operators] object KeyPairs {
     * distinct docs hold — the df cap that keeps a hot key (boilerplate
     * window, degenerate band bucket) from squaring in the self-join.
     * Planned, never collected: an aggregate, a filter and an inner join
-    * back, so the cap costs no action of its own and no literal list. */
-  def capKeys(rel: DataFrame, keys: Seq[String], cap: Long): DataFrame = {
+    * back, so the cap costs no action of its own and no literal list.
+    * Keys held by fewer than `minDocs` docs drop too; the default 1 keeps
+    * singleton keys, which the size censuses count. */
+  def capKeys(rel: DataFrame, keys: Seq[String], cap: Long,
+      minDocs: Long = 1): DataFrame = {
+    val kept =
+      if (minDocs > 1) col("ndocs").between(minDocs, cap)
+      else col("ndocs") <= cap
     val eligible = rel.groupBy(keys.map(col): _*)
       .agg(count_distinct(col("doc_id")).as("ndocs"))
-      .filter(col("ndocs") <= cap).select(keys.map(col): _*)
+      .filter(kept).select(keys.map(col): _*)
     rel.join(eligible, keys)
   }
 

@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * the recursion: `valid` and `misfit` are two filters of the same relation.
   *
   * Scale: the fact side is arbitrarily large; the catalog side is tiny and
-  * broadcast. The feature (A1), dead-letter (K2) and status (G1) rows
-  * share one shuffle, the regroup by observation identity
-  * [[byObservation]], as the reference derives all three from one parse
-  * of a record (app/mapper.js:250-310, 429-489). No driver collects.
+  * travels with the tasks as a hash table. The feature (A1), dead-letter
+  * (K2) and status (G1) rows share one shuffle, the regroup by observation
+  * identity [[byObservation]], as the reference derives all three from one
+  * parse of a record (app/mapper.js:250-310, 429-489). No driver collects.
   */
 object Pipeline {
 
@@ -50,19 +50,14 @@ object Pipeline {
       .select(obs ++ Seq(col("pos"), col("key"),
         col("value.lex").as("lex"), col("value.jstype").as("jstype")): _*)
 
-  /** J1+J2 — broadcast equi-join against the catalog: attaches
-    * (feature, property, ptype); unmatched pairs (unknown sensor or unknown
-    * key) keep feature NULL, which IS the validation anti-join result
-    * (app/mapper.js:411-419 / 159-179). */
-  def enrich(pairs: DataFrame, catalog: MetadataCatalog): DataFrame = {
-    val m = broadcast(catalog.mappingsDF(pairs.sparkSession)
-      .withColumnRenamed("sensor", "c_sensor")
-      .withColumnRenamed("key", "c_key"))
-    pairs.join(m,
-      pairs("sensor") === m("c_sensor") && pairs("key") === m("c_key"),
-      "left")
-      .drop("c_sensor", "c_key")
-  }
+  /** J1+J2 — the catalog probed per pair ([[MetadataCatalog.lookup]]):
+    * attaches (feature, property, ptype); unmatched pairs (unknown sensor or
+    * unknown key) keep feature NULL, which IS the validation anti-join
+    * result (app/mapper.js:411-419 / 159-179). A projection, so it fuses
+    * into the parse stage and builds nothing per batch. */
+  def enrich(pairs: DataFrame, catalog: MetadataCatalog): DataFrame =
+    pairs.withColumn("catalog", catalog.lookup(col("sensor"), col("key")))
+      .select("*", "catalog.*").drop("catalog")
 
   /** C4 — exact JS coercion (see Coerce): adds value + error columns. */
   def coerce(enriched: DataFrame): DataFrame =
@@ -84,8 +79,8 @@ object Pipeline {
     classified.filter(col("misfit"))
 
   /** Full fused pair relation from raw observations. One pass: normalize →
-    * explode → broadcast-join → coerce → classify; Catalyst fuses everything
-    * but the join build into a single WholeStageCodegen span. */
+    * explode → catalog probe → coerce → classify, all in one
+    * WholeStageCodegen span. */
   def pairRelation(observations: DataFrame, catalog: MetadataCatalog): DataFrame =
     classify(coerce(enrich(explodePairs(normalize(observations)), catalog)))
 

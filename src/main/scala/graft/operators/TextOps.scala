@@ -540,11 +540,13 @@ object TextOps {
           arts.select(col("doc_id"), explode(col("whs")).as("h")), lvl))
       // group-size guard (the df-cap idiom): a degenerate group of
       // identical texts never squares in the hash self-join, and the
-      // dropped groups are logged (this census runs while the miners do)
+      // dropped groups are logged (this census runs while the miners do).
+      // A singleton group pairs with nothing, so it stays out of the join.
       val hashed = arts.select(col("doc_id"), col("th").as("h"))
       KeyPairs.warnDropped(hashed, Seq("h"), ExactDupGroupCap, "dedupReport")
       val ex = KeyPairs.keyPairs(
-          KeyPairs.capKeys(hashed, Seq("h"), ExactDupGroupCap), Seq("h"))
+          KeyPairs.capKeys(hashed, Seq("h"), ExactDupGroupCap, minDocs = 2),
+          Seq("h"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
           lit(true).as("exact_hit"))
       val jac = Await.result(fJac, Duration.Inf)

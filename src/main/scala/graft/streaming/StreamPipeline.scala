@@ -13,8 +13,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * round-trip (617 LoC, SURVEY.md §3.3) are subsumed by Structured
   * Streaming: micro-batch scheduling, offset WAL (`checkpointLocation`),
   * and restart semantics need zero engine code. Catalog refresh-on-miss
-  * (G2) degenerates to re-reading the catalog every micro-batch inside
-  * foreachBatch — an observation is never judged against stale metadata.
+  * (G2) degenerates to asking the catalog provider again every
+  * micro-batch inside foreachBatch — an observation is never judged
+  * against stale metadata. A provider built on
+  * [[MetadataCatalog.fromParquet]] answers from the catalog it built last,
+  * with no Spark job, until a file under either catalog directory changes.
   *
   * The ALERT path runs in the same micro-batch, against the same fresh
   * catalog and off the same cached per-observation relation the sinks
@@ -51,9 +54,21 @@ object StreamPipeline {
     * `partitionBy(network, feature)` write per batch (no driver-side
     * feature loop, no per-feature job fan-out); each partition directory
     * is the analogue of the reference's per-feature Redshift table
-    * (`<network>__<feature>`), rows sorted within partitions on datetime
-    * matching the reference DDL's SORTKEY (tests/configure_tests.js:85-86).
+    * (`<network>__<feature>`, app/mapper.js:319-358), rows sorted within
+    * partitions on datetime matching the reference DDL's SORTKEY
+    * (tests/configure_tests.js:85-86).
     * `readWide` reapplies the catalog-typed column view on top.
+    *
+    * Files per batch: the rows are hash-clustered by (network, feature)
+    * into the session's default parallelism before the write, so each
+    * partition directory gets ONE part file per batch (not one per task,
+    * which cost a file, its checksum and their permission calls per task
+    * and key), while different keys still write on different cores. The
+    * bound: all of one key's rows in a batch go to one task, and a
+    * batch's size is bounded by the trigger (`maxFilesPerTrigger`, or
+    * the source's own limit). The clustering reads the batch's cached
+    * per-observation relation; the writer's sort by the partition
+    * columns is the `sortWithinPartitions`, so the write sorts once.
     *
     * Delivery: at-least-once — foreachBatch can replay a batch after a
     * crash between append and checkpoint commit, duplicating its rows
@@ -66,6 +81,8 @@ object StreamPipeline {
         batchId: Long): Unit =
       featureObs
         .drop("feature_pos")
+        .repartition(featureObs.sparkSession.sparkContext.defaultParallelism,
+          col("network"), col("feature"))
         .sortWithinPartitions("network", "feature", "datetime")
         .write.mode("append")
         .partitionBy("network", "feature")
@@ -93,8 +110,8 @@ object StreamPipeline {
 
   /** One micro-batch of the full dataflow, the body of [[start]]'s
     * `foreachBatch`: caches the batch's [[Pipeline.byObservation]], writes
-    * the wide, dead-letter and event sinks (narrow projections of it: 3
-    * write jobs per batch with a partitioned wide sink, regardless of
+    * the wide, dead-letter and event sinks (projections of it: 3 write
+    * executions per batch with a partitioned wide sink, regardless of
     * feature count), then steps the alerts ([[alertBatch]]) with their
     * state under `checkpointDir`. */
   private[graft] def runBatch(observations: DataFrame, catalog: MetadataCatalog,
@@ -112,8 +129,8 @@ object StreamPipeline {
 
   /** Start the streaming pipeline over a raw JSON-lines stream: ONE
     * query, `graft-dataflow`, checkpointed under `$checkpointDir/dataflow`
-    * (X1). Each micro-batch re-reads the catalog (G2) and runs
-    * [[runBatch]] on it.
+    * (X1). Each micro-batch asks `catalogProvider` for the catalog (G2)
+    * and runs [[runBatch]] on it.
     *
     * With the default Trigger.AvailableNow the query drains what is
     * available and terminates; pass `availableNow = false` for a
@@ -135,7 +152,7 @@ object StreamPipeline {
       .queryName("graft-dataflow")
       .option("checkpointLocation", s"$checkpointDir/dataflow")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // per-batch catalog re-read (G2)
+        // per-batch catalog ask (G2)
         runBatch(batch.toDF(), catalogProvider(), sinks, checkpointDir, batchId)
       }
     Seq((if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start())

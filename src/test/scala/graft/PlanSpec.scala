@@ -621,4 +621,23 @@ class PlanSpec extends SparkSpec {
     assert(tops.map(p => Plans.collect(p) { case r: ReusedExchangeExec => r }.size)
       .sum >= 1, s)
   }
+
+  test("wide sink: the partitioned write sorts once — its clustering exchange adds no Sort") {
+    import graft.streaming.StreamPipeline
+    import org.apache.spark.sql.execution.SortExec
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-wide-sort")
+    try {
+      val run = executed(StreamPipeline.runBatch(Fixtures.observations.toDF(),
+        Fixtures.catalog, new StreamPipeline.ParquetSinks(s"$out/sinks"),
+        s"$out/ckpt", batchId = 0L))
+      val wide = run.executions.map(_.executedPlan)
+        .filter(_.toString.contains(s"$out/sinks/wide"))
+      assert(wide.size === 1)
+      // the sortWithinPartitions on (network, feature, datetime) already
+      // satisfies the writer's ordering by the partition columns
+      assert(Plans.collect(wide.head) { case s: SortExec => s }.size === 1,
+        wide.head.treeString)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
+  }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** End-to-end streaming suite: the 8 canonical observations fed as JSON
   * through a MemoryStream, asserting the reference integration truths
@@ -152,12 +153,12 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("one read of the batch: the status spool is derived from the cached pair relation") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
     object Plans extends AdaptiveSparkPlanHelper
     val root = Files.createTempDirectory("graft-one-read")
     val input = Files.createDirectories(root.resolve("in"))
@@ -196,16 +197,53 @@ class StreamingSpec extends SparkSpec {
           case _ => false
         }, s"$sink reads ${leaves.map(_.nodeName)}")
       }
-    // the batch's only shuffle is the regroup inside that cache: each
+    // the batch shuffles twice: the regroup inside that cache, and the
+    // wide sink's clustering by (network, feature) over the cache; each
     // cached plan counted once, next to the plans that read it
-    def shuffles(p: SparkPlan): Int =
-      Plans.collect(p) { case e: ShuffleExchangeExec => e }.size
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      Plans.collect(p) { case e: ShuffleExchangeExec => e }
     val cached = scans.map(_.relation).distinct
-    assert(plans.map(shuffles).sum +
-      cached.map(r => shuffles(r.cachedPlan)).sum === 1)
+    assert(plans.map(shuffles(_).size).sum +
+      cached.map(r => shuffles(r.cachedPlan).size).sum === 2)
     val perObsCache = cached.filter(_.output.map(_.name) == perObservation)
     assert(perObsCache.size === 1)
-    assert(shuffles(perObsCache.head.cachedPlan) === 1)
+    assert(shuffles(perObsCache.head.cachedPlan).size === 1)
+    val wide = shuffles(plans.filter(_.toString.contains(s"$root/out/wide")).head)
+    assert(wide.size === 1)
+    assert(wide.head.outputPartitioning.asInstanceOf[HashPartitioning]
+      .expressions.flatMap(_.references.map(_.name)) ===
+      Seq("network", "feature"))
+  }
+
+  test("wide sink: each micro-batch writes at most one part file per network/feature directory") {
+    val root = Files.createTempDirectory("graft-wide-files")
+    val input = Files.createDirectories(root.resolve("in"))
+    // two files, two micro-batches; ten nodes per fixture observation so
+    // each (network, feature) has rows in several regroup partitions
+    (0 until 2).foreach { f =>
+      Files.write(input.resolve(s"obs$f.json"), (0 until 8).map(obsJson)
+        .flatMap(j => (0 until 10).map(n =>
+          j.replace("\"node_id\":\"", s"\"node_id\":\"f$f-n$n-")))
+        .mkString("\n").getBytes("UTF-8"))
+    }
+    StreamPipeline.start(
+        spark.readStream.option("maxFilesPerTrigger", 1L).text(input.toString),
+        () => Fixtures.catalog,
+        new StreamPipeline.ParquetSinks(s"$root/out"), s"$root/ckpt")
+      .foreach(_.awaitTermination(60000))
+    // a part file's name carries the id of the write job, one per batch
+    val jobId = "part-\\d+-([0-9a-f-]{36})".r.unanchored
+    val dirs = Files.walk(root.resolve("out/wide")).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .groupBy(_.getParent)
+    assert(dirs.size === 5)
+    dirs.foreach { case (dir, files) =>
+      val perBatch = files.groupBy(_.getFileName.toString match {
+        case jobId(id) => id
+      })
+      assert(perBatch.size === 2, dir)
+      assert(perBatch.values.forall(_.size == 1), s"$dir: ${files.sorted}")
+    }
   }
 
   test("connector contract: Kafka-shaped stream drives the full pipeline") {
