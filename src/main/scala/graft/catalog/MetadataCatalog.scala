@@ -108,7 +108,8 @@ object MetadataCatalog {
     *   sensors(name string, observed_properties map<string,string>)
     *   features(name string, observed_properties array<struct<name,type>>)
     * Collected to the driver — the catalog is small by construction (it is
-    * the reference's in-process dict); broadcast back out for the joins.
+    * the reference's in-process dict); the enrichment probe carries it to
+    * the executors in the task binary ([[CatalogLookupExpr]]).
     */
   def fromDataFrames(sensors: DataFrame, features: DataFrame): MetadataCatalog = {
     val sensorMap: Map[String, Map[String, String]] =
@@ -169,8 +170,8 @@ object MetadataCatalog {
     * (`SELECT * FROM sensor__sensor_metadata` / `sensor__feature_metadata`,
     * app/mapper.js:131-147/159-179, seeded by tests/configure_tests.js:
     * 38-75). Both tables are KB-scale by construction, so a single-partition
-    * `spark.read.jdbc` is the right shape — the result is collected and
-    * broadcast back out like every other catalog load. The
+    * `spark.read.jdbc` is the right shape — the result is collected like
+    * every other catalog load ([[fromDataFrames]]). The
     * `observed_properties` payloads arrive as JSON text and parse with the
     * same shapes the parquet loader reads natively. */
   def fromJdbc(spark: SparkSession, url: String,

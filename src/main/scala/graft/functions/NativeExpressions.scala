@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the engine's hot scalar kernels.
@@ -479,26 +479,6 @@ object NativeFunctions {
     CdcChunkKeysExpr(exprs.head,
       intLit(exprs(1), "graft_cdc_chunk_keys", "windowTokens"),
       longLit(exprs(2), "graft_cdc_chunk_keys", "boundaryMod"))
-  }
-
-  /** Register as SQL functions on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_weak_hash", exprs => WeakHashExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProductExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalizeExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => ShinglesExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_sig", simhashSigFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_window_hashes", windowHashesFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_window_strings", windowStringsFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cdc_chunk_keys", cdcChunkKeysFromSql, "built-in")
   }
 }
 

@@ -75,9 +75,6 @@ object Pipeline {
   def validPairs(classified: DataFrame): DataFrame =
     classified.filter(!col("misfit") && col("key").isNotNull)
 
-  def misfitPairs(classified: DataFrame): DataFrame =
-    classified.filter(col("misfit"))
-
   /** Full fused pair relation from raw observations. One pass: normalize →
     * explode → catalog probe → coerce → classify, all in one
     * WholeStageCodegen span. */
@@ -185,23 +182,6 @@ object Pipeline {
               concat(lit("\""), jsonEscape(e.getField("value")), lit("\"")))
               .otherwise(e.getField("value"))))),
         lit("}}")))
-  }
-
-  /** K1 — pivot-to-wide for one (network, feature): catalog-driven columns
-    * (absent properties exist as typed NULLs), obs identity + one column per
-    * declared property, cast to the declared Spark type
-    * (DDL tests/configure_tests.js:79-161). */
-  def widen(classified: DataFrame, catalog: MetadataCatalog,
-      feature: String): DataFrame = {
-    val props = catalog.propsOf(feature)
-    val wide = validPairs(classified)
-      .filter(col("feature") === feature)
-      .groupBy(obs: _*)
-      .pivot("property", props.map(_.property))
-      .agg(first(col("value")))
-    props.foldLeft(wide) { (df, p) =>
-      df.withColumn(p.property, col(s"`${p.property}`").cast(sparkType(p.ptype)))
-    }.withColumn("meta_id", col("meta_id").cast("double"))
   }
 
   /** K1 off the feature rows: typed wide projection of one feature from

@@ -28,8 +28,6 @@ object SimilarityOps {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** The shared kNN emission contract (knnBruteForce/knnLsh/knnIvf/knnPq):
     * per-query rank on (`cos_sim` desc, vec_id) — deterministic tie-break —
     * keep k, 6-dp continuum rounding, long rank. One definition so the

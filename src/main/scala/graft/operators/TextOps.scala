@@ -685,7 +685,7 @@ object TextOps {
 
   /** Connected components over an arbitrary (doc_a, doc_b) pair graph:
     * dispatches to a driver union-find for small graphs (≤
-    * `localEdgeLimit`, see [[LocalCcEdgeLimit]]) or the distributed
+    * [[LocalCcEdgeLimit]] edges) or the distributed
     * iterative min-label propagation below it. The distributed path runs
     * TWO hops per materialization: each
     * round every node adopts the min label within distance 2, so label
@@ -705,8 +705,7 @@ object TextOps {
     * final (tiny) labeling is checkpointed. Docs in no pair are their own
     * survivor and are not emitted (a write-side left join reattaches them
     * for free). Deterministic: min-label. */
-  def dedupClustersFromPairs(pairs: DataFrame,
-      localEdgeLimit: Long = LocalCcEdgeLimit): DataFrame = {
+  def dedupClustersFromPairs(pairs: DataFrame): DataFrame = {
     // ids normalized to long up front so BOTH paths accept any integral id
     // type and emit the same (bigint) schema. Null-keyed edges are dropped
     // HERE so the two paths share one contract: without the filter the
@@ -719,11 +718,8 @@ object TextOps {
     // probe and fetch in ONE action: collect at most limit+1 edges — a
     // count() probe would execute a non-materialized input's whole lineage
     // once for the count and again for the chosen path
-    val probeLimit = math.min(localEdgeLimit, Int.MaxValue - 2L).toInt + 1
-    val probed =
-      if (localEdgeLimit < 0) Array.empty[org.apache.spark.sql.Row]
-      else norm.limit(probeLimit).collect()
-    if (localEdgeLimit >= 0 && probed.length <= localEdgeLimit)
+    val probed = norm.limit(LocalCcEdgeLimit.toInt + 1).collect()
+    if (probed.length <= LocalCcEdgeLimit)
       dedupClustersLocal(pairs.sparkSession, probed)
     else distributedCc(norm)
   }
@@ -760,7 +756,7 @@ object TextOps {
 
   /** Distributed iterative min-label propagation (the > [[LocalCcEdgeLimit]]
     * path). Expects long-normalized (doc_a, doc_b). */
-  private def distributedCc(pairs: DataFrame): DataFrame = {
+  private[graft] def distributedCc(pairs: DataFrame): DataFrame = {
     val edges = pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -1528,25 +1524,6 @@ object TextOps {
     packSequencesOf(clean.select(col("doc_id"), col("text")), seqLen, nShards)
   }
 
-  /** Bigram language-model scoring — the CCNet-style "perplexity filter"
-    * member of the quality family: a bigram LM with add-one smoothing is
-    * trained on the corpus itself (P(w₂|w₁) = (c(w₁w₂)+1)/(c(w₁·)+V),
-    * V = unigram vocabulary size), and each document is scored by its
-    * mean bigram log-probability. Low scorers are the gibberish /
-    * boilerplate tail a curation pipeline drops.
-    *
-    * 100 TB shape: the LM is VOCABULARY-bounded, not corpus-bounded —
-    * bigram counts, unigram context counts, and V are tiny aggregates
-    * that broadcast; the context counts c(w₁·) are DERIVED from the
-    * bigram table (Σ_w₂ c(w₁w₂) — ~900 rows in, bit-identical out)
-    * rather than re-aggregating the corpus, because Catalyst shares no
-    * common subplans and a second `occ` reference would be a second full
-    * corpus scan. Scoring is then a map-side broadcast-join over each
-    * doc's bigrams plus one keyed mean. Membership (docs with ≥ 1
-    * bigram) is integer-deterministic; avg_logp is a rounded continuum
-    * of an order-dependent cross-row double sum — the COSINE determinism
-    * class (boundary-collision exposure ~1e-8/doc), not tf·idf's
-    * pointwise class. */
   /** The LM-score dataflow over a (possibly cached) occurrence relation:
     * LM table, context counts derived from it, vocabulary probe `v`
     * (supplied by the caller so it derives from the SAME tokenized scan
@@ -1596,6 +1573,25 @@ object TextOps {
     toks.select(explode(col("w")).as("w"))
       .agg(countDistinct(col("w")).as("v"))
 
+  /** Bigram language-model scoring — the CCNet-style "perplexity filter"
+    * member of the quality family: a bigram LM with add-one smoothing is
+    * trained on the corpus itself (P(w₂|w₁) = (c(w₁w₂)+1)/(c(w₁·)+V),
+    * V = unigram vocabulary size), and each document is scored by its
+    * mean bigram log-probability. Low scorers are the gibberish /
+    * boilerplate tail a curation pipeline drops.
+    *
+    * 100 TB shape: the LM is VOCABULARY-bounded, not corpus-bounded —
+    * bigram counts, unigram context counts, and V are tiny aggregates
+    * that broadcast; the context counts c(w₁·) are DERIVED from the
+    * bigram table (Σ_w₂ c(w₁w₂) — ~900 rows in, bit-identical out)
+    * rather than re-aggregating the corpus, because Catalyst shares no
+    * common subplans and a second `occ` reference would be a second full
+    * corpus scan. Scoring is then a map-side broadcast-join over each
+    * doc's bigrams plus one keyed mean. Membership (docs with ≥ 1
+    * bigram) is integer-deterministic; avg_logp is a rounded continuum
+    * of an order-dependent cross-row double sum — the COSINE determinism
+    * class (boundary-collision exposure ~1e-8/doc), not tf·idf's
+    * pointwise class. */
   def textLmScore(spark: SparkSession, dir: String): DataFrame = {
     // the TOKENIZED projection is cached (not the exploded occurrences):
     // it is read by the LM-table aggregation, the probe join AND the
@@ -1703,47 +1699,6 @@ object TextOps {
       ColumnBridge.expression(w), 2))
   }
 
-  /** Sparse TF-IDF cosine similarity join — document-pair similarity via
-    * the inverted index: pairs sharing ≥ `minShared` distinct bigram terms
-    * ([[bigrams]]), with the cosine of their tf·idf vectors. The classic
-    * sparse-vector similarity join: weights ride the (term → docs)
-    * inverted index, the pair dot product is one keyed aggregation over
-    * shared terms, and each doc's norm rides its index rows via a window
-    * (a separate norms JOIN would re-derive the whole tf·idf pipeline two
-    * more times — Catalyst does not share common subplans across
-    * self-join sides). The corpus is never compared all-pairs.
-    *
-    * Every predicate is INTEGER (shared-term count; the df cap), so the
-    * emitted row set is exactly deterministic and the DuckDB oracle
-    * replays it bit-identically; only the cosine value is a rounded
-    * continuum. The cost driver at scale is hot-term fanout (`df²`
-    * candidate pairs per term), so terms in more than n/`dfCapFrac` of
-    * the docs are dropped from the VOCABULARY (weights, norms, and
-    * sharing alike — IDF already makes them near-zero-weight): standard
-    * stop-term pruning, ON by default, and the result is exact over the
-    * reduced vocabulary. The pair list is a dedup-style JOB output —
-    * eagerly materialized, intermediates released (same rationale as
-    * [[dedupNgramJaccard]]). */
-  /** Task count of the pair expansion, from the rows it will produce:
-    * one task per [[CosineJoinRowsPerTask]] of the measured Σdf² (the
-    * exact expansion row count), at least 2 and at most
-    * max(4 × cores, 64). The cap was measured at sf0.1, where the
-    * expansion is the heavy stage: at 32 cores 64–256 tasks ran it in
-    * 1.3–1.8 s while 512 degraded to 8 s (too many tiny tasks). Pure, so
-    * its bounds are pinned without a corpus (CosineBlockPairsExprSpec).
-    * Measured on a 4-core VM against the fixed 64-task floor it replaced:
-    *  - sf0.001 (65 KB of documents) gets 2 tasks. The whole query ran
-    *    23 tasks instead of 520, and its time in the benchmark's traced
-    *    11-query suite fell from 5.2 s to 1.3 s;
-    *  - sf0.1 (Σdf² ≈ 73 M rows) gets 37 tasks. `graft.Bench
-    *    text_cosine_pairs 4` (min of 4 samples) ran 10.5–11.4 s against
-    *    12.3–14.8 s in 3 interleaved pairs;
-    *  - sf1 (Σdf² ≈ 3.1 B rows) reaches the cap, the count every corpus
-    *    got before. */
-  private[graft] def cosineExpandParts(sumDf2: Long, cores: Int): Int =
-    math.min(math.max(sumDf2 / CosineJoinRowsPerTask + 1, 2L),
-      math.max(4L * cores, 64L)).toInt
-
   /** The weighted inverted index — one NARROW row per surviving
     * (doc, term) with its tf·idf weight. Deliberately norm-free: the pair
     * aggregation below streams Σ df² joined rows (36M at sf0.1), so every
@@ -1777,7 +1732,7 @@ object TextOps {
   }
 
   /** The pair expansion's streamed (a) side: the index spread by doc_id
-    * over `parts` tasks ([[cosineExpandParts]]). The self-join broadcasts
+    * over `parts` tasks ([[CosinePlan.Plain]]). The self-join broadcasts
     * the b side (the index as is) when the index is small, which makes
     * the a side's partitioning the parallelism of the Σ df² expansion;
     * this repartition pins it at `parts` rather than
@@ -1788,15 +1743,18 @@ object TextOps {
   private def expansionInput(idx: DataFrame, parts: Int): DataFrame =
     idx.repartition(parts, col("doc_id"))
 
-  /** One narrow job over the index: Σdf² (the EXACT pair-expansion row
-    * count), max(df) (the skew gate), vocabulary size and index rows
-    * (kernel eligibility). */
-  private def cosineStats(idx: DataFrame): (Long, Long, Long, Long) = {
+  /** What one narrow job over the index measures ([[cosineStats]]): Σdf²
+    * (the EXACT pair-expansion row count), max df (the skew gate), the
+    * vocabulary size and the index rows (kernel eligibility). */
+  private[graft] final case class CosineStats(sumDf2: Long, maxDf: Long,
+      vocab: Long, idxRows: Long)
+
+  private def cosineStats(idx: DataFrame): CosineStats = {
     val stats = idx.groupBy("term").agg(count(lit(1)).as("df"))
       .agg(sum(col("df") * col("df")), max(col("df")), count(lit(1)),
         sum(col("df"))).first()
     def orZero(i: Int) = if (stats.isNullAt(i)) 0L else stats.getLong(i)
-    (orZero(0), orZero(1), stats.getLong(2), orZero(3))
+    CosineStats(orZero(0), orZero(1), stats.getLong(2), orZero(3))
   }
 
   /** Per-doc L2 norms of the surviving tf·idf vectors — 1 row per doc,
@@ -1818,7 +1776,7 @@ object TextOps {
     * can spread, because partitioning is by key). Replication cost of
     * the salt is Σdf²/(2c) extra index rows (~1.5 M at sf1 — noise);
     * when every df ≤ c (sf0.1 and below: cap = n/5 = 1000) no task can
-    * overflow, so [[textCosinePairs]] gates the salt on the MEASURED
+    * overflow, so [[cosinePlan]] gates the salt on the MEASURED
     * max df and small corpora keep the plain single-exchange term join
     * — zero overhead exactly where skew cannot exist. AQE's skew-join
     * splitter cannot do this:
@@ -1841,27 +1799,23 @@ object TextOps {
     * the equi-join on (term, i, j) meets every pair in exactly one
     * block pair, with `doc_a < doc_b` resolving the diagonal.
     *
-    * `salted = false` (the caller measured max df ≤ [[CosineBlockSize]])
-    * keeps the plain single-exchange term join — the blocked variant is
-    * result-identical but pays a term-partitioned window + row
+    * `expandParts = Some(n)` (the caller measured max df ≤
+    * [[CosineBlockSize]]) keeps the plain single-exchange term join, its
+    * expansion over n tasks ([[expansionInput]]) — the blocked variant
+    * (`None`) is result-identical but pays a term-partitioned window + row
     * replication that buys nothing when no posting list can overflow a
-    * task. The gate is operator-side adaptivity from the SAME one-row
-    * stats agg that sizes the shuffle: statistics that Catalyst/AQE do
-    * not collect (per-key join fan-out), applied where they decide the
-    * physical shape. The plain join expands over `expandParts` tasks
-    * ([[expansionInput]]); the salted one over its (term, i, j) join
-    * partitions. */
+    * task; it expands over its (term, i, j) join partitions. */
   private def cosinePairsFrom(idx: DataFrame, minShared: Int,
-      salted: Boolean, expandParts: Int): DataFrame = {
+      expandParts: Option[Int]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val norms = cosineNorms(idx)
-    val (aSide, bSide) =
-      if (!salted) {
+    val (aSide, bSide) = expandParts match {
+      case Some(parts) =>
         // only the a side is spread: the b side is the index itself, whose
         // size ties the a side's, so a broadcast builds it straight from
         // the (cached) index and the spread a side streams the expansion
-        (expansionInput(idx, expandParts), idx)
-      } else {
+        (expansionInput(idx, parts), idx)
+      case None =>
         val c = CosineBlockSize
         val byTerm = Window.partitionBy(col("term"))
         val blocked = idx
@@ -1878,9 +1832,9 @@ object TextOps {
             .withColumn("i", explode(sequence(lit(0), col("blk"))))
             .select(col("doc_id"), col("term"), col("w"), col("i"),
               col("blk").as("j")))
-      }
+    }
     val blockKeys =
-      if (!salted) lit(true)
+      if (expandParts.nonEmpty) lit(true)
       else col("a.i") === col("b.i") && col("a.j") === col("b.j")
     aSide.as("a").join(bSide.as("b"),
         col("a.term") === col("b.term") && blockKeys &&
@@ -1910,7 +1864,7 @@ object TextOps {
     * aggregation into sort+spill under 32 concurrent tasks on the 8 g
     * harness (757.7 s at sf1). 2 M rows/task ≈ 45 MB keeps every task's
     * map hash-resident. The same quotient sizes the expansion's own tasks
-    * ([[cosineExpandParts]]) and the pair agg's reduce tasks. */
+    * ([[cosinePlan]]) and the pair agg's reduce tasks. */
   private val CosineJoinRowsPerTask = 2L * 1000 * 1000
 
   /** Dense-corpus block kernel (see [[graft.functions.CosineBlockPairsExpr]]
@@ -1944,9 +1898,13 @@ object TextOps {
         col("nrm"),
         pmod(xxhash64(col("doc_id")), lit(nBlocks.toLong)).cast("int")
           .as("blk"))
-    val blocks = docs.groupBy(col("blk"))
+    // materialized once for both sides of the block-pair self-join: over
+    // the cached index AQE plans each side as its own stage (it reuses no
+    // exchange above a cached relation), which built the blocks twice and
+    // let whichever stage finished first become the broadcast side
+    val blocks = Engine.eagerCheckpoint(docs.groupBy(col("blk"))
       .agg(collect_list(
-        struct(col("doc_id"), col("terms"), col("ws"), col("nrm"))).as("docs"))
+        struct(col("doc_id"), col("terms"), col("ws"), col("nrm"))).as("docs")))
     val pairParts = math.min(nBlocks * (nBlocks + 1) / 2, 4096)
     val kernel = ColumnBridge.column(graft.functions.CosineBlockPairsExpr(
       ColumnBridge.expression(col("x.docs")),
@@ -1987,171 +1945,168 @@ object TextOps {
     * sf1's 3.1 B rows the kernel wins 11×). The crossover sits well under
     * 1 B rows; 256 M keeps a safety margin on the cheap side. */
   private val KernelMinExpansion = 256L * 1000 * 1000
-  /** Kernel candidacy — the ONE predicate deciding whether the dense
-    * block kernel is even considered (vocab fits the per-doc bitset
-    * budget AND the pair expansion is expensive enough to amortize the
-    * block machinery). Shared by [[cosineKernelPlan]] (admission) and
-    * [[textCosinePairs]] (whether to pay the nDocs census job) so the
-    * two sides cannot drift: a drifted copy could pass nDocs=0 into an
-    * admitting plan and size blocks against a miscounted corpus. */
-  private[graft] def isKernelCandidate(sumDf2: Long, vocabN: Long): Boolean =
-    vocabN > 0 && vocabN <= KernelVocabCap && sumDf2 >= KernelMinExpansion
 
-  /** Logs, at INFO, the plan choice [[textCosinePairs]] made as a
-    * one-line JSON fragment (path + the measured stats that drove it), so
-    * a run's log records WHICH strategy a given scale actually executed
-    * (round-12 VERDICT item 2 — sf1's tail was unattributed; the r13
-    * census is in bench_out/cosine_plan_r13.json). Never feeds back into
-    * planning. */
-  private def recordCosinePlan(json: String): Unit =
-    org.slf4j.LoggerFactory.getLogger(getClass)
-      .info(s"textCosinePairs plan: $json")
+  /** The physical shape of one cosine run — what [[cosinePlan]] picks from
+    * the index's [[CosineStats]], and what a spec forces:
+    *  - `Plain`: the term self-join, its expansion over `expandParts`
+    *    tasks ([[expansionInput]]);
+    *  - `Salted`: the block-salted term join ([[CosineBlockSize]]), its
+    *    (doc_a, doc_b) aggregation over `joinParts` tasks;
+    *  - `Kernel`: the dense block kernel ([[cosinePairsKernelFrom]]) over
+    *    `blocks` hash blocks of docs, term ids dense in [0, `vocab`). */
+  private[graft] sealed trait CosinePlan
+  private[graft] object CosinePlan {
+    final case class Plain(expandParts: Int) extends CosinePlan
+    final case class Salted(joinParts: Int) extends CosinePlan
+    final case class Kernel(blocks: Int, vocab: Int) extends CosinePlan
+  }
 
-  /** Kernel admission + block-count sizing, extracted so the bounds are
-    * unit-testable without a corpus (round-10 VERDICT items 3/4):
-    * returns Some(nBlocks) when the block kernel is admitted, None when
-    * the corpus must fall through to the inverted-index shapes.
-    * Guarantees, pinned by CosineKernelPlanSpec:
-    *  - nBlocks ≤ [[KernelMaxBlocks]] for ANY core count (the
-    *    parallelism term is clamped outright — shuffle replication stays
-    *    ≤ 128 × index bytes);
+  /** The cosine path and its sizes, from the measured index statistics:
+    * operator-side adaptivity from statistics that Catalyst/AQE do not
+    * collect (per-key join fan-out), applied where they decide the
+    * physical shape. Pure; `nDocs` (one more job, the doc census) is read
+    * only when the kernel is a candidate. Pinned without a corpus by
+    * CosineBlockPairsExprSpec and CosinePlanSpec (the r13 census rows).
+    *
+    * Kernel when the vocabulary fits the per-doc bitset budget
+    * ([[KernelVocabCap]]), the expansion is expensive enough to amortize
+    * the block machinery ([[KernelMinExpansion]]), and the blocks fit:
+    *  - blocks ≤ [[KernelMaxBlocks]] for ANY core count (the parallelism
+    *    term is clamped outright — shuffle replication stays ≤ 128 × index
+    *    bytes);
     *  - block size ≤ ~2048 docs (the `bBuf` floor), so one kernel
     *    evaluation's DEGENERATE output bound (every pair qualifying) is
     *    (n/B)²/2 ≈ 2 M rows ≈ 128 MB — a fixed memory budget, never
     *    multi-GB, regardless of match density;
     *  - a corpus too large to satisfy both (bMem or bBuf over the block
-    *    cap) is REFUSED rather than admitted with a broken bound. */
-  private[graft] def cosineKernelPlan(sumDf2: Long, vocabN: Long,
-      idxRows: Long, nDocs: Long, cores: Int): Option[Int] = {
-    if (!isKernelCandidate(sumDf2, vocabN)) return None
-    val gatePairs = nDocs * math.max(nDocs - 1, 0L) / 2
-    // struct bytes + the per-doc V-bit membership sets the kernel builds
-    // per evaluation (V/8 bytes each — both count strategies index them)
-    val bytesEst = idxRows * 12 + nDocs * (48 + vocabN / 8)
-    val bMem =
-      math.max(1, math.ceil(bytesEst.toDouble / KernelBlockBytes).toInt)
-    // enough block pairs for ~4 waves of tasks; tiny corpora keep blocks
-    // of ≥ 64 docs so per-evaluation overhead never dominates
-    val bPar = math.ceil((math.sqrt(8.0 * (4 * cores) + 1) - 1) / 2).toInt
-    // worst-case output floor (round-10 ADVICE): one evaluation buffers
-    // its qualifying pairs in memory before the explode, so block size
-    // caps the DEGENERATE bound (every pair qualifying) at
-    // (n/B)²/2 ≈ 2 M rows ≈ 128 MB — realistic match rates emit KBs
-    val bBuf = math.max(1, math.ceil(nDocs / 2048.0).toInt)
-    // clamp to KernelMaxBlocks unconditionally (round-10 ADVICE: bPar
-    // on a very-high-core cluster previously escaped the cap, breaking
-    // the documented B×index shuffle-replication bound)
-    val nBlocks = math.max(math.max(bMem, bBuf),
-      math.min(bPar, math.ceil(nDocs / 64.0).toInt))
-      .max(1).min(KernelMaxBlocks)
-    val admit = math.max(bMem, bBuf) <= KernelMaxBlocks &&
-      gatePairs <= KernelGateFactor * sumDf2
-    if (admit) Some(nBlocks) else None
+    *    cap) is REFUSED rather than admitted with a broken bound.
+    *
+    * Otherwise salted when a posting list can overflow a task (max df >
+    * [[CosineBlockSize]]), with one join partition per
+    * [[CosineJoinRowsPerTask]] of Σdf², at least `cores`, at most 4096.
+    *
+    * Otherwise plain, with one expansion task per [[CosineJoinRowsPerTask]]
+    * of Σdf², at least 2 and at most max(4 × cores, 64). The cap was
+    * measured at sf0.1, where the expansion is the heavy stage: at 32 cores
+    * 64–256 tasks ran it in 1.3–1.8 s while 512 degraded to 8 s (too many
+    * tiny tasks). Measured on a 4-core VM against the fixed 64-task floor
+    * it replaced:
+    *  - sf0.001 (65 KB of documents) gets 2 tasks. The whole query ran
+    *    23 tasks instead of 520, and its time in the benchmark's traced
+    *    11-query suite fell from 5.2 s to 1.3 s;
+    *  - sf0.1 (Σdf² ≈ 73 M rows) gets 37 tasks. `graft.Bench
+    *    text_cosine_pairs 4` (min of 4 samples) ran 10.5–11.4 s against
+    *    12.3–14.8 s in 3 interleaved pairs;
+    *  - sf1 (Σdf² ≈ 3.1 B rows) reaches the cap, the count every corpus
+    *    got before. */
+  private[graft] def cosinePlan(s: CosineStats, cores: Int,
+      nDocs: => Long): CosinePlan = {
+    def kernel: Option[CosinePlan] = {
+      val n = nDocs
+      val gatePairs = n * math.max(n - 1, 0L) / 2
+      // struct bytes + the per-doc V-bit membership sets the kernel builds
+      // per evaluation (V/8 bytes each — both count strategies index them)
+      val bytesEst = s.idxRows * 12 + n * (48 + s.vocab / 8)
+      val bMem =
+        math.max(1, math.ceil(bytesEst.toDouble / KernelBlockBytes).toInt)
+      // enough block pairs for ~4 waves of tasks; tiny corpora keep blocks
+      // of ≥ 64 docs so per-evaluation overhead never dominates
+      val bPar = math.ceil((math.sqrt(8.0 * (4 * cores) + 1) - 1) / 2).toInt
+      // one evaluation buffers its qualifying pairs in memory before the
+      // explode, so block size caps the DEGENERATE bound (every pair
+      // qualifying) at (n/B)²/2 ≈ 2 M rows ≈ 128 MB
+      val bBuf = math.max(1, math.ceil(n / 2048.0).toInt)
+      val blocks = math.max(math.max(bMem, bBuf),
+        math.min(bPar, math.ceil(n / 64.0).toInt))
+        .max(1).min(KernelMaxBlocks)
+      val admit = math.max(bMem, bBuf) <= KernelMaxBlocks &&
+        gatePairs <= KernelGateFactor * s.sumDf2
+      if (admit) Some(CosinePlan.Kernel(blocks, s.vocab.toInt)) else None
+    }
+    val candidate = s.vocab > 0 && s.vocab <= KernelVocabCap &&
+      s.sumDf2 >= KernelMinExpansion
+    val rowTasks = s.sumDf2 / CosineJoinRowsPerTask + 1
+    (if (candidate) kernel else None).getOrElse {
+      if (s.maxDf > CosineBlockSize)
+        CosinePlan.Salted(math.min(math.max(rowTasks, cores), 4096L).toInt)
+      else CosinePlan.Plain(
+        math.min(math.max(rowTasks, 2L), math.max(4L * cores, 64L)).toInt)
+    }
   }
 
+  /** Sparse TF-IDF cosine similarity join — document-pair similarity via
+    * the inverted index: pairs sharing ≥ `minShared` distinct bigram terms
+    * ([[bigrams]]), with the cosine of their tf·idf vectors. The classic
+    * sparse-vector similarity join: weights ride the (term → docs)
+    * inverted index, the pair dot product is one keyed aggregation over
+    * shared terms, and the per-doc norms are one small aggregate over the
+    * index ([[cosineNorms]]) joined onto the surviving pairs. The corpus
+    * is never compared all-pairs.
+    *
+    * Every predicate is INTEGER (shared-term count; the df cap), so the
+    * emitted row set is exactly deterministic and the DuckDB oracle
+    * replays it bit-identically; only the cosine value is a rounded
+    * continuum. The cost driver at scale is hot-term fanout (`df²`
+    * candidate pairs per term), so terms in more than n/`dfCapFrac` of
+    * the docs are dropped from the VOCABULARY (weights, norms, and
+    * sharing alike — IDF already makes them near-zero-weight): standard
+    * stop-term pruning, ON by default, and the result is exact over the
+    * reduced vocabulary. The pair list is a dedup-style JOB output —
+    * eagerly materialized, intermediates released (same rationale as
+    * [[dedupNgramJaccard]]). */
   def textCosinePairs(spark: SparkSession, dir: String,
-      minShared: Int = 10, dfCapFrac: Int = 5): DataFrame = {
-    // one read of the corpus: its size estimate picks the storage level
-    // and the fan-out, and the index is built over the same relation
-    val docs = tbl(spark, dir, "documents")
-    val inputBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val fanoutParts = Engine.fanoutParts(docs).getOrElse(-1)
+      minShared: Int = 10, dfCapFrac: Int = 5): DataFrame =
+    cosinePairsOf(tbl(spark, dir, "documents"), minShared, dfCapFrac)
+
+  /** [[textCosinePairs]] over any (doc_id, text) relation. The path is
+    * [[cosinePlan]]'s pick from the measured stats unless `force` (the
+    * specs' lever) maps those stats to a plan. */
+  private[graft] def cosinePairsOf(docs: DataFrame, minShared: Int,
+      dfCapFrac: Int,
+      force: Option[CosineStats => CosinePlan] = None): DataFrame = {
+    val spark = docs.sparkSession
     // persisted (storage medium size-adaptive via Engine.miningLevel):
-    // the stats probes below are ACTIONS, so every strategy reads the
-    // SAME cached index materialization instead of executing the
+    // the stats probes below are ACTIONS, so every path reads the SAME
+    // cached index materialization instead of executing the
     // tokenize→tf→df pipeline per subtree
     val lvl = Engine.miningLevel(docs)
     val w = cosineIndexOf(docs, dfCapFrac).persist(lvl)
     val partsKey = "spark.sql.shuffle.partitions"
     val prevParts = spark.conf.get(partsKey)
     try Engine.checkpointReleasing(lvl, w) {
-      // one cheap one-row agg over the index ([[cosineStats]]) — this
-      // narrow job also fills the cache before the heavy join reads it.
-      // Sizing and SHAPING the job from measured stats is the
-      // operator-side twin of AQE: runtime statistics, but for join OUTPUT
-      // fan-out and algorithm choice, which AQE's map-output-bytes
-      // heuristics structurally cannot see.
-      val (sumDf2, maxDf, vocabN, idxRows) = cosineStats(w)
+      // one cheap one-row agg over the index — this narrow job also fills
+      // the cache before the heavy join reads it
+      val stats = cosineStats(w)
       val cores = spark.sparkContext.defaultParallelism
-      // the doc census (one more narrow job on the cached index) is only
-      // needed to size/admit the kernel — skip it when the vocab cap or the
-      // expansion floor already rules the kernel out (the SAME predicate
-      // cosineKernelPlan gates admission on — shared so the census skip
-      // and the admission test cannot drift apart)
-      val nDocs =
-        if (isKernelCandidate(sumDf2, vocabN))
-          w.select("doc_id").distinct().count()
-        else 0L
-      // admission + block sizing — extracted and bound-pinned, see
-      // [[cosineKernelPlan]]
-      val kernelBlocks =
-        cosineKernelPlan(sumDf2, vocabN, idxRows, nDocs, cores)
-      val sized = s""""input_bytes":$inputBytes,"fanout_parts":$fanoutParts,"""
-      if (kernelBlocks.nonEmpty) {
-        recordCosinePlan(s"""{"path":"kernel","blocks":${kernelBlocks.get},""" +
-          s""""sum_df2":$sumDf2,"max_df":$maxDf,"vocab":$vocabN,""" +
-          s""""idx_rows":$idxRows,"n_docs":$nDocs,$sized"cores":$cores}""")
-        cosinePairsKernelFrom(w, minShared, kernelBlocks.get, vocabN.toInt)
-      } else {
-        val expandParts = cosineExpandParts(sumDf2, cores)
-        val salted = maxDf > CosineBlockSize
-        // The salted (doc_a, doc_b) pair aggregation sits behind an Exchange
-        // whose task count is spark.sql.shuffle.partitions, so it is raised for
-        // THIS query's execution only (set here, restored once the pairs are
-        // checkpointed): a session-wide raise was measured in round 7 to
-        // inflate every small shuffle in the run (9.4 s vs 1.5 s on this very
-        // query at sf0.1). A `repartition` before the aggregation would drop
-        // its partial (map-side) aggregation, and the DataFrame API has no
-        // per-aggregation partition count. The plain path needs no raise: its
-        // pair aggregation runs on the doc_id spread of the expansion
-        // ([[expansionInput]], `expandParts` tasks) with no Exchange in
-        // between, so a raise there would only size the norms aggregation,
-        // which AQE coalesces anyway.
-        val joinParts = math.min(math.max(
-          (sumDf2 / CosineJoinRowsPerTask).toInt + 1, cores), 4096)
-        recordCosinePlan(
-          s"""{"path":"${if (salted) "salted" else "plain"}",""" +
-            s""""sum_df2":$sumDf2,"max_df":$maxDf,"vocab":$vocabN,""" +
-            s""""idx_rows":$idxRows,$sized"expand_parts":$expandParts,""" +
-            (if (salted) s""""join_parts":$joinParts,""" else "") +
-            s""""cores":$cores}""")
-        if (salted) spark.conf.set(partsKey, joinParts.toString)
-        cosinePairsFrom(w, minShared, salted, expandParts)
+      val plan = force.fold(cosinePlan(stats, cores,
+        w.select("doc_id").distinct().count()))(_(stats))
+      // records which path and sizes a scale ran (the r13 census in
+      // bench_out/cosine_plan_r13.json was read from this line)
+      org.slf4j.LoggerFactory.getLogger(getClass)
+        .info(s"textCosinePairs plan: $plan from $stats on $cores cores")
+      plan match {
+        case CosinePlan.Plain(expandParts) =>
+          cosinePairsFrom(w, minShared, Some(expandParts))
+        case CosinePlan.Salted(joinParts) =>
+          // The salted (doc_a, doc_b) pair aggregation sits behind an
+          // Exchange whose task count is spark.sql.shuffle.partitions, so
+          // it is raised for THIS query's execution only (restored once the
+          // pairs are checkpointed): a session-wide raise was measured in
+          // round 7 to inflate every small shuffle in the run (9.4 s vs
+          // 1.5 s on this very query at sf0.1). A `repartition` before the
+          // aggregation would drop its partial (map-side) aggregation, and
+          // the DataFrame API has no per-aggregation partition count. The
+          // plain path needs no raise: its pair aggregation runs on the
+          // doc_id spread of the expansion with no Exchange in between.
+          spark.conf.set(partsKey, joinParts.toString)
+          cosinePairsFrom(w, minShared, None)
+        case CosinePlan.Kernel(blocks, vocab) =>
+          cosinePairsKernelFrom(w, minShared, blocks, vocab)
       }
     } finally {
       if (spark.conf.get(partsKey) != prevParts)
         spark.conf.set(partsKey, prevParts)
     }
-  }
-
-  /** Strategy dispatch for the spec/plan surfaces, with the plain
-    * expansion spread over `expandParts` tasks ([[expansionInput]]). `kernel` runs a tiny vocab-count job to size
-    * the dense ids (the shipped op reuses its stats agg instead). */
-  private def cosinePairsStrategy(idx: DataFrame, minShared: Int,
-      strategy: String, expandParts: Int): DataFrame = strategy match {
-    case "plain" => cosinePairsFrom(idx, minShared, salted = false, expandParts)
-    case "salted" => cosinePairsFrom(idx, minShared, salted = true, expandParts)
-    case "kernel" =>
-      val vocabN = idx.select("term").distinct().count().toInt
-      cosinePairsKernelFrom(idx, minShared, nBlocks = 8,
-        vocabSize = math.max(vocabN, 1))
-    case other => throw new IllegalArgumentException(
-      s"unknown cosine strategy: $other")
-  }
-
-  /** [[textCosinePairs]] over any (doc_id, text) relation with an
-    * explicit strategy — the spec surface for pinning that the salted
-    * block join and the block kernel are result-identical to the plain
-    * term join, and that the result does
-    * not depend on the expansion's task count. `expandParts` defaults to
-    * the shipped rule over the measured Σdf² (one stats job). */
-  private[graft] def textCosinePairsOf(docs: DataFrame, minShared: Int,
-      dfCapFrac: Int, strategy: String,
-      expandParts: Option[Int] = None): DataFrame = {
-    val idx = cosineIndexOf(docs, dfCapFrac)
-    val parts = expandParts.getOrElse(cosineExpandParts(cosineStats(idx)._1,
-      docs.sparkSession.sparkContext.defaultParallelism))
-    cosinePairsStrategy(idx, minShared, strategy, parts)
   }
 
   /** Sequence packing — the concat-and-chunk assignment of documents to

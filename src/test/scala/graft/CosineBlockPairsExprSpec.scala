@@ -1,6 +1,8 @@
 package graft
 
 import graft.functions.CosineBlockPairsExpr
+import graft.operators.TextOps
+import graft.operators.TextOps.{CosinePlan, CosineStats}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -76,13 +78,18 @@ class CosineBlockPairsExprSpec extends AnyFunSuite {
       minS = 1, vocab = 128)).isEmpty)
   }
 
+  /** The chooser's pick for a corpus with no skew (max df 1). */
+  private def plan(sumDf2: Long, vocab: Long, idxRows: Long, nDocs: Long,
+      cores: Int): CosinePlan =
+    TextOps.cosinePlan(CosineStats(sumDf2, maxDf = 1, vocab, idxRows),
+      cores, nDocs)
+
   test("kernel plan: block count is clamped for any core count (4096-core cluster)") {
     // round-10 VERDICT item 4: the parallelism term (bPar ≈ 181 at 4096
     // cores) must never escape the KernelMaxBlocks=128 replication bound
-    val plan = graft.operators.TextOps.cosineKernelPlan(
-      sumDf2 = 1000L * 1000 * 1000, vocabN = 25000,
-      idxRows = 50L * 1000 * 1000, nDocs = 100L * 1000, cores = 4096)
-    assert(plan === Some(128))
+    assert(plan(sumDf2 = 1000L * 1000 * 1000, vocab = 25000,
+      idxRows = 50L * 1000 * 1000, nDocs = 100L * 1000, cores = 4096) ===
+      CosinePlan.Kernel(128, 25000))
   }
 
   test("kernel plan: admitted blocks always bound per-evaluation output to a fixed budget") {
@@ -92,44 +99,53 @@ class CosineBlockPairsExprSpec extends AnyFunSuite {
     // then ≤ ~2 M rows ≈ 128 MB, never multi-GB. Sweep corpus sizes.
     for (nDocs <- Seq(10000L, 50000L, 100000L, 200000L, 262144L)) {
       val sumDf2 = math.max(nDocs * nDocs / 4, 300L * 1000 * 1000)
-      graft.operators.TextOps.cosineKernelPlan(
-        sumDf2, vocabN = 20000, idxRows = nDocs * 200, nDocs, cores = 32)
-        .foreach { b =>
+      plan(sumDf2, vocab = 20000, idxRows = nDocs * 200, nDocs,
+          cores = 32) match {
+        case CosinePlan.Kernel(b, _) =>
           val blockDocs = math.ceil(nDocs.toDouble / b)
           assert(blockDocs <= 2048.0,
             s"nDocs=$nDocs admitted with $b blocks → $blockDocs docs/block")
-        }
+        case _ =>
+      }
     }
   }
 
   test("kernel plan: oversized or ineligible corpora are refused, not admitted with broken bounds") {
-    def plan(sumDf2: Long, vocabN: Long, nDocs: Long) =
-      graft.operators.TextOps.cosineKernelPlan(
-        sumDf2, vocabN, idxRows = nDocs * 200, nDocs, cores = 32)
+    // refused: the unskewed corpus falls through to the plain term join
+    def refused(sumDf2: Long, vocab: Long, nDocs: Long) =
+      assert(plan(sumDf2, vocab, idxRows = nDocs * 200, nDocs, cores = 32)
+        .isInstanceOf[CosinePlan.Plain])
     // too many docs for the buffered-output floor (bBuf > 128 blocks)
-    assert(plan(10L * 1000 * 1000 * 1000, 30000, 300L * 1000) === None)
+    refused(10L * 1000 * 1000 * 1000, 30000, 300L * 1000)
     // sparse corpus: n²/2 gate work exceeds 8× the expansion it avoids
-    assert(plan(260L * 1000 * 1000, 30000, 100L * 1000) === None)
+    refused(260L * 1000 * 1000, 30000, 100L * 1000)
     // below the expansion floor the plain join's single-job shape wins
-    assert(plan(100L * 1000 * 1000, 30000, 50L * 1000) === None)
+    refused(100L * 1000 * 1000, 30000, 50L * 1000)
     // vocab over the bitset cap
-    assert(plan(1000L * 1000 * 1000, 100000, 100L * 1000) === None)
+    refused(1000L * 1000 * 1000, 100000, 100L * 1000)
   }
 
   test("expansion tasks: the count always lies in [2, cap] and grows with Σdf²") {
+    // a vocabulary over the kernel's cap and no skew keep every Σdf² on the
+    // plain path, which never reads the doc census
+    def expandParts(sumDf2: Long, cores: Int): Int =
+      TextOps.cosinePlan(CosineStats(sumDf2, maxDf = 1, vocab = 100000,
+        idxRows = 0), cores, fail("census read on the plain path")) match {
+        case CosinePlan.Plain(n) => n
+        case other => fail(s"Σdf²=$sumDf2: $other")
+      }
     // cap = max(4 × cores, 64); Σdf² sweeps empty to past Long's square root
     for ((cores, cap) <- Seq(1 -> 64, 4 -> 64, 32 -> 128, 4096 -> 16384)) {
       val sums = Seq(0L, 1L, 1999999L, 2000000L, 73L * 1000 * 1000,
         3100L * 1000 * 1000, Long.MaxValue / 2, Long.MaxValue)
-      val parts = sums.map(graft.operators.TextOps.cosineExpandParts(_, cores))
+      val parts = sums.map(expandParts(_, cores))
       parts.foreach(p => assert(p >= 2 && p <= cap, s"cores=$cores: $parts"))
       assert(parts === parts.sorted, s"cores=$cores: not monotone $parts")
       assert(parts.head === 2 && parts.last === cap, s"cores=$cores: $parts")
     }
     // sf0.001 stays at the floor; sf0.1 (Σdf² ≈ 73 M) gets 37 tasks at 4
     // cores, under the cap the 64-task floor used to force
-    assert(graft.operators.TextOps.cosineExpandParts(
-      73L * 1000 * 1000, cores = 4) === 37)
+    assert(expandParts(73L * 1000 * 1000, cores = 4) === 37)
   }
 
   test("rounding matches Spark round(_, 6) half-up semantics") {

@@ -79,7 +79,8 @@ class EngineSpec extends SparkSpec {
   }
 
   test("no reference twins: no *Lambda, coerceScala or jsNumber def in src/main/scala") {
-    assert(mainSourcesMatching("""def (\w+Lambda|coerceScala|jsNumber)\b""".r) ===
+    // (and the pivot twin `widen` of Pipeline.widenFromResults)
+    assert(mainSourcesMatching("""def (\w+Lambda|coerceScala|jsNumber|widen)\b""".r) ===
       Seq.empty,
       "a reference implementation that only the specs call belongs in " +
         "src/test/scala/graft/References.scala")
@@ -102,6 +103,20 @@ class EngineSpec extends SparkSpec {
     assert(mainSourcesMatching("""isinLimit""".r) === Seq.empty,
       "cap hot keys in the plan (KeyPairs.capKeys), not through a " +
         "literal-isin / broadcast-anti-join fork")
+  }
+
+  test("one function registration: no functionRegistry in src/main/scala") {
+    assert(mainSourcesMatching("""functionRegistry""".r) === Seq.empty,
+      "inject SQL functions through GraftExtensions, which Engine.builder " +
+        "installs, instead of rewriting the caller's function registry")
+  }
+
+  test("one cosine body and one union-find threshold: no strategy seam or localEdgeLimit in src/main/scala") {
+    assert(mainSourcesMatching(
+      """textCosinePairsOf|cosinePairsStrategy|localEdgeLimit""".r) ===
+      Seq.empty,
+      "force a cosine path with a CosinePlan on TextOps.cosinePairsOf, and " +
+        "call distributedCc to compare the union-find paths")
   }
 
   test("no JVM-global registries: no TrieMap in src/main/scala") {

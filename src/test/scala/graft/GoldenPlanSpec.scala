@@ -14,7 +14,7 @@ import java.nio.file.Files
   * with a diff instead of shipping unnoticed.
   *
   * Goldens live in src/test/resources/golden-plans/<name>.txt as the
-  * NORMALIZED formatted-explain text (expression ids, plan ids, and file
+  * NORMALIZED formatted-explain text (expression ids, plan ids, RDD ids and file
   * paths are run-dependent and scrubbed; everything structural — node
   * tree, join strategies, pushed filters, read schemas, partial/final agg
   * modes, codegen spans — is kept verbatim).
@@ -39,6 +39,7 @@ class GoldenPlanSpec extends SparkSpec {
     plan
       .replaceAll("#\\d+", "#N")                  // expression ids
       .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")        // checkpointed RDD ids
       .replaceAll("\\[id=N?#?\\d*\\]", "[id=N]")  // exchange/codegen ids
       .replaceAll("file:[^\\s\\],)]*", "PATH")    // absolute locations
       .replaceAll("\\[\\d+ paths\\]", "[N paths]")
@@ -105,14 +106,17 @@ class GoldenPlanSpec extends SparkSpec {
         docs.filter(col("doc_id") < TextOps.DefaultIncrementalSplitId)))
     }),
     // all three exact cosine shapes: the shipped op picks one from
-    // measured stats (plain at this scale), so the other two run through
-    // the strategy seam, each with its own pinned plans
+    // measured stats (plain at this scale), so the other two force their
+    // plan on the same body — salted with the 4 join partitions the chooser
+    // gives this 4-core session, the kernel over 8 hash blocks
     "text_cosine_pairs_plain" ->
       (() => ranPlansOf(TextOps.textCosinePairs(spark, dir))),
     "text_cosine_pairs_salted" -> (() => ranPlansOf(
-      TextOps.textCosinePairsOf(docs, 10, 5, "salted").collect())),
+      TextOps.cosinePairsOf(docs, 10, 5,
+        Some(_ => TextOps.CosinePlan.Salted(4))))),
     "text_cosine_pairs_kernel" -> (() => ranPlansOf(
-      TextOps.textCosinePairsOf(docs, 10, 5, "kernel").collect())))
+      TextOps.cosinePairsOf(docs, 10, 5,
+        Some(s => TextOps.CosinePlan.Kernel(8, s.vocab.toInt))))))
 
   headline.foreach { case (name, build) =>
     test(s"golden plan: $name") {

@@ -218,7 +218,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_weak_hash and graft_dot usable from spark.sql") {
-    graft.functions.NativeFunctions.register(spark)
     val r = spark.sql("SELECT graft_weak_hash('abc') AS h").collect().head.getLong(0)
     val expected = 7L * 3 + 31L * 'a' + 17L * 'c' + ('a' + 'b' + 'c')
     assert(r === expected)
@@ -231,7 +230,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("SQL registration: the per-doc artifact kernels usable from spark.sql") {
-    graft.functions.NativeFunctions.register(spark)
     // simhash over a 1-token doc: sign per bit of ((a·hv+b) mod M)·2 > M
     val sig = spark.sql(
       "SELECT graft_simhash_sig(split('abc', ' ')) AS s").collect().head.getLong(0)
@@ -270,7 +268,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("artifact kernels: null array elements follow concat_ws / twin semantics, no NPE") {
-    graft.functions.NativeFunctions.register(spark)
     // null tokens are SKIPPED by concat_ws, so the window string of
     // ('a', NULL, 'b') at k=3 is 'a b' — assert equality against the
     // built-in derivation rather than a hand-computed constant

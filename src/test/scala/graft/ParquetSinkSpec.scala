@@ -9,7 +9,8 @@ import java.nio.file.Files
   * `partitionBy(network, feature)` job per batch (no driver-side feature
   * enumeration anywhere — the old `presentFeatures` collect was removed in
   * round 2), and `readWide` recovers the reference's per-feature typed
-  * table via partition pruning, matching `Pipeline.widen` row-for-row.
+  * table via partition pruning, matching the pivot reference
+  * (`References.widen`, once `Pipeline.widen`) row-for-row.
   */
 class ParquetSinkSpec extends SparkSpec {
 
@@ -44,7 +45,7 @@ class ParquetSinkSpec extends SparkSpec {
       val fromSink = sinks.readWide(spark, Fixtures.catalog,
           "array_of_things_chicago", feature)
         .drop("network", "feature") // partition cols are the pruned constants
-      val direct = Pipeline.widen(classified, Fixtures.catalog, feature)
+      val direct = References.widen(classified, Fixtures.catalog, feature)
         .filter(col("network") === "array_of_things_chicago")
         .drop("network")
       assert(fromSink.columns.toSeq === direct.columns.toSeq, feature)

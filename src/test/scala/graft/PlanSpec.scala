@@ -358,9 +358,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("cosine pairs: the salted block join stays equi-keyed — no cartesian, blocks ride the join key") {
-    // salted is not the shape the shipped op picks at this scale
-    val s = ranPlans(TextOps.textCosinePairsOf(
-      EventOps.tbl(spark, dir, "documents"), 10, 5, "salted").collect())
+    // salted is not the shape the shipped op picks at this scale: force it,
+    // with the 4 join partitions the chooser gives this 4-core session
+    val s = ranPlans(TextOps.cosinePairsOf(
+      EventOps.tbl(spark, dir, "documents"), 10, 5,
+      Some(_ => TextOps.CosinePlan.Salted(4))))
     // the salt must widen the JOIN KEY (term, i, j), never degrade the
     // join to a cartesian with a block residual (a tiny corpus may
     // legitimately broadcast one side — still equi-keyed)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Multimodal, SimilarityOps, TextOps}
+import graft.operators.TextOps.{CosinePlan, CosineStats}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
@@ -54,12 +55,13 @@ class QueriesSpec extends SparkSpec {
       assert(r <= d, s"rep $r above doc $d")
       assert(reps(r) === r, s"rep $r is not a fixpoint")
     }
-    // the DISTRIBUTED min-label path (localEdgeLimit = -1 forces it
-    // unconditionally — 0 would still route an empty graph to the local
-    // path and make this comparison vacuous) must produce the identical
-    // labeling; reps.nonEmpty above guarantees the comparison has teeth
+    // the DISTRIBUTED min-label path (the one dedupClustersFromPairs takes
+    // above LocalCcEdgeLimit edges) must produce the identical labeling;
+    // reps.nonEmpty above guarantees the comparison has teeth
     val distributed = TextOps
-      .dedupClustersFromPairs(TextOps.dedupNgramJaccard(spark, dir), -1L)
+      .distributedCc(TextOps.dedupNgramJaccard(spark, dir)
+        .select(col("doc_a").cast("long").as("doc_a"),
+          col("doc_b").cast("long").as("doc_b")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(distributed === reps)
   }
@@ -500,6 +502,24 @@ class QueriesSpec extends SparkSpec {
       s"unexpected containment set: $rows")
   }
 
+  /** The three cosine paths, forced on the shipped op's body, sized as
+    * [[TextOps.cosinePlan]] sizes them for a Σdf² under 2 M rows on this
+    * 4-core session (CosinePlanSpec pins the chooser): 2 expansion tasks,
+    * 4 join partitions; the kernel over 8 hash blocks. */
+  private val cosinePaths: Map[String, CosineStats => CosinePlan] = Map(
+    "plain" -> (_ => CosinePlan.Plain(2)),
+    "salted" -> (_ => CosinePlan.Salted(4)),
+    "kernel" -> (s => CosinePlan.Kernel(8, s.vocab.toInt)))
+
+  /** `TextOps.cosinePairsOf` on `docs` (dfCapFrac 5) with a forced plan,
+    * keyed by (doc_a, doc_b). */
+  private def cosinePairs(docs: org.apache.spark.sql.DataFrame,
+      minShared: Int, plan: CosineStats => CosinePlan) =
+    TextOps.cosinePairsOf(docs, minShared, dfCapFrac = 5, Some(plan))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
+      .toMap
+
   test("cosine pairs: salted and kernel strategies are result-identical to the plain term join across a multi-block posting list") {
     import spark.implicits._
     // 6000 docs; "a b" lands in 1200 of them — df = 1200 survives the
@@ -519,19 +539,13 @@ class QueriesSpec extends SparkSpec {
         else s"u$i v$i"
       (i.toLong, text)
     }.toDF("doc_id", "text")
-    def run(strategy: String) =
-      TextOps.textCosinePairsOf(docs, minShared = 2, dfCapFrac = 5,
-        strategy = strategy)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-        .toMap
-    val plain = run("plain")
+    val plain = cosinePairs(docs, 2, cosinePaths("plain"))
     assert(plain.size === 1225, s"expected C(50,2) pairs, got ${plain.size}")
     plain.values.foreach { case (sh, cos) =>
       assert(sh === 3L); assert(math.abs(cos - 1.0) <= 1e-6)
     }
     for (strategy <- Seq("salted", "kernel")) {
-      val alt = run(strategy)
+      val alt = cosinePairs(docs, 2, cosinePaths(strategy))
       assert(alt.keySet === plain.keySet, s"$strategy pair set diverged")
       plain.foreach { case (k, (sh, cos)) =>
         assert(alt(k)._1 === sh, s"$strategy: shared diverged at $k")
@@ -653,16 +667,10 @@ class QueriesSpec extends SparkSpec {
     // minShared = 3 so the tiny corpus yields a non-trivial pair set
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    def run(strategy: String) =
-      TextOps.textCosinePairsOf(docs, minShared = 3, dfCapFrac = 5,
-        strategy = strategy)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-        .toMap
-    val plain = run("plain")
+    val plain = cosinePairs(docs, 3, cosinePaths("plain"))
     assert(plain.nonEmpty, "expected qualifying pairs at sf0.001")
     for (strategy <- Seq("salted", "kernel")) {
-      val alt = run(strategy)
+      val alt = cosinePairs(docs, 3, cosinePaths(strategy))
       assert(alt.keySet === plain.keySet, s"$strategy pair set diverged")
       plain.foreach { case (k, (sh, cos)) =>
         assert(alt(k)._1 === sh, s"$strategy: shared diverged at $k")
@@ -675,14 +683,8 @@ class QueriesSpec extends SparkSpec {
   test("cosine pairs: the result does not depend on the expansion's task count (2 vs 64)") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    def run(parts: Int) =
-      TextOps.textCosinePairsOf(docs, minShared = 3, dfCapFrac = 5,
-        strategy = "plain", expandParts = Some(parts))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-        .toMap
-    val two = run(2)
-    val wide = run(64)
+    val two = cosinePairs(docs, 3, _ => CosinePlan.Plain(2))
+    val wide = cosinePairs(docs, 3, _ => CosinePlan.Plain(64))
     assert(two.nonEmpty, "expected qualifying pairs at sf0.001")
     assert(wide.keySet === two.keySet, "pair set depends on the task count")
     two.foreach { case (k, (sh, cos)) =>

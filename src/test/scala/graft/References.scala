@@ -1,6 +1,9 @@
 package graft
 
+import graft.catalog.MetadataCatalog
 import graft.functions.JsValues
+import graft.model.Observation.obsCols
+import graft.operators.Pipeline
 import graft.operators.TextOps.{CdcBoundaryMod, CdcWindowTokens, MOD,
   SimhashBits, SpanSeedTokens, simhashParams, tokens, weakHash}
 import org.apache.spark.sql.{Column, DataFrame}
@@ -118,6 +121,25 @@ object References {
         (0 until nBits).map(j =>
           when(col(s"b$j") > 0, lit(1L << j)).otherwise(0L))
           .reduce(_ + _).as("sig"))
+  }
+
+  /** Pivot formulation of `Pipeline.widenFromResults` (K1): one
+    * (network, feature) wide table straight from the classified pairs —
+    * catalog-driven columns (absent properties exist as typed NULLs), obs
+    * identity + one column per declared property, cast to the declared
+    * Spark type (DDL tests/configure_tests.js:79-161). */
+  def widen(classified: DataFrame, catalog: MetadataCatalog,
+      feature: String): DataFrame = {
+    val props = catalog.propsOf(feature)
+    val wide = Pipeline.validPairs(classified)
+      .filter(col("feature") === feature)
+      .groupBy(obsCols.map(col): _*)
+      .pivot("property", props.map(_.property))
+      .agg(first(col("value")))
+    props.foldLeft(wide) { (df, p) =>
+      df.withColumn(p.property,
+        col(s"`${p.property}`").cast(Pipeline.sparkType(p.ptype)))
+    }.withColumn("meta_id", col("meta_id").cast("double"))
   }
 
   /** JS `Number(s)` for a string, by regex: trim; "" → 0; decimal/exponent
